@@ -157,7 +157,7 @@ def _q_doctags_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     cli/main.py:281-284 save_as_doctags; serializer byte-verified against
     the 12 reference .doctags.txt goldens in tests/test_doctags.py)."""
     out = extract_pipeline(
-        synth_pages_from_documents(spark, sf_dir), include_doctags=True
+        synth_pages_from_documents(spark, sf_dir), include=("doctags",)
     )
     return out.select("url", "doctags")
 
@@ -167,7 +167,7 @@ def _q_html_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cli/main.py:228-259 save_as_html; round-trip-verified against every
     reference HTML fixture in tests/test_html_sink.py)."""
     out = extract_pipeline(
-        synth_pages_from_documents(spark, sf_dir), include_html=True
+        synth_pages_from_documents(spark, sf_dir), include=("html",)
     )
     return out.select("url", "html_out")
 
@@ -1524,7 +1524,7 @@ def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.sources.web_pages import synth_pages_from_documents
 
     pages = synth_pages_from_documents(spark, sf_dir)
-    extracted = extract_pipeline(pages, include_json=True)
+    extracted = extract_pipeline(pages, include=("json",))
     return chunk_documents_stage(extracted, max_tokens=64)
 
 
@@ -3155,7 +3155,7 @@ def _q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture_plan): per-source token shares vs target weights →
     sample_rate / repeat_epochs with the most-under-represented source
     kept whole."""
-    from docling_plus_spark.operators.imagepairs import mixture_plan
+    from docling_plus_spark.operators.mixture import mixture_plan
 
     return mixture_plan(_docs(spark, sf_dir), _MIX_WEIGHTS)
 
@@ -4411,7 +4411,7 @@ FROM dedup d JOIN surv s USING (media_id)
 
 
 def _mixture_plan_oracle() -> str:
-    from docling_plus_spark.operators.imagepairs import mixture_plan_sql
+    from docling_plus_spark.operators.mixture import mixture_plan_sql
 
     return mixture_plan_sql(_MIX_WEIGHTS)
 

@@ -36,6 +36,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from docling_plus_spark.operators.extract import OPTIONAL_SURFACES, check_include
+
 
 def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="docling-plus-spark extraction job")
@@ -51,10 +53,18 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
     p.add_argument("--num-partitions", type=int, default=None,
                    help="skew-scatter width for the extract stage "
                    "(default: session parallelism)")
-    p.add_argument("--include", default="",
-                   help="extra sink surfaces, comma-separated from "
-                   "{json,doctags,html}")
+    p.add_argument("--include", type=_surfaces, default=(),
+                   help="optional surfaces to build besides text/md/itxt, "
+                   "comma-separated from {%s}" % ",".join(OPTIONAL_SURFACES))
     return p.parse_args(argv)
+
+
+def _surfaces(arg: str) -> tuple:
+    """``--include`` value → surface tuple; unknown names are a usage error."""
+    try:
+        return check_include(s for s in arg.split(",") if s)
+    except ValueError as exc:
+        raise argparse.ArgumentTypeError(str(exc)) from None
 
 
 def build_job_session(app_name: str = "docling-plus-spark-job") -> SparkSession:
@@ -83,10 +93,9 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     n_partitions = args.num_partitions or spark.sparkContext.defaultParallelism
     total = 0
     for _ in range(epoch_budget):
-        include = tuple(s for s in args.include.split(",") if s)
         summary = run_epoch(
             pages, results, metrics,
-            num_partitions=n_partitions, limit=args.limit, include=include,
+            num_partitions=n_partitions, limit=args.limit, include=args.include,
         )
         print(json.dumps(summary), flush=True)
         total += summary["processed"]

@@ -109,12 +109,12 @@ def _st_sample(df: DataFrame, args) -> DataFrame:
 
 def _st_mixture(df: DataFrame, args) -> DataFrame:
     """Down-sample over-represented sources to the --mix-weights
-    targets (operators/imagepairs.py:mixture_plan); the plan table is
+    targets (operators/mixture.py:mixture_plan); the plan table is
     tiny, so its per-source sample_rate broadcasts and the gate is the
     same deterministic hash-Bernoulli as --sample-rate (zero shuffle
     on the corpus side). Repeat epochs (>1) are a writer concern and
     are not applied here — a filter chain can only subtract."""
-    from docling_plus_spark.operators.imagepairs import mixture_plan
+    from docling_plus_spark.operators.mixture import mixture_plan
 
     weights = {}
     for part in (args.mix_weights or "").split(","):

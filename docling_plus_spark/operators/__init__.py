@@ -2,6 +2,5 @@
 
 from .extract import (  # noqa: F401
     EXTRACT_SCHEMA,
-    extract_stage,
     skew_repartition,
 )

@@ -35,11 +35,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def with_cosine(pairs: DataFrame, a: str = "emb_a", b: str = "emb_b") -> Column:
-    ca, cb = F.col(a), F.col(b)
-    return _dot(ca, cb) / (_norm(ca) * _norm(cb))
-
-
 def unit_vec(v: Column) -> Column:
     """x / ||x|| with the norm let-bound (one-element transform) so it is
     computed once per vector, not once per element. Normalizing each

@@ -7,27 +7,33 @@ pipeline/simple_pipeline.py:26-41). One ``mapInPandas`` stage: each Arrow
 batch of page rows is converted document-by-document in compiled-regex /
 stdlib-parser Python (vectorized *stage* granularity — no per-row Python
 crossing the JVM boundary), errors become row status, never exceptions
-(reference: ConversionStatus, base_models.py:46-52).
+(reference: ConversionStatus, base_models.py:46-52). Every input row,
+converted or rejected by the plan's gate, goes through one row builder
+and comes out as exactly one :data:`EXTRACT_SCHEMA` row.
 
 Scale design:
-* **Skew**: page sizes are heavy-tailed. :func:`skew_repartition` salts on
-  ``xxhash64(url)`` so giant documents scatter uniformly instead of
-  hot-spotting one task (SURVEY.md §4.2 Custom #1).
-* **Memory**: the UDF re-chunks each incoming Arrow batch so no output
-  pandas frame exceeds ``max_batch_bytes`` of input HTML — giant documents
-  flow through in small batches, tiny ones in big batches (the reference's
-  batch-size knobs, datamodel/settings.py:28-35, made adaptive).
-* **Pruning**: only (url, html) are touched; Catalyst prunes the rest at
-  the scan when downstream selects fewer columns.
+* **Skew**: page sizes are heavy-tailed. :func:`skew_repartition`
+  repartitions on ``xxhash64(url)`` so giant documents scatter uniformly
+  instead of hot-spotting one task (SURVEY.md §4.2 Custom #1).
+* **Memory**: each incoming Arrow batch is cut into output frames of at
+  most about 8 MiB of input bytes, so giant documents flow through in
+  small frames and tiny ones in big frames (the reference's batch-size
+  knobs, datamodel/settings.py:28-35, made adaptive).
+* **Pruning**: only (url, html) and the derived :data:`PASSTHROUGH`
+  columns enter the UDF; Catalyst prunes the rest at the scan.
+* **Lean output**: text/md/itxt are built for every converted row, the
+  :data:`OPTIONAL_SURFACES` only when named in ``include`` — Catalyst
+  cannot prune ``mapInPandas`` outputs, so unrequested work is skipped
+  here.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,7 +55,19 @@ EXTRACT_SCHEMA = T.StructType(
     ]
 )
 
-_DEFAULT_MAX_BATCH_BYTES = 8 << 20  # 8 MiB of raw HTML per output batch
+#: derived page metadata that rides through the UDF in-batch — carrying it
+#: is free next to the shuffle join that re-attaching it would cost
+PASSTHROUGH = ("doc_hash", "format", "nbytes")
+
+#: surfaces built only when named in ``include`` (text/md/itxt always are)
+OPTIONAL_SURFACES = ("json", "doctags", "html")
+
+_MAX_FRAME_BYTES = 8 << 20  # 8 MiB of input per output frame
+
+_COLUMNS = EXTRACT_SCHEMA.fieldNames()
+# a row before conversion: failure with nothing extracted and no time spent
+_BLANK = {**dict.fromkeys(_COLUMNS), "status": "failure", "num_items": 0,
+          "num_tables": 0, "extract_ms": 0.0}
 
 
 def _classify_failure(exc: BaseException) -> str:
@@ -76,31 +94,10 @@ def _classify_failure(exc: BaseException) -> str:
     return f"convert_error:{name}"
 
 
-def _reject_rows(urls, reasons, passthrough: pd.DataFrame) -> pd.DataFrame:
-    n = len(urls)
-    res = pd.DataFrame(
-        {
-            "url": urls,
-            "status": ["failure"] * n,
-            "failure_class": reasons,
-            "error": [None] * n,
-            "num_items": [0] * n,
-            "num_tables": [0] * n,
-            "text": [None] * n,
-            "md": [None] * n,
-            "itxt": [None] * n,
-            "doc_json": [None] * n,
-            "doctags": [None] * n,
-            "html_out": [None] * n,
-            "extract_ms": [0.0] * n,
-        }
-    )
-    if len(passthrough.columns):
-        res = pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
-    return res
-
-
-def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, include_doctags: bool, include_html: bool) -> pd.DataFrame:
+def _row_builder(include: tuple):
+    """``row(url, blob, fmt, reject_reason)`` → one output row per input
+    row: a gate reject as is, otherwise the converted document's surfaces
+    (text/md/itxt plus the ``include``d ones) or its classified failure."""
     # import inside the worker so the driver-side module graph stays lazy
     from docling_plus_spark.doc.doctags import export_to_doctags
     from docling_plus_spark.doc.html_sink import export_to_html
@@ -112,153 +109,82 @@ def _convert_chunk(urls, blobs, passthrough: pd.DataFrame, include_json: bool, i
     )
     from docling_plus_spark.formats import convert_bytes
 
-    fmts = (
-        passthrough["format"].tolist()
-        if "format" in passthrough.columns
-        else ["html"] * len(urls)
-    )
+    table = {  # surface → (column, exporter(doc, doc_dict))
+        "text": ("text", lambda doc, dd: export_to_text(doc)),
+        "md": ("md", lambda doc, dd: export_to_markdown(doc)),
+        "itxt": ("itxt", lambda doc, dd: export_to_element_tree(doc)),
+        "json": ("doc_json", lambda doc, dd: doc.export_to_json()),
+        "doctags": ("doctags", lambda doc, dd: export_to_doctags(dd)),
+        "html": ("html_out", lambda doc, dd: export_to_html(dd)),
+    }
+    exporters = [v for k, v in table.items() if k not in OPTIONAL_SURFACES or k in include]
+    # doctags and html render from one shared export_to_dict
+    needs_dict = "doctags" in include or "html" in include
 
-    out = {k: [] for k in (
-        "url", "status", "failure_class", "error", "num_items",
-        "num_tables", "text", "md", "itxt", "doc_json", "doctags", "html_out", "extract_ms",
-    )}
-    for url, blob, fmt in zip(urls, blobs, fmts):
+    def row(url, blob, fmt, reject_reason) -> dict:
+        if reject_reason is not None:
+            return {**_BLANK, "url": url, "failure_class": reject_reason}
         t0 = time.perf_counter()
         try:
             name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
             stem = name.rsplit(".", 1)[0] if "." in name else name
-            doc = convert_bytes(bytes(blob or b""), fmt or "html", name=stem, filename=name)
+            doc = convert_bytes(bytes(blob), fmt, name=stem, filename=name)
             items = [it for it, _ in doc.iterate_items(doc.body, with_groups=False)]
-            out["url"].append(url)
-            out["status"].append("success")
-            out["failure_class"].append(None)
-            out["error"].append(None)
-            out["num_items"].append(len(items))
-            out["num_tables"].append(
-                sum(1 for it in items if isinstance(it, TableItem))
-            )
-            out["text"].append(export_to_text(doc))
-            out["md"].append(export_to_markdown(doc))
-            out["itxt"].append(export_to_element_tree(doc))
-            out["doc_json"].append(doc.export_to_json() if include_json else None)
-            _dd = (doc.export_to_dict()
-                   if (include_doctags or include_html) else None)
-            out["doctags"].append(
-                export_to_doctags(_dd) if include_doctags else None
-            )
-            out["html_out"].append(
-                export_to_html(_dd) if include_html else None
-            )
+            out = {**_BLANK, "url": url, "status": "success", "num_items": len(items),
+                   "num_tables": sum(1 for it in items if isinstance(it, TableItem))}
+            dd = doc.export_to_dict() if needs_dict else None
+            for col, export in exporters:
+                out[col] = export(doc, dd)
         except Exception as exc:  # noqa: BLE001 — row status, not job failure
-            out["url"].append(url)
-            out["status"].append("failure")
-            out["failure_class"].append(_classify_failure(exc))
-            out["error"].append(repr(exc)[:500])
-            out["num_items"].append(0)
-            out["num_tables"].append(0)
-            out["text"].append(None)
-            out["md"].append(None)
-            out["itxt"].append(None)
-            out["doc_json"].append(None)
-            out["doctags"].append(None)
-            out["html_out"].append(None)
-        out["extract_ms"].append((time.perf_counter() - t0) * 1e3)
-    res = pd.DataFrame(out)
-    if len(passthrough.columns):
-        res = pd.concat([res, passthrough.reset_index(drop=True)], axis=1)
-    return res
+            out = {**_BLANK, "url": url, "failure_class": _classify_failure(exc),
+                   "error": repr(exc)[:500]}
+        out["extract_ms"] = (time.perf_counter() - t0) * 1e3
+        return out
+
+    return row
 
 
-def _extract_fn(max_batch_bytes: int, passthrough_cols: list, gated: bool, include_json: bool, include_doctags: bool, include_html: bool):
+def check_include(include) -> tuple:
+    """``include`` as a tuple; ValueError on names outside OPTIONAL_SURFACES."""
+    include = tuple(include)
+    unknown = sorted(set(include) - set(OPTIONAL_SURFACES))
+    if unknown:
+        raise ValueError(f"unknown surface(s) {','.join(unknown)}; "
+                         f"choose from {','.join(OPTIONAL_SURFACES)}")
+    return include
+
+
+def extract_batches(include: tuple):
+    """The stage's ``mapInPandas`` function over (url, html, *PASSTHROUGH,
+    _reject_reason) batches, where a null ``_reject_reason`` means
+    convert. ``include`` names the optional surfaces to build."""
+    include = check_include(include)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        row = _row_builder(include)
         for pdf in batches:
-            if gated and len(pdf):
-                mask = pdf["_convert"].astype(bool)
-                rej = pdf[~mask]
-                if len(rej):
-                    yield _reject_rows(
-                        rej["url"].tolist(),
-                        rej["_reject_reason"].tolist(),
-                        rej[passthrough_cols],
-                    )
-                pdf = pdf[mask].reset_index(drop=True)
-            urls = pdf["url"].tolist()
-            blobs = pdf["html"].tolist()
-            extra = pdf[passthrough_cols]
-            # adaptive re-chunk: cut the batch whenever accumulated input
-            # bytes exceed the budget, so one wiki_duck-scale run of rows
-            # can't balloon a single Arrow output batch.
-            start, acc = 0, 0
-            for i, b in enumerate(blobs):
-                acc += len(b) if b is not None else 0
-                if acc >= max_batch_bytes and i + 1 > start:
-                    yield _convert_chunk(
-                        urls[start : i + 1], blobs[start : i + 1],
-                        extra.iloc[start : i + 1], include_json, include_doctags, include_html,
-                    )
-                    start, acc = i + 1, 0
-            if start < len(blobs):
-                yield _convert_chunk(urls[start:], blobs[start:], extra.iloc[start:], include_json, include_doctags, include_html)
+            # cut at every _MAX_FRAME_BYTES of input, so one run of
+            # wiki_duck-scale rows can't balloon a single output frame
+            frame = pdf["nbytes"].fillna(0).cumsum() // _MAX_FRAME_BYTES
+            for _, part in pdf.groupby(frame, sort=False):
+                rows = [row(*r) for r in zip(
+                    part["url"], part["html"], part["format"], part["_reject_reason"])]
+                yield pd.concat(
+                    [pd.DataFrame(rows, columns=_COLUMNS),
+                     part[list(PASSTHROUGH)].reset_index(drop=True)],
+                    axis=1,
+                )
 
     return fn
 
 
-def extract_stage(
-    pages: DataFrame,
-    max_batch_bytes: int = _DEFAULT_MAX_BATCH_BYTES,
-    passthrough: tuple = (),
-    convert_col: Optional[Column] = None,
-    reject_reason_col: Optional[Column] = None,
-    include_json: bool = False,
-    include_doctags: bool = False,
-    include_html: bool = False,
-) -> DataFrame:
-    """(url, html, …) → EXTRACT_SCHEMA rows, one per input row.
-
-    Column-prunes to (url, html) + ``passthrough`` before the UDF so
-    upstream scans read only what the stage needs. Passthrough columns
-    (cheap derived metadata like doc_hash/format/nbytes) ride along inside
-    the Arrow batch — carrying them is free compared to the shuffle join
-    that re-attaching them afterwards would cost at scale.
-
-    ``convert_col`` (boolean) folds the validity/format gate into the same
-    single pass: rows where it is false skip conversion and come out as
-    failure rows labeled by ``reject_reason_col`` — output stays total over
-    the input with one scan and zero extra stages.
-    """
-    gated = convert_col is not None
-    cols: list = ["url", "html", *passthrough]
-    if gated:
-        cols += [
-            convert_col.alias("_convert"),
-            (reject_reason_col if reject_reason_col is not None
-             else F.lit("rejected")).alias("_reject_reason"),
-        ]
-    schema = T.StructType(
-        EXTRACT_SCHEMA.fields
-        + [f for f in pages.schema.fields if f.name in passthrough]
-    )
-    return pages.select(*cols).mapInPandas(
-        _extract_fn(max_batch_bytes, list(passthrough), gated, include_json, include_doctags, include_html), schema
-    )
-
-
-def skew_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    key: str = "url",
-    salt_col: Optional[Column] = None,
-) -> DataFrame:
-    """Salted uniform repartition on ``xxhash64(key)``.
+def skew_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Uniform repartition on ``xxhash64(url)``.
 
     Documents are independent rows, so *any* uniform scatter is correct;
-    hashing the url (plus an optional salt for adversarial key sets)
-    levels heavy-tailed byte sizes across tasks without a range shuffle.
-    Note: ``repartition(n, expr)`` Murmur3-hashes the expression value, so
-    we feed it the full-width xxhash64 (pre-bucketing with pmod would
-    collide buckets and leave partitions empty).
+    hashing the url levels heavy-tailed byte sizes across tasks without a
+    range shuffle. Note: ``repartition(n, expr)`` Murmur3-hashes the
+    expression value, so we feed it the full-width xxhash64 (pre-bucketing
+    with pmod would collide buckets and leave partitions empty).
     """
-    expr = F.xxhash64(F.col(key))
-    if salt_col is not None:
-        expr = F.xxhash64(F.col(key), salt_col)
-    return df.repartition(num_partitions, expr)
+    return df.repartition(num_partitions, F.xxhash64(F.col("url")))

@@ -135,8 +135,3 @@ SELECT id,
        image_url, alt_text
 FROM kept
 """
-
-
-# mixture planning moved to operators/mixture.py (it is a curation
-# stage, not image mining); re-exported here for import compatibility
-from .mixture import mixture_plan, mixture_plan_sql  # noqa: E402,F401

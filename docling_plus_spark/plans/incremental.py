@@ -36,8 +36,10 @@ def run_epoch(
 ) -> dict:
     """Process all (or ``limit``) not-yet-committed pages as one epoch.
 
-    The output snapshot is total over processed urls (failures included as
-    status rows), so `done = distinct(url in results)` is exact. Returns a
+    ``num_partitions`` (skew scatter width) and ``include`` (optional
+    surfaces) pass through to :func:`extract_pipeline`. The output
+    snapshot is total over processed urls (failures included as status
+    rows), so `done = distinct(url in results)` is exact. Returns a
     summary dict: {"epoch": int, "processed": int, "remaining_before": int}.
     """
     done = results.done_keys("url")
@@ -54,13 +56,7 @@ def run_epoch(
         if n_todo == 0:
             return {"epoch": results.last_epoch, "processed": 0, "remaining_before": 0}
         epoch = results.last_epoch + 1
-        out = extract_pipeline(
-            todo,
-            num_partitions=num_partitions,
-            include_json="json" in include,
-            include_doctags="doctags" in include,
-            include_html="html" in include,
-        ).cache()
+        out = extract_pipeline(todo, num_partitions=num_partitions, include=include).cache()
         try:
             processed = out.count()
             # stage both, then commit metrics, then commit results: the

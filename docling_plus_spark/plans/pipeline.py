@@ -14,18 +14,29 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from docling_plus_spark.functions import doc_hash, sniff_format
-from docling_plus_spark.operators.extract import extract_stage, skew_repartition
+from docling_plus_spark.operators.extract import (
+    EXTRACT_SCHEMA,
+    PASSTHROUGH,
+    extract_batches,
+    skew_repartition,
+)
 
 #: DocumentLimits.max_file_size analog (datamodel/settings.py:22-25).
-DEFAULT_MAX_FILE_SIZE = 64 << 20
+MAX_FILE_SIZE = 64 << 20
+
+#: sniffed formats that have a converter; every other row is a status row
+CONVERTIBLE_FORMATS = (
+    "html", "pdf", "csv", "md", "vtt", "asciidoc", "docx", "pptx", "xlsx",
+    "json", "xml_jats", "xml_uspto", "mets_gbs",
+)
 
 
 def build_session(
     master: str = "local[*]",
     shuffle_partitions: int = 32,
-    app_name: str = "docling-plus-spark",
 ) -> SparkSession:
     """Session with the engine's standard conf.
 
@@ -35,7 +46,7 @@ def build_session(
     """
     return (
         SparkSession.builder.master(master)
-        .appName(app_name)
+        .appName("docling-plus-spark")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -46,10 +57,7 @@ def build_session(
     )
 
 
-def prepare_pages(
-    pages: DataFrame,
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-) -> DataFrame:
+def prepare_pages(pages: DataFrame) -> DataFrame:
     """S2+S3+S4: derive format/doc_hash/nbytes, gate validity.
 
     All pure column expressions — Catalyst pushes the size gate to the
@@ -63,7 +71,7 @@ def prepare_pages(
             "valid",
             F.col("html").isNotNull()
             & (F.col("nbytes") > 0)
-            & (F.col("nbytes") <= max_file_size),
+            & (F.col("nbytes") <= MAX_FILE_SIZE),
         )
     )
 
@@ -71,27 +79,27 @@ def prepare_pages(
 def extract_pipeline(
     pages: DataFrame,
     num_partitions: Optional[int] = None,
-    formats: tuple = ("html", "pdf", "csv", "md", "vtt", "asciidoc", "docx", "pptx", "xlsx", "json", "xml_jats", "xml_uspto", "mets_gbs"),
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-    include_json: bool = False,
-    include_doctags: bool = False,
-    include_html: bool = False,
+    include: tuple = (),
 ) -> DataFrame:
     """Full pipeline: returns EXTRACT_SCHEMA ⋈ (doc_hash, format, nbytes).
 
-    Invalid / non-target-format rows are emitted with a failure status
+    Invalid / non-convertible rows are emitted with a failure status
     rather than dropped, so the output is total over the input (every url
-    accounted for — resume correctness depends on this).
+    accounted for — resume correctness depends on this). ``num_partitions``
+    scatters the rows with :func:`skew_repartition` first; ``include``
+    names the optional surfaces to build, a subset of
+    ``operators.extract.OPTIONAL_SURFACES``.
     """
-    prepared = prepare_pages(pages, max_file_size=max_file_size)
+    prepared = prepare_pages(pages)
     if num_partitions:
         prepared = skew_repartition(prepared, num_partitions)
-    convert = F.col("valid") & F.col("format").isin(*formats)
-    # raster content is classified (S8: reference routes IMAGE to OCR,
-    # absent here), not lumped under unsupported_format — gated in the
-    # plan so no Python is spent raising per image row
-    reason = (
+    # the gate: null converts, anything else is the reject row's failure
+    # class. Raster content is classified (S8: reference routes IMAGE to
+    # OCR, absent here), not lumped under unsupported_format — gated in
+    # the plan so no Python is spent raising per image row
+    reject_reason = (
         F.when(~F.col("valid"), F.lit("invalid_input"))
+        .when(F.col("format").isin(*CONVERTIBLE_FORMATS), F.lit(None))
         .when(F.col("format") == "image", F.lit("needs_ocr"))
         # AUDIO routes to an ASR pipeline in the reference
         # (pipeline/asr_pipeline.py); absent here → classified rows
@@ -100,15 +108,13 @@ def extract_pipeline(
     )
     # single pass, single scan: derived metadata rides through the UDF
     # in-batch, gate folded into the stage (rejects become status rows)
-    return extract_stage(
-        prepared,
-        passthrough=("doc_hash", "format", "nbytes"),
-        convert_col=convert,
-        reject_reason_col=reason,
-        include_json=include_json,
-        include_doctags=include_doctags,
-        include_html=include_html,
+    schema = T.StructType(
+        EXTRACT_SCHEMA.fields
+        + [f for f in prepared.schema.fields if f.name in PASSTHROUGH]
     )
+    return prepared.select(
+        "url", "html", *PASSTHROUGH, reject_reason.alias("_reject_reason")
+    ).mapInPandas(extract_batches(include), schema)
 
 
 def lineage_metrics(out: DataFrame, epoch: int = 0) -> DataFrame:

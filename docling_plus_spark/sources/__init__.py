@@ -8,6 +8,5 @@ from .web_pages import (  # noqa: F401
     read_split,
     synth_pages_from_documents,
     SYNTH_PAGE_ORACLE_CTE,
-    SYNTH_PAGE_ORACLE_SQL,
 )
 from .snapshot import SnapshotTable  # noqa: F401

@@ -21,7 +21,7 @@ of parallelism is the file — 64k tasks, the same granularity every
 production WARC processor uses (e.g. commoncrawl/cc-pyspark's
 binaryFile/warcio loop). The parser streams member-by-member: peak
 memory is one record, not one file. Giant-record protection is the
-pipeline's existing size gate (`prepare_pages` max_file_size), applied
+pipeline's existing size gate (`prepare_pages` MAX_FILE_SIZE), applied
 after split so one 2 GB video payload cannot OOM an executor.
 """
 

@@ -10,7 +10,7 @@ inputs) so tests / bench / oracle all see identical rows:
 * :func:`synth_pages_from_documents` — derives a page table from the
   driver's ``documents`` parquet with **pure column expressions**, so the
   exact same derivation runs as ANSI SQL inside the DuckDB oracle
-  (:data:`SYNTH_PAGE_ORACLE_SQL`). Because the wrapper template is known,
+  (:data:`SYNTH_PAGE_ORACLE_CTE`). Because the wrapper template is known,
   the *expected* extraction output is itself SQL-expressible — this gives
   the end-to-end pipeline a value-level oracle, not just a row count.
 * :func:`fixture_corpus_df` — loads the reference's 28 HTML conversion
@@ -129,9 +129,6 @@ SELECT 'https://synth.test/doc/' || doc_id::varchar            AS url,
        '# Doc ' || doc_id::varchar || chr(10) || chr(10) || text AS expected_md
 FROM documents
 )"""
-
-SYNTH_PAGE_ORACLE_SQL = SYNTH_PAGE_ORACLE_CTE  # back-compat alias
-
 
 def fixture_corpus_rows(replicate: int = 1) -> list:
     """(url, warc_ts_epoch, html, text, lang) tuples from the reference

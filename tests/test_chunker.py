@@ -85,7 +85,7 @@ def test_chunk_stage_matches_duckdb_formula(spark):
     from docling_plus_spark.sources.web_pages import synth_pages_from_documents
 
     pages = synth_pages_from_documents(spark, SF)
-    extracted = extract_pipeline(pages, include_json=True)
+    extracted = extract_pipeline(pages, include=("json",))
     out = chunk_documents_stage(extracted, max_tokens=64)
     sp = {
         (r.url, r.chunk_idx): (r.headings, r.text, r.n_tokens)

@@ -1,0 +1,173 @@
+"""Self-golden for the extract stage: per-url digests of every output
+column except ``extract_ms``, over a small in-test corpus holding one
+row of each kind the stage handles (converted HTML and PDF, a PDF that
+raises, and the gate's reject classes).
+
+Any refactor of the stage must reproduce these digests byte for byte.
+Regenerate them (only for an intended output change) with
+``PYTHONPATH=. python tests/test_extract_golden.py``.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import struct
+
+import pytest
+
+from docling_plus_spark.pdf.synth import make_text_pdf
+from docling_plus_spark.plans import build_session, extract_pipeline, run_epoch
+from docling_plus_spark.sources import SnapshotTable
+
+ALL_SURFACES = ("json", "doctags", "html")
+
+# every column but extract_ms, in a fixed order
+COLUMNS = (
+    "url", "status", "failure_class", "error", "num_items", "num_tables",
+    "text", "md", "itxt", "doc_json", "doctags", "html_out",
+    "doc_hash", "format", "nbytes",
+)
+
+HTML = b"""<!DOCTYPE html>
+<html><head><title>Golden</title><style>p{color:red}</style></head>
+<body>
+<nav><a href="/">Home</a> | <a href="/about">About</a></nav>
+<h1>Golden page</h1>
+<p>Some <b>bold</b> and <i>italic</i> text &amp; an entity.</p>
+<ul><li>first item</li><li>second <a href="/x">link</a></li></ul>
+<table>
+<tr><th colspan="2">Header spanning two</th><th>C</th></tr>
+<tr><td>a1</td><td>b1</td><td>c1</td></tr>
+<tr><td colspan="3">wide cell</td></tr>
+</table>
+<footer>Footer text</footer>
+</body></html>
+"""
+
+_PDF = make_text_pdf("the quick brown fox jumps over the lazy dog " * 3)
+
+_WAV = (b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8) + b"data\x00\x00\x00\x00")
+
+ROWS = [
+    ("https://golden.test/page.html", HTML),
+    ("https://golden.test/doc.pdf", _PDF),
+    ("https://golden.test/broken.pdf", _PDF[:120]),
+    ("https://golden.test/img.png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
+    ("https://golden.test/clip.wav", _WAV),
+    ("https://golden.test/empty.html", b""),
+    ("https://golden.test/null.html", None),
+    ("https://golden.test/notes", b"just some plain text, no markup at all\n"),
+]
+
+# gate rejects: never converted, so no time is charged to them
+REJECT_CLASSES = {"invalid_input", "needs_ocr", "needs_asr", "unsupported_format:text"}
+
+GOLDEN_PLAIN = {
+    "https://golden.test/broken.pdf": "8cff619bbe5882b5",
+    "https://golden.test/clip.wav": "99db82e4e944f97f",
+    "https://golden.test/doc.pdf": "07a7462a53f31e7e",
+    "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
+    "https://golden.test/img.png": "a2367993431119ca",
+    "https://golden.test/notes": "00b13dd53c5f4e37",
+    "https://golden.test/null.html": "594e55eab61308ec",
+    "https://golden.test/page.html": "9c67954f797eec23",
+}
+
+GOLDEN_ALL = {
+    "https://golden.test/broken.pdf": "8cff619bbe5882b5",
+    "https://golden.test/clip.wav": "99db82e4e944f97f",
+    "https://golden.test/doc.pdf": "5174a6260c64909c",
+    "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
+    "https://golden.test/img.png": "a2367993431119ca",
+    "https://golden.test/notes": "00b13dd53c5f4e37",
+    "https://golden.test/null.html": "594e55eab61308ec",
+    "https://golden.test/page.html": "5a7af2240cda1300",
+}
+
+
+def _digest(row) -> str:
+    payload = json.dumps([row[c] for c in COLUMNS], ensure_ascii=False)
+    return hashlib.sha256(payload.encode("utf-8")).hexdigest()[:16]
+
+
+def _pages(spark):
+    return spark.createDataFrame(
+        [(u, bytearray(b) if b is not None else None) for u, b in ROWS],
+        "url string, html binary",
+    )
+
+
+def _plain_rows(spark):
+    return extract_pipeline(_pages(spark)).collect()
+
+
+def _all_rows(spark, root: str):
+    results = SnapshotTable(spark, f"{root}/results")
+    metrics = SnapshotTable(spark, f"{root}/metrics")
+    run_epoch(_pages(spark), results, metrics, include=ALL_SURFACES)
+    return results.read().collect()
+
+
+@pytest.fixture(scope="module")
+def spark():
+    s = build_session("local[2]", shuffle_partitions=2)
+    s.sparkContext.setLogLevel("ERROR")
+    yield s
+
+
+def _check(rows, golden):
+    got = {r["url"]: _digest(r) for r in rows}
+    assert len(rows) == len(ROWS)
+    assert got == golden
+    for r in rows:
+        if r["failure_class"] in REJECT_CLASSES:
+            assert r["extract_ms"] == 0.0, r["url"]
+            assert r["status"] == "failure"
+        else:
+            assert r["extract_ms"] > 0.0, r["url"]
+
+
+def test_row_kinds_cover_every_path(spark):
+    by_url = {r["url"]: r for r in _plain_rows(spark)}
+    classes = {u: (r["status"], r["failure_class"]) for u, r in by_url.items()}
+    assert classes == {
+        "https://golden.test/page.html": ("success", None),
+        "https://golden.test/doc.pdf": ("success", None),
+        "https://golden.test/broken.pdf": ("failure", "needs_native_parser"),
+        "https://golden.test/img.png": ("failure", "needs_ocr"),
+        "https://golden.test/clip.wav": ("failure", "needs_asr"),
+        "https://golden.test/empty.html": ("failure", "invalid_input"),
+        "https://golden.test/null.html": ("failure", "invalid_input"),
+        "https://golden.test/notes": ("failure", "unsupported_format:text"),
+    }
+    assert by_url["https://golden.test/page.html"]["num_tables"] == 1
+
+
+def test_golden_without_optional_surfaces(spark):
+    rows = _plain_rows(spark)
+    assert all(r[c] is None for r in rows for c in ("doc_json", "doctags", "html_out"))
+    _check(rows, GOLDEN_PLAIN)
+
+
+def test_golden_with_all_surfaces(spark, tmp_path):
+    rows = _all_rows(spark, str(tmp_path))
+    ok = [r for r in rows if r["status"] == "success"]
+    assert ok and all(r[c] for r in ok for c in ("doc_json", "doctags", "html_out"))
+    _check(rows, GOLDEN_ALL)
+
+
+if __name__ == "__main__":
+    import tempfile
+
+    s = build_session("local[2]", shuffle_partitions=2)
+    s.sparkContext.setLogLevel("ERROR")
+    with tempfile.TemporaryDirectory() as tmp:
+        for name, rows in (("GOLDEN_PLAIN", _plain_rows(s)),
+                           ("GOLDEN_ALL", _all_rows(s, tmp))):
+            print(f"{name} = {{")
+            for r in sorted(rows, key=lambda r: r["url"]):
+                print(f'    "{r["url"]}": "{_digest(r)}",')
+            print("}\n")
+    s.stop()

@@ -7,9 +7,8 @@ from pyspark.sql import functions as F
 from docling_plus_spark.operators.imagepairs import (
     image_alt_pairs,
     image_alt_pairs_sql,
-    mixture_plan,
-    mixture_plan_sql,
 )
+from docling_plus_spark.operators.mixture import mixture_plan, mixture_plan_sql
 from docling_plus_spark.plans import build_session
 
 

@@ -185,7 +185,11 @@ def test_pdf_bytes_extract_no_shuffle(spark):
     # section; read_split repartitions the single-row-group input once
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
     assert len(exchanges) <= 1, plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    # exactly one Python map stage: gate rejects, conversion and every
+    # surface share the extract UDF (the source's scalar pdf writer is
+    # an ArrowEvalPython, not a map stage)
+    maps = re.findall(r"^\(\d+\) (\w*Map\w*)", plan, re.M)
+    assert maps == ["MapInPandas"], plan
 
 
 def test_asof_join_single_shuffle(spark):

@@ -270,7 +270,7 @@ def test_shard_manifest_twin_matches_reference_on_fuzz(sizes, target):
 def test_mixture_plan_invariants_on_fuzz(toks, weights):
     """The reference source always has sample_rate exactly 1.0; all
     rates lie in [0, 1]; repeat_epochs >= 1 wherever targeted."""
-    from docling_plus_spark.operators.imagepairs import mixture_plan_sql
+    from docling_plus_spark.operators.mixture import mixture_plan_sql
 
     srcs = [f"s{i}" for i in range(len(toks))]
     w = {s: weights[i % len(weights)] for i, s in enumerate(srcs)}

@@ -80,6 +80,43 @@ def test_failure_rows_not_exceptions(spark):
     assert out["https://x.test/a.html"]["status"] in ("success", "failure")
 
 
+def test_unknown_surface_rejected_at_plan_time(spark):
+    df = spark.createDataFrame([("u", bytearray(b"<p>x</p>"))], "url string, html binary")
+    with pytest.raises(ValueError, match="jsn"):
+        extract_pipeline(df, include=("jsn",))
+
+
+def test_extract_frames_cut_by_input_bytes(monkeypatch):
+    """A batch is cut into output frames by input bytes; the rows, in
+    input order and reject rows included, do not depend on the cut."""
+    import pandas as pd
+
+    from docling_plus_spark.operators import extract
+
+    html = [b"<h1>Doc %d</h1><p>%s</p>" % (i, b"words " * 8 * i) for i in range(6)]
+    batch = pd.DataFrame({
+        "url": [f"https://x.test/{i}.html" for i in range(6)],
+        "html": html,
+        "doc_hash": [f"h{i}" for i in range(6)],
+        "format": ["html"] * 6,
+        "nbytes": [len(b) for b in html],
+        "_reject_reason": [None, None, "invalid_input", None, None, None],
+    })
+
+    def run():
+        frames = list(extract.extract_batches(())(iter([batch])))
+        return frames, pd.concat(frames, ignore_index=True).drop(columns="extract_ms")
+
+    one_frame, whole = run()
+    monkeypatch.setattr(extract, "_MAX_FRAME_BYTES", 100)
+    frames, cut = run()
+    assert len(one_frame) == 1 and len(frames) > 2
+    pd.testing.assert_frame_equal(cut, whole)
+    assert whole["url"].tolist() == batch["url"].tolist()
+    assert whole["status"].tolist() == ["success"] * 2 + ["failure"] + ["success"] * 3
+    assert whole["failure_class"][2] == "invalid_input"
+
+
 def test_synth_corpus_expected_text(spark):
     pages = synth_pages_from_documents(spark, SF)
     out = extract_pipeline(pages)

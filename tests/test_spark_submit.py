@@ -41,6 +41,20 @@ def _summaries(stdout):
     return [json.loads(l) for l in stdout.splitlines() if l.startswith("{")]
 
 
+def test_job_include_parsed_once_and_validated(capsys):
+    from docling_plus_spark import job
+
+    base = ["--input", "pages", "--output", "out"]
+    assert job.parse_args(base).include == ()
+    args = job.parse_args(base + ["--include", "json,doctags,html"])
+    assert args.include == ("json", "doctags", "html")
+    # a misspelt surface is a usage error (exit 2), not a silent drop
+    with pytest.raises(SystemExit) as exc:
+        job.parse_args(base + ["--include", "json,jsn"])
+    assert exc.value.code == 2
+    assert "unknown surface(s) jsn" in capsys.readouterr().err
+
+
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     # package zip exactly as a cluster submit would
     sys.path.insert(0, os.path.join(REPO, "tools"))
