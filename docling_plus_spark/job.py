@@ -17,10 +17,15 @@ Locally (what tests/test_spark_submit.py drives for real):
 
 The job is an incremental-batch loop over `plans.incremental.run_epoch`:
 each epoch anti-joins the input against the committed results snapshot,
-extracts the remainder, and commits metrics-then-results (the results
+extracts the remainder with `plans.extract_pipeline` (the plan the
+benchmark times), and commits metrics-then-results (the results
 manifest is the sole completion point — kill the job anywhere and the
 next invocation resumes from the last committed snapshot with zero loss
 and zero re-processing). One JSON summary line is printed per epoch.
+
+An epoch shuffles only after ``--limit`` (a global limit gathers its rows
+onto one partition, so they are scattered on ``xxhash64(url)``); master
+and shuffle width come from the submit command line.
 
 Reference analog: the CLI conversion loop (docling/cli/main.py) +
 _convert orchestration (document_converter.py:234-281), restated as a
@@ -50,9 +55,6 @@ def parse_args(argv: Optional[list] = None) -> argparse.Namespace:
                    help="max epochs to run; 0 = run until drained")
     p.add_argument("--limit", type=int, default=None,
                    help="max docs per epoch (bounds epoch commit size)")
-    p.add_argument("--num-partitions", type=int, default=None,
-                   help="skew-scatter width for the extract stage "
-                   "(default: session parallelism)")
     p.add_argument("--include", type=_surfaces, default=(),
                    help="optional surfaces to build besides text/md/itxt, "
                    "comma-separated from {%s}" % ",".join(OPTIONAL_SURFACES))
@@ -67,19 +69,6 @@ def _surfaces(arg: str) -> tuple:
         raise argparse.ArgumentTypeError(str(exc)) from None
 
 
-def build_job_session(app_name: str = "docling-plus-spark-job") -> SparkSession:
-    """Session for spark-submit: master/executors come from the submit
-    command line, only engine-required conf is set here."""
-    return (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
-        .getOrCreate()
-    )
-
-
 def run(spark: SparkSession, args: argparse.Namespace) -> int:
     from docling_plus_spark.plans.incremental import run_epoch
     from docling_plus_spark.sources.snapshot import SnapshotTable
@@ -90,12 +79,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     metrics = SnapshotTable(spark, args.metrics or args.output.rstrip("/") + "/_metrics")
 
     epoch_budget = args.epochs if args.epochs > 0 else sys.maxsize
-    n_partitions = args.num_partitions or spark.sparkContext.defaultParallelism
     total = 0
     for _ in range(epoch_budget):
         summary = run_epoch(
-            pages, results, metrics,
-            num_partitions=n_partitions, limit=args.limit, include=args.include,
+            pages, results, metrics, limit=args.limit, include=args.include,
         )
         print(json.dumps(summary), flush=True)
         total += summary["processed"]
@@ -106,8 +93,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
 
 
 def main(argv: Optional[list] = None) -> int:
+    from docling_plus_spark.plans import build_session
+
     args = parse_args(argv)
-    spark = build_job_session()
+    spark = build_session()
     try:
         return run(spark, args)
     finally:

@@ -249,10 +249,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
 
 
 def main(argv: Optional[list] = None) -> int:
-    from docling_plus_spark.job import build_job_session
+    from docling_plus_spark.plans import build_session
 
     args = parse_args(argv)
-    spark = build_job_session("docling-plus-spark-curate")
+    spark = build_session()
     try:
         return run(spark, args)
     finally:

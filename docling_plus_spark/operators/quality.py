@@ -888,7 +888,8 @@ def lang_consistency(
 
     * ``script_mismatch`` — declared lang maps to a known writing
       system and the dominant script is a different one (the strongest
-      signal: no stopword list needed, works for all languages);
+      signal: no stopword list needed, works for all languages); text
+      with no script evidence (``main_script == 'other'``) never does;
     * ``undetermined`` — langid covers the declared lang but found no
       stopword hits at all (too short / non-linguistic);
     * ``langid_mismatch`` — langid covers the declared lang and
@@ -914,7 +915,8 @@ def lang_consistency(
     def _sig(pred: Column, script: Column) -> Column:
         verdict = (
             F.when(
-                expected.isNotNull() & (script != expected),
+                expected.isNotNull() & (script != "other")
+                & (script != expected),
                 F.lit("script_mismatch"),
             )
             .when(supported & (pred == "und"), F.lit("undetermined"))
@@ -972,7 +974,8 @@ WITH sig AS (
   FROM {table}
 )
 SELECT id, lang, lang_pred, main_script,
-       CASE WHEN expected IS NOT NULL AND main_script != expected
+       CASE WHEN expected IS NOT NULL AND main_script != 'other'
+                 AND main_script != expected
                  THEN 'script_mismatch'
             WHEN {supported} AND lang_pred = 'und'
                  THEN 'undetermined'

@@ -172,7 +172,7 @@ def surt_key(url: Column) -> Column:
     tracking-param strip), then, per the ``surt`` library's default
     canonicalization used by Common Crawl's indexer:
 
-    1. drop the scheme, drop one leading ``www.``;
+    1. drop the scheme, drop one leading ``www\\d*.`` (``www.``, ``www2.``);
     2. reverse the host labels and join with commas (port kept);
     3. lowercase path and query; empty path becomes ``/``;
     4. sort query parameters bytewise.
@@ -186,7 +186,7 @@ def surt_key(url: Column) -> Column:
     rest = F.substring(after, F.length(hostport) + 1, F.lit(1 << 30))
     host = F.regexp_replace(hostport, r":[0-9]+$", "")
     port = F.substring(hostport, F.length(host) + 1, F.lit(1 << 30))
-    host = F.regexp_replace(host, r"^www\.", "")
+    host = F.regexp_replace(host, r"^www\d*\.", "")
     rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
     path = F.lower(F.regexp_extract(rest, r"^([^?]*)", 1))
     path = F.when(F.length(path) == 0, F.lit("/")).otherwise(path)
@@ -211,7 +211,7 @@ def surt_key_sql(url_expr: str) -> str:
     rest = f"substr({after}, length({hostport}) + 1)"
     host = f"regexp_replace({hostport}, ':[0-9]+$', '')"
     port = f"substr({hostport}, length({host}) + 1)"
-    host = f"regexp_replace({host}, '^www\\.', '')"
+    host = f"regexp_replace({host}, '^www\\d*\\.', '')"
     rev = f"array_to_string(list_reverse(string_split({host}, '.')), ',')"
     rawpath = f"regexp_extract({rest}, '^([^?]*)', 1)"
     path = f"CASE WHEN length({rawpath}) = 0 THEN '/' ELSE lower({rawpath}) END"

@@ -30,17 +30,16 @@ def run_epoch(
     pages: DataFrame,
     results: SnapshotTable,
     metrics: SnapshotTable,
-    num_partitions: Optional[int] = None,
     limit: Optional[int] = None,
     include: tuple = (),
 ) -> dict:
     """Process all (or ``limit``) not-yet-committed pages as one epoch.
 
-    ``num_partitions`` (skew scatter width) and ``include`` (optional
-    surfaces) pass through to :func:`extract_pipeline`. The output
-    snapshot is total over processed urls (failures included as status
-    rows), so `done = distinct(url in results)` is exact. Returns a
-    summary dict: {"epoch": int, "processed": int, "remaining_before": int}.
+    The epoch is :func:`extract_pipeline` over the anti-joined rows
+    (the benchmarked plan); ``include`` names its optional surfaces. The
+    output snapshot is total over processed urls (failures included as
+    status rows), so `done = distinct(url in results)` is exact. Returns
+    a summary dict: {"epoch": int, "processed": int}.
     """
     done = results.done_keys("url")
     todo = pages
@@ -48,25 +47,25 @@ def run_epoch(
         # left_anti on url: at cluster scale `done` is Iceberg-metadata
         # backed; here a parquet-side distinct. Broadcast chosen by AQE.
         todo = pages.join(done, "url", "left_anti")
+    scatter = None
     if limit is not None:
+        # a global limit gathers its rows onto one partition: scatter
+        # them back out before the Python stage
         todo = todo.limit(limit)
-    todo = todo.cache()
+        scatter = todo.sparkSession.sparkContext.defaultParallelism
+    if todo.isEmpty():  # column-pruned: reads only url, runs no Python
+        return {"epoch": results.last_epoch, "processed": 0}
+    epoch = results.last_epoch + 1
+    # one extraction of the same (limited) rows feeds metrics and results
+    out = extract_pipeline(todo, num_partitions=scatter, include=include).cache()
     try:
-        n_todo = todo.count()
-        if n_todo == 0:
-            return {"epoch": results.last_epoch, "processed": 0, "remaining_before": 0}
-        epoch = results.last_epoch + 1
-        out = extract_pipeline(todo, num_partitions=num_partitions, include=include).cache()
-        try:
-            processed = out.count()
-            # stage both, then commit metrics, then commit results: the
-            # results commit is the epoch's single atomic completion point
-            m_part = metrics.stage(lineage_metrics(out, epoch=epoch), epoch)
-            r_part = results.stage(out, epoch)
-            metrics.commit(m_part, epoch, replace_epoch=True)
-            results.commit(r_part, epoch, extra={"docs": processed})
-        finally:
-            out.unpersist()
-        return {"epoch": epoch, "processed": processed, "remaining_before": n_todo}
+        processed = out.count()
+        # stage both, then commit metrics, then commit results: the
+        # results commit is the epoch's single atomic completion point
+        m_part = metrics.stage(lineage_metrics(out, epoch=epoch), epoch)
+        r_part = results.stage(out, epoch)
+        metrics.commit(m_part, epoch, replace_epoch=True)
+        results.commit(r_part, epoch, extra={"docs": processed})
     finally:
-        todo.unpersist()
+        out.unpersist()
+    return {"epoch": epoch, "processed": processed}

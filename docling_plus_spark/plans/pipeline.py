@@ -35,26 +35,32 @@ CONVERTIBLE_FORMATS = (
 
 
 def build_session(
-    master: str = "local[*]",
+    master: Optional[str] = None,
     shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Session with the engine's standard conf.
 
     Arrow transfer on, AQE on (runtime coalesce + skew-join splitting),
     bounded Arrow batches so a batch of maximal documents stays well under
-    executor memory even at 100 TB-scale page sizes.
+    executor memory even at 100 TB-scale page sizes. Master, shuffle
+    partitions and driver memory are set only with ``master``; without
+    it (under spark-submit) the submit command line's ``--master`` and
+    ``--conf`` decide them.
     """
-    return (
-        SparkSession.builder.master(master)
-        .appName("docling-plus-spark")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    builder = (
+        SparkSession.builder.appName("docling-plus-spark")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
     )
+    if master is not None:
+        builder = (
+            builder.master(master)
+            .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+            .config("spark.driver.memory", "8g")
+        )
+    return builder.getOrCreate()
 
 
 def prepare_pages(pages: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ ROWS = [
     (5, "Привет мир Привет мир", "ru"),                   # agree (cyrillic)
     (6, "Привет мир Привет мир", "en"),                   # script_mismatch
     (7, "texto corto sin marcas", "pt"),                  # agree (uncheckable)
-    (8, "!!! ??? ...", "en"),                             # script_mismatch
+    (8, "!!! ??? ...", "en"),                             # undetermined (no script evidence)
 ]
 WANT = {
     1: "agree",
@@ -30,7 +30,7 @@ WANT = {
     5: "agree",
     6: "script_mismatch",
     7: "agree",
-    8: "script_mismatch",
+    8: "undetermined",
 }
 
 

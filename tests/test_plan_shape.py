@@ -192,6 +192,47 @@ def test_pdf_bytes_extract_no_shuffle(spark):
     assert maps == ["MapInPandas"], plan
 
 
+def test_job_epoch_scatters_only_after_limit(spark, tmp_path, monkeypatch):
+    """job.run's epoch is extract_pipeline over the anti-joined rows, the
+    benchmarked plan. A global limit gathers its rows onto one partition,
+    so a --limit epoch carries exactly one xxhash64(url) scatter to
+    defaultParallelism before the Python stage; an unlimited epoch
+    carries none."""
+    import re
+
+    from docling_plus_spark import job
+    from docling_plus_spark.plans import incremental
+    from docling_plus_spark.sources.web_pages import synth_pages_from_documents
+
+    src = str(tmp_path / "pages")
+    synth_pages_from_documents(spark, SF).write.parquet(src)
+    extracts = []
+    real = incremental.extract_pipeline
+
+    def recording(*args, **kwargs):
+        extracts.append(real(*args, **kwargs))
+        return extracts[-1]
+
+    monkeypatch.setattr(incremental, "extract_pipeline", recording)
+    base = ["--input", src, "--output", str(tmp_path / "results")]
+    job.run(spark, job.parse_args(base + ["--epochs", "1", "--limit", "10"]))
+    job.run(spark, job.parse_args(base))
+    assert len(extracts) == 2  # the drain's second epoch finds nothing
+
+    def scatters(df) -> list:
+        plan = _plan(df)
+        # the extract stage is the plan's root: every exchange is below it
+        tree = plan.split("\n\n")[0]
+        assert re.search(r"^\+- MapInPandas", tree, re.M), tree
+        return re.findall(
+            r"hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)", plan
+        )
+
+    width = str(spark.sparkContext.defaultParallelism)
+    assert scatters(extracts[0]) == [width]
+    assert scatters(extracts[1]) == []
+
+
 def test_asof_join_single_shuffle(spark):
     """The as-of join must cost one exchange per side (hash on the
     key), never a range cross-product."""

@@ -135,7 +135,7 @@ def test_synth_corpus_expected_text(spark):
 
 
 def test_lineage_metrics_cover_all_docs(spark):
-    pages = fixture_corpus_df(spark, replicate=1)
+    pages = synth_pages_from_documents(spark, SF)
     out = extract_pipeline(pages, num_partitions=4)
     m = lineage_metrics(out, epoch=7)
     agg = m.agg(F.sum("docs").alias("d"), F.min("epoch").alias("e")).first()
@@ -163,8 +163,9 @@ def test_skew_repartition_levels_bytes(spark):
 def test_snapshot_resume(spark, tmp_path):
     results = SnapshotTable(spark, str(tmp_path / "results"))
     metrics = SnapshotTable(spark, str(tmp_path / "metrics"))
-    pages = fixture_corpus_df(spark, replicate=1).cache()
+    pages = synth_pages_from_documents(spark, SF).cache()
     n = pages.count()
+    assert n > 10
 
     r1 = run_epoch(pages, results, metrics, limit=10)
     assert r1["processed"] == 10 and r1["epoch"] == 0

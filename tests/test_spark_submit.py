@@ -81,16 +81,14 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
                  "--epochs", "1", "--limit", str(half))
     assert r1.returncode == 0, r1.stderr[-2000:]
     s1 = _summaries(r1.stdout)
-    assert s1[0]["processed"] == half
-    assert s1[0]["remaining_before"] == half  # post-limit todo count
+    assert s1[0] == {"epoch": 0, "processed": half}
 
     # second submit (fresh driver JVM): resumes from the committed
     # snapshot, processes only the remainder, then reports drained
     r2 = _submit(zip_path, "--input", pages_path, "--output", out_dir)
     assert r2.returncode == 0, r2.stderr[-2000:]
     s2 = _summaries(r2.stdout)
-    assert s2[0]["processed"] == n_pages - half
-    assert s2[0]["remaining_before"] == n_pages - half
+    assert s2[0] == {"epoch": 1, "processed": n_pages - half}
     assert s2[-1] == {"done": True, "total_processed": n_pages - half}
 
     # committed output is total over the input: every url exactly once

@@ -14,6 +14,7 @@ URLS = [
     "https://sub.a.b.example.co.uk:443/Path/",
     "http://www.example.com:80/?",
     "https://news.example.com/other",
+    "http://WWW2.example.com/A?x=1",
 ]
 WANT = [
     "com,example,news)/articles/politics?a=1&b=2",
@@ -22,6 +23,7 @@ WANT = [
     "uk,co,example,b,a,sub)/path/",
     "com,example)/",
     "com,example,news)/other",
+    "com,example)/a?x=1",
 ]
 
 
@@ -41,7 +43,7 @@ def _keys(spark):
 
 
 def test_surt_semantics(spark):
-    # www-strip, label reversal, port retention, default-port drop,
+    # www / www<digits> strip, label reversal, port retention, default-port drop,
     # path/query lowercasing, bytewise param sort, tracking strip,
     # empty path -> '/'
     assert _keys(spark) == WANT
