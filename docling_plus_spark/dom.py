@@ -12,8 +12,9 @@ Design notes
 ------------
 * ``NavString`` subclasses ``str`` so string nodes can be used directly in
   text handling (mirrors ``NavigableString``).
-* ``Comment``/``Doctype``/``ProcessingInstruction`` are "preformatted"
-  strings: skipped by text extraction (mirrors ``PreformattedString``).
+* Comments, declarations (doctype, CDATA) and processing instructions
+  are all one ``PreformattedString`` class: skipped by text extraction
+  (mirrors bs4's ``PreformattedString`` subclasses).
 * End tags pop the open-element stack to the nearest matching open tag and
   drop it; unmatched end tags are ignored (html.parser tree builder
   semantics — no HTML5 adoption agency).
@@ -23,7 +24,7 @@ Design notes
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterable, Iterator, Optional, Union
+from typing import Iterator, Optional, Union
 
 # HTML void elements (never hold content).
 VOID_ELEMENTS = frozenset(
@@ -54,32 +55,11 @@ class NavString(str):
             self.parent = None
         return self
 
-    def replace_with(self, node: "NodeType") -> None:
-        parent = self.parent
-        if parent is None:
-            return
-        idx = _index_by_identity(parent.contents, self)
-        if idx < 0:
-            return
-        if isinstance(node, Tag) or isinstance(node, NavString):
-            if getattr(node, "parent", None) is not None:
-                node.extract()
-            parent.contents[idx] = node
-            node.parent = parent
-            self.parent = None
 
+class PreformattedString(NavString):
+    """Comment, declaration or processing instruction — excluded from
+    text extraction."""
 
-class Comment(NavString):
-    """HTML comment — preformatted, excluded from text extraction."""
-
-    preformatted = True
-
-
-class Doctype(NavString):
-    preformatted = True
-
-
-class ProcessingInstruction(NavString):
     preformatted = True
 
 
@@ -98,9 +78,6 @@ class Tag:
     # ----- attribute access ------------------------------------------------
     def get(self, key: str, default=None):
         return self.attrs.get(key, default)
-
-    def has_attr(self, key: str) -> bool:
-        return key in self.attrs
 
     # ----- tree building ---------------------------------------------------
     def append(self, node: "NodeType") -> None:
@@ -122,21 +99,16 @@ class Tag:
             self.parent = None
         return self
 
-    def decompose(self) -> None:
-        self.extract()
-
     def unwrap(self) -> None:
         """Replace this tag by its children (bs4 ``unwrap``)."""
         parent = self.parent
         if parent is None:
             return
         idx = _index_by_identity(parent.contents, self)
-        children = list(self.contents)
-        self.contents = []
-        del parent.contents[idx]
-        for off, child in enumerate(children):
+        for child in self.contents:
             child.parent = parent
-            parent.contents.insert(idx + off, child)
+        parent.contents[idx:idx + 1] = self.contents
+        self.contents = []
         self.parent = None
 
     def replace_with(self, node: "NodeType") -> None:
@@ -162,41 +134,19 @@ class Tag:
             if isinstance(node, Tag):
                 stack.extend(reversed(node.contents))
 
-    def find_all(
-        self,
-        name=None,
-        recursive: bool = True,
-        **attr_filters,
-    ) -> list["Tag"]:
-        """Find descendant tags by name (str/iterable/None) + attr presence."""
+    def _matches(self, name, recursive: bool) -> Iterator["Tag"]:
+        """Descendant (or, non-recursive, child) tags in document order,
+        filtered by name: a str, an iterable of names, or None for all."""
         names = _name_set(name)
-        out: list[Tag] = []
-        nodes: Iterable[NodeType] = self.descendants if recursive else self.contents
-        for node in nodes:
-            if not isinstance(node, Tag):
-                continue
-            if names is not None and node.name not in names:
-                continue
-            if attr_filters and not _match_attrs(node, attr_filters):
-                continue
-            out.append(node)
-        return out
+        for node in self.descendants if recursive else self.contents:
+            if isinstance(node, Tag) and (names is None or node.name in names):
+                yield node
 
-    def __call__(self, name=None, recursive: bool = True, **attr_filters):
-        return self.find_all(name, recursive=recursive, **attr_filters)
+    def find_all(self, name=None, recursive: bool = True) -> list["Tag"]:
+        return list(self._matches(name, recursive))
 
-    def find(self, name=None, recursive: bool = True, **attr_filters):
-        names = _name_set(name)
-        nodes: Iterable[NodeType] = self.descendants if recursive else self.contents
-        for node in nodes:
-            if not isinstance(node, Tag):
-                continue
-            if names is not None and node.name not in names:
-                continue
-            if attr_filters and not _match_attrs(node, attr_filters):
-                continue
-            return node
-        return None
+    def find(self, name=None, recursive: bool = True) -> Optional["Tag"]:
+        return next(self._matches(name, recursive), None)
 
     def find_parent(self, name: str) -> Optional["Tag"]:
         cur = self.parent
@@ -219,10 +169,6 @@ class Tag:
                 parts.append(text)
         return separator.join(parts)
 
-    @property
-    def text(self) -> str:
-        return self.get_text()
-
     def __repr__(self) -> str:  # pragma: no cover - debugging aid
         return f"<{self.name} {self.attrs!r} children={len(self.contents)}>"
 
@@ -231,22 +177,11 @@ NodeType = Union[Tag, NavString]
 
 
 def _name_set(name) -> Optional[frozenset]:
-    if name is None or name is True:
+    if name is None:
         return None
     if isinstance(name, str):
         return frozenset((name,))
     return frozenset(name)
-
-
-def _match_attrs(tag: Tag, filters: dict) -> bool:
-    for key, expected in filters.items():
-        value = tag.attrs.get(key)
-        if expected is True:
-            if key not in tag.attrs:
-                return False
-        elif value != expected:
-            return False
-    return True
 
 
 def _index_by_identity(seq: list, node) -> int:
@@ -271,6 +206,11 @@ def _remove_by_identity(seq: list, node) -> None:
 MAX_DOM_DEPTH = 200
 
 
+def _attr_dict(attrs) -> dict:
+    """html.parser's ``(name, value)`` pairs; a bare attribute is ``""``."""
+    return {key: "" if value is None else value for key, value in attrs}
+
+
 class _TreeBuilder(HTMLParser):
     """html.parser events → Tag tree (tree-builder semantics as in bs4's
     HTMLParserTreeBuilder: no implied end tags, pop-to-matching on close)."""
@@ -282,21 +222,15 @@ class _TreeBuilder(HTMLParser):
 
     # -- events -------------------------------------------------------------
     def handle_starttag(self, name: str, attrs) -> None:
-        attr_dict: dict = {}
-        for key, value in attrs:
-            attr_dict[key] = "" if value is None else value
         if len(self.stack) > MAX_DOM_DEPTH:
             self.stack.pop()
-        tag = Tag(name, attr_dict)
+        tag = Tag(name, _attr_dict(attrs))
         self.stack[-1].append(tag)
         if name not in VOID_ELEMENTS:
             self.stack.append(tag)
 
     def handle_startendtag(self, name: str, attrs) -> None:
-        attr_dict: dict = {}
-        for key, value in attrs:
-            attr_dict[key] = "" if value is None else value
-        self.stack[-1].append(Tag(name, attr_dict))
+        self.stack[-1].append(Tag(name, _attr_dict(attrs)))
 
     def handle_endtag(self, name: str) -> None:
         for i in range(len(self.stack) - 1, 0, -1):
@@ -317,16 +251,9 @@ class _TreeBuilder(HTMLParser):
         self.stack[-1].append(NavString(data))
 
     def handle_comment(self, data: str) -> None:
-        self.stack[-1].append(Comment(data))
+        self.stack[-1].append(PreformattedString(data))
 
-    def handle_decl(self, decl: str) -> None:
-        self.stack[-1].append(Doctype(decl))
-
-    def handle_pi(self, data: str) -> None:
-        self.stack[-1].append(ProcessingInstruction(data))
-
-    def unknown_decl(self, data: str) -> None:
-        self.stack[-1].append(Doctype(data))
+    handle_decl = handle_pi = unknown_decl = handle_comment
 
 
 def parse_html(data: Union[bytes, str], encoding: str = "utf-8") -> Tag:

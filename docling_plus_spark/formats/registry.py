@@ -24,19 +24,6 @@ def _convert_text(data: bytes, name: str = "file", filename: str = "file.txt") -
     return doc
 
 
-class NeedsOcrError(RuntimeError):
-    """Raster content reached the text-extraction stage: the reference
-    routes InputFormat.IMAGE to an OCR-backed pipeline; no OCR engine
-    exists in this sandbox, so the row is classified — not dropped —
-    as ``needs_ocr`` (S8)."""
-
-
-def _convert_image(data: bytes, name: str = "file", filename: str = "file") -> DLDocument:
-    raise NeedsOcrError(
-        f"image document '{filename}' ({len(data)} bytes) requires OCR"
-    )
-
-
 def _converters() -> dict:
     from docling_plus_spark.html import convert_html
 
@@ -68,7 +55,6 @@ def _converters() -> dict:
         "xml_uspto": convert_uspto,
         "mets_gbs": convert_mets_gbs,
         "text": _convert_text,
-        "image": _convert_image,
     }
 
 

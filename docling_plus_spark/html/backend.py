@@ -19,6 +19,13 @@ Key reference semantics reproduced (file:line cites for parity audit):
 * unicode cleanup table                      html_backend.py:1425-1463
 * colspan/rowspan parsing                    html_backend.py:1465-1490
 * URL resolution incl. protocol-relative     html_backend.py:418-438
+
+``_table_rows`` reads a table's cells, spans and header flags in one scan
+that both the dimensions and the span grid use; a thead/tbody left unclosed
+(so nested in another) is unwrapped too, which keeps its rows in the grid.
+``_add_runs`` turns inline runs into text/code items for buffered inline
+content and ``p``/``address``/``summary`` blocks alike; list items and
+``pre`` emit their own way.
 """
 
 from __future__ import annotations
@@ -289,11 +296,11 @@ class HtmlConverter:
                 content_layer=ContentLayer.FURNITURE,
             )
         # strip scripts/styles and hidden subtrees (html_backend.py:310-315);
-        # one traversal for both categories — decompose() is a no-op on
-        # nodes whose ancestor was already detached, so list order is safe
+        # one traversal for both categories — extract() only detaches the
+        # node from its parent, so list order is safe
         for tag in root.find_all():
             if tag.name in ("script", "noscript", "style") or "hidden" in tag.attrs:
-                tag.decompose()
+                tag.extract()
         self._fix_invalid_paragraph_structure(root)
 
         content = root.find("body") or root
@@ -343,12 +350,10 @@ class HtmlConverter:
                     new_nodes.append(current_p)
 
             def flush_para_if_empty():
+                # the open paragraph is always the last node collected
                 nonlocal current_p
                 if current_p is not None and not current_p.get_text(strip=True):
-                    for i, n in enumerate(new_nodes):
-                        if n is current_p:
-                            del new_nodes[i]
-                            break
+                    new_nodes.pop()
                 current_p = None
 
             for node in list(p.contents):
@@ -369,13 +374,7 @@ class HtmlConverter:
                         current_p.append(node)
             flush_para_if_empty()
 
-            idx = -1
-            for i, sib in enumerate(parent.contents):
-                if sib is p:
-                    idx = i
-                    break
-            if idx < 0:
-                continue
+            idx = parent.contents.index(p)  # Tags compare by identity
             p.extract()
             for n in reversed(new_nodes):
                 parent.insert(idx, n)
@@ -386,36 +385,9 @@ class HtmlConverter:
         buffer = AnnotatedTextList()
 
         def flush_buffer() -> None:
-            if not buffer:
-                return
-            annotated = buffer.simplify_text_elements()
-            parts = annotated.split_by_newline()
-            buffer.clear()
-            if not "".join(el.text for el in annotated):
-                return
-            for part in parts:
-                with self._use_inline_group(part, doc):
-                    for at in part:
-                        if at.text.strip():
-                            seg_clean = clean_unicode(at.text.strip())
-                            if at.code:
-                                item = doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                item = doc.add_text(
-                                    parent=self.parents[self.level],
-                                    label="text",
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            added_refs.append(item.get_ref())
+            if buffer:
+                added_refs.extend(self._add_runs(buffer, doc))
+                buffer.clear()
 
         for node in element.contents:
             if isinstance(node, Tag):
@@ -455,6 +427,33 @@ class HtmlConverter:
                     )
         flush_buffer()
         return added_refs
+
+    def _add_runs(self, runs: AnnotatedTextList, doc: DLDocument) -> list[str]:
+        """Inline runs → one text/code item per non-blank merged run; each
+        line (split at newlines) of several runs gets an inline group."""
+        runs = runs.simplify_text_elements()
+        if not "".join(at.text for at in runs):
+            return []
+        refs: list[str] = []
+        for part in runs.split_by_newline():
+            with self._use_inline_group(part, doc):
+                for at in part:
+                    seg = at.text.strip()
+                    if not seg:
+                        continue
+                    kwargs = dict(
+                        parent=self.parents[self.level],
+                        text=clean_unicode(seg),
+                        content_layer=self.content_layer,
+                        formatting=at.formatting,
+                        hyperlink=at.hyperlink,
+                    )
+                    if at.code:
+                        item = doc.add_code(**kwargs)
+                    else:
+                        item = doc.add_text(label="text", **kwargs)
+                    refs.append(item.get_ref())
+        return refs
 
     # ------------------------------------------------- inline text extract
     def _collect_parent_format_tags(self, item) -> list[str]:
@@ -643,44 +642,27 @@ class HtmlConverter:
             added_refs.append(self._handle_list(tag, doc))
 
         elif name in ("p", "address", "summary"):
-            text_list = self._extract_annotated(tag, find_parent_annotation=True)
-            annotated = text_list.simplify_text_elements()
-            for part in annotated.split_by_newline():
-                with self._use_inline_group(part, doc):
-                    for at in part:
-                        seg = at.text.strip()
-                        if seg:
-                            seg_clean = clean_unicode(seg)
-                            if at.code:
-                                item = doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                item = doc.add_text(
-                                    parent=self.parents[self.level],
-                                    label="text",
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            added_refs.append(item.get_ref())
+            added_refs.extend(self._add_runs(
+                self._extract_annotated(tag, find_parent_annotation=True), doc
+            ))
             for img in tag.find_all("img"):
                 self._emit_image(img, doc)
 
         elif name == "table":
-            num_rows, num_cols = self.get_html_table_row_col(tag)
+            # header rows take no grid row (html_backend.py:1155-1178)
+            rows = self._table_rows(tag)
+            num_rows = sum(not row_header for _, _, row_header in rows)
+            num_cols = max(
+                (sum(col_span for _, col_span, _ in cells) for cells, _, _ in rows),
+                default=0,
+            )
             docling_table = doc.add_table(
                 data=TableData(num_rows=num_rows, num_cols=num_cols),
                 parent=self.parents[self.level],
                 content_layer=self.content_layer,
             )
             added_refs.append(docling_table.get_ref())
-            self._parse_table_data(tag, doc, docling_table, num_rows, num_cols)
+            self._parse_table_data(rows, doc, docling_table)
             # reference quirk (html_backend.py:1244-1248): for every <img>
             # inside a table it emits a placeholder from the *table* tag
             for _img in tag.find_all("img"):
@@ -893,25 +875,28 @@ class HtmlConverter:
         )
 
     @staticmethod
-    def get_html_table_row_col(tag: Tag) -> tuple:
-        """Row/col counting with span + header-row rules
-        (html_backend.py:1155-1178)."""
-        for t in tag.find_all({"thead", "tbody"}, recursive=False):
-            t.unwrap()
-        num_rows = 0
-        num_cols = 0
-        for row in tag.find_all("tr", recursive=False):
-            col_count = 0
-            is_row_header = True
-            for cell in row.find_all({"td", "th"}, recursive=False):
+    def _table_rows(table: Tag) -> list:
+        """The table's rows as ``(cells, col_header, row_header)``, each
+        cell ``(tag, col_span, row_span)``; thead/tbody wrappers (also ones
+        left unclosed, so nested) are unwrapped first. A row without <td>
+        is a column header; one whose cells are all multi-row <th> is a
+        row header (html_backend.py:516-540)."""
+        while wrappers := table.find_all({"thead", "tbody"}, recursive=False):
+            for wrapper in wrappers:
+                wrapper.unwrap()
+        rows = []
+        for tr in table.find_all("tr", recursive=False):
+            cells = []
+            col_header = row_header = True
+            for cell in tr.find_all({"td", "th"}, recursive=False):
                 col_span, row_span = HtmlConverter._get_cell_spans(cell)
-                col_count += col_span
-                if cell.name == "td" or row_span == 1:
-                    is_row_header = False
-            num_cols = max(num_cols, col_count)
-            if not is_row_header:
-                num_rows += 1
-        return num_rows, num_cols
+                cells.append((cell, col_span, row_span))
+                if cell.name == "td":
+                    col_header = row_header = False
+                elif row_span == 1:
+                    row_header = False
+            rows.append((cells, col_header, row_header))
+        return rows
 
     @staticmethod
     def get_text(item) -> str:
@@ -947,31 +932,17 @@ class HtmlConverter:
         return True
 
     def _parse_table_data(
-        self,
-        element: Tag,
-        doc: DLDocument,
-        docling_table: TableItem,
-        num_rows: int,
-        num_cols: int,
+        self, rows: list, doc: DLDocument, docling_table: TableItem
     ) -> None:
-        """Span-grid table parsing (html_backend.py:516-630)."""
-        for t in element.find_all({"thead", "tbody"}, recursive=False):
-            t.unwrap()
+        """Span-grid table parsing (html_backend.py:516-630) over
+        :meth:`_table_rows`; rich-cell walks only touch their own cell."""
+        num_rows = docling_table.data.num_rows
+        num_cols = docling_table.data.num_cols
         grid = [[None for _ in range(num_cols)] for _ in range(num_rows)]
         start_row_span = 0
         row_idx = -1
 
-        for row in element.find_all("tr", recursive=False):
-            cells = row.find_all({"td", "th"}, recursive=False)
-            col_header = True
-            row_header = True
-            for html_cell in cells:
-                _, row_span = self._get_cell_spans(html_cell)
-                if html_cell.name == "td":
-                    col_header = False
-                    row_header = False
-                elif row_span == 1:
-                    row_header = False
+        for cells, col_header, row_header in rows:
             if not row_header:
                 row_idx += 1
                 start_row_span = 0
@@ -979,7 +950,7 @@ class HtmlConverter:
                 start_row_span += 1
 
             col_idx = 0
-            for html_cell in cells:
+            for html_cell, col_span, row_span in cells:
                 for formula in html_cell.find_all("inline-formula"):
                     math_parts = formula.get_text().split("$$")
                     if len(math_parts) == 3:
@@ -1013,7 +984,6 @@ class HtmlConverter:
                         rich = False
 
                 text = clean_unicode(self.get_text(html_cell).strip())
-                col_span, row_span = self._get_cell_spans(html_cell)
                 if row_header:
                     row_span -= 1
                 while (

@@ -73,11 +73,8 @@ _BLANK = {**dict.fromkeys(_COLUMNS), "status": "failure", "num_items": 0,
 def _classify_failure(exc: BaseException) -> str:
     """Parse-failure taxonomy for the lineage table (ErrorItem analog,
     datamodel/base_models.py:178-181)."""
-    from docling_plus_spark.formats.registry import NeedsOcrError
     from docling_plus_spark.pdf.pdfbytes import NeedsNativeParserError
 
-    if isinstance(exc, NeedsOcrError):
-        return "needs_ocr"
     if isinstance(exc, NeedsNativeParserError):
         return "needs_native_parser"
     if isinstance(exc, UnicodeDecodeError):

@@ -26,7 +26,8 @@ text stack with only ``zlib`` + ``re``:
 Encrypted or structurally unparseable PDFs raise
 :class:`NeedsNativeParserError` so the extraction stage emits a
 classified failure row (``needs_native_parser``) — never a silent drop,
-mirroring the needs_ocr posture for images (registry.py).
+mirroring the needs_ocr posture for images (the plan gate in
+``plans/pipeline.py``).
 
 Oracle: per-page cell counts vs the reference's shipped goldens
 ``tests/data/groundtruth/docling_v2/*.pages.meta.json`` (the

@@ -45,6 +45,43 @@ HTML = b"""<!DOCTYPE html>
 </body></html>
 """
 
+# what neither the page above nor perfbench's corpus reaches: rich,
+# nested and header-only table rows, figures, linked images, details,
+# pre/code, <br> in <p>, hidden subtrees and list/paragraph repair cases
+FEATURES = b"""<!DOCTYPE html>
+<html><head><title>Features &amp; more</title><script>var x = 1;</script></head>
+<body>
+<div hidden><p>hidden text</p></div>
+<p>Before the heading: <code>inline_code()</code> and <a href="https://ex.test/a">a link</a>.</p>
+<h1>Feature page</h1>
+<p>line one<br>line two<br/>line three</p>
+<p>Para with <div>block child</div> tail <b>bold</b> text <p>nested para</p> end</p>
+<details><summary>Summary <b>bold</b></summary><p>Details body</p></details>
+<pre>pre line 1
+  pre <b>line</b> 2</pre>
+<p>Use <code>x = 1</code> or <kbd>Ctrl</kbd> here.</p>
+<figure><img src="f.png" alt="fig alt"><figcaption>Figure <i>caption</i></figcaption></figure>
+<p><a href="/img-link"><img src="i.png" alt="linked image"></a></p>
+<ol start="3"><li>three</li><li>four <b>bold</b> part</li><li><ul><li>empty li child</li></ul></li></ol>
+<ul><ul><li>nested directly</li></ul><li>after</li><li></li></ul>
+<table>
+<thead><tr><th rowspan="2">RH1</th><th rowspan="2">RH2</th></tr></thead>
+<tbody>
+<tr></tr>
+<tr><th>H1</th><th>H2</th><th>H3</th></tr>
+<tr><td><b>bold cell</b></td><td><a href="https://ex.test/c">link cell</a></td><td>plain</td></tr>
+<tr><td><p>para cell</p><ul><li>list in cell</li></ul></td><td>x <inline-formula>a $$x^2$$ b</inline-formula></td><td><img src="t.png" alt="in table"></td></tr>
+<tr><td><table><tr><td>inner</td><td>table</td></tr></table></td><td><h3>Heading in table</h3></td><td>c</td></tr>
+<tr><th>row head</th><td rowspan="2" colspan="2">span</td></tr>
+<tr><td>last</td></tr>
+</tbody>
+</table>
+<h2>Section two</h2>
+<address>Addr <i>line</i></address>
+<footer><p>Footer para</p></footer>
+</body></html>
+"""
+
 _PDF = make_text_pdf("the quick brown fox jumps over the lazy dog " * 3)
 
 _WAV = (b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
@@ -52,6 +89,7 @@ _WAV = (b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
 
 ROWS = [
     ("https://golden.test/page.html", HTML),
+    ("https://golden.test/features.html", FEATURES),
     ("https://golden.test/doc.pdf", _PDF),
     ("https://golden.test/broken.pdf", _PDF[:120]),
     ("https://golden.test/img.png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
@@ -69,6 +107,7 @@ GOLDEN_PLAIN = {
     "https://golden.test/clip.wav": "99db82e4e944f97f",
     "https://golden.test/doc.pdf": "07a7462a53f31e7e",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
+    "https://golden.test/features.html": "20748d92718dd4e6",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/notes": "00b13dd53c5f4e37",
     "https://golden.test/null.html": "594e55eab61308ec",
@@ -80,6 +119,7 @@ GOLDEN_ALL = {
     "https://golden.test/clip.wav": "99db82e4e944f97f",
     "https://golden.test/doc.pdf": "5174a6260c64909c",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
+    "https://golden.test/features.html": "ee376f09cdab7c2f",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/notes": "00b13dd53c5f4e37",
     "https://golden.test/null.html": "594e55eab61308ec",
@@ -134,6 +174,7 @@ def test_row_kinds_cover_every_path(spark):
     classes = {u: (r["status"], r["failure_class"]) for u, r in by_url.items()}
     assert classes == {
         "https://golden.test/page.html": ("success", None),
+        "https://golden.test/features.html": ("success", None),
         "https://golden.test/doc.pdf": ("success", None),
         "https://golden.test/broken.pdf": ("failure", "needs_native_parser"),
         "https://golden.test/img.png": ("failure", "needs_ocr"),

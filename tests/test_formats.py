@@ -20,6 +20,8 @@ from docling_plus_spark.formats import (
     convert_vtt,
 )
 
+from conftest import needs_reference
+
 CSV_DIR = Path("/root/reference/docling/tests/data/csv")
 VTT_DIR = Path("/root/reference/docling/tests/data/webvtt")
 GOLD_DIR = Path("/root/reference/docling/tests/data/groundtruth/docling_v2")
@@ -28,6 +30,7 @@ CSV_FIXTURES = sorted(p.stem for p in CSV_DIR.glob("*.csv")) if CSV_DIR.exists()
 VTT_FIXTURES = sorted(p.stem for p in VTT_DIR.glob("*.vtt")) if VTT_DIR.exists() else []
 
 
+@needs_reference
 @pytest.mark.parametrize("name", CSV_FIXTURES)
 def test_csv_golden_md_itxt(name):
     doc = convert_csv(
@@ -37,6 +40,7 @@ def test_csv_golden_md_itxt(name):
     assert doc.export_to_element_tree() == (GOLD_DIR / f"{name}.csv.itxt").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize("name", CSV_FIXTURES)
 def test_csv_golden_json_modulo_version(name):
     # the CSV goldens were generated with docling-core 1.7.0; the engine
@@ -49,6 +53,7 @@ def test_csv_golden_json_modulo_version(name):
     assert mine == (GOLD_DIR / f"{name}.csv.json").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize("name", VTT_FIXTURES)
 def test_vtt_golden_md_itxt(name):
     doc = convert_vtt(
@@ -58,6 +63,7 @@ def test_vtt_golden_md_itxt(name):
     assert doc.export_to_element_tree() == (GOLD_DIR / f"{name}.vtt.itxt").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize("name", VTT_FIXTURES)
 def test_vtt_golden_json_tree(name):
     # VTT goldens predate the 1.8.0 schema bump; compare parsed trees with
@@ -100,6 +106,7 @@ MD_PARITY = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("name", MD_PARITY)
 def test_markdown_golden_md(name):
     doc = convert_markdown(
@@ -109,6 +116,7 @@ def test_markdown_golden_md(name):
     assert doc.export_to_markdown() == gold
 
 
+@needs_reference
 def test_markdown_golden_escaped_characters():
     # byte-identical modulo the golden's stale '>'-escaping vintage
     doc = convert_markdown(
@@ -166,6 +174,7 @@ code here
     assert "Some paragraph spanning lines." in [t for _, t in items]
 
 
+@needs_reference
 def test_asciidoc_structure_fixture_01():
     # The reference's committed asciidoc goldens are stale (generated by
     # older parser/serializer revisions and mutually inconsistent —
@@ -196,6 +205,7 @@ def test_asciidoc_structure_fixture_01():
     )
 
 
+@needs_reference
 def test_asciidoc_nested_lists_and_captions():
     from docling_plus_spark.formats import convert_asciidoc
 
@@ -213,6 +223,7 @@ def test_asciidoc_nested_lists_and_captions():
     assert doc.resolve(doc.tables[1].captions[0]).text == "Caption for the table 1"
 
 
+@needs_reference
 def test_asciidoc_goldens_are_stale_proof():
     """In-band proof that the reference's committed `.asciidoc.md`
     goldens CANNOT be the current reference parser's output — the
@@ -273,6 +284,7 @@ DOCX_PARITY = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("name", DOCX_PARITY)
 def test_docx_golden_md_itxt(name):
     from docling_plus_spark.formats import convert_docx
@@ -292,6 +304,7 @@ PPTX_FIXTURES = (
 )
 
 
+@needs_reference
 @pytest.mark.parametrize("name", PPTX_FIXTURES)
 def test_pptx_golden_md_itxt(name):
     from docling_plus_spark.formats import convert_pptx
@@ -311,6 +324,7 @@ XLSX_FIXTURES = (
 )
 
 
+@needs_reference
 @pytest.mark.parametrize("name", XLSX_FIXTURES)
 def test_xlsx_golden_md_itxt(name):
     from docling_plus_spark.formats import convert_xlsx
@@ -328,6 +342,7 @@ JATS_FIXTURES = (
 )
 
 
+@needs_reference
 @pytest.mark.parametrize("name", JATS_FIXTURES)
 def test_jats_golden_itxt_and_md(name):
     from docling_plus_spark.formats import convert_jats
@@ -358,6 +373,7 @@ def _norm_itxt_abbrev(itxt: str) -> str:
     return "\n".join(out)
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name",
     [
@@ -383,6 +399,7 @@ def test_uspto_unknown_format_rejected():
         convert_uspto(b"just some text, no PATN record or patent DTD")
 
 
+@needs_reference
 def test_mets_gbs_fixture():
     # no reference goldens exist for METS-GBS (its output depends on the
     # NN pdf pipeline); assert page/cell extraction and that the
@@ -418,6 +435,7 @@ def test_mets_gbs_rejects_non_mets():
         convert_mets_gbs(buf.getvalue())
 
 
+@needs_reference
 def test_docx_embedded_image_payloads():
     """Raw-media passthrough (VERDICT r2 item 8): every docx picture
     whose raster bytes exist in the package carries an ImageRef whose
@@ -470,6 +488,7 @@ def test_docx_rejects_non_zip():
         convert_docx(b"not a zip at all")
 
 
+@needs_reference
 def test_docling_json_roundtrip_all_goldens():
     # load every reference groundtruth .json → re-export → byte-identical
     # (modulo the 1.7.0→1.8.0 version bump on the older csv/vtt goldens)

@@ -20,14 +20,12 @@ from docling_plus_spark.pdf.pdfbytes import NeedsNativeParserError, PdfDocument
 from docling_plus_spark.pdf.pdftext import extract_pdf_pages, extract_pdf_text
 from docling_plus_spark.pdf.synth import make_text_pdf
 
+from conftest import needs_reference
+
 PDF_DIR = "/root/reference/docling/tests/data/pdf"
 GT_DIR = "/root/reference/docling/tests/data/groundtruth/docling_v2"
 
 ALL_PDFS = sorted(glob.glob(os.path.join(PDF_DIR, "*.pdf")))
-
-needs_reference = pytest.mark.skipif(
-    not ALL_PDFS, reason=f"reference PDF tree {PDF_DIR} is missing"
-)
 
 # pages where the calibrated segmentation reproduces the golden count
 # exactly (locked — a regression here is a real regression)
@@ -63,6 +61,7 @@ def _gt_counts(name):
         return [p["num_cells"] for p in json.load(f)]
 
 
+@needs_reference
 @pytest.mark.parametrize("path", ALL_PDFS, ids=[os.path.basename(p) for p in ALL_PDFS])
 def test_reference_pdf_parses(path):
     """Every reference fixture parses: right page count, text present."""

@@ -102,6 +102,31 @@ def test_table_with_spans():
     grid = tbl.data.grid()
     assert grid[0][0].text == "AB" and grid[0][1].text == "AB"
 
+    # a row of multi-row <th> and an empty <tr> are header rows: they take
+    # no grid row, but their spans still count toward the width
+    doc = convert_html(
+        b"<table>"
+        b"<tr><th rowspan='2'>H1</th><th rowspan='3'>H2</th><th>H3</th>"
+        b"<th rowspan='2'>H4</th><th rowspan='2'>H5</th></tr>"
+        b"<tr><th rowspan='2'>R1</th><th rowspan='2'>R2</th></tr>"
+        b"<tr></tr>"
+        b"<tr><td>a</td><td colspan='3'>b</td></tr>"
+        b"<tr><td>c</td></tr>"
+        b"</table>"
+    )
+    tbl = doc.tables[0]
+    assert (tbl.data.num_rows, tbl.data.num_cols) == (3, 5)
+    assert [c.column_header for c in tbl.data.table_cells] == [True] * 7 + [False] * 3
+
+    # without </thead> the <tbody> nests inside it; both are unwrapped
+    doc = convert_html(
+        b"<table><thead><tr><th>A</th><th>B</th></tr>"
+        b"<tbody><tr><td>1</td><td>2</td></tr></tbody></table>"
+    )
+    tbl = doc.tables[0]
+    assert (tbl.data.num_rows, tbl.data.num_cols) == (2, 2)
+    assert [c.text for c in tbl.data.table_cells] == ["A", "B", "1", "2"]
+
 
 def test_paragraph_breaker_repair():
     doc = convert_html(
