@@ -25,7 +25,11 @@ that both the dimensions and the span grid use; a thead/tbody left unclosed
 (so nested in another) is unwrapped too, which keeps its rows in the grid.
 ``_add_runs`` turns inline runs into text/code items for buffered inline
 content and ``p``/``address``/``summary`` blocks alike; list items and
-``pre`` emit their own way.
+``pre`` emit their own way. Inline runs are collected in one walk of the
+ancestors (nearest ``a[href]`` and the format tags above it) and one
+recursive pass that appends into a single list, handing the format-tag tuple
+and the hyperlink down as arguments; ``(Formatting, code)`` is memoized per
+format-tag tuple.
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ import hashlib
 import re
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
+from functools import lru_cache
 from pathlib import PurePosixPath
 from typing import Optional
 from urllib.parse import urlsplit, urlunsplit
@@ -174,6 +179,33 @@ class AnnotatedText:
     code: bool = False
 
 
+@lru_cache(maxsize=1024)
+def _format_of(format_tags: tuple) -> tuple:
+    """``(Formatting or None, code)`` of the open format tags, in order."""
+    kwargs: dict = {}
+    for t in format_tags:
+        kwargs.update(_FORMAT_TAG_MAP[t])
+    code = any(t in format_tags for t in _CODE_TAGS)
+    return (Formatting(**kwargs) if kwargs else None), code
+
+
+def _add_text_run(
+    node: NavString, format_tags: tuple, hyperlink: Optional[str],
+    keep_newlines: bool, runs: list,
+) -> None:
+    """Append the run of one text node: its stripped text, or a newline for
+    a newline-only node when ``keep_newlines``; comments give none."""
+    if node.preformatted:
+        return
+    text = node.strip()
+    if not text:
+        if not keep_newlines or node.strip("\n\r"):
+            return
+        text = "\n"
+    formatting, code = _format_of(format_tags)
+    runs.append(AnnotatedText(text, hyperlink, formatting, code))
+
+
 class AnnotatedTextList(list):
     """Run-length merging + newline splitting (html_backend.py:139-227)."""
 
@@ -267,7 +299,7 @@ class HtmlConverter:
         }
         self.content_layer = ContentLayer.BODY
         self.hyperlink: Optional[str] = None
-        self.format_tags: list[str] = []
+        self.format_tags: tuple = ()
         self.list_ordered_by_ref: dict[str, bool] = {}
         self.list_start_by_ref: dict[str, int] = {}
 
@@ -399,7 +431,7 @@ class HtmlConverter:
                         added_refs.append(ref)
                 elif name in _FORMAT_TAG_MAP:
                     flush_buffer()
-                    with self._use_format([name]):
+                    with self._use_format(name):
                         added_refs.extend(self._walk(node, doc))
                 elif name == "a":
                     with self._use_hyperlink(node):
@@ -411,20 +443,12 @@ class HtmlConverter:
                     flush_buffer()
                     added_refs.extend(self._walk(node, doc))
                 else:
-                    buffer.extend(
-                        self._extract_annotated(
-                            node, find_parent_annotation=True, keep_newlines=True
-                        )
-                    )
+                    buffer.extend(self._extract_annotated(node, keep_newlines=True))
             elif isinstance(node, NavString) and not node.preformatted:
                 if str(node).strip("\n\r") == "":
                     flush_buffer()
                 else:
-                    buffer.extend(
-                        self._extract_annotated(
-                            node, find_parent_annotation=True, keep_newlines=True
-                        )
-                    )
+                    buffer.extend(self._extract_annotated(node, keep_newlines=True))
         flush_buffer()
         return added_refs
 
@@ -456,124 +480,83 @@ class HtmlConverter:
         return refs
 
     # ------------------------------------------------- inline text extract
-    def _collect_parent_format_tags(self, item) -> list[str]:
-        # one ancestor walk, then _FORMAT_TAG_MAP-ordered filter — same
-        # output as walking once per format tag, O(depth) not O(7·depth)
-        seen = set()
-        this_parent = item.parent
-        while this_parent is not None:
-            seen.add(this_parent.name)
-            this_parent = this_parent.parent
-        return [t for t in _FORMAT_TAG_MAP if t in seen]
-
-    @property
-    def _formatting(self) -> Optional[Formatting]:
-        kwargs: dict = {}
-        for t in self.format_tags:
-            kwargs.update(_FORMAT_TAG_MAP[t])
-        if not kwargs:
-            return None
-        return Formatting(**kwargs)
-
     def _extract_annotated(
-        self,
-        item,
-        ignore_list: bool = False,
-        find_parent_annotation: bool = False,
-        keep_newlines: bool = False,
+        self, item, ignore_list: bool = False, keep_newlines: bool = False
     ) -> AnnotatedTextList:
-        """Inline run extraction (html_backend.py:749-827)."""
-        result = AnnotatedTextList()
-
-        if find_parent_annotation:
-            format_tags = self._collect_parent_format_tags(item)
-            this_parent = item.parent
-            while this_parent is not None:
-                if this_parent.name == "a" and this_parent.get("href"):
-                    with self._use_format(format_tags):
-                        with self._use_hyperlink(this_parent):
-                            return self._extract_annotated(item, ignore_list)
-                this_parent = this_parent.parent
-
+        """Inline run extraction (html_backend.py:749-827): the runs of
+        ``item``'s subtree in the current format/link context. Reference
+        quirks kept: the format tags of ``item``'s ancestors apply only under
+        an ancestor ``a[href]``, which also sets the hyperlink and drops
+        ``keep_newlines``."""
+        format_tags = self.format_tags
+        hyperlink = self.hyperlink
+        names = set()
+        anchor = None
+        node = item.parent
+        while node is not None:
+            names.add(node.name)
+            if anchor is None and node.name == "a" and node.get("href"):
+                anchor = node
+            node = node.parent
+        if anchor is not None:
+            format_tags += tuple(t for t in _FORMAT_TAG_MAP if t in names)
+            hyperlink = resolve_hyperlink(anchor.get("href"), self.base_path)
+            keep_newlines = False
+        runs = AnnotatedTextList()
         if isinstance(item, NavString):
-            if item.preformatted:
-                return AnnotatedTextList()
-            text = item.strip()
-            code = any(t in self.format_tags for t in _CODE_TAGS)
-            if text:
-                return AnnotatedTextList([
-                    AnnotatedText(
-                        text=text,
-                        hyperlink=self.hyperlink,
-                        formatting=self._formatting,
-                        code=code,
-                    )
-                ])
-            if keep_newlines and item.strip("\n\r") == "":
-                return AnnotatedTextList([
-                    AnnotatedText(
-                        text="\n",
-                        hyperlink=self.hyperlink,
-                        formatting=self._formatting,
-                        code=code,
-                    )
-                ])
-            return AnnotatedTextList()
+            _add_text_run(item, format_tags, hyperlink, keep_newlines, runs)
+        else:
+            self._collect_runs(
+                item, format_tags, hyperlink, ignore_list, keep_newlines, runs
+            )
+        return runs
 
-        tag = item
-        if not ignore_list or (tag.name not in ("ul", "ol")):
-            for child in tag.contents:
-                if isinstance(child, Tag) and child.name in _FORMAT_TAG_MAP:
-                    with self._use_format([child.name]):
-                        result.extend(
-                            self._extract_annotated(
-                                child, ignore_list, keep_newlines=keep_newlines
-                            )
-                        )
-                elif isinstance(child, Tag) and child.name == "a":
-                    with self._use_hyperlink(child):
-                        result.extend(
-                            self._extract_annotated(
-                                child, ignore_list, keep_newlines=keep_newlines
-                            )
-                        )
-                else:
-                    result.extend(
-                        self._extract_annotated(
-                            child, ignore_list, keep_newlines=keep_newlines
-                        )
-                    )
-        return result
+    def _collect_runs(
+        self, tag: Tag, format_tags: tuple, hyperlink: Optional[str],
+        ignore_list: bool, keep_newlines: bool, runs: list,
+    ) -> None:
+        """Append the runs of ``tag``'s subtree to ``runs``; a format tag
+        extends ``format_tags`` and an ``a[href]`` sets ``hyperlink`` for
+        its own subtree."""
+        if ignore_list and tag.name in ("ul", "ol"):
+            return
+        for child in tag.contents:
+            if isinstance(child, Tag):
+                name = child.name
+                child_tags = format_tags
+                child_link = hyperlink
+                if name in _FORMAT_TAG_MAP:
+                    child_tags = format_tags + (name,)
+                elif name == "a":
+                    href = child.get("href")
+                    if href:
+                        child_link = resolve_hyperlink(href, self.base_path)
+                self._collect_runs(
+                    child, child_tags, child_link, ignore_list, keep_newlines, runs
+                )
+            else:
+                _add_text_run(child, format_tags, hyperlink, keep_newlines, runs)
 
     # ------------------------------------------------------ context helpers
     @contextmanager
     def _use_hyperlink(self, tag: Tag):
-        old = None
-        new = None
+        old = self.hyperlink
         href = tag.get("href")
-        if href is None:
+        if href:
+            self.hyperlink = resolve_hyperlink(href, self.base_path)
+        try:
             yield None
-        else:
-            if isinstance(href, str) and href:
-                old = self.hyperlink
-                new = resolve_hyperlink(href, self.base_path)
-                self.hyperlink = new
-            try:
-                yield None
-            finally:
-                if new:
-                    self.hyperlink = old
+        finally:
+            self.hyperlink = old
 
     @contextmanager
-    def _use_format(self, tags: list):
-        if not tags:
+    def _use_format(self, name: str):
+        old = self.format_tags
+        self.format_tags = old + (name,)
+        try:
             yield None
-        else:
-            self.format_tags.extend(tags)
-            try:
-                yield None
-            finally:
-                self.format_tags = self.format_tags[: -len(tags)]
+        finally:
+            self.format_tags = old
 
     @contextmanager
     def _use_inline_group(self, annotated_list, doc: DLDocument):
@@ -642,9 +625,7 @@ class HtmlConverter:
             added_refs.append(self._handle_list(tag, doc))
 
         elif name in ("p", "address", "summary"):
-            added_refs.extend(self._add_runs(
-                self._extract_annotated(tag, find_parent_annotation=True), doc
-            ))
+            added_refs.extend(self._add_runs(self._extract_annotated(tag), doc))
             for img in tag.find_all("img"):
                 self._emit_image(img, doc)
 
@@ -671,9 +652,7 @@ class HtmlConverter:
                     added_refs.append(ref2)
 
         elif name == "pre":
-            text_list = self._extract_annotated(
-                tag, find_parent_annotation=True, keep_newlines=True
-            )
+            text_list = self._extract_annotated(tag, keep_newlines=True)
             annotated = text_list.simplify_text_elements()
             with self._use_inline_group(annotated, doc):
                 for at in annotated:
@@ -701,9 +680,7 @@ class HtmlConverter:
         added_ref: list[str] = []
         self.content_layer = ContentLayer.BODY
         level = int(tag.name[1])
-        annotated = self._extract_annotated(
-            tag, find_parent_annotation=True
-        ).to_single_text_element()
+        annotated = self._extract_annotated(tag).to_single_text_element()
         text_clean = clean_unicode(annotated.text)
         if level == 1:
             for key in self.parents:
@@ -786,9 +763,7 @@ class HtmlConverter:
             else:
                 marker = ""
 
-            parts = self._extract_annotated(
-                li, ignore_list=True, find_parent_annotation=True
-            )
+            parts = self._extract_annotated(li, ignore_list=True)
             min_parts = parts.simplify_text_elements()
             li_text = _WS_RE.sub(" ", "".join(el.text for el in min_parts)).strip()
 
@@ -923,7 +898,7 @@ class HtmlConverter:
         if not children:
             content = [c for c in cell.contents if isinstance(c, NavString)]
             return len(content) > 1
-        annotations = self._extract_annotated(cell, find_parent_annotation=True)
+        annotations = self._extract_annotated(cell)
         if not annotations:
             return True  # reference: bool(generator) is always True
         if len(annotations) == 1:
@@ -1037,9 +1012,7 @@ class HtmlConverter:
         if figure is not None:
             caption_tag = figure.find("figcaption", recursive=False)
             if caption_tag is not None:
-                caption = self._extract_annotated(
-                    caption_tag, find_parent_annotation=True
-                )
+                caption = self._extract_annotated(caption_tag)
         if not caption and img_tag.get("alt"):
             caption = AnnotatedTextList([AnnotatedText(text=img_tag.get("alt"))])
 

@@ -29,10 +29,12 @@ Scale design:
 
 from __future__ import annotations
 
+import gc
 import time
 from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -159,6 +161,12 @@ def extract_batches(include: tuple):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         row = _row_builder(include)
+        if TaskContext.get() is not None and gc.get_freeze_count() == 0:
+            # once per Python worker (never in a driver that calls fn
+            # directly): its imports leave ~75-90k GC-tracked objects that
+            # every full collection during conversion would otherwise re-scan
+            gc.collect()
+            gc.freeze()
         for pdf in batches:
             # cut at every _MAX_FRAME_BYTES of input, so one run of
             # wiki_duck-scale rows can't balloon a single output frame

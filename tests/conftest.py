@@ -1,10 +1,11 @@
-"""Markers shared by the test modules."""
+"""Markers and inputs shared by the test modules."""
 
 from pathlib import Path
 
 import pytest
 
-from docling_plus_spark.sources.web_pages import FIXTURE_DIR
+from docling_plus_spark.sources.web_pages import FIXTURE_DIR, WEB_PAGES_SCHEMA
+from tools.convert_ab import bench_corpus
 
 #: docling's test data: HTML fixtures, other formats and groundtruth files
 REFERENCE_DATA = Path(FIXTURE_DIR).parent
@@ -15,3 +16,12 @@ needs_reference = pytest.mark.skipif(
     not REFERENCE_DATA.is_dir(),
     reason=f"reference test data {REFERENCE_DATA} is missing",
 )
+
+
+def web_pages_df(spark, n: int, seed: int = 0, rep: int = 0):
+    """``n`` generated web pages (one in 27 at wiki_duck scale, ~70% of the
+    bytes) as a web_pages DataFrame; ``rep`` tags the urls, so frames of
+    different ``rep`` hold different rows."""
+    docs = bench_corpus().web_pages(seed, n).docs
+    rows = [(f"{d.url}?rep={rep}", None, d.html, "", "en") for d in docs]
+    return spark.createDataFrame(rows, WEB_PAGES_SCHEMA)

@@ -17,6 +17,7 @@ import re
 from pathlib import Path
 
 import pytest
+from conftest import needs_reference
 
 from docling_plus_spark.doc.doctags import export_to_doctags
 
@@ -30,7 +31,7 @@ AMBIGUOUS = ["multi_page", "redp5110_sampled"]
 _LOC = re.compile(r"<loc_(\d+)>")
 
 
-@pytest.mark.skipif(not GT.exists(), reason="reference goldens not present")
+@needs_reference
 @pytest.mark.parametrize("name", BYTE_IDENTICAL)
 def test_doctags_byte_identical(name):
     doc = json.loads((GT / f"{name}.json").read_text())
@@ -51,7 +52,7 @@ def _ambiguity_band_ok(want_line: str, got_line: str) -> bool:
     return bool(diffs) and all(abs(int(a) - int(b)) == 1 for a, b in diffs)
 
 
-@pytest.mark.skipif(not GT.exists(), reason="reference goldens not present")
+@needs_reference
 @pytest.mark.parametrize("name", AMBIGUOUS)
 def test_doctags_modulo_json_precision(name):
     doc = json.loads((GT / f"{name}.json").read_text())

@@ -10,6 +10,7 @@ extracted text per url).
 from pathlib import Path
 
 import pytest
+from conftest import needs_reference
 
 from docling_plus_spark.html import convert_html
 
@@ -18,9 +19,7 @@ GOLD_DIR = Path("/root/reference/docling/tests/data/groundtruth/docling_v2")
 
 FIXTURES = sorted(p.stem for p in HTML_DIR.glob("*.html")) if HTML_DIR.exists() else []
 
-pytestmark = pytest.mark.skipif(
-    not HTML_DIR.exists(), reason="reference fixture corpus not available"
-)
+pytestmark = needs_reference
 
 
 @pytest.fixture(scope="module")

@@ -12,6 +12,7 @@ import re
 from pathlib import Path
 
 import pytest
+from conftest import needs_reference
 
 from docling_plus_spark.doc.html_sink import export_to_html
 from docling_plus_spark.doc.serializers import export_to_element_tree
@@ -23,7 +24,7 @@ GT = Path("/root/reference/docling/tests/data/groundtruth/docling_v2")
 NAMES = sorted(p.name[:-5] for p in FIXTURES.glob("*.html")) if FIXTURES.exists() else []
 
 
-@pytest.mark.skipif(not NAMES, reason="reference fixtures not present")
+@needs_reference
 @pytest.mark.parametrize("name", NAMES)
 def test_html_roundtrip_itxt_identical(name):
     data = (FIXTURES / f"{name}.html").read_bytes()
@@ -33,7 +34,7 @@ def test_html_roundtrip_itxt_identical(name):
     assert export_to_element_tree(doc1) == export_to_element_tree(doc2)
 
 
-@pytest.mark.skipif(not GT.exists(), reason="reference goldens not present")
+@needs_reference
 def test_split_page_view_one_div_per_page():
     doc = json.loads((GT / "2206.01062.json").read_text())
     h = export_to_html(doc, split_page_view=True)
@@ -45,7 +46,7 @@ def test_split_page_view_one_div_per_page():
     assert "DocLayNet dataset overview" in h[p4:p5]
 
 
-@pytest.mark.skipif(not GT.exists(), reason="reference goldens not present")
+@needs_reference
 def test_single_view_is_one_page_div():
     doc = json.loads((GT / "2206.01062.json").read_text())
     h = export_to_html(doc, split_page_view=False)

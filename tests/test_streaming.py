@@ -5,10 +5,10 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import web_pages_df
 from pyspark.sql import functions as F
 
 from docling_plus_spark.plans import build_session
-from docling_plus_spark.sources import fixture_corpus_df
 from docling_plus_spark.streaming import run_stream_once
 
 
@@ -24,7 +24,7 @@ def test_stream_drains_and_resumes(spark, tmp_path):
     outp = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    first = fixture_corpus_df(spark, replicate=1)
+    first = web_pages_df(spark, 27)
     n1 = first.count()
     first.write.mode("append").parquet(inp)
 
@@ -34,9 +34,7 @@ def test_stream_drains_and_resumes(spark, tmp_path):
     assert got1.filter(F.col("status") == "success").count() > 0.9 * n1
 
     # new files arrive; a re-run processes ONLY them (checkpoint resume)
-    second = fixture_corpus_df(spark, replicate=2).filter(
-        F.col("url").endswith("rep=1")
-    )
+    second = web_pages_df(spark, 27, seed=1, rep=1)
     n2 = second.count()
     assert n2 > 0
     second.write.mode("append").parquet(inp)
