@@ -459,38 +459,25 @@ class DLDocument:
 
     # ------------------------------------------------------------- traversal
     def iterate_items(
-        self,
-        root=None,
-        with_groups: bool = False,
-        traverse_pictures: bool = False,
-        included_content_layers: Optional[set] = None,
-        _level: int = 0,
+        self, root=None, with_groups: bool = False, _level: int = 0
     ) -> Iterator[tuple]:
         """DFS over the body tree, yielding ``(item, level)``.
 
-        Mirrors docling-core ``DoclingDocument.iterate_items``: items whose
-        content_layer is filtered out are not yielded but their children are
-        still traversed; picture children are skipped unless requested.
+        Mirrors docling-core ``DoclingDocument.iterate_items`` with its
+        defaults: only body-layer items are yielded, but the children of
+        the others are still traversed; picture children are skipped.
         """
-        layers = included_content_layers or {ContentLayer.BODY}
         if root is None:
             root = self.body
-        is_group = isinstance(root, GroupItem)
-        if (not is_group) or with_groups:
-            if root.content_layer in layers:
-                yield root, _level
-        if isinstance(root, PictureItem) and not traverse_pictures:
+        if (with_groups or not isinstance(root, GroupItem)) \
+                and root.content_layer == ContentLayer.BODY:
+            yield root, _level
+        if isinstance(root, PictureItem):
             return
         for child_ref in root.children:
             child = self._by_ref.get(child_ref)
             if child is not None:
-                yield from self.iterate_items(
-                    child,
-                    with_groups=with_groups,
-                    traverse_pictures=traverse_pictures,
-                    included_content_layers=layers,
-                    _level=_level + 1,
-                )
+                yield from self.iterate_items(child, with_groups, _level + 1)
 
     # --------------------------------------------------------------- exports
     def export_to_dict(self) -> dict:

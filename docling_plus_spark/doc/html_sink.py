@@ -21,14 +21,18 @@ therefore a from-scratch sink reproducing the *contract*:
 
 Operates on the plain dict form (``DLDocument.export_to_dict()`` or a
 docling-JSON file), so the same code serves the HTML path (no prov) and
-the PDF path / reference JSONs (prov + pages). Pure string function —
-applied per row inside the existing serialization ``mapInPandas`` stage.
+the PDF path / reference JSONs (prov + pages); it resolves ``$ref``
+pointers and reads provenance pages with the DocTags sink's helpers. Only
+the body content layer is rendered. Pure string function — applied per row
+inside the existing serialization ``mapInPandas`` stage.
 """
 
 from __future__ import annotations
 
 import html as _html
 from typing import Optional
+
+from .doctags import _first_page, _resolve
 
 _STYLE = (
     "html{background-color:#f5f5f5;}body{margin:2em auto;max-width:50em;"
@@ -39,20 +43,9 @@ _STYLE = (
     "padding:.5em;overflow-x:auto;}.formula{text-align:center;}"
 )
 
-_DEFAULT_LAYERS = frozenset({"body"})
 
-
-def _resolve(doc: dict, ref: str) -> Optional[dict]:
-    parts = ref.lstrip("#/").split("/")
-    node: object = doc
-    for p in parts:
-        if isinstance(node, list):
-            node = node[int(p)]
-        elif isinstance(node, dict):
-            node = node.get(p)
-        if node is None:
-            return None
-    return node  # type: ignore[return-value]
+def _is_body(item: dict) -> bool:
+    return (item.get("content_layer") or "body") == "body"
 
 
 def _esc(text: str) -> str:
@@ -92,7 +85,7 @@ def _caption_html(doc: dict, item: dict) -> str:
     return " ".join(parts)
 
 
-def _table_html(doc: dict, item: dict, writer: "Optional[_HtmlWriter]" = None) -> str:
+def _table_html(doc: dict, item: dict, writer: "_HtmlWriter") -> str:
     data = item.get("data") or {}
     cells = data.get("table_cells") or []
     nrows = int(data.get("num_rows") or 0)
@@ -131,7 +124,7 @@ def _table_html(doc: dict, item: dict, writer: "Optional[_HtmlWriter]" = None) -
             if cs > 1:
                 attrs.append(f' colspan="{cs}"')
             cref = cell.get("ref")
-            if cref and writer is not None:
+            if cref:
                 grp = _resolve(doc, cref["$ref"])
                 blocks: list = []
                 if grp is not None:
@@ -152,23 +145,15 @@ def _table_html(doc: dict, item: dict, writer: "Optional[_HtmlWriter]" = None) -
 
 
 class _HtmlWriter:
-    def __init__(self, doc: dict, layers=_DEFAULT_LAYERS):
+    def __init__(self, doc: dict):
         self.doc = doc
-        self.layers = layers
         self._in_cell = False
-
-    def _included(self, item: dict) -> bool:
-        return (item.get("content_layer") or "body") in self.layers
 
     def body_blocks(self) -> list:
         """(block_html, first_page_no) for every top-level renderable."""
         blocks: list = []
         self._walk(self.doc.get("body") or {}, blocks)
         return blocks
-
-    def _first_page(self, item: dict) -> Optional[int]:
-        provs = item.get("prov") or []
-        return provs[0].get("page_no") if provs else None
 
     def _cell_picture_count(self, table: dict) -> int:
         """Pictures reachable through a table's rich cell groups (incl.
@@ -227,7 +212,7 @@ class _HtmlWriter:
             elif kind != "pictures":
                 pending_quirk = 0
             if kind == "groups":
-                if not self._included(child):
+                if not _is_body(child):
                     continue
                 label = child.get("label", "")
                 if label in ("list", "ordered_list"):
@@ -246,13 +231,13 @@ class _HtmlWriter:
                 else:
                     self._walk(child, blocks)
                 continue
-            if not self._included(child):
+            if not _is_body(child):
                 # furniture subtree: children may still be body (rare); the
                 # reference skips the whole subtree — so do we
                 continue
             blk = self._item_html(child, kind)
             if blk:
-                blocks.append((blk, self._first_page(child)))
+                blocks.append((blk, _first_page(child)))
             if kind not in ("pictures", "tables"):
                 self._walk(child, blocks)
 
@@ -260,14 +245,14 @@ class _HtmlWriter:
         for cref in group.get("children") or []:
             child = _resolve(self.doc, cref["$ref"])
             if child is not None:
-                pg = self._first_page(child)
+                pg = _first_page(child)
                 if pg is not None:
                     return pg
         return None
 
     def _item_html(self, item: dict, kind: str) -> str:
         if kind == "tables":
-            return _table_html(self.doc, item, writer=self)
+            return _table_html(self.doc, item, self)
         if kind == "pictures":
             uri = (item.get("image") or {}).get("uri") or ""
             src = _html.escape(str(uri), quote=True)
@@ -370,11 +355,7 @@ class _HtmlWriter:
         return joined if bare else (f"<p>{joined}</p>" if joined else "")
 
 
-def export_to_html(
-    doc: dict,
-    split_page_view: bool = False,
-    title: Optional[str] = None,
-) -> str:
+def export_to_html(doc: dict, split_page_view: bool = False) -> str:
     """Serialize a DoclingDocument dict to a standalone HTML page.
 
     ``split_page_view=True``: one ``<div class="page">`` per provenance
@@ -383,7 +364,7 @@ def export_to_html(
     """
     writer = _HtmlWriter(doc)
     blocks = writer.body_blocks()
-    name = title if title is not None else str(doc.get("name") or "document")
+    name = str(doc.get("name") or "document")
 
     if split_page_view:
         page_nos = sorted(

@@ -8,6 +8,8 @@ the serializer usage in ``/root/reference/docling/docling/cli/main.py:221-284``.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 from .document import (
     ContentLayer,
     DLDocument,
@@ -43,21 +45,11 @@ def export_to_element_tree(doc: DLDocument) -> str:
                 f"{pad}item-{ix} at level {level}: {item.label}: "
                 f"{_itxt_text(item.text)}"
             )
-        elif isinstance(item, TableItem):
-            lines.append(
-                f"{pad}item-{ix} at level {level}: {item.label} with "
-                f"[{item.data.num_rows}x{item.data.num_cols}]"
-            )
-            for cap_ref in item.captions:
-                cap = doc.resolve(cap_ref)
-                # caption sub-lines print in full — only standalone items
-                # are abbreviated (observed in the JATS goldens)
-                lines.append(
-                    f"{pad}  item-{ix} at level {level + 1}: caption: "
-                    f"{cap.text}"
-                )
-        elif isinstance(item, PictureItem):
-            lines.append(f"{pad}item-{ix} at level {level}: {item.label}")
+        elif isinstance(item, (TableItem, PictureItem)):
+            head = item.label
+            if isinstance(item, TableItem):
+                head += f" with [{item.data.num_rows}x{item.data.num_cols}]"
+            lines.append(f"{pad}item-{ix} at level {level}: {head}")
             for cap_ref in item.captions:
                 cap = doc.resolve(cap_ref)
                 # caption sub-lines print in full — only standalone items
@@ -119,15 +111,10 @@ def _inline_text(item: TextItem, with_hyperlink: bool = True, escape_gt: bool = 
     return text
 
 
-def _is_included(item, layers) -> bool:
-    return item.content_layer in layers
-
-
 class _MarkdownWriter:
-    def __init__(self, doc: DLDocument, layers=None):
+    def __init__(self, doc: DLDocument):
         self.doc = doc
         self.escape_gt = bool(getattr(doc, "md_escape_gt", False))
-        self.layers = layers or {ContentLayer.BODY}
 
     def serialize(self) -> str:
         blocks = self._children_blocks(self.doc.body)
@@ -141,9 +128,18 @@ class _MarkdownWriter:
             blocks.extend(self._item_blocks(child))
         return blocks
 
+    def _captions(self, item) -> list[str]:
+        """The non-empty captions of a picture or table, without links."""
+        blocks = []
+        for cap_ref in item.captions:
+            cap = self.doc.resolve(cap_ref)
+            if cap.text:
+                blocks.append(_inline_text(cap, with_hyperlink=False, escape_gt=self.escape_gt))
+        return blocks
+
     def _item_blocks(self, item) -> list[str]:
         """Serialize an item (and its subtree) to markdown blocks."""
-        included = _is_included(item, self.layers)
+        included = item.content_layer == ContentLayer.BODY
         if isinstance(item, GroupItem):
             if item.label == "inline":
                 blocks = [self._inline_group(item)] if included else []
@@ -176,25 +172,17 @@ class _MarkdownWriter:
             return blocks
 
         if isinstance(item, PictureItem):
-            blocks = []
-            if included:
-                for cap_ref in item.captions:
-                    cap = self.doc.resolve(cap_ref)
-                    if cap.text:
-                        blocks.append(_inline_text(cap, with_hyperlink=False, escape_gt=self.escape_gt))
-                blocks.append("<!-- image -->")
-            return blocks
+            if not included:
+                return []
+            return self._captions(item) + ["<!-- image -->"]
 
         if isinstance(item, TableItem):
-            blocks = []
-            if included:
-                for cap_ref in item.captions:
-                    cap = self.doc.resolve(cap_ref)
-                    if cap.text:
-                        blocks.append(_inline_text(cap, with_hyperlink=False, escape_gt=self.escape_gt))
-                tbl = self._table_block(item)
-                if tbl:
-                    blocks.append(tbl)
+            if not included:
+                return []
+            blocks = self._captions(item)
+            tbl = self._table_block(item)
+            if tbl:
+                blocks.append(tbl)
             return blocks
 
         return []
@@ -249,10 +237,7 @@ class _MarkdownWriter:
                         lines.append(joined)
                 continue
             if isinstance(child, PictureItem):
-                for cap_ref in child.captions:
-                    cap = self.doc.resolve(cap_ref)
-                    if cap.text:
-                        lines.append(_inline_text(cap, with_hyperlink=False, escape_gt=self.escape_gt))
+                lines.extend(self._captions(child))
                 lines.append("<!-- image -->")
                 continue
             if not isinstance(child, TextItem):
@@ -412,14 +397,18 @@ def export_to_markdown(doc: DLDocument) -> str:
 
 
 # --------------------------------------------------------------- plain text
+def text_blocks(doc: DLDocument) -> Iterator[tuple]:
+    """``(label, block)`` per line of the ``text`` surface, in order: each
+    text item with text under its own label, and each table grid row,
+    tab-joined, as ``table_row``."""
+    for item, _level in doc.iterate_items(doc.body):
+        if isinstance(item, TextItem) and item.text:
+            yield item.label, item.text
+        elif isinstance(item, TableItem):
+            for row in item.data.grid():
+                yield "table_row", "\t".join(c.text for c in row)
+
+
 def export_to_text(doc: DLDocument) -> str:
     """Markdown stripped of marks — the engine's `text` output column."""
-    blocks: list[str] = []
-    for item, _level in doc.iterate_items(doc.body, with_groups=False):
-        if isinstance(item, TextItem) and item.text:
-            blocks.append(item.text)
-        elif isinstance(item, TableItem):
-            grid = item.data.grid()
-            for row in grid:
-                blocks.append("\t".join(c.text for c in row))
-    return "\n".join(blocks)
+    return "\n".join(block for _label, block in text_blocks(doc))

@@ -6,12 +6,10 @@ content block the text serializer emits must be addressable as a
 downstream consumers (dedup on spans, annotation joins, token
 alignment) can reference content without re-parsing HTML.
 
-:func:`text_spans` mirrors :func:`docling_plus_spark.doc.serializers.
-export_to_text` block-for-block (same iteration, same block emission,
-same ``"\\n"`` joiner — reference serialization seam:
-docling/docling_core-style ``export_to_text`` via markdown stripping;
-our restatement at doc/serializers.py:415-425). The invariant — locked
-by tests/test_spans.py — is::
+:func:`text_spans` and :func:`docling_plus_spark.doc.serializers.
+export_to_text` both read :func:`~docling_plus_spark.doc.serializers.
+text_blocks`, and the text surface joins its blocks with ``"\\n"``. The
+invariant — locked by tests/test_spans.py — is::
 
     text = export_to_text(doc)
     for idx, label, start, end in text_spans(doc):
@@ -25,7 +23,8 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
-from docling_plus_spark.doc.document import DLDocument, TableItem, TextItem
+from docling_plus_spark.doc.document import DLDocument
+from docling_plus_spark.doc.serializers import text_blocks
 
 
 def text_spans(doc: DLDocument) -> List[Tuple[int, str, int, int]]:
@@ -38,20 +37,7 @@ def text_spans(doc: DLDocument) -> List[Tuple[int, str, int, int]]:
     """
     spans: List[Tuple[int, str, int, int]] = []
     pos = 0
-    idx = 0
-
-    def emit(label: str, block: str) -> None:
-        nonlocal pos, idx
-        if spans:
-            pos += 1  # the "\n" joiner between blocks
+    for idx, (label, block) in enumerate(text_blocks(doc)):
         spans.append((idx, label, pos, pos + len(block)))
-        pos += len(block)
-        idx += 1
-
-    for item, _level in doc.iterate_items(doc.body, with_groups=False):
-        if isinstance(item, TextItem) and item.text:
-            emit(item.label, item.text)
-        elif isinstance(item, TableItem):
-            for row in item.data.grid():
-                emit("table_row", "\t".join(c.text for c in row))
+        pos += len(block) + 1  # the "\n" joiner before the next block
     return spans

@@ -23,9 +23,11 @@ Key reference semantics reproduced (file:line cites for parity audit):
 ``_table_rows`` reads a table's cells, spans and header flags in one scan
 that both the dimensions and the span grid use; a thead/tbody left unclosed
 (so nested in another) is unwrapped too, which keeps its rows in the grid.
-``_add_runs`` turns inline runs into text/code items for buffered inline
-content and ``p``/``address``/``summary`` blocks alike; list items and
-``pre`` emit their own way. Inline runs are collected in one walk of the
+``_emit_runs`` is the one item emitter: it turns a list of inline runs into
+text/code items, under an inline group when there are two or more. Buffered
+inline content and ``p``/``address``/``summary`` blocks reach it through
+``_add_runs`` (one call per line), ``pre`` blocks and multi-run list items
+directly. Inline runs are collected in one walk of the
 ancestors (nearest ``a[href]`` and the format tags above it) and one
 recursive pass that appends into a single list, handing the format-tag tuple
 and the hyperlink down as arguments; ``(Formatting, code)`` is memoized per
@@ -36,7 +38,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from functools import lru_cache
 from pathlib import PurePosixPath
@@ -143,30 +144,14 @@ def normalize_hyperlink(href: str) -> str:
     return text
 
 
-def resolve_hyperlink(href: str, base_path: Optional[str]) -> str:
+def resolve_hyperlink(href: str) -> str:
     """URL resolution (html_backend.py:423-438) + AnyUrl/Path coercion.
 
-    In the table pipeline ``base_path`` is the row's url; the reference CLI
-    path runs with ``str(None)`` which leaves relative links untouched —
-    pass ``base_path=None`` for golden parity."""
-    abs_loc = href
-    if href.startswith("//"):
-        abs_loc = "https:" + href
-    elif not href.startswith(("http://", "https://", "data:", "file://")):
-        if base_path is not None and _is_remote_url(base_path):
-            from urllib.parse import urljoin
-
-            abs_loc = urljoin(base_path, href)
-        # local-file branch of the reference resolves against the html file
-        # directory; for 'None'/str paths this is a no-op for relative hrefs
-    return normalize_hyperlink(abs_loc)
-
-
-def _is_remote_url(value: str) -> bool:
-    try:
-        return urlsplit(value).scheme in {"http", "https", "ftp", "s3", "gs"}
-    except ValueError:
-        return False
+    Protocol-relative links get ``https:``; other relative links stay as
+    they are, as in the reference CLI, which resolves against ``str(None)``.
+    Absolute resolution against the page url is the ``url_resolve``
+    query's job."""
+    return normalize_hyperlink("https:" + href if href.startswith("//") else href)
 
 
 @dataclass
@@ -288,10 +273,6 @@ class HtmlConverter:
 
     MAX_LEVELS = 10
 
-    def __init__(self, base_path: Optional[str] = None):
-        self.base_path = base_path
-        self._reset()
-
     def _reset(self) -> None:
         self.level = 0
         self.parents: dict[int, Optional[object]] = {
@@ -300,8 +281,6 @@ class HtmlConverter:
         self.content_layer = ContentLayer.BODY
         self.hyperlink: Optional[str] = None
         self.format_tags: tuple = ()
-        self.list_ordered_by_ref: dict[str, bool] = {}
-        self.list_start_by_ref: dict[str, int] = {}
 
     # ------------------------------------------------------------------ main
     def convert(
@@ -431,11 +410,17 @@ class HtmlConverter:
                         added_refs.append(ref)
                 elif name in _FORMAT_TAG_MAP:
                     flush_buffer()
-                    with self._use_format(name):
-                        added_refs.extend(self._walk(node, doc))
+                    outer_tags = self.format_tags
+                    self.format_tags = outer_tags + (name,)
+                    added_refs.extend(self._walk(node, doc))
+                    self.format_tags = outer_tags
                 elif name == "a":
-                    with self._use_hyperlink(node):
-                        added_refs.extend(self._walk(node, doc))
+                    outer_link = self.hyperlink
+                    href = node.get("href")
+                    if href:
+                        self.hyperlink = resolve_hyperlink(href)
+                    added_refs.extend(self._walk(node, doc))
+                    self.hyperlink = outer_link
                 elif name in _BLOCK_TAGS:
                     flush_buffer()
                     added_refs.extend(self._handle_block(node, doc))
@@ -453,30 +438,47 @@ class HtmlConverter:
         return added_refs
 
     def _add_runs(self, runs: AnnotatedTextList, doc: DLDocument) -> list[str]:
-        """Inline runs → one text/code item per non-blank merged run; each
-        line (split at newlines) of several runs gets an inline group."""
+        """Inline runs, merged and split at newlines, emitted line by line."""
         runs = runs.simplify_text_elements()
         if not "".join(at.text for at in runs):
             return []
         refs: list[str] = []
         for part in runs.split_by_newline():
-            with self._use_inline_group(part, doc):
-                for at in part:
-                    seg = at.text.strip()
-                    if not seg:
-                        continue
-                    kwargs = dict(
-                        parent=self.parents[self.level],
-                        text=clean_unicode(seg),
-                        content_layer=self.content_layer,
-                        formatting=at.formatting,
-                        hyperlink=at.hyperlink,
-                    )
-                    if at.code:
-                        item = doc.add_code(**kwargs)
-                    else:
-                        item = doc.add_text(label="text", **kwargs)
-                    refs.append(item.get_ref())
+            refs.extend(self._emit_runs(part, doc))
+        return refs
+
+    def _emit_runs(
+        self, runs: list, doc: DLDocument, all_code: bool = False,
+        squash: bool = False,
+    ) -> list[str]:
+        """One item per run under the current parent, inside a new inline
+        group when there are two or more runs: a code item for a code run,
+        or for every run when ``all_code`` (``pre``), else a text item. A
+        run's text is stripped, with whitespace runs squashed to one space
+        when ``squash`` (list items); blank ones are skipped unless
+        ``all_code``."""
+        parent = self.parents[self.level]
+        if len(runs) > 1:
+            parent = doc.add_group(
+                label="inline", parent=parent, content_layer=self.content_layer
+            )
+        refs: list[str] = []
+        for at in runs:
+            seg = (_WS_RE.sub(" ", at.text) if squash else at.text).strip()
+            if not seg and not all_code:
+                continue
+            kwargs = dict(
+                parent=parent,
+                text=clean_unicode(seg),
+                content_layer=self.content_layer,
+                formatting=at.formatting,
+                hyperlink=at.hyperlink,
+            )
+            if all_code or at.code:
+                item = doc.add_code(**kwargs)
+            else:
+                item = doc.add_text(label="text", **kwargs)
+            refs.append(item.get_ref())
         return refs
 
     # ------------------------------------------------- inline text extract
@@ -500,7 +502,7 @@ class HtmlConverter:
             node = node.parent
         if anchor is not None:
             format_tags += tuple(t for t in _FORMAT_TAG_MAP if t in names)
-            hyperlink = resolve_hyperlink(anchor.get("href"), self.base_path)
+            hyperlink = resolve_hyperlink(anchor.get("href"))
             keep_newlines = False
         runs = AnnotatedTextList()
         if isinstance(item, NavString):
@@ -530,81 +532,12 @@ class HtmlConverter:
                 elif name == "a":
                     href = child.get("href")
                     if href:
-                        child_link = resolve_hyperlink(href, self.base_path)
+                        child_link = resolve_hyperlink(href)
                 self._collect_runs(
                     child, child_tags, child_link, ignore_list, keep_newlines, runs
                 )
             else:
                 _add_text_run(child, format_tags, hyperlink, keep_newlines, runs)
-
-    # ------------------------------------------------------ context helpers
-    @contextmanager
-    def _use_hyperlink(self, tag: Tag):
-        old = self.hyperlink
-        href = tag.get("href")
-        if href:
-            self.hyperlink = resolve_hyperlink(href, self.base_path)
-        try:
-            yield None
-        finally:
-            self.hyperlink = old
-
-    @contextmanager
-    def _use_format(self, name: str):
-        old = self.format_tags
-        self.format_tags = old + (name,)
-        try:
-            yield None
-        finally:
-            self.format_tags = old
-
-    @contextmanager
-    def _use_inline_group(self, annotated_list, doc: DLDocument):
-        if len(annotated_list) > 1:
-            group = doc.add_group(
-                label="inline",
-                parent=self.parents[self.level],
-                content_layer=self.content_layer,
-            )
-            self.parents[self.level + 1] = group
-            self.level += 1
-            try:
-                yield None
-            finally:
-                self.parents[self.level] = None
-                self.level -= 1
-        else:
-            yield None
-
-    @contextmanager
-    def _use_section_group(self, tag: Tag, doc: DLDocument, furniture: bool):
-        prev_layer = self.content_layer
-        if furniture:
-            self.content_layer = ContentLayer.FURNITURE
-        self.parents[self.level + 1] = doc.add_group(
-            name=tag.name,
-            label="section",
-            parent=self.parents[self.level],
-            content_layer=self.content_layer,
-        )
-        self.level += 1
-        try:
-            yield None
-        finally:
-            self.parents[self.level + 1] = None
-            self.level -= 1
-            if furniture:
-                self.content_layer = prev_layer
-
-    @contextmanager
-    def _use_table_cell_context(self):
-        original_level = self.level
-        original_parents = self.parents.copy()
-        try:
-            yield
-        finally:
-            self.level = original_level
-            self.parents = original_parents
 
     # ----------------------------------------------------------- block tags
     def _handle_block(self, tag: Tag, doc: DLDocument) -> list[str]:
@@ -652,26 +585,30 @@ class HtmlConverter:
                     added_refs.append(ref2)
 
         elif name == "pre":
-            text_list = self._extract_annotated(tag, keep_newlines=True)
-            annotated = text_list.simplify_text_elements()
-            with self._use_inline_group(annotated, doc):
-                for at in annotated:
-                    item = doc.add_code(
-                        parent=self.parents[self.level],
-                        text=clean_unicode(at.text.strip()),
-                        content_layer=self.content_layer,
-                        formatting=at.formatting,
-                        hyperlink=at.hyperlink,
-                    )
-                    added_refs.append(item.get_ref())
+            runs = self._extract_annotated(tag, keep_newlines=True)
+            added_refs.extend(
+                self._emit_runs(runs.simplify_text_elements(), doc, all_code=True)
+            )
 
-        elif name == "footer":
-            with self._use_section_group(tag, doc, furniture=True):
-                self._walk(tag, doc)
-
-        elif name == "details":
-            with self._use_section_group(tag, doc, furniture=False):
-                self._walk(tag, doc)
+        elif name in ("footer", "details"):
+            # a footer is furniture and restores the outer layer after
+            # itself; details keeps the layer its content leaves behind
+            outer_layer = self.content_layer
+            if name == "footer":
+                self.content_layer = ContentLayer.FURNITURE
+            self.parents[self.level + 1] = doc.add_group(
+                name=tag.name,
+                label="section",
+                parent=self.parents[self.level],
+                content_layer=self.content_layer,
+            )
+            self.level += 1
+            self._walk(tag, doc)
+            # reference quirk: the group stays the parent at its level
+            self.parents[self.level + 1] = None
+            self.level -= 1
+            if name == "footer":
+                self.content_layer = outer_layer
 
         return added_refs
 
@@ -747,9 +684,6 @@ class HtmlConverter:
             content_layer=self.content_layer,
         )
         self.parents[self.level + 1] = list_group
-        self.list_ordered_by_ref[list_group.self_ref] = is_ordered
-        if is_ordered and start is not None:
-            self.list_start_by_ref[list_group.self_ref] = start
         self.level += 1
 
         for li in tag.find_all({"li", "ul", "ol"}, recursive=False):
@@ -777,27 +711,7 @@ class HtmlConverter:
                         content_layer=self.content_layer,
                     )
                     self.level += 1
-                    with self._use_inline_group(min_parts, doc):
-                        for at in min_parts:
-                            seg = _WS_RE.sub(" ", at.text).strip()
-                            seg_clean = clean_unicode(seg)
-                            if at.code:
-                                doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                doc.add_text(
-                                    parent=self.parents[self.level],
-                                    label="text",
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
+                    self._emit_runs(min_parts, doc, squash=True)
                     for sublist in li.find_all({"ul", "ol"}, recursive=False):
                         self._handle_block(sublist, doc)
                     self.parents[self.level] = None
@@ -935,8 +849,10 @@ class HtmlConverter:
                 rich = self._is_rich_table_cell(html_cell)
                 ref_for_rich_cell = None
                 if rich:
-                    with self._use_table_cell_context():
-                        provs_in_cell = self._walk(html_cell, doc)
+                    # the cell's walk must not move the table's own parents
+                    level, parents = self.level, self.parents.copy()
+                    provs_in_cell = self._walk(html_cell, doc)
+                    self.level, self.parents = level, parents
                     if len(provs_in_cell) >= 1:
                         group_name = (
                             f"rich_cell_group_{len(doc.tables)}_{col_idx}_"
@@ -1036,10 +952,7 @@ class HtmlConverter:
 
 
 def convert_html(
-    data: bytes, name: str = "file", filename: str = "file",
-    base_path: Optional[str] = None,
+    data: bytes, name: str = "file", filename: str = "file"
 ) -> DLDocument:
     """Convenience: one-shot HTML conversion."""
-    return HtmlConverter(base_path=base_path).convert(
-        data, name=name, filename=filename
-    )
+    return HtmlConverter().convert(data, name=name, filename=filename)

@@ -30,6 +30,7 @@ Scale design:
 from __future__ import annotations
 
 import gc
+import json
 import time
 from typing import Iterator
 
@@ -96,7 +97,8 @@ def _classify_failure(exc: BaseException) -> str:
 def _row_builder(include: tuple):
     """``row(url, blob, fmt, reject_reason)`` → one output row per input
     row: a gate reject as is, otherwise the converted document's surfaces
-    (text/md/itxt plus the ``include``d ones) or its classified failure."""
+    (text/md/itxt plus the ``include``d ones) or its classified failure.
+    The ``include``d surfaces all render from one ``export_to_dict()``."""
     # import inside the worker so the driver-side module graph stays lazy
     from docling_plus_spark.doc.doctags import export_to_doctags
     from docling_plus_spark.doc.html_sink import export_to_html
@@ -112,13 +114,11 @@ def _row_builder(include: tuple):
         "text": ("text", lambda doc, dd: export_to_text(doc)),
         "md": ("md", lambda doc, dd: export_to_markdown(doc)),
         "itxt": ("itxt", lambda doc, dd: export_to_element_tree(doc)),
-        "json": ("doc_json", lambda doc, dd: doc.export_to_json()),
+        "json": ("doc_json", lambda doc, dd: json.dumps(dd, indent=2, ensure_ascii=False)),
         "doctags": ("doctags", lambda doc, dd: export_to_doctags(dd)),
         "html": ("html_out", lambda doc, dd: export_to_html(dd)),
     }
     exporters = [v for k, v in table.items() if k not in OPTIONAL_SURFACES or k in include]
-    # doctags and html render from one shared export_to_dict
-    needs_dict = "doctags" in include or "html" in include
 
     def row(url, blob, fmt, reject_reason) -> dict:
         if reject_reason is not None:
@@ -131,7 +131,7 @@ def _row_builder(include: tuple):
             items = [it for it, _ in doc.iterate_items(doc.body, with_groups=False)]
             out = {**_BLANK, "url": url, "status": "success", "num_items": len(items),
                    "num_tables": sum(1 for it in items if isinstance(it, TableItem))}
-            dd = doc.export_to_dict() if needs_dict else None
+            dd = doc.export_to_dict() if include else None
             for col, export in exporters:
                 out[col] = export(doc, dd)
         except Exception as exc:  # noqa: BLE001 — row status, not job failure

@@ -1,7 +1,8 @@
 """Self-golden for the extract stage: per-url digests of every output
 column except ``extract_ms``, over a small in-test corpus holding one
-row of each kind the stage handles (converted HTML and PDF, a PDF that
-raises, and the gate's reject classes).
+row of each kind the stage handles (converted HTML, markdown, csv, vtt,
+asciidoc, docling-JSON and PDF, a PDF that raises, and the gate's reject
+classes).
 
 Any refactor of the stage must reproduce these digests byte for byte.
 Regenerate them (only for an intended output change) with
@@ -82,6 +83,138 @@ FEATURES = b"""<!DOCTYPE html>
 </body></html>
 """
 
+# what the two pages above miss: format and link wrappers around blocks,
+# an <a> without href, a heading inside <details> before the first <h1>,
+# each kind of href, a multi-run <li> with <code> and a link inside <pre>
+EDGES = b"""<!DOCTYPE html>
+<html><head><title>Edges</title></head>
+<body>
+<p>Lead-in before any heading.</p>
+<details><summary>Intro</summary><h3>Early heading</h3><p>early para</p></details>
+<p>after the details</p>
+<h1>Edge page</h1>
+<b><p>bold block</p></b> sibling text after bold
+<a href="//cdn.test/lib"><p>linked <i>block</i></p></a> tail after link
+<a><p>anchor without href</p></a>
+<p><a href="//cdn.test/x.js">proto</a> <a href="/about">root</a>
+<a href="https://Ex.test:443/abs">abs</a> <a href="rel/x.html">rel</a>
+<a href="#frag">frag</a> <a href="mailto:a@b.test">mail</a></p>
+<ul><li>run with <code>code()</code> and <b>bold</b>   words</li><li>plain item</li></ul>
+<pre>pre with <a href="/pre-link">a link</a>
+second line</pre>
+<footer><h2>Footer heading</h2><p>footer text</p></footer>
+<p>after the footer</p>
+</body></html>
+"""
+
+# one row per non-HTML text format whose serializers this page's
+# surfaces share, plus markdown with a raw HTML block, which the markdown
+# backend converts through the HTML backend
+MD = b"""# Markdown title
+
+Some *italic* and **bold** text with a [link](https://ex.test/md).
+
+- one
+- two with `code`
+
+| a | b |
+|---|---|
+| 1 | 2 |
+
+```
+code block
+```
+"""
+
+MD_HTML = b"""# Markdown with HTML
+
+<div><p>raw <b>html</b> block</p></div>
+
+Trailing paragraph.
+"""
+
+CSV = b"name,qty,price\nwidget,3,1.50\ngadget,10,22.25\n"
+
+VTT = b"""WEBVTT
+
+00:00:01.000 --> 00:00:03.000
+<v Alice>Hello <b>there</b></v>
+
+00:00:04.000 --> 00:00:06.500
+Second cue
+"""
+
+ADOC = b"""= Asciidoc Title
+
+== Section
+
+A paragraph of text.
+
+* item one
+* item two
+
+|===
+|h1 |h2
+|c1 |c2
+|===
+"""
+
+DOCLING_JSON = json.dumps({
+    "schema_name": "DoclingDocument", "version": "1.8.0", "name": "golden",
+    "origin": {"mimetype": "text/html", "binary_hash": 1, "filename": "golden.html"},
+    "furniture": {"self_ref": "#/furniture", "children": [{"$ref": "#/texts/0"}],
+                  "content_layer": "furniture", "name": "_root_", "label": "unspecified"},
+    "body": {"self_ref": "#/body",
+             "children": [{"$ref": "#/texts/1"}, {"$ref": "#/groups/0"},
+                          {"$ref": "#/tables/0"}, {"$ref": "#/pictures/0"}],
+             "content_layer": "body", "name": "_root_", "label": "unspecified"},
+    "groups": [{"self_ref": "#/groups/0", "parent": {"$ref": "#/body"},
+                "children": [{"$ref": "#/texts/2"}, {"$ref": "#/texts/3"}],
+                "content_layer": "body", "name": "list", "label": "list"}],
+    "texts": [
+        {"self_ref": "#/texts/0", "parent": {"$ref": "#/furniture"}, "children": [],
+         "content_layer": "furniture", "label": "title", "prov": [],
+         "orig": "Json title", "text": "Json title"},
+        {"self_ref": "#/texts/1", "parent": {"$ref": "#/body"}, "children": [],
+         "content_layer": "body", "label": "text", "prov": [],
+         "orig": "A <b> & c_d", "text": "A <b> & c_d",
+         "formatting": {"bold": True, "italic": False, "underline": False,
+                        "strikethrough": False, "script": "baseline"},
+         "hyperlink": "https://ex.test/j"},
+        {"self_ref": "#/texts/2", "parent": {"$ref": "#/groups/0"}, "children": [],
+         "content_layer": "body", "label": "list_item", "prov": [],
+         "orig": "first", "text": "first", "enumerated": True, "marker": "1."},
+        {"self_ref": "#/texts/3", "parent": {"$ref": "#/groups/0"}, "children": [],
+         "content_layer": "body", "label": "list_item", "prov": [],
+         "orig": "second", "text": "second", "enumerated": True, "marker": "2."},
+        {"self_ref": "#/texts/4", "parent": {"$ref": "#/body"}, "children": [],
+         "content_layer": "body", "label": "caption", "prov": [],
+         "orig": "Table caption", "text": "Table caption"},
+        {"self_ref": "#/texts/5", "parent": {"$ref": "#/body"}, "children": [],
+         "content_layer": "body", "label": "caption", "prov": [],
+         "orig": "Picture caption", "text": "Picture caption"},
+    ],
+    "pictures": [{"self_ref": "#/pictures/0", "parent": {"$ref": "#/body"},
+                  "children": [], "content_layer": "body", "label": "picture",
+                  "prov": [], "captions": [{"$ref": "#/texts/5"}],
+                  "references": [], "footnotes": [], "annotations": []}],
+    "tables": [{"self_ref": "#/tables/0", "parent": {"$ref": "#/body"},
+                "children": [], "content_layer": "body", "label": "table",
+                "prov": [], "captions": [{"$ref": "#/texts/4"}],
+                "references": [], "footnotes": [], "annotations": [],
+                "data": {"num_rows": 2, "num_cols": 2, "table_cells": [
+                    {"row_span": 1, "col_span": 2, "start_row_offset_idx": 0,
+                     "end_row_offset_idx": 1, "start_col_offset_idx": 0,
+                     "end_col_offset_idx": 2, "text": "head", "column_header": True,
+                     "row_header": False},
+                    {"row_span": 1, "col_span": 1, "start_row_offset_idx": 1,
+                     "end_row_offset_idx": 2, "start_col_offset_idx": 0,
+                     "end_col_offset_idx": 1, "text": "x", "column_header": False,
+                     "row_header": False},
+                ]}}],
+    "key_value_items": [], "form_items": [], "pages": {},
+}).encode("utf-8")
+
 _PDF = make_text_pdf("the quick brown fox jumps over the lazy dog " * 3)
 
 _WAV = (b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
@@ -90,6 +223,13 @@ _WAV = (b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
 ROWS = [
     ("https://golden.test/page.html", HTML),
     ("https://golden.test/features.html", FEATURES),
+    ("https://golden.test/edges.html", EDGES),
+    ("https://golden.test/notes.md", MD),
+    ("https://golden.test/raw.md", MD_HTML),
+    ("https://golden.test/table.csv", CSV),
+    ("https://golden.test/captions.vtt", VTT),
+    ("https://golden.test/manual.adoc", ADOC),
+    ("https://golden.test/doc.json", DOCLING_JSON),
     ("https://golden.test/doc.pdf", _PDF),
     ("https://golden.test/broken.pdf", _PDF[:120]),
     ("https://golden.test/img.png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
@@ -104,26 +244,40 @@ REJECT_CLASSES = {"invalid_input", "needs_ocr", "needs_asr", "unsupported_format
 
 GOLDEN_PLAIN = {
     "https://golden.test/broken.pdf": "8cff619bbe5882b5",
+    "https://golden.test/captions.vtt": "728996349d81e572",
     "https://golden.test/clip.wav": "99db82e4e944f97f",
+    "https://golden.test/doc.json": "ea012872630e6adb",
     "https://golden.test/doc.pdf": "07a7462a53f31e7e",
+    "https://golden.test/edges.html": "d19c70e303983e50",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "20748d92718dd4e6",
     "https://golden.test/img.png": "a2367993431119ca",
+    "https://golden.test/manual.adoc": "3285570d37d77e57",
     "https://golden.test/notes": "00b13dd53c5f4e37",
+    "https://golden.test/notes.md": "e876d033ce8eb1ad",
     "https://golden.test/null.html": "594e55eab61308ec",
     "https://golden.test/page.html": "9c67954f797eec23",
+    "https://golden.test/raw.md": "0592ab67fd282642",
+    "https://golden.test/table.csv": "383a804f20306a10",
 }
 
 GOLDEN_ALL = {
     "https://golden.test/broken.pdf": "8cff619bbe5882b5",
+    "https://golden.test/captions.vtt": "66ec4bbd26acd171",
     "https://golden.test/clip.wav": "99db82e4e944f97f",
+    "https://golden.test/doc.json": "533f3e9206d1b5c9",
     "https://golden.test/doc.pdf": "5174a6260c64909c",
+    "https://golden.test/edges.html": "f5d331c12186eeb8",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "ee376f09cdab7c2f",
     "https://golden.test/img.png": "a2367993431119ca",
+    "https://golden.test/manual.adoc": "d3d7f73a2bc0a82e",
     "https://golden.test/notes": "00b13dd53c5f4e37",
+    "https://golden.test/notes.md": "d2bc2428dc06d19a",
     "https://golden.test/null.html": "594e55eab61308ec",
     "https://golden.test/page.html": "5a7af2240cda1300",
+    "https://golden.test/raw.md": "108574aeb89ce91c",
+    "https://golden.test/table.csv": "23eb73f048422187",
 }
 
 
@@ -175,6 +329,13 @@ def test_row_kinds_cover_every_path(spark):
     assert classes == {
         "https://golden.test/page.html": ("success", None),
         "https://golden.test/features.html": ("success", None),
+        "https://golden.test/edges.html": ("success", None),
+        "https://golden.test/notes.md": ("success", None),
+        "https://golden.test/raw.md": ("success", None),
+        "https://golden.test/table.csv": ("success", None),
+        "https://golden.test/captions.vtt": ("success", None),
+        "https://golden.test/manual.adoc": ("success", None),
+        "https://golden.test/doc.json": ("success", None),
         "https://golden.test/doc.pdf": ("success", None),
         "https://golden.test/broken.pdf": ("failure", "needs_native_parser"),
         "https://golden.test/img.png": ("failure", "needs_ocr"),
@@ -184,6 +345,20 @@ def test_row_kinds_cover_every_path(spark):
         "https://golden.test/notes": ("failure", "unsupported_format:text"),
     }
     assert by_url["https://golden.test/page.html"]["num_tables"] == 1
+    formats = {u: by_url[u]["format"] for u in (
+        "https://golden.test/edges.html", "https://golden.test/notes.md",
+        "https://golden.test/raw.md", "https://golden.test/table.csv",
+        "https://golden.test/captions.vtt", "https://golden.test/manual.adoc",
+        "https://golden.test/doc.json")}
+    assert formats == {
+        "https://golden.test/edges.html": "html",
+        "https://golden.test/notes.md": "md",
+        "https://golden.test/raw.md": "md",
+        "https://golden.test/table.csv": "csv",
+        "https://golden.test/captions.vtt": "vtt",
+        "https://golden.test/manual.adoc": "asciidoc",
+        "https://golden.test/doc.json": "json",
+    }
 
 
 def test_golden_without_optional_surfaces(spark):

@@ -1,5 +1,7 @@
 """Unit tests for the HTML conversion building blocks."""
 
+import pytest
+
 from docling_plus_spark.dom import parse_html
 from docling_plus_spark.html import convert_html
 from docling_plus_spark.html.backend import (
@@ -7,6 +9,7 @@ from docling_plus_spark.html.backend import (
     binary_hash_of,
     clean_unicode,
     normalize_hyperlink,
+    resolve_hyperlink,
 )
 
 
@@ -32,6 +35,20 @@ def test_normalize_hyperlink():
     assert normalize_hyperlink("#frag") == "#frag"
     assert normalize_hyperlink("a/b.html") == "a/b.html"
     assert normalize_hyperlink("./x") == "x"
+
+
+@pytest.mark.parametrize("href, expected", [
+    ("//cdn.test/a", "https://cdn.test/a"),
+    ("/about", "/about"),
+    ("x.html", "x.html"),
+    ("#frag", "#frag"),
+    ("https://Ex.test:443/a", "https://ex.test/a"),
+    ("mailto:a@b.test", "mailto:a@b.test"),
+])
+def test_resolve_hyperlink(href, expected):
+    # protocol-relative links get https:, other relative links stay as
+    # they are, as in the reference CLI
+    assert resolve_hyperlink(href) == expected
 
 
 def test_dom_whitespace_collapse():
