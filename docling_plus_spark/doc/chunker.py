@@ -150,11 +150,6 @@ def hybrid_chunks(
     return merged
 
 
-def contextualize(chunk: Chunk) -> str:
-    """Heading-path-prefixed text (what an embedder should see)."""
-    return "\n".join([*chunk.headings, chunk.text])
-
-
 # ---------------------------------------------------------------------------
 # Spark stage
 

@@ -8,6 +8,7 @@ the serializer usage in ``/root/reference/docling/docling/cli/main.py:221-284``.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 from .document import (
@@ -331,6 +332,10 @@ def _after_point(s: str) -> int:
     return len(s) - pos - 1 if pos >= 0 else -1
 
 
+#: a control character: tabulate's wcswidth gives such a string width -1
+_CONTROL_RE = re.compile(r"[\x00-\x1f]")
+
+
 def _tabulate_github(headers: list, data: list) -> str:
     """Emulation of ``tabulate(data, headers, tablefmt="github")`` — the
     serializer the reference's docling-core markdown table export delegates
@@ -373,7 +378,7 @@ def _tabulate_github(headers: list, data: list) -> str:
             # spaces and don't contribute to the column width (observed in
             # the csv-tab golden)
             def vis(s: str) -> int:
-                return -1 if any(ch < " " for ch in s) else len(s)
+                return -1 if _CONTROL_RE.search(s) else len(s)
 
             width = max([len(headers[c]) + 2] + [vis(v) for v in values] + [0])
             out_cols.append(

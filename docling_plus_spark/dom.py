@@ -49,6 +49,11 @@ Design notes
 * Void elements never stay on the stack.
 * Whitespace-only text collapses to ``"\n"`` or ``" "`` unless a ``pre`` or
   ``textarea`` is open; a counter of those on the stack answers that.
+* **Searches are loops.** ``Tag.find_all`` and ``Tag.find`` walk an explicit
+  stack in document order (``find`` stops at the first match) instead of
+  chaining generators; a name filter is a str, an iterable of names (a
+  ``frozenset`` is used as is) or None. ``descendants`` stays a generator
+  for ``get_text`` and callers that stop early.
 """
 
 from __future__ import annotations
@@ -165,19 +170,36 @@ class Tag:
             if isinstance(node, Tag):
                 stack.extend(reversed(node.contents))
 
-    def _matches(self, name, recursive: bool) -> Iterator["Tag"]:
+    def find_all(self, name=None, recursive: bool = True) -> list["Tag"]:
         """Descendant (or, non-recursive, child) tags in document order,
         filtered by name: a str, an iterable of names, or None for all."""
         names = _name_set(name)
-        for node in self.descendants if recursive else self.contents:
-            if isinstance(node, Tag) and (names is None or node.name in names):
-                yield node
-
-    def find_all(self, name=None, recursive: bool = True) -> list["Tag"]:
-        return list(self._matches(name, recursive))
+        if not recursive:
+            return [node for node in self.contents if isinstance(node, Tag)
+                    and (names is None or node.name in names)]
+        found: list[Tag] = []
+        stack = self.contents[::-1]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, Tag):
+                if names is None or node.name in names:
+                    found.append(node)
+                if node.contents:
+                    stack.extend(reversed(node.contents))
+        return found
 
     def find(self, name=None, recursive: bool = True) -> Optional["Tag"]:
-        return next(self._matches(name, recursive), None)
+        """The first tag :meth:`find_all` would return, or None."""
+        names = _name_set(name)
+        stack = self.contents[::-1]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, Tag):
+                if names is None or node.name in names:
+                    return node
+                if recursive and node.contents:
+                    stack.extend(reversed(node.contents))
+        return None
 
     def find_parent(self, name: str) -> Optional["Tag"]:
         cur = self.parent
@@ -208,8 +230,8 @@ NodeType = Union[Tag, NavString]
 
 
 def _name_set(name) -> Optional[frozenset]:
-    if name is None:
-        return None
+    if name is None or isinstance(name, frozenset):
+        return name
     if isinstance(name, str):
         return frozenset((name,))
     return frozenset(name)

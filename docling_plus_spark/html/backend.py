@@ -20,6 +20,17 @@ Key reference semantics reproduced (file:line cites for parity audit):
 * colspan/rowspan parsing                    html_backend.py:1465-1490
 * URL resolution incl. protocol-relative     html_backend.py:418-438
 
+Before the walk, ``_prewalk`` makes one explicit-stack pass over the tree in
+document order. It extracts script/noscript/style and ``hidden`` subtrees
+without entering them, collects the <p>s for the paragraph repair, the <br>s
+and the first <body>, and carries two flags on its stack (in the first body,
+in a table) that give the first heading outside a table: inside the first
+body when there is one, anywhere otherwise. The <br>s are replaced after the
+repair, which moves them as any other inline tag; in the rare case that the
+repair drops an empty paragraph holding a body or heading tag, the pass runs
+again on the repaired tree. A table cell is rich-checked by its child tags
+(it has a descendant element exactly when it has a child one).
+
 ``_table_rows`` reads a table's cells, spans and header flags in one scan
 that both the dimensions and the span grid use; a thead/tbody left unclosed
 (so nested in another) is unwrapped too, which keeps its rows in the grid.
@@ -31,7 +42,8 @@ directly. Inline runs are collected in one walk of the
 ancestors (nearest ``a[href]`` and the format tags above it) and one
 recursive pass that appends into a single list, handing the format-tag tuple
 and the hyperlink down as arguments; ``(Formatting, code)`` is memoized per
-format-tag tuple.
+format-tag tuple. A scheme-less link is normalized as
+``str(PurePosixPath(href))`` would be, in string code (``_posix_path``).
 """
 
 from __future__ import annotations
@@ -40,7 +52,6 @@ import hashlib
 import re
 from dataclasses import dataclass, replace
 from functools import lru_cache
-from pathlib import PurePosixPath
 from typing import Optional
 from urllib.parse import urlsplit, urlunsplit
 
@@ -87,6 +98,16 @@ _FORMAT_TAG_MAP: dict = {
 }
 
 _HEADING_TAGS = ("h1", "h2", "h3", "h4", "h5", "h6")
+#: what a dropped empty paragraph must not hold for the pre-walk's body and
+#: first heading to stay valid after the paragraph repair
+_BODY_OR_HEADING = frozenset(("body",) + _HEADING_TAGS)
+#: subtrees the converter drops before anything else (html_backend.py:310-315)
+_STRIPPED_TAGS = frozenset({"script", "noscript", "style"})
+
+_LIST_TAGS = frozenset({"ul", "ol"})
+_LIST_ITEM_TAGS = frozenset({"li", "ul", "ol"})
+_ROW_GROUP_TAGS = frozenset({"thead", "tbody"})
+_CELL_TAGS = frozenset({"td", "th"})
 
 _UNICODE_REPLACEMENTS = {
     " ": " ", "​": "", "‌": "", "‍": "",
@@ -99,6 +120,7 @@ _UNICODE_REPLACEMENTS = {
 _UNICODE_RE = re.compile("|".join(map(re.escape, _UNICODE_REPLACEMENTS)))
 
 _WS_RE = re.compile(r"\s+|\n+")
+_DIGITS_RE = re.compile(r"\d+")
 
 _SPECIAL_SCHEMES = {"http", "https", "ws", "wss", "ftp"}
 _DEFAULT_PORTS = {"http": "80", "https": "443", "ws": "80", "wss": "443",
@@ -139,9 +161,30 @@ def normalize_hyperlink(href: str) -> str:
             return urlunsplit((scheme, rebuilt, path, parts.query, parts.fragment))
         return href
     # Path(...) branch: POSIX path normalization
-    text = str(PurePosixPath(href)) if href else href
-    # PurePosixPath drops a trailing slash; pydantic's Path does the same
-    return text
+    return _posix_path(href) if href else href
+
+
+def _posix_path(path: str) -> str:
+    """``str(PurePosixPath(path))``: exactly two leading slashes stay, more
+    become one; empty and ``.`` segments and a trailing slash go; an empty
+    result is ``.``."""
+    root = ""
+    if path.startswith("/"):
+        root = "//" if path.startswith("//") and not path.startswith("///") else "/"
+    parts = [part for part in path.split("/") if part and part != "."]
+    return root + "/".join(parts) or "."
+
+
+def _span(value: str) -> int:
+    """A colspan/rowspan value: its first digit run when it starts with a
+    numeric character, else 1."""
+    if value == "1":
+        return 1
+    if value and value[0].isnumeric():
+        match = _DIGITS_RE.search(value)
+        if match:
+            return int(match.group())
+    return 1
 
 
 def resolve_hyperlink(href: str) -> str:
@@ -306,30 +349,12 @@ class HtmlConverter:
                 orig=title_text,
                 content_layer=ContentLayer.FURNITURE,
             )
-        # strip scripts/styles and hidden subtrees (html_backend.py:310-315);
-        # one traversal for both categories — extract() only detaches the
-        # node from its parent, so list order is safe
-        for tag in root.find_all():
-            if tag.name in ("script", "noscript", "style") or "hidden" in tag.attrs:
-                tag.extract()
-        self._fix_invalid_paragraph_structure(root)
-
-        content = root.find("body") or root
-        # one traversal collects both the <br>s to rewrite and the first
-        # non-table heading (html_backend.py:325-341) — the two scans are
-        # independent (headings are never <br>)
-        brs: list = []
-        first_heading = None
-        for node in content.descendants:
-            if isinstance(node, Tag):
-                if node.name == "br":
-                    brs.append(node)
-                elif (
-                    first_heading is None
-                    and node.name in _HEADING_TAGS
-                    and node.find_parent("table") is None
-                ):
-                    first_heading = node
+        paragraphs, brs, content, first_heading = self._prewalk(root)
+        if self._fix_invalid_paragraph_structure(paragraphs):
+            # the repair dropped a body or heading: collect again
+            _, brs, content, first_heading = self._prewalk(root)
+        # <br> → newline (html_backend.py:320-322), after the repair, which
+        # moves a <br> as any other inline tag
         for br in brs:
             br.replace_with(NavString("\n"))
         self.content_layer = (
@@ -338,15 +363,61 @@ class HtmlConverter:
         self._walk(content, doc)
         return doc
 
+    @staticmethod
+    def _prewalk(root: Tag) -> tuple:
+        """One traversal in document order before the walk. It strips
+        scripts, styles and hidden subtrees (html_backend.py:310-315)
+        without entering them, and returns ``(paragraphs, brs, content,
+        first_heading)``: the attached <p>s, the <br>s under ``content``,
+        ``content`` (the first <body>, else ``root``) and the first heading
+        under ``content`` that is not in a table (html_backend.py:325-341).
+        Each stack entry carries whether it is in the first body and
+        whether it is in a table."""
+        paragraphs: list = []
+        brs: list = []
+        body_brs: list = []
+        body = heading = body_heading = None
+        stack = [(root, False, False)]
+        while stack:
+            tag, in_body, in_table = stack.pop()
+            name = tag.name
+            if name == "p":
+                paragraphs.append(tag)
+            elif name == "br":
+                (body_brs if in_body else brs).append(tag)
+            elif name == "body":
+                if body is None:
+                    body = tag
+                    in_body = True
+            elif name == "table":
+                in_table = True
+            elif name in _HEADING_TAGS and not in_table:
+                if in_body:
+                    if body_heading is None:
+                        body_heading = tag
+                elif heading is None:
+                    heading = tag
+            # pushed last child first, so tags pop in document order; an
+            # extract() removes only the child the reversed iterator is on
+            for child in reversed(tag.contents):
+                if isinstance(child, Tag):
+                    if child.name in _STRIPPED_TAGS or "hidden" in child.attrs:
+                        child.extract()
+                    else:
+                        stack.append((child, in_body, in_table))
+        if body is None:
+            return paragraphs, brs, root, heading
+        return paragraphs, body_brs, body, body_heading
+
     # ------------------------------------------------- paragraph DOM repair
     @staticmethod
-    def _fix_invalid_paragraph_structure(root: Tag) -> None:
+    def _fix_invalid_paragraph_structure(paragraphs: list) -> bool:
         """Browser-like rewrite of <p> with block-level content
-        (html_backend.py:343-416)."""
-        paragraphs = [
-            p for p in root.find_all("p")
-            if p.find(_PARA_BREAKERS) is not None
-        ]
+        (html_backend.py:343-416), over the attached <p>s in document
+        order. True when it dropped an empty paragraph holding a body or
+        heading tag."""
+        dropped_landmark = False
+        paragraphs = [p for p in paragraphs if p.find(_PARA_BREAKERS) is not None]
         for p in paragraphs:
             parent = p.parent
             if parent is None:
@@ -362,9 +433,11 @@ class HtmlConverter:
 
             def flush_para_if_empty():
                 # the open paragraph is always the last node collected
-                nonlocal current_p
+                nonlocal current_p, dropped_landmark
                 if current_p is not None and not current_p.get_text(strip=True):
                     new_nodes.pop()
+                    if current_p.find(_BODY_OR_HEADING) is not None:
+                        dropped_landmark = True
                 current_p = None
 
             for node in list(p.contents):
@@ -389,6 +462,7 @@ class HtmlConverter:
             p.extract()
             for n in reversed(new_nodes):
                 parent.insert(idx, n)
+        return dropped_landmark
 
     # ----------------------------------------------------------- tree walk
     def _walk(self, element: Tag, doc: DLDocument) -> list[str]:
@@ -686,7 +760,7 @@ class HtmlConverter:
         self.parents[self.level + 1] = list_group
         self.level += 1
 
-        for li in tag.find_all({"li", "ul", "ol"}, recursive=False):
+        for li in tag.find_all(_LIST_ITEM_TAGS, recursive=False):
             if li.name in ("ul", "ol"):
                 # invalid-HTML nested list directly under a list
                 self._handle_block(li, doc)
@@ -712,7 +786,7 @@ class HtmlConverter:
                     )
                     self.level += 1
                     self._emit_runs(min_parts, doc, squash=True)
-                    for sublist in li.find_all({"ul", "ol"}, recursive=False):
+                    for sublist in li.find_all(_LIST_TAGS, recursive=False):
                         self._handle_block(sublist, doc)
                     self.parents[self.level] = None
                     self.level -= 1
@@ -730,13 +804,13 @@ class HtmlConverter:
                         formatting=at.formatting,
                         hyperlink=at.hyperlink,
                     )
-                    for sublist in li.find_all({"ul", "ol"}, recursive=False):
+                    for sublist in li.find_all(_LIST_TAGS, recursive=False):
                         self.level += 1
                         self._handle_block(sublist, doc)
                         self.parents[self.level + 1] = None
                         self.level -= 1
             else:
-                for sublist in li.find_all({"ul", "ol"}, recursive=False):
+                for sublist in li.find_all(_LIST_TAGS, recursive=False):
                     self._handle_block(sublist, doc)
 
             for img in li.find_all("img"):
@@ -750,18 +824,8 @@ class HtmlConverter:
     @staticmethod
     def _get_cell_spans(cell: Tag) -> tuple:
         """colspan/rowspan with defaults (html_backend.py:1465-1490)."""
-
-        def extract_num(s: str) -> int:
-            if s and s[0].isnumeric():
-                match = re.search(r"\d+", s)
-                if match:
-                    return int(match.group())
-            return 1
-
-        return (
-            extract_num(str(cell.get("colspan", "1"))),
-            extract_num(str(cell.get("rowspan", "1"))),
-        )
+        attrs = cell.attrs
+        return (_span(attrs.get("colspan", "1")), _span(attrs.get("rowspan", "1")))
 
     @staticmethod
     def _table_rows(table: Tag) -> list:
@@ -770,14 +834,14 @@ class HtmlConverter:
         left unclosed, so nested) are unwrapped first. A row without <td>
         is a column header; one whose cells are all multi-row <th> is a
         row header (html_backend.py:516-540)."""
-        while wrappers := table.find_all({"thead", "tbody"}, recursive=False):
+        while wrappers := table.find_all(_ROW_GROUP_TAGS, recursive=False):
             for wrapper in wrappers:
                 wrapper.unwrap()
         rows = []
         for tr in table.find_all("tr", recursive=False):
             cells = []
             col_header = row_header = True
-            for cell in tr.find_all({"td", "th"}, recursive=False):
+            for cell in tr.find_all(_CELL_TAGS, recursive=False):
                 col_span, row_span = HtmlConverter._get_cell_spans(cell)
                 cells.append((cell, col_span, row_span))
                 if cell.name == "td":
@@ -808,10 +872,9 @@ class HtmlConverter:
     def _is_rich_table_cell(self, cell: Tag) -> bool:
         """RichTableCell detection incl. the reference's always-truthy
         generator quirk (html_backend.py:480-514)."""
-        children = cell.find_all()
-        if not children:
-            content = [c for c in cell.contents if isinstance(c, NavString)]
-            return len(content) > 1
+        # a cell has a descendant element exactly when it has a child one
+        if not any(isinstance(c, Tag) for c in cell.contents):
+            return len(cell.contents) > 1
         annotations = self._extract_annotated(cell)
         if not annotations:
             return True  # reference: bool(generator) is always True

@@ -43,15 +43,6 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
 
 def synth_media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fake media table derived from ``documents``."""
@@ -117,40 +108,6 @@ def decode_media_stage(media: DataFrame, allow_stub: bool = True) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return media.select("media_id", "kind", "media").mapInPandas(fn, DECODED_SCHEMA)
-
-
-def extract_features_stage(media: DataFrame, allow_stub: bool = True) -> DataFrame:
-    """binary → FEATURE_DIM float vector (deterministic fake embedding).
-
-    The stub hashes 16 byte-strides into [0,1) floats — stable across
-    runs/partitions, exercising the exact Arrow shape a real vision
-    encoder (batched, fixed-dim float output) would produce.
-    """
-    if not allow_stub:
-        raise NotImplementedError(
-            "real feature extraction requires a vision/audio model runtime"
-        )
-
-    import hashlib
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for mid, blob in zip(pdf["media_id"], pdf["media"]):
-                b = bytes(blob or b"")
-                vec = [
-                    int.from_bytes(
-                        hashlib.md5(b[i::FEATURE_DIM][:64] + bytes([i])).digest()[:4],
-                        "big",
-                    )
-                    / 2**32
-                    for i in range(FEATURE_DIM)
-                ]
-                ids.append(mid)
-                feats.append(vec)
-            yield pd.DataFrame({"media_id": ids, "features": feats})
-
-    return media.select("media_id", "media").mapInPandas(fn, FEATURES_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:

@@ -7,7 +7,7 @@ then assembles them into word fragments → line cells via the same
 2-pass merge as the pypdfium backend reimplementation
 (`pdf/cells.py`, reference backend/pypdfium2_backend.py:121-253).
 
-Output contract matches the pre-parsed fixture path (`pdf/fixtures.py`):
+Output contract matches the pre-parsed fixture path (`tests/pdf_fixtures.py`):
 one dict per page with ``page_no/width/height`` and ``cells`` carrying
 ``index/text/l/t/r/b`` in TOP-LEFT origin
 (docling_parse_v4_backend.py:68-73 convention).
@@ -765,14 +765,3 @@ def _merge_vertical_stacks(cells: list[dict]) -> list[dict]:
     for i, c in enumerate(kept):
         c["index"] = i
     return kept
-
-
-def extract_pdf_text(data: bytes, max_pages: int = 0) -> str:
-    """Plain-text convenience: cells in row order joined by newlines,
-    pages separated by form-feed-free blank lines."""
-    pages = extract_pdf_pages(data, max_pages)
-    parts = []
-    for p in pages:
-        lines = [c["text"] for c in sorted(p["cells"], key=lambda c: (c["t"], c["l"]))]
-        parts.append("\n".join(lines))
-    return "\n\n".join(parts)

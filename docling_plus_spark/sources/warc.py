@@ -96,29 +96,6 @@ def make_warc(records: Iterable[tuple], gzip_member: bool = True) -> bytes:
     return bytes(out)
 
 
-def make_warc_index(
-    records: Iterable[tuple], gzip_member: bool = True
-) -> tuple:
-    """Like :func:`make_warc`, but also return CDX-style index entries
-    ``(url, offset, length, sha256_hex)`` — offset/length of each
-    record's (gzip-member) byte span inside the file, digest over the
-    *payload*. The span is independently decompressible (that is the
-    point of member-gzip), so a reader can fetch one record from a
-    100 TB crawl with a single ranged read — the access pattern CDX
-    servers exist for."""
-    from hashlib import sha256
-
-    out = bytearray()
-    entries = []
-    for rec in records:
-        url, payload = rec[0], rec[1]
-        ts = rec[2] if len(rec) > 2 else None
-        b = warc_record_bytes(url, payload, ts=ts, gzip_member=gzip_member)
-        entries.append((url, len(out), len(b), sha256(payload).hexdigest()))
-        out += b
-    return bytes(out), entries
-
-
 # ---------------------------------------------------------------------------
 # Parser
 

@@ -145,30 +145,6 @@ def windowed_event_counts(
     )
 
 
-def run_windowed_stream_once(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    schema: str = "user_id long, ts timestamp, event_id long",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> None:
-    """Drain available event files through the watermark/window agg in
-    append mode (only finalized windows reach the sink)."""
-    ev = spark.readStream.schema(schema).format("parquet").load(input_path)
-    out = windowed_event_counts(ev, window=window, watermark=watermark)
-    q = (
-        out.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def session_event_counts(
     events: DataFrame,
     gap: str = "30 minutes",

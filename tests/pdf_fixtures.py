@@ -1,4 +1,4 @@
-"""Deterministic synthetic page fixtures for the PDF/layout path.
+"""Deterministic synthetic page fixtures for the PDF/layout path tests.
 
 No PDF parser exists in the sandbox, so page-cell tables are synthesized
 (seed-free, pure function of doc index): single- and two-column layouts
@@ -155,7 +155,7 @@ def make_table_doc(doc_idx: int, n_rows: int = 3, n_cols: int = 3):
 
 def synth_pdf_pages(spark: SparkSession, n_docs: int = 20) -> DataFrame:
     """Mixed corpus: alternating single-column (2 pages) and two-column."""
-    from .pipeline import PAGES_SCHEMA
+    from docling_plus_spark.pdf.pipeline import PAGES_SCHEMA
 
     rows: list = []
     for i in range(n_docs):

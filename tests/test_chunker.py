@@ -8,7 +8,6 @@ import pytest
 from docling_plus_spark.doc.chunker import (
     Chunk,
     chunk_documents_stage,
-    contextualize,
     hierarchical_chunks,
     hybrid_chunks,
 )
@@ -16,6 +15,11 @@ from docling_plus_spark.doc.document import DLDocument
 from docling_plus_spark.plans import build_session
 
 SF = "/root/testdata/sf0.001"
+
+
+def contextualize(chunk: Chunk) -> str:
+    """Heading-path-prefixed text (what an embedder should see)."""
+    return "\n".join([*chunk.headings, chunk.text])
 
 
 def _sample_doc() -> DLDocument:

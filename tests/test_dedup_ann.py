@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
+from typing import Iterator
+
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from docling_plus_spark.operators.ann import (
     cosine_topk_bruteforce,
@@ -20,7 +26,6 @@ from docling_plus_spark.operators.dedup import (
 )
 from docling_plus_spark.operators.multimodal import (
     decode_media_stage,
-    extract_features_stage,
     frame_sample_plan,
     synth_media_from_documents,
 )
@@ -138,6 +143,44 @@ def test_media_decode_stub(spark):
     assert all(1 <= r["width"] <= 640 and 1 <= r["height"] <= 480 for r in rows)
     with pytest.raises(NotImplementedError):
         decode_media_stage(media, allow_stub=False)
+
+
+FEATURE_DIM = 16
+
+FEATURES_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("features", T.ArrayType(T.FloatType())),
+    ]
+)
+
+
+def extract_features_stage(media: DataFrame) -> DataFrame:
+    """binary → FEATURE_DIM float vector (deterministic fake embedding).
+
+    The stub hashes 16 byte-strides into [0,1) floats — stable across
+    runs/partitions, exercising the exact Arrow shape a real vision
+    encoder (batched, fixed-dim float output) would produce.
+    """
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, feats = [], []
+            for mid, blob in zip(pdf["media_id"], pdf["media"]):
+                b = bytes(blob or b"")
+                vec = [
+                    int.from_bytes(
+                        hashlib.md5(b[i::FEATURE_DIM][:64] + bytes([i])).digest()[:4],
+                        "big",
+                    )
+                    / 2**32
+                    for i in range(FEATURE_DIM)
+                ]
+                ids.append(mid)
+                feats.append(vec)
+            yield pd.DataFrame({"media_id": ids, "features": feats})
+
+    return media.select("media_id", "media").mapInPandas(fn, FEATURES_SCHEMA)
 
 
 def test_media_features_deterministic(spark):

@@ -197,7 +197,7 @@ def spark():
 
 
 def test_pdf_pipeline_matches_construction_oracle(spark):
-    from docling_plus_spark.pdf.fixtures import (
+    from pdf_fixtures import (
         make_single_column_doc,
         make_two_column_doc,
         synth_pdf_pages,
@@ -237,7 +237,7 @@ def test_failed_pages_surface_as_partial_success(spark):
     partial_success with a failed-page count; an all-failed document
     still yields a (failure) row — output total over input."""
     from docling_plus_spark.pdf import pipeline as pp
-    from docling_plus_spark.pdf.fixtures import synth_pdf_pages
+    from pdf_fixtures import synth_pdf_pages
 
     pages = synth_pdf_pages(spark, 3)
     # poison: page_no=null on page 0 of doc 0 → int(NaN) raises in-page
@@ -261,7 +261,7 @@ def test_table_overrides_dataframe(spark):
     """Precomputed table structures flow in as a DataFrame joined before
     the shuffle (no driver-side dict side channel)."""
     from docling_plus_spark.pdf import pipeline as pp
-    from docling_plus_spark.pdf.fixtures import make_table_doc
+    from pdf_fixtures import make_table_doc
 
     rows = []
     for i in range(2):

@@ -17,7 +17,7 @@ import os
 import pytest
 
 from docling_plus_spark.pdf.pdfbytes import NeedsNativeParserError, PdfDocument
-from docling_plus_spark.pdf.pdftext import extract_pdf_pages, extract_pdf_text
+from docling_plus_spark.pdf.pdftext import extract_pdf_pages
 from docling_plus_spark.pdf.synth import make_text_pdf
 
 from conftest import needs_reference
@@ -105,6 +105,16 @@ def test_cell_count_parity_budget():
     # fraction digits, SIZE_BREAK_FRAC) → 22 with zero collateral on
     # the other 31 golden pages.
     assert total_err <= 24, f"cell-count deviation grew: {total_err}"
+
+
+def extract_pdf_text(data: bytes) -> str:
+    """Plain text: each page's cells in row order joined by newlines,
+    pages separated by blank lines."""
+    parts = []
+    for p in extract_pdf_pages(data):
+        lines = [c["text"] for c in sorted(p["cells"], key=lambda c: (c["t"], c["l"]))]
+        parts.append("\n".join(lines))
+    return "\n\n".join(parts)
 
 
 @needs_reference

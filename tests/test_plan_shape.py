@@ -337,14 +337,21 @@ def test_ccnet_cutpoints_variant_has_no_sort(spark):
     assert "SortMergeJoin" not in plan
 
 
+def write_bucketed(df, table: str, key: str, n_buckets: int) -> None:
+    """Persist ``df`` as a managed table bucketed (and bucket-sorted) on
+    ``key`` (``DataFrameWriter.bucketBy``: hive-style bucket files plus
+    bucket metadata in the catalog; Spark's in-memory catalog needs no Hive
+    metastore, the tables land under ``spark.sql.warehouse.dir``).
+    ``n_buckets`` must match across tables that will be joined co-located."""
+    df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
+
+
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     """Two tables bucketed on the join key with equal bucket counts must
     join with ZERO Exchange operators — the storage layout already
-    co-locates keys (sources/bucketed.py; at 100 TB this converts every
-    repeat doc_id join from a corpus-wide shuffle into a free zip of
-    bucket files)."""
-    from docling_plus_spark.sources.bucketed import read_table, write_bucketed
-
+    co-locates keys (at 100 TB this converts every repeat doc_id join
+    from a corpus-wide shuffle, paid once at write time, into a free zip
+    of bucket files)."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         docs = spark.range(0, 1000).selectExpr(
@@ -355,9 +362,7 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         )
         write_bucketed(docs, "bt_docs", "doc_id", n_buckets=4)
         write_bucketed(scores, "bt_scores", "doc_id", n_buckets=4)
-        joined = read_table(spark, "bt_docs").join(
-            read_table(spark, "bt_scores"), "doc_id"
-        )
+        joined = spark.table("bt_docs").join(spark.table("bt_scores"), "doc_id")
         plan = _plan(joined)
         assert "SortMergeJoin" in plan, plan[:1500]
         assert "Exchange" not in plan, plan[:1500]

@@ -7,12 +7,26 @@ from datetime import datetime
 import pytest
 
 from docling_plus_spark.plans import build_session
-from docling_plus_spark.streaming.stream import (
-    run_windowed_stream_once,
-    windowed_event_counts,
-)
+from docling_plus_spark.streaming.stream import windowed_event_counts
 
 SCHEMA = "user_id long, ts timestamp, event_id long"
+
+
+def run_windowed_stream_once(spark, input_path: str, output_path: str,
+                             checkpoint_path: str) -> None:
+    """Drain available event files through the watermark/window agg in
+    append mode (only finalized windows reach the sink)."""
+    ev = spark.readStream.schema(SCHEMA).format("parquet").load(input_path)
+    out = windowed_event_counts(ev)
+    q = (
+        out.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @pytest.fixture(scope="module")

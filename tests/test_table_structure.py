@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from docling_plus_spark.pdf.fixtures import make_table_doc
+from pdf_fixtures import make_table_doc
 from docling_plus_spark.pdf.table_structure import (
     table_data_from_json,
     table_data_to_json,

@@ -1,6 +1,11 @@
 """Unit tests for the HTML conversion building blocks."""
 
+from pathlib import PurePosixPath
+from urllib.parse import urlsplit
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from docling_plus_spark.dom import parse_html
 from docling_plus_spark.html import convert_html
@@ -35,6 +40,28 @@ def test_normalize_hyperlink():
     assert normalize_hyperlink("#frag") == "#frag"
     assert normalize_hyperlink("a/b.html") == "a/b.html"
     assert normalize_hyperlink("./x") == "x"
+
+
+def _takes_path_branch(href: str) -> bool:
+    """Whether ``normalize_hyperlink`` treats ``href`` as a path."""
+    try:
+        parts = urlsplit(href)
+    except ValueError:
+        return True
+    return not (parts.scheme and (parts.netloc or not href.startswith("//")))
+
+
+@settings(max_examples=1000, deadline=None)
+@given(st.text(alphabet="/.ab\\:?#%\xe9\x00", min_size=1, max_size=16))
+@example("//a//b/")
+@example("///a/./b")
+@example("./")
+@example("/")
+@example("//")
+def test_normalize_hyperlink_path_branch_is_pure_posix_path(href):
+    # the path branch is string code equal to str(PurePosixPath(href))
+    if _takes_path_branch(href):
+        assert normalize_hyperlink(href) == str(PurePosixPath(href))
 
 
 @pytest.mark.parametrize("href, expected", [
@@ -75,6 +102,8 @@ def test_cell_spans_defaults():
     assert HtmlConverter._get_cell_spans(td) == (3, 1)
     root2 = parse_html(b'<td colspan="2abc">t</td>')
     assert HtmlConverter._get_cell_spans(root2.find("td")) == (2, 1)
+    root3 = parse_html(b'<td colspan="12" rowspan="1">t</td>')
+    assert HtmlConverter._get_cell_spans(root3.find("td")) == (12, 1)
 
 
 def test_hidden_elements_removed():
@@ -151,6 +180,34 @@ def test_paragraph_breaker_repair():
     )
     texts = [t.text for t in doc.texts]
     assert texts == ["before", "inner", "after"]
+
+
+@pytest.mark.parametrize("html, md", [
+    # a heading in a table does not make what precedes the first heading
+    # furniture
+    (b"<table><tr><td><h2>x</h2></td></tr></table><p>a</p>", "| x   |\n|-----|\n\na"),
+    # with a <body>, only headings in the first one count
+    (b"<h2>pre</h2><body><p>a</p></body>", "a"),
+    (b"<body><p>a</p></body><body><h2>h</h2></body>", "a"),
+    # without one, any heading does
+    (b"<div><p>nav</p><h3>t</h3><p>b</p></div>", "### t\n\nb"),
+])
+def test_first_heading_rule(html, md):
+    assert convert_html(html).export_to_markdown() == md
+
+
+@pytest.mark.parametrize("html, md", [
+    # an empty paragraph the repair drops holds the only heading: the
+    # content stays in the body layer
+    (b"<p><span><h2></h2></span><div>y</div></p>", "y"),
+    # ... or the first <body>: the content is the next one
+    (b"<p><body></body><div>x<br>y</div></p><body><h2>h</h2>z<br>w</body>",
+     "## h\n\nz\n\nw"),
+    (b"<p><i><body><br></body></i><div>q</div></p><h1>h</h1>x<br>y",
+     "# h\n\nx\n\ny"),
+])
+def test_paragraph_repair_dropping_body_or_heading(html, md):
+    assert convert_html(html).export_to_markdown() == md
 
 
 def test_hostile_deep_nesting_bounded():

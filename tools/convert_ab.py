@@ -15,7 +15,10 @@ a time, alternating which side converts each document first.
   worker freezes its import heap (``gc.freeze``) before converting.
 
 Prints the identity verdict and the CPU ratio working/base per round with
-its median and spread. Exits 1 on any mismatch.
+its median and spread. The per-round totals are mostly the wiki_duck-scale
+pages, so it also prints the median page: per side, the median over pages
+of each page's median CPU over the rounds (what perfbench's ``doc_ms_p50``
+tracks), and its ratio. Exits 1 on any mismatch.
 
 Usage: python tools/convert_ab.py --base <rev> [--seed N [N ...]]
 """
@@ -126,9 +129,12 @@ def bench_corpus():
 
 
 def compare(base: _Side, head: _Side, docs: list) -> tuple:
-    """``(mismatches, [head/base CPU ratio per round])``."""
+    """``(mismatches, [head/base CPU ratio per round], {side: median page
+    CPU})``."""
     mismatches = []
     ratios = []
+    # per side, per page: its CPU seconds in each round
+    page_cpu = {side.name: [[] for _ in docs] for side in (base, head)}
     for rnd in range(ROUNDS):
         cpu = {base.name: 0.0, head.name: 0.0}
         for i, doc in enumerate(docs):
@@ -137,6 +143,7 @@ def compare(base: _Side, head: _Side, docs: list) -> tuple:
             for side in order:
                 seconds, digests = side.convert(doc.url, doc.html, rnd == 0)
                 cpu[side.name] += seconds
+                page_cpu[side.name][i].append(seconds)
                 got[side.name] = digests
             if rnd == 0:
                 differ = [c for c in COMPARED if got[base.name][c] != got[head.name][c]]
@@ -145,7 +152,9 @@ def compare(base: _Side, head: _Side, docs: list) -> tuple:
         ratios.append(cpu[head.name] / cpu[base.name])
         print(f"  round {rnd + 1}: base {cpu[base.name]:.2f} s, "
               f"working {cpu[head.name]:.2f} s, ratio {ratios[-1]:.3f}", flush=True)
-    return mismatches, ratios
+    median_page = {name: statistics.median(statistics.median(t) for t in pages)
+                   for name, pages in page_cpu.items()}
+    return mismatches, ratios, median_page
 
 
 def main(argv=None) -> int:
@@ -173,7 +182,7 @@ def main(argv=None) -> int:
             for seed in args.seed:
                 docs = corpus.web_pages(seed, web_docs).docs
                 print(f"web_mixed seed {seed}: {len(docs)} pages", flush=True)
-                mismatches, ratios = compare(base, head, docs)
+                mismatches, ratios, median_page = compare(base, head, docs)
                 for url, cols in mismatches[:10]:
                     print(f"  MISMATCH {url}: {', '.join(cols)}")
                 print(f"  identical: {not mismatches} "
@@ -181,6 +190,9 @@ def main(argv=None) -> int:
                       f"{len(COMPARED)} columns)")
                 print(f"  cpu ratio working/base: median {statistics.median(ratios):.3f}, "
                       f"spread {min(ratios):.3f}-{max(ratios):.3f} over {len(ratios)} rounds")
+                print(f"  median page cpu: base {median_page[base.name] * 1e3:.3f} ms, "
+                      f"working {median_page[head.name] * 1e3:.3f} ms, ratio "
+                      f"{median_page[head.name] / median_page[base.name]:.3f}")
                 failed |= bool(mismatches)
         finally:
             for side in sides:
