@@ -54,6 +54,14 @@ Design notes
   chaining generators; a name filter is a str, an iterable of names (a
   ``frozenset`` is used as is) or None. ``descendants`` stays a generator
   for ``get_text`` and callers that stop early.
+* **Tree edits are list rebuilds.** A caller that moves or drops nodes
+  sets their ``parent`` and rebuilds each child list it touched once: a
+  slice assignment, or a comprehension that keeps the children whose
+  ``parent`` is still that tag. There is no per-node detach, which would
+  search its parent's children once per node and make a page with many
+  siblings quadratic. ``append`` leaves a node's old parent as it is;
+  ``unwrap`` and ``replace_with`` find an attached tag with ``list.index``
+  (C speed: Tags compare by identity).
 """
 
 from __future__ import annotations
@@ -85,12 +93,6 @@ class NavString(str):
         self.parent = None
         return self
 
-    def extract(self) -> "NavString":
-        if self.parent is not None:
-            _remove_by_identity(self.parent.contents, self)
-            self.parent = None
-        return self
-
 
 class PreformattedString(NavString):
     """Comment, declaration or processing instruction — excluded from
@@ -117,30 +119,16 @@ class Tag:
 
     # ----- tree building ---------------------------------------------------
     def append(self, node: "NodeType") -> None:
-        if getattr(node, "parent", None) is not None:
-            node.extract()
+        """Add ``node`` as the last child. A parent it had is left as it
+        is: the caller rebuilds or drops that one."""
         node.parent = self
         self.contents.append(node)
 
-    def insert(self, idx: int, node: "NodeType") -> None:
-        if getattr(node, "parent", None) is not None:
-            node.extract()
-        node.parent = self
-        self.contents.insert(idx, node)
-
     # ----- tree mutation ---------------------------------------------------
-    def extract(self) -> "Tag":
-        if self.parent is not None:
-            _remove_by_identity(self.parent.contents, self)
-            self.parent = None
-        return self
-
     def unwrap(self) -> None:
-        """Replace this tag by its children (bs4 ``unwrap``)."""
+        """Replace this attached tag by its children (bs4 ``unwrap``)."""
         parent = self.parent
-        if parent is None:
-            return
-        idx = _index_by_identity(parent.contents, self)
+        idx = parent.contents.index(self)  # Tags compare by identity
         for child in self.contents:
             child.parent = parent
         parent.contents[idx:idx + 1] = self.contents
@@ -148,15 +136,9 @@ class Tag:
         self.parent = None
 
     def replace_with(self, node: "NodeType") -> None:
+        """Put the detached ``node`` in this attached tag's place."""
         parent = self.parent
-        if parent is None:
-            return
-        idx = _index_by_identity(parent.contents, self)
-        if idx < 0:
-            return
-        if getattr(node, "parent", None) is not None:
-            node.extract()
-        parent.contents[idx] = node
+        parent.contents[parent.contents.index(self)] = node
         node.parent = parent
         self.parent = None
 
@@ -235,19 +217,6 @@ def _name_set(name) -> Optional[frozenset]:
     if isinstance(name, str):
         return frozenset((name,))
     return frozenset(name)
-
-
-def _index_by_identity(seq: list, node) -> int:
-    for i, item in enumerate(seq):
-        if item is node:
-            return i
-    return -1
-
-
-def _remove_by_identity(seq: list, node) -> None:
-    idx = _index_by_identity(seq, node)
-    if idx >= 0:
-        del seq[idx]
 
 
 #: Hard bound on DOM depth. Real documents stay well under 100; hostile

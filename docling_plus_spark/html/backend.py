@@ -21,15 +21,19 @@ Key reference semantics reproduced (file:line cites for parity audit):
 * URL resolution incl. protocol-relative     html_backend.py:418-438
 
 Before the walk, ``_prewalk`` makes one explicit-stack pass over the tree in
-document order. It extracts script/noscript/style and ``hidden`` subtrees
+document order. It drops script/noscript/style and ``hidden`` subtrees
 without entering them, collects the <p>s for the paragraph repair, the <br>s
 and the first <body>, and carries two flags on its stack (in the first body,
 in a table) that give the first heading outside a table: inside the first
 body when there is one, anywhere otherwise. The <br>s are replaced after the
 repair, which moves them as any other inline tag; in the rare case that the
 repair drops an empty paragraph holding a body or heading tag, the pass runs
-again on the repaired tree. A table cell is rich-checked by its child tags
-(it has a descendant element exactly when it has a child one).
+again on the repaired tree. Every edit of these three steps rebuilds a child
+list, once per list it touches (a comprehension after the strip, one slice
+assignment per repaired <p>, one comprehension per parent of <br>s), so a
+page converts in time linear in its nodes however many siblings one tag
+holds. A table cell is rich-checked by its child tags (it has a descendant
+element exactly when it has a child one).
 
 ``_table_rows`` reads a table's cells, spans and header flags in one scan
 that both the dimensions and the span grid use; a thead/tbody left unclosed
@@ -354,9 +358,13 @@ class HtmlConverter:
             # the repair dropped a body or heading: collect again
             _, brs, content, first_heading = self._prewalk(root)
         # <br> → newline (html_backend.py:320-322), after the repair, which
-        # moves a <br> as any other inline tag
+        # moves a <br> as any other inline tag; each parent is rebuilt once
+        newlines = {}
         for br in brs:
-            br.replace_with(NavString("\n"))
+            newline = newlines[br] = NavString("\n")
+            newline.parent = br.parent
+        for parent in {br.parent for br in brs}:
+            parent.contents = [newlines.get(node, node) for node in parent.contents]
         self.content_layer = (
             ContentLayer.BODY if first_heading is None else ContentLayer.FURNITURE
         )
@@ -397,14 +405,19 @@ class HtmlConverter:
                         body_heading = tag
                 elif heading is None:
                     heading = tag
-            # pushed last child first, so tags pop in document order; an
-            # extract() removes only the child the reversed iterator is on
+            # pushed last child first, so tags pop in document order; a
+            # stripped child loses its parent, and the contents that held
+            # one are rebuilt once
+            stripped = False
             for child in reversed(tag.contents):
                 if isinstance(child, Tag):
                     if child.name in _STRIPPED_TAGS or "hidden" in child.attrs:
-                        child.extract()
+                        child.parent = None
+                        stripped = True
                     else:
                         stack.append((child, in_body, in_table))
+            if stripped:
+                tag.contents = [c for c in tag.contents if c.parent is tag]
         if body is None:
             return paragraphs, brs, root, heading
         return paragraphs, body_brs, body, body_heading
@@ -414,54 +427,48 @@ class HtmlConverter:
     def _fix_invalid_paragraph_structure(paragraphs: list) -> bool:
         """Browser-like rewrite of <p> with block-level content
         (html_backend.py:343-416), over the attached <p>s in document
-        order. True when it dropped an empty paragraph holding a body or
+        order. Each <p> that holds a block is replaced, in one slice
+        assignment, by its block children and new <p>s for the runs of
+        other children between them (a comment's text becomes text); a run
+        without text is dropped. True when a dropped run held a body or
         heading tag."""
         dropped_landmark = False
-        paragraphs = [p for p in paragraphs if p.find(_PARA_BREAKERS) is not None]
-        for p in paragraphs:
-            parent = p.parent
-            if parent is None:
-                continue
-            new_nodes: list = []
-            current_p: Optional[Tag] = None
+        new_nodes: list = []
+        run: list = []  # the children of the open paragraph
 
-            def start_para():
-                nonlocal current_p
-                if current_p is None:
-                    current_p = Tag("p")
-                    new_nodes.append(current_p)
+        def close_run() -> None:
+            nonlocal dropped_landmark
+            if run:
+                para = Tag("p")
+                for node in run:
+                    para.append(node)
+                run.clear()
+                if para.get_text(strip=True):
+                    new_nodes.append(para)
+                elif para.find(_BODY_OR_HEADING) is not None:
+                    dropped_landmark = True
 
-            def flush_para_if_empty():
-                # the open paragraph is always the last node collected
-                nonlocal current_p, dropped_landmark
-                if current_p is not None and not current_p.get_text(strip=True):
-                    new_nodes.pop()
-                    if current_p.find(_BODY_OR_HEADING) is not None:
-                        dropped_landmark = True
-                current_p = None
-
-            for node in list(p.contents):
-                if isinstance(node, NavString):
-                    text = str(node)
-                    node.extract()
-                    if text.strip():
-                        start_para()
-                        current_p.append(NavString(text))
-                    continue
+        # per parent, the index of its last repaired <p>: the ones after it
+        # in document order stand there or later
+        start: dict = {}
+        for p in [p for p in paragraphs if p.find(_PARA_BREAKERS) is not None]:
+            for node in p.contents:
                 if isinstance(node, Tag):
-                    node.extract()
                     if node.name in _PARA_BREAKERS:
-                        flush_para_if_empty()
+                        close_run()
                         new_nodes.append(node)
                     else:
-                        start_para()
-                        current_p.append(node)
-            flush_para_if_empty()
-
-            idx = parent.contents.index(p)  # Tags compare by identity
-            p.extract()
-            for n in reversed(new_nodes):
-                parent.insert(idx, n)
+                        run.append(node)
+                elif node.strip():
+                    run.append(NavString(node))
+            close_run()
+            parent = p.parent
+            idx = parent.contents.index(p, start.get(parent, 0))
+            start[parent] = idx
+            parent.contents[idx:idx + 1] = new_nodes
+            for node in new_nodes:
+                node.parent = parent
+            new_nodes.clear()
         return dropped_landmark
 
     # ----------------------------------------------------------- tree walk

@@ -94,6 +94,14 @@ def _classify_failure(exc: BaseException) -> str:
     return f"convert_error:{name}"
 
 
+def doc_names(url: str) -> tuple:
+    """``(name, stem)`` of the document at ``url``: its last path segment
+    without the query (``doc`` when empty), and that without its
+    extension."""
+    name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
+    return name, (name.rsplit(".", 1)[0] if "." in name else name)
+
+
 def _row_builder(include: tuple):
     """``row(url, blob, fmt, reject_reason)`` → one output row per input
     row: a gate reject as is, otherwise the converted document's surfaces
@@ -125,8 +133,7 @@ def _row_builder(include: tuple):
             return {**_BLANK, "url": url, "failure_class": reject_reason}
         t0 = time.perf_counter()
         try:
-            name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
-            stem = name.rsplit(".", 1)[0] if "." in name else name
+            name, stem = doc_names(url)
             doc = convert_bytes(bytes(blob), fmt, name=stem, filename=name)
             items = [it for it, _ in doc.iterate_items(doc.body, with_groups=False)]
             out = {**_BLANK, "url": url, "status": "success", "num_items": len(items),

@@ -44,14 +44,14 @@ def _spans_chunk(urls, blobs, fmts) -> pd.DataFrame:
     from docling_plus_spark.doc.serializers import export_to_text
     from docling_plus_spark.doc.spans import text_spans
     from docling_plus_spark.formats import convert_bytes
+    from docling_plus_spark.operators.extract import doc_names
 
     out = {k: [] for k in (
         "url", "item_idx", "label", "char_start", "char_end", "span_md5",
     )}
     for url, blob, fmt in zip(urls, blobs, fmts):
         try:
-            name = url.rsplit("/", 1)[-1].split("?", 1)[0] or "doc"
-            stem = name.rsplit(".", 1)[0] if "." in name else name
+            name, stem = doc_names(url)
             doc = convert_bytes(
                 bytes(blob or b""), fmt or "html", name=stem, filename=name
             )
@@ -70,30 +70,24 @@ def _spans_chunk(urls, blobs, fmts) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def span_offsets_stage(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    format_col: str = "format",
-) -> DataFrame:
-    """Page rows → ``SPAN_SCHEMA`` rows (one per emitted content block).
+def span_offsets_stage(pages: DataFrame) -> DataFrame:
+    """Page rows (``url``, ``html`` and an optional ``format``) →
+    ``SPAN_SCHEMA`` rows (one per emitted content block).
 
-    ``format_col`` is optional — absent, all rows convert as html.
-    Documents that fail conversion contribute zero span rows (the
-    extraction stage is where failures become status rows; this is the
-    success-side detail table keyed back to it by url).
+    Without a ``format`` column all rows convert as html. Documents that
+    fail conversion contribute zero span rows (the extraction stage is
+    where failures become status rows; this is the success-side detail
+    table keyed back to it by url).
     """
-    has_fmt = format_col in pages.columns
-    cols = [url_col, html_col] + ([format_col] if has_fmt else [])
+    has_fmt = "format" in pages.columns
+    cols = ["url", "html"] + (["format"] if has_fmt else [])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            fmts = (
-                pdf[format_col].tolist() if has_fmt else ["html"] * len(pdf)
-            )
-            yield _spans_chunk(pdf[url_col].tolist(), pdf[html_col].tolist(), fmts)
+            fmts = pdf["format"].tolist() if has_fmt else ["html"] * len(pdf)
+            yield _spans_chunk(pdf["url"].tolist(), pdf["html"].tolist(), fmts)
 
     return pages.select(*cols).mapInPandas(fn, SPAN_SCHEMA)
 

@@ -17,6 +17,18 @@ needs_reference = pytest.mark.skipif(
     reason=f"reference test data {REFERENCE_DATA} is missing",
 )
 
+#: hostile page shapes, one repeated unit each, that an edit of the tree
+#: node by node makes quadratic: <br>s, stripped script and ``hidden``
+#: siblings, <p>s past the depth cap (siblings under one paragraph) and
+#: paragraphs holding a block
+HOSTILE_UNITS = {
+    "br": b"x<br>",
+    "script": b"<script>x</script>",
+    "hidden": b"<input hidden>",
+    "p": b"<p>",
+    "p_div": b"<p>x<div>y</div>z</p>",
+}
+
 
 def web_pages_df(spark, n: int, seed: int = 0, rep: int = 0):
     """``n`` generated web pages (one in 27 at wiki_duck scale, ~70% of the

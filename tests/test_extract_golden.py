@@ -16,6 +16,7 @@ import json
 import struct
 
 import pytest
+from conftest import HOSTILE_UNITS
 
 from docling_plus_spark.pdf.synth import make_text_pdf
 from docling_plus_spark.plans import build_session, extract_pipeline, run_epoch
@@ -106,6 +107,41 @@ second line</pre>
 <p>after the footer</p>
 </body></html>
 """
+
+# the tree edits the generated corpus barely reaches (~0.4 <br> and 3
+# stripped tags a page): stripped siblings, among them a hidden heading that
+# would otherwise be the first one, <br>s in and beside repaired paragraphs,
+# nested repaired paragraphs with comments, and thead/tbody left unclosed
+STRIPPED = b"""<!DOCTYPE html>
+<html><head><title>Stripped</title><style>a{}</style><script>1</script></head>
+<body>
+<p>before any heading</p>
+<noscript>no script</noscript><h1 hidden>Hidden title</h1><script>2</script><style>b{}</style>
+<p>kept<script>3</script> text<span hidden>gone</span> after<input hidden><br>next line</p>
+<h2>Visible heading</h2>
+<p>one<br>two<div>block<br>inside</div>three<br><br>four</p><br>beside<br>
+<p>outer <!-- c1 --><p>inner <!-- c2 --><div>deep</div><!-- c3 -->tail</p> rest<!-- c4 --></p>
+<table><thead><tr><th>A</th><th>B</th></tr><tbody><tr><td>1</td><td>2<br>3</td></tr></tbody></table>
+<table><tbody><thead><tr><th>C</th><th>D</th></tr></thead><tr><td>4</td><td>5</td></tr></table>
+<p>x<div>y</div>z</p><p>x<div>y</div>z</p><p><span><p>s<div>t</div></p></span><div>u</div></p>
+</body></html>
+"""
+
+# an empty run the paragraph repair drops holds the only heading: the page
+# has no first heading after the repair, so nothing is furniture
+EMPTY_RUN = b"""<html><head><title>Empty run</title></head><body>
+<p>lead<br>in</p>
+<p><b><h2></h2></b><div>after the empty run</div><i> </i>end<br></p>
+<p><!-- only a comment --><div>block</div></p>
+</body></html>
+"""
+
+# the hostile shapes of test_unit_html at small n; 300 <p>s pass the depth
+# cap, so the last ones are siblings under one paragraph
+HOSTILE_ROWS = [
+    (f"https://golden.test/hostile-{name}.html", unit * (300 if name == "p" else 40))
+    for name, unit in HOSTILE_UNITS.items()
+]
 
 # one row per non-HTML text format whose serializers this page's
 # surfaces share, plus markdown with a raw HTML block, which the markdown
@@ -224,6 +260,9 @@ ROWS = [
     ("https://golden.test/page.html", HTML),
     ("https://golden.test/features.html", FEATURES),
     ("https://golden.test/edges.html", EDGES),
+    ("https://golden.test/stripped.html", STRIPPED),
+    ("https://golden.test/empty-run.html", EMPTY_RUN),
+    *HOSTILE_ROWS,
     ("https://golden.test/notes.md", MD),
     ("https://golden.test/raw.md", MD_HTML),
     ("https://golden.test/table.csv", CSV),
@@ -249,8 +288,14 @@ GOLDEN_PLAIN = {
     "https://golden.test/doc.json": "ea012872630e6adb",
     "https://golden.test/doc.pdf": "07a7462a53f31e7e",
     "https://golden.test/edges.html": "d19c70e303983e50",
+    "https://golden.test/empty-run.html": "cfbf65d42eb6761a",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "20748d92718dd4e6",
+    "https://golden.test/hostile-br.html": "38be0abb801da36a",
+    "https://golden.test/hostile-hidden.html": "a856f2d4a2827aed",
+    "https://golden.test/hostile-p.html": "07c03e1ab0a9146c",
+    "https://golden.test/hostile-p_div.html": "2cc0d43f24b0158d",
+    "https://golden.test/hostile-script.html": "99a26b6ec4885a24",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/manual.adoc": "3285570d37d77e57",
     "https://golden.test/notes": "00b13dd53c5f4e37",
@@ -258,6 +303,7 @@ GOLDEN_PLAIN = {
     "https://golden.test/null.html": "594e55eab61308ec",
     "https://golden.test/page.html": "9c67954f797eec23",
     "https://golden.test/raw.md": "0592ab67fd282642",
+    "https://golden.test/stripped.html": "477d01b8e6f60b88",
     "https://golden.test/table.csv": "383a804f20306a10",
 }
 
@@ -268,8 +314,14 @@ GOLDEN_ALL = {
     "https://golden.test/doc.json": "533f3e9206d1b5c9",
     "https://golden.test/doc.pdf": "5174a6260c64909c",
     "https://golden.test/edges.html": "f5d331c12186eeb8",
+    "https://golden.test/empty-run.html": "b764785298462509",
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "ee376f09cdab7c2f",
+    "https://golden.test/hostile-br.html": "ffad248abbf2f36f",
+    "https://golden.test/hostile-hidden.html": "594eb416edffdbd4",
+    "https://golden.test/hostile-p.html": "de905e30ef0d9baa",
+    "https://golden.test/hostile-p_div.html": "226b04c815433169",
+    "https://golden.test/hostile-script.html": "5ec35e9f1764754b",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/manual.adoc": "d3d7f73a2bc0a82e",
     "https://golden.test/notes": "00b13dd53c5f4e37",
@@ -277,6 +329,7 @@ GOLDEN_ALL = {
     "https://golden.test/null.html": "594e55eab61308ec",
     "https://golden.test/page.html": "5a7af2240cda1300",
     "https://golden.test/raw.md": "108574aeb89ce91c",
+    "https://golden.test/stripped.html": "f647ec32a8117af3",
     "https://golden.test/table.csv": "23eb73f048422187",
 }
 
@@ -330,6 +383,9 @@ def test_row_kinds_cover_every_path(spark):
         "https://golden.test/page.html": ("success", None),
         "https://golden.test/features.html": ("success", None),
         "https://golden.test/edges.html": ("success", None),
+        "https://golden.test/stripped.html": ("success", None),
+        "https://golden.test/empty-run.html": ("success", None),
+        **{url: ("success", None) for url, _ in HOSTILE_ROWS},
         "https://golden.test/notes.md": ("success", None),
         "https://golden.test/raw.md": ("success", None),
         "https://golden.test/table.csv": ("success", None),

@@ -1,9 +1,12 @@
 """Unit tests for the HTML conversion building blocks."""
 
+import gc
+import time
 from pathlib import PurePosixPath
 from urllib.parse import urlsplit
 
 import pytest
+from conftest import HOSTILE_UNITS
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -236,3 +239,31 @@ def test_hostile_deep_nesting_bounded():
     assert "inner text" in convert_html(
         b"<p>" * 100_000 + b"inner text", name="p", filename="p.html"
     ).export_to_markdown()
+
+
+def _convert_cpu(html: bytes) -> float:
+    """Best of three CPU times of one conversion, without the collector."""
+    best = float("inf")
+    for _ in range(3):
+        gc.disable()
+        try:
+            t0 = time.process_time()
+            convert_html(html, name="p", filename="p.html")
+            best = min(best, time.process_time() - t0)
+        finally:
+            gc.enable()
+    return best
+
+
+@pytest.mark.parametrize("name", list(HOSTILE_UNITS))
+def test_hostile_pages_convert_in_linear_time(name):
+    """Four times the repetitions of a hostile unit cost about four times
+    the CPU: no tree edit searches a child list or shifts one per node.
+    ``n`` grows until the smaller page takes 0.05 s, so fixed costs and
+    timer noise do not decide the ratio; a quadratic edit reads ~16."""
+    unit = HOSTILE_UNITS[name]
+    n = 500
+    while (base := _convert_cpu(unit * n)) < 0.05:
+        n *= 2
+    ratio = _convert_cpu(unit * (4 * n)) / base
+    assert ratio < 8, f"{name}: n={n}, 4n/n CPU ratio {ratio:.1f}"
