@@ -4,10 +4,14 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": <sf>, "docs_per_sec": ...}
 
+The extraction headline times two corpora: the 432 generated pages of
+perfbench's ``web_mixed`` workload (seed 0, one in 27 at wiki_duck scale)
+and the synth pages derived from the input dir's documents table. A timed
+corpus with no rows ends the run with a non-zero exit.
+
 Env:
   SPARK_GRAFT_SF_DIR   input dir  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N]   (default 32)
-  BENCH_REPLICATE      fixture-corpus replication (default 400)
+  SPARK_GRAFT_CPUS     local[N]   (default: the machine's cores)
 """
 
 from __future__ import annotations
@@ -27,27 +31,26 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-#: files per bench corpus. A production Iceberg table at 100 TB arrives
-#: pre-split into many ≤128 MB files; 128 files here reproduces that
-#: input-determined granularity so task count does NOT depend on the
+#: files of the synth bench corpus. A production Iceberg table at 100 TB
+#: arrives pre-split into many ≤128 MB files; 128 files here reproduces
+#: that input-determined granularity so task count does NOT depend on the
 #: core count under test (multiple waves at every parallelism level).
 BENCH_INPUT_FILES = 128
+#: blocks of 27 generated pages in the web_mixed corpus (its 432 pages)
+WEB_MIXED_BLOCKS = 16
 
 
-def ensure_fixture_parquet(spark, replicate: int) -> str:
-    """Write the replicated fixture corpus once; benches then *scan* it
-    (parquet → extract), matching the production read path."""
-    path = os.path.join(
-        CACHE_DIR, f"fixtures_rep{replicate}_p{BENCH_INPUT_FILES}.parquet"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from docling_plus_spark.sources import fixture_corpus_df
+def web_mixed_parquet() -> str:
+    """Write the pages perfbench's ``web_mixed`` workload times (seed 0)
+    once, one parquet file per block; benches then *scan* them. Each file
+    then holds one wiki_duck-scale page: the scan packs small files into
+    tasks largest first, so 128 files of 3-4 pages put all 16 large pages,
+    ~75% of the bytes, in one task."""
+    from tools.convert_ab import bench_corpus
 
-        df = fixture_corpus_df(
-            spark, replicate=replicate, num_partitions=BENCH_INPUT_FILES
-        )
-        df.write.mode("overwrite").parquet(path)
-    return path
+    corpus = bench_corpus()
+    pages = corpus.web_pages(0, WEB_MIXED_BLOCKS * corpus.FIXTURE_BLOCK)
+    return corpus.write_parquet(pages, CACHE_DIR, WEB_MIXED_BLOCKS)
 
 
 def ensure_synth_parquet(spark, sf_dir: str) -> str:
@@ -67,20 +70,22 @@ def ensure_synth_parquet(spark, sf_dir: str) -> str:
     return path
 
 
+def corpus_rows(df, name: str) -> int:
+    """The rows of a timed corpus; an empty one ends the run, since a
+    docs/sec over no documents measures nothing."""
+    rows = df.count()
+    if rows == 0:
+        sys.exit(f"bench.py: the {name} corpus has no rows")
+    return rows
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # 800x (21,600 docs) amortizes per-job scheduling overhead into the
-    # noise so the headline reflects steady-state throughput (replicate
-    # 400 understated docs/sec ~2x vs the scaling runs at 1600x)
-    replicate = int(os.environ.get("BENCH_REPLICATE", "800"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     import __spark_entry__ as e
     from docling_plus_spark.plans import build_session, extract_pipeline
-    from docling_plus_spark.sources import synth_pages_from_documents
 
     spark = build_session(f"local[{cpus}]", shuffle_partitions=max(cpus, 32))
     spark.sparkContext.setLogLevel("ERROR")
@@ -88,15 +93,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     extract_docs = 0
 
-    # warm up JVM codegen + Python workers so the headline measures
-    # steady-state throughput, not cold start (a 1000-executor cluster
-    # amortizes startup over hours of input)
-    from docling_plus_spark.sources import fixture_corpus_df
-
-    _force(extract_pipeline(fixture_corpus_df(spark, replicate=2, num_partitions=cpus)))
-    # also warm the shuffle/join/window/HOF codegen paths the operator
-    # queries hit first (the first heavy query otherwise pays the whole
-    # JVM compilation bill: cc_keep_best measured 3x its steady state)
+    # warm the shuffle/join/window/HOF codegen paths the operator queries
+    # hit first (the first heavy query otherwise pays the whole JVM
+    # compilation bill: cc_keep_best measured 3x its steady state)
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -127,29 +126,26 @@ def main() -> None:
         )
     ).write.format("noop").mode("overwrite").save()
 
-    # -- headline: extraction over the replicated reference-fixture corpus
-    fx_path = ensure_fixture_parquet(spark, replicate)
-    pages = spark.read.parquet(fx_path)
+    # -- headline: extraction over the web_mixed pages
+    pages = spark.read.parquet(web_mixed_parquet())
+    extract_docs += corpus_rows(pages, "web_mixed")
     # shuffle-free: parquet split sizing already byte-balances partitions
     # (see BENCH.md §3 — the salted scatter is for skew-correlated inputs).
-    # min of two passes: the headline is steady-state throughput, and this
-    # host's single-shot times drift ±40% (BENCH.md §2b)
+    # min of two passes: the headline is steady-state throughput, so the
+    # first pass also absorbs the Python workers' cold start
     def _timed_extract(df) -> float:
         t0 = time.perf_counter()
         _force(extract_pipeline(df))
         return time.perf_counter() - t0
 
-    timings["extract_fixture_corpus"] = min(
-        _timed_extract(pages) for _ in range(2)
-    )
-    extract_docs += pages.count()
+    timings["extract_web_mixed"] = min(_timed_extract(pages) for _ in range(2))
 
     # -- extraction over the synth documents-derived corpus (materialized
     # as a multi-file parquet: the driver's single-row-group file is not
     # splittable and would serialize the scan)
     sp = spark.read.parquet(ensure_synth_parquet(spark, sf_dir))
+    extract_docs += corpus_rows(sp, "synth")
     timings["extract_synth_docs"] = min(_timed_extract(sp) for _ in range(2))
-    extract_docs += sp.count()
 
     # -- operator queries from the driver contract (skip the two extraction
     # ones already covered above at larger scale)
@@ -162,9 +158,7 @@ def main() -> None:
         timings[name] = time.perf_counter() - t0
 
     total = sum(timings.values())
-    extract_sec = (
-        timings["extract_fixture_corpus"] + timings["extract_synth_docs"]
-    )
+    extract_sec = timings["extract_web_mixed"] + timings["extract_synth_docs"]
     # Full per-query dict first (for humans / BENCH.md), then a compact
     # summary line LAST: the driver tail-captures stdout and a 127-entry
     # dict overflowed its buffer in round 3 (BENCH_r03.json parsed:null).
@@ -182,7 +176,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "extraction+operator suite wall time (headline: docs/sec over replicated reference-HTML corpus + synth corpus)",
+                "metric": "extraction+operator suite wall time (headline: docs/sec over perfbench's web_mixed corpus, 432 generated pages, + synth corpus)",
                 "value": round(total, 3),
                 "unit": "sec",
                 "sf": sf,

@@ -59,9 +59,7 @@ Design notes
   slice assignment, or a comprehension that keeps the children whose
   ``parent`` is still that tag. There is no per-node detach, which would
   search its parent's children once per node and make a page with many
-  siblings quadratic. ``append`` leaves a node's old parent as it is;
-  ``unwrap`` and ``replace_with`` find an attached tag with ``list.index``
-  (C speed: Tags compare by identity).
+  siblings quadratic. ``append`` leaves a node's old parent as it is.
 """
 
 from __future__ import annotations
@@ -123,24 +121,6 @@ class Tag:
         is: the caller rebuilds or drops that one."""
         node.parent = self
         self.contents.append(node)
-
-    # ----- tree mutation ---------------------------------------------------
-    def unwrap(self) -> None:
-        """Replace this attached tag by its children (bs4 ``unwrap``)."""
-        parent = self.parent
-        idx = parent.contents.index(self)  # Tags compare by identity
-        for child in self.contents:
-            child.parent = parent
-        parent.contents[idx:idx + 1] = self.contents
-        self.contents = []
-        self.parent = None
-
-    def replace_with(self, node: "NodeType") -> None:
-        """Put the detached ``node`` in this attached tag's place."""
-        parent = self.parent
-        parent.contents[parent.contents.index(self)] = node
-        node.parent = parent
-        self.parent = None
 
     # ----- traversal -------------------------------------------------------
     @property

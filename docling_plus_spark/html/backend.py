@@ -36,8 +36,11 @@ holds. A table cell is rich-checked by its child tags (it has a descendant
 element exactly when it has a child one).
 
 ``_table_rows`` reads a table's cells, spans and header flags in one scan
-that both the dimensions and the span grid use; a thead/tbody left unclosed
-(so nested in another) is unwrapped too, which keeps its rows in the grid.
+that both the dimensions and the span grid use; it reads rows through
+thead/tbody wrappers in place, also one left unclosed (so nested in
+another), which keeps its rows in the grid. A cell's ``$$…$$`` inline
+formulas become text the same way as the <br>s: one comprehension per
+parent.
 ``_emit_runs`` is the one item emitter: it turns a list of inline runs into
 text/code items, under an inline group when there are two or more. Buffered
 inline content and ``p``/``address``/``summary`` blocks reach it through
@@ -837,15 +840,22 @@ class HtmlConverter:
     @staticmethod
     def _table_rows(table: Tag) -> list:
         """The table's rows as ``(cells, col_header, row_header)``, each
-        cell ``(tag, col_span, row_span)``; thead/tbody wrappers (also ones
-        left unclosed, so nested) are unwrapped first. A row without <td>
+        cell ``(tag, col_span, row_span)``: the <tr> children, read through
+        thead/tbody wrappers in place (also ones left unclosed, so nested),
+        in document order, without editing the tree. A row without <td>
         is a column header; one whose cells are all multi-row <th> is a
         row header (html_backend.py:516-540)."""
-        while wrappers := table.find_all(_ROW_GROUP_TAGS, recursive=False):
-            for wrapper in wrappers:
-                wrapper.unwrap()
         rows = []
-        for tr in table.find_all("tr", recursive=False):
+        stack = table.contents[::-1]
+        while stack:
+            tr = stack.pop()  # a row, or a wrapper whose children are read
+            if not isinstance(tr, Tag):
+                continue
+            if tr.name in _ROW_GROUP_TAGS:
+                stack.extend(reversed(tr.contents))
+                continue
+            if tr.name != "tr":
+                continue
             cells = []
             col_header = row_header = True
             for cell in tr.find_all(_CELL_TAGS, recursive=False):
@@ -910,10 +920,16 @@ class HtmlConverter:
 
             col_idx = 0
             for html_cell, col_span, row_span in cells:
+                # every formula's text is read from the untouched cell, then
+                # each parent of a replaced one is rebuilt once
+                formulas = {}
                 for formula in html_cell.find_all("inline-formula"):
                     math_parts = formula.get_text().split("$$")
                     if len(math_parts) == 3:
-                        formula.replace_with(NavString(f"$${math_parts[1]}$$"))
+                        math = formulas[formula] = NavString(f"$${math_parts[1]}$$")
+                        math.parent = formula.parent
+                for parent in {math.parent for math in formulas.values()}:
+                    parent.contents = [formulas.get(node, node) for node in parent.contents]
 
                 provs_in_cell: list[str] = []
                 rich = self._is_rich_table_cell(html_cell)

@@ -4,27 +4,18 @@ Schema (BASELINE.json ``input_hint``)::
 
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
-Two deterministic synthesizers, both seed-free (pure functions of their
-inputs) so tests / bench / oracle all see identical rows:
-
-* :func:`synth_pages_from_documents` — derives a page table from the
-  driver's ``documents`` parquet with **pure column expressions**, so the
-  exact same derivation runs as ANSI SQL inside the DuckDB oracle
-  (:data:`SYNTH_PAGE_ORACLE_CTE`). Because the wrapper template is known,
-  the *expected* extraction output is itself SQL-expressible — this gives
-  the end-to-end pipeline a value-level oracle, not just a row count.
-* :func:`fixture_corpus_df` — loads the reference's 28 HTML conversion
-  fixtures (/root/reference/docling/tests/data/html) as rows, optionally
-  replicated, for golden byte-identity checks and throughput benchmarks.
-  wiki_duck.html (245 KB vs ~1 KB median) makes the natural size skew the
-  salted repartition has to level.
+:func:`synth_pages_from_documents` derives a page table from an input dir's
+``documents`` parquet with **pure column expressions**, seed-free, so tests,
+bench and oracle all see identical rows, and the exact same derivation runs
+as ANSI SQL inside the DuckDB oracle (:data:`SYNTH_PAGE_ORACLE_CTE`).
+Because the wrapper template is known, the *expected* extraction output is
+itself SQL-expressible — this gives the end-to-end pipeline a value-level
+oracle, not just a row count.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +31,7 @@ WEB_PAGES_SCHEMA = T.StructType(
     ]
 )
 
+#: docling's HTML conversion fixtures, where the reference tree is present
 FIXTURE_DIR = "/root/reference/docling/tests/data/html"
 
 
@@ -129,46 +121,3 @@ SELECT 'https://synth.test/doc/' || doc_id::varchar            AS url,
        '# Doc ' || doc_id::varchar || chr(10) || chr(10) || text AS expected_md
 FROM documents
 )"""
-
-def fixture_corpus_rows(replicate: int = 1) -> list:
-    """(url, warc_ts_epoch, html, text, lang) tuples from the reference
-    HTML fixture corpus; deterministic order (sorted filename, rep id)."""
-    import datetime
-
-    files = sorted(glob.glob(os.path.join(FIXTURE_DIR, "*.html")))
-    langs = ["en", "es", "de", "fr"]
-    rows = []
-    i = 0
-    for rep in range(replicate):
-        for f in files:
-            name = os.path.basename(f)
-            with open(f, "rb") as fh:
-                data = fh.read()
-            rows.append(
-                (
-                    f"https://fixture.test/html/{name}?rep={rep}",
-                    datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=i),
-                    data,
-                    "",
-                    langs[i % 4],
-                )
-            )
-            i += 1
-    return rows
-
-
-def fixture_corpus_df(
-    spark: SparkSession,
-    replicate: int = 1,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Reference fixture corpus as a web_pages DataFrame.
-
-    At replicate≫1 this is the bench corpus: heavy-tailed page sizes
-    (wiki_duck is ~250× the median) exercising the skew path.
-    """
-    rows = fixture_corpus_rows(replicate)
-    df = spark.createDataFrame(rows, WEB_PAGES_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df

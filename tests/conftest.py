@@ -17,16 +17,19 @@ needs_reference = pytest.mark.skipif(
     reason=f"reference test data {REFERENCE_DATA} is missing",
 )
 
-#: hostile page shapes, one repeated unit each, that an edit of the tree
-#: node by node makes quadratic: <br>s, stripped script and ``hidden``
-#: siblings, <p>s past the depth cap (siblings under one paragraph) and
-#: paragraphs holding a block
+#: hostile page shapes, ``(prefix, unit)`` each: the page is the prefix and
+#: then the unit repeated. An edit of the tree node by node makes them
+#: quadratic: <br>s, stripped script and ``hidden`` siblings, <p>s past the
+#: depth cap (siblings under one paragraph), paragraphs holding a block,
+#: thead/tbody wrappers of one table's rows and inline formulas in one cell
 HOSTILE_UNITS = {
-    "br": b"x<br>",
-    "script": b"<script>x</script>",
-    "hidden": b"<input hidden>",
-    "p": b"<p>",
-    "p_div": b"<p>x<div>y</div>z</p>",
+    "br": (b"", b"x<br>"),
+    "script": (b"", b"<script>x</script>"),
+    "hidden": (b"", b"<input hidden>"),
+    "p": (b"", b"<p>"),
+    "p_div": (b"", b"<p>x<div>y</div>z</p>"),
+    "tbody": (b"<table>", b"<tbody><tr><td>x</td></tr></tbody>"),
+    "formula": (b"<table><tr><td>", b"<inline-formula>a $$x$$ b</inline-formula>"),
 }
 
 

@@ -139,8 +139,8 @@ EMPTY_RUN = b"""<html><head><title>Empty run</title></head><body>
 # the hostile shapes of test_unit_html at small n; 300 <p>s pass the depth
 # cap, so the last ones are siblings under one paragraph
 HOSTILE_ROWS = [
-    (f"https://golden.test/hostile-{name}.html", unit * (300 if name == "p" else 40))
-    for name, unit in HOSTILE_UNITS.items()
+    (f"https://golden.test/hostile-{name}.html", prefix + unit * (300 if name == "p" else 40))
+    for name, (prefix, unit) in HOSTILE_UNITS.items()
 ]
 
 # one row per non-HTML text format whose serializers this page's
@@ -292,10 +292,12 @@ GOLDEN_PLAIN = {
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "20748d92718dd4e6",
     "https://golden.test/hostile-br.html": "38be0abb801da36a",
+    "https://golden.test/hostile-formula.html": "fb793ce30cfc1962",
     "https://golden.test/hostile-hidden.html": "a856f2d4a2827aed",
     "https://golden.test/hostile-p.html": "07c03e1ab0a9146c",
     "https://golden.test/hostile-p_div.html": "2cc0d43f24b0158d",
     "https://golden.test/hostile-script.html": "99a26b6ec4885a24",
+    "https://golden.test/hostile-tbody.html": "34f3dd8f2e6e8f80",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/manual.adoc": "3285570d37d77e57",
     "https://golden.test/notes": "00b13dd53c5f4e37",
@@ -318,10 +320,12 @@ GOLDEN_ALL = {
     "https://golden.test/empty.html": "9a8cddcb5bf73d6a",
     "https://golden.test/features.html": "ee376f09cdab7c2f",
     "https://golden.test/hostile-br.html": "ffad248abbf2f36f",
+    "https://golden.test/hostile-formula.html": "99f82dc17bb2943f",
     "https://golden.test/hostile-hidden.html": "594eb416edffdbd4",
     "https://golden.test/hostile-p.html": "de905e30ef0d9baa",
     "https://golden.test/hostile-p_div.html": "226b04c815433169",
     "https://golden.test/hostile-script.html": "5ec35e9f1764754b",
+    "https://golden.test/hostile-tbody.html": "3601f9ad0c5167c9",
     "https://golden.test/img.png": "a2367993431119ca",
     "https://golden.test/manual.adoc": "d3d7f73a2bc0a82e",
     "https://golden.test/notes": "00b13dd53c5f4e37",

@@ -18,10 +18,11 @@ from docling_plus_spark.plans import (
     run_epoch,
 )
 from docling_plus_spark.sources import (
+    WEB_PAGES_SCHEMA,
     SnapshotTable,
-    fixture_corpus_df,
     synth_pages_from_documents,
 )
+from docling_plus_spark.sources.web_pages import FIXTURE_DIR
 
 SF = "/root/testdata/sf0.001"
 GOLD = "/root/reference/docling/tests/data/groundtruth/docling_v2"
@@ -36,7 +37,13 @@ def spark():
 
 @pytest.fixture(scope="module")
 def fixture_out(spark):
-    pages = fixture_corpus_df(spark, replicate=1)
+    """The reference's HTML conversion fixtures, one row each, extracted."""
+    rows = []
+    for path in sorted(glob.glob(os.path.join(FIXTURE_DIR, "*.html"))):
+        with open(path, "rb") as fh:
+            rows.append((f"https://fixture.test/html/{os.path.basename(path)}",
+                         None, fh.read(), "", "en"))
+    pages = spark.createDataFrame(rows, WEB_PAGES_SCHEMA)
     return {r["url"]: r for r in extract_pipeline(pages, num_partitions=4).collect()}
 
 
@@ -53,7 +60,7 @@ def test_pipeline_total_over_input(spark):
 def test_golden_md_itxt_through_spark(fixture_out):
     checked = 0
     for url, row in fixture_out.items():
-        name = url.rsplit("/", 1)[-1].split("?")[0]
+        name = url.rsplit("/", 1)[-1]
         md_path = os.path.join(GOLD, f"{name}.md")
         if row["status"] != "success" or not os.path.exists(md_path):
             continue
