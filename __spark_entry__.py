@@ -22,6 +22,7 @@ from docling_plus_spark.functions import (
     doc_hash,
     fingerprint_md5,
     langid_expr,
+    md5_long,
     quality_score,
     sniff_format,
     token_count,
@@ -3078,6 +3079,12 @@ _IMG_HTML_SQL = (
     " || '<img src=\"rel_' || doc_id::varchar || '.png\" alt=\"tiny\">')"
 )
 
+# laion_pipeline keys an image on (doc id, img_idx) packed into one long:
+# id * _LAION_MAX_IMAGES + img_idx. Keeping only a page's first
+# _LAION_MAX_IMAGES images makes the packing collision-free (for ids
+# below 2^47) and bounds the images one page can contribute.
+_LAION_MAX_IMAGES = 1 << 16
+
 _MIX_WEIGHTS = {"src0": 0.30, "src1": 0.25, "src2": 0.15, "src3": 0.10}
 
 
@@ -3127,15 +3134,17 @@ def _q_laion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         F.expr(_IMG_HTML_SPARK).alias("html"),
     )
-    pairs = image_alt_pairs(d).select(
-        (F.col("id") * 8 + F.col("img_idx")).alias("media_id"),
-        F.col("id").alias("doc_id"),
-        "img_idx",
-        "image_url",
-        "alt_text",
-        F.conv(F.substring(F.md5("image_url"), 1, 6), 16, 10)
-        .cast("long")
-        .alias("seed"),
+    pairs = (
+        image_alt_pairs(d)
+        .filter(F.col("img_idx") < _LAION_MAX_IMAGES)
+        .select(
+            (F.col("id") * _LAION_MAX_IMAGES + F.col("img_idx")).alias("media_id"),
+            F.col("id").alias("doc_id"),
+            "img_idx",
+            "image_url",
+            "alt_text",
+            md5_long(F.col("image_url")).alias("seed"),
+        )
     )
     media = attach_seed_images(pairs)
     w, _h = bmp_header_dims("media")
@@ -4392,10 +4401,10 @@ def _laion_pipeline_oracle() -> str:
     return f"""
 WITH pairs AS ({pairs}),
 seeded AS (
-  SELECT id * 8 + img_idx AS media_id, id AS doc_id, img_idx,
+  SELECT id * {_LAION_MAX_IMAGES} + img_idx AS media_id, id AS doc_id, img_idx,
          image_url, alt_text,
-         ('0x' || substr(md5(image_url), 1, 6))::bigint AS seed
-  FROM pairs
+         ('0x' || substr(md5(image_url), 1, 15))::bigint AS seed
+  FROM pairs WHERE img_idx < {_LAION_MAX_IMAGES}
 ),
 surv AS (
   SELECT * FROM seeded WHERE seed % 8 + 9 >= 12

@@ -164,26 +164,9 @@ def convert_mets_gbs(
     data: bytes, name: str = "file", filename: str = "file.tar.gz"
 ) -> DLDocument:
     """tar.gz → DLDocument through the deterministic PDF path."""
-    from docling_plus_spark.pdf.assemble import assemble_document
-    from docling_plus_spark.pdf.geometry import BBox, PageElement
-    from docling_plus_spark.pdf.pipeline import _page_to_elements
+    from docling_plus_spark.pdf.pipeline import pages_to_document
 
-    pages = mets_gbs_pages(data, url=name)
-    elems: list = []
-    for page in pages:
-        for e in _page_to_elements(page):
-            elems.append(e)
-    elems.sort(key=lambda e: (e["page_no"], e["cid"]))
-    page_elems = [
-        PageElement(
-            cid=i, label=e["label"], text=e["text"] or "",
-            page_no=int(e["page_no"]), page_width=float(e["width"]),
-            page_height=float(e["height"]),
-            bbox=BBox(l=e["l"], b=e["b"], r=e["r"], t=e["t"]),
-        )
-        for i, e in enumerate(elems)
-    ]
-    doc = assemble_document(page_elems, name=name)
+    doc = pages_to_document(mets_gbs_pages(data, url=name), name=name)
     doc.filename = filename
     doc.binary_hash = binary_hash_of(data)
     doc.mimetype = "application/mets+xml"

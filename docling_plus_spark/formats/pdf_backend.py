@@ -24,17 +24,13 @@ from docling_plus_spark.html.backend import binary_hash_of
 def convert_pdf(
     data: bytes, name: str = "file", filename: str = "file.pdf"
 ) -> DLDocument:
-    from docling_plus_spark.pdf.assemble import assemble_document
-    from docling_plus_spark.pdf.geometry import BBox, PageElement
-    from docling_plus_spark.pdf.pipeline import _page_to_elements
     from docling_plus_spark.pdf.pdftext import extract_pdf_pages
+    from docling_plus_spark.pdf.pipeline import pages_to_document
 
-    pages = extract_pdf_pages(data)
-    elems: list = []
-    for page in pages:
-        # P5: whitespace-only cells never reach cluster assignment
-        # (utils/layout_postprocessor.py:591-592)
-        row = {
+    # P5: whitespace-only cells never reach cluster assignment
+    # (utils/layout_postprocessor.py:591-592)
+    pages = [
+        {
             "url": name,
             "page_no": page["page_no"],
             "width": page["width"],
@@ -45,18 +41,9 @@ def convert_pdf(
             ],
             "clusters": None,
         }
-        elems.extend(_page_to_elements(row))
-    elems.sort(key=lambda e: (e["page_no"], e["cid"]))
-    page_elems = [
-        PageElement(
-            cid=i, label=e["label"], text=e["text"] or "",
-            page_no=int(e["page_no"]), page_width=float(e["width"]),
-            page_height=float(e["height"]),
-            bbox=BBox(l=e["l"], b=e["b"], r=e["r"], t=e["t"]),
-        )
-        for i, e in enumerate(elems)
+        for page in extract_pdf_pages(data)
     ]
-    doc = assemble_document(page_elems, name=name)
+    doc = pages_to_document(pages, name=name)
     doc.filename = filename
     doc.binary_hash = binary_hash_of(data)
     doc.mimetype = "application/pdf"

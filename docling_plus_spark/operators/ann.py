@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from docling_plus_spark.operators.dedup import bucket_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -183,30 +185,30 @@ def _lsh_candidates(
     bits: int,
     id_col: str,
     vec_col: str,
-    ordered: bool,
 ) -> DataFrame:
+    """Distinct (id_a < id_b, cosine) pairs sharing any LSH table bucket."""
     # bucket keys from the raw vector (sign buckets are scale-invariant);
     # the carried payload is pre-normalized so pair scoring is one dot
     keyed = emb.select(
+        F.explode(lsh_table_keys(F.col(vec_col), tables, bits)).alias("bucket"),
         F.col(id_col).alias("id"),
         unit_vec(F.col(vec_col).cast("array<double>")).alias("emb"),
-        F.explode(lsh_table_keys(F.col(vec_col), tables, bits)).alias("bucket"),
     )
-    a = keyed.select("bucket", F.col("id").alias("id_a"), F.col("emb").alias("emb_a"))
-    b = keyed.select("bucket", F.col("id").alias("id_b"), F.col("emb").alias("emb_b"))
-    cond = F.col("id_a") < F.col("id_b") if ordered else F.col("id_a") != F.col("id_b")
-    joined = a.join(b, "bucket").filter(cond)
     # A pair collides in up to `tables` buckets. Score it *before* the
     # dedup so distinct shuffles 24-byte (id_a, id_b, cosine) rows, not
     # the two full embedding arrays — the cosine is deterministic, so
     # duplicate rows stay byte-identical and collapse. (Re-scoring a
     # duplicated pair is map-side CPU; shipping its vectors through the
     # distinct exchange was ~40x the bytes.)
-    return joined.select(
-        "id_a",
-        "id_b",
-        F.round(_dot(F.col("emb_a"), F.col("emb_b")), 4).alias("cosine"),
-    ).distinct()
+    return (
+        bucket_pairs(keyed, "bucket", ("emb",))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(_dot(F.col("emb_a"), F.col("emb_b")), 4).alias("cosine"),
+        )
+        .distinct()
+    )
 
 
 def cosine_topk_bucketed(
@@ -221,8 +223,15 @@ def cosine_topk_bucketed(
 
     Scale path: the join shuffles on the bucket key; per-bucket pair
     formation is O(Σ bucket²) — tunable via (tables, bits) against recall.
+    Each pair is scored once and ranked from both ends (``_dot`` is
+    symmetric, so the mirrored row carries the same cosine).
     """
-    scored = _lsh_candidates(emb, tables, bits, id_col, vec_col, ordered=False)
+    pairs = _lsh_candidates(emb, tables, bits, id_col, vec_col)
+    scored = pairs.unionByName(
+        pairs.select(
+            F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "cosine"
+        )
+    )
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -240,7 +249,7 @@ def embedding_near_dup(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (multi-table LSH candidates)."""
-    scored = _lsh_candidates(emb, tables, bits, id_col, vec_col, ordered=True)
+    scored = _lsh_candidates(emb, tables, bits, id_col, vec_col)
     return scored.filter(F.col("cosine") >= threshold)
 
 

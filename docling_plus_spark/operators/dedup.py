@@ -17,18 +17,19 @@ row iff a *lower-id* row is near-duplicate-similar — which is
 SQL-expressible (full connected-components needs iterative joins; at
 curation scale greedy-by-id is the standard choice).
 
-Scale notes: the LSH bucket join shuffles on (band, band_hash) — a
-uniform key unless the corpus contains mega-clusters of near-identical
-pages. :func:`minhash_candidate_pairs` guards those with a bucket-size
-count + salt-split: buckets over ``max_bucket`` rows are decomposed into
-a grid of (group_i, group_j) sub-cells so every pair is still produced
-exactly once but no single task materializes more than ~``max_bucket``²
-pairs — one 10⁶-row bucket becomes 10⁶ spread cells instead of one
-10¹²-pair task. Signature columns are k×8 bytes/row — tiny next to html,
-and they are dropped *before* the candidate distinct (the distinct
-shuffles only (id_a, id_b, est) — 20 bytes/pair, not 2k×8). The
-all-pairs verify only runs inside buckets (bounded), never across the
-corpus.
+Scale notes: every near-duplicate candidate generator here (MinHash
+bands, SimHash blocks, winnowing fingerprints) and in ``phash.py`` (dHash
+bands) and ``ann.py`` (LSH tables) is one call of :func:`bucket_pairs`,
+the bucket self-join. Its key is uniform unless the corpus contains
+mega-clusters of near-identical pages, so it guards those with a
+bucket-size count + salt-split: buckets over ``max_bucket`` rows are
+decomposed into a grid of (group_i, group_j) sub-cells so every pair is
+still produced but no single task materializes more than
+~``max_bucket``² pairs — at the default cap one 10⁶-row bucket becomes
+~3·10⁴ cells instead of one 10¹²-pair task. Payloads (signatures,
+hashes, vectors) are scored *before* each caller's candidate distinct,
+so the distinct shuffles only (id_a, id_b, score). The all-pairs verify
+only runs inside buckets (bounded), never across the corpus.
 """
 
 from __future__ import annotations
@@ -193,34 +194,42 @@ def minhash_prepare(
     )
 
 
-def minhash_candidate_pairs(
-    prepared: DataFrame, max_bucket: int = 4096, pin: bool = True
+def bucket_pairs(
+    keyed: DataFrame,
+    key: str,
+    payload: tuple[str, ...] = (),
+    max_bucket: int = 4096,
+    pin: bool = True,
+    max_count: int | None = None,
 ) -> DataFrame:
-    """Self-join on band buckets → distinct (id_a < id_b) candidate pairs
-    with estimated Jaccard = fraction of equal signature components.
-
-    The join shuffles on band_key (high-cardinality md5) — broadcast-free.
-    Two scale guards:
+    """The bucket self-join: every (id_a < id_b) pair of rows sharing a
+    ``key``, as (key, cell, id_a, <c>_a..., id_b, <c>_b...) for each
+    ``payload`` column c. ``keyed`` holds (key, id, *payload).
 
     * **Mega-bucket salt-split**: a bucket of m rows produces m² join
       output; one 10⁶-row near-identical cluster would pin a single task
       on 10¹² pairs. Buckets over ``max_bucket`` are split into
       s = ⌈m/max_bucket⌉ salted groups and the join key becomes
-      (band_key, cell) where each row joins every canonical cell
+      (key, cell) where each row joins every canonical cell
       {min(i,g), max(i,g)} containing its group: every unordered group
-      pair meets in exactly one cell, each cell holds ≤ ~2·max_bucket
-      rows per side, and the m² work spreads over ~s²/2 cells instead of
-      one task. Normal buckets (s = 1) collapse to a single cell — zero
-      replication.
-    * **Payload-free distinct**: est_jaccard is computed *before* the
-      pair distinct, so the distinct shuffles (id_a, id_b, est) only —
-      signature arrays never ride through it.
+      pair meets in exactly one cell, each cell holds two groups of
+      ~max_bucket rows, and the m² work spreads over ~s²/2 cells instead
+      of one task. Normal buckets (s = 1) collapse to a single cell —
+      zero replication.
+    * **No dedup**: a pair sharing several keys (or a same-group pair of
+      a split bucket, which meets in s cells) comes out once per
+      meeting. Callers project their score from the payloads and then
+      take one payload-free ``distinct``.
+
+    ``max_count`` drops keys held by more than that many rows before the
+    join (winnowing's document-frequency cap).
     """
-    # eager checkpoint: prepared feeds the bucket count AND the join,
-    # and its lineage is the full md5-shingle + signature pass — without
-    # the pin that pass re-executed per consumer (runtime plan showed
-    # repeated Generates). Pinned rows are (id, sig longs, band_key).
-    # pin=False keeps the logical plan inspectable (plan-shape tests).
+    # eager checkpoint: keyed feeds the bucket count AND the join, and
+    # its lineage is each caller's hash pass (shingle md5s + signatures,
+    # winnow grams, word votes, image decode, vector normalize) — without
+    # the pin that pass re-executed per consumer (runtime plans showed
+    # repeated Generates). pin=False keeps the logical plan inspectable
+    # (plan-shape tests).
     #
     # Recoverability tradeoff (deliberate): localCheckpoint truncates
     # lineage and stores blocks UNREPLICATED on executors, so on a real
@@ -235,33 +244,56 @@ def minhash_candidate_pairs(
     # composing into a larger plan) passes pin=False and may
     # persist(StorageLevel.MEMORY_AND_DISK) + count() instead.
     if pin:
-        prepared = prepared.localCheckpoint(eager=True)
-    counts = prepared.groupBy("band_key").agg(F.count("*").alias("_m"))
+        keyed = keyed.localCheckpoint(eager=True)
+    counts = keyed.groupBy(key).agg(F.count("*").alias("_m"))
+    if max_count is not None:
+        counts = counts.filter(F.col("_m") <= max_count)
     splits = (F.ceil(F.col("_m") / F.lit(max_bucket))).cast("int").alias("_s")
-    p = prepared.join(counts.select("band_key", splits), "band_key").withColumn(
+    p = keyed.join(counts.select(key, splits), key).withColumn(
         "_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int")
     )
     # each row lands in every canonical cell {min(i,g), max(i,g)} that
     # contains its group — a pair with groups (gx, gy) meets in exactly
-    # the cell (min(gx,gy), max(gx,gy)) regardless of id order; same-group
-    # pairs meet in s cells and collapse in the final distinct
+    # the cell (min(gx,gy), max(gx,gy)) regardless of id order
     cells = F.transform(
         F.sequence(F.lit(0), F.col("_s") - 1),
         lambda i: F.struct(
             F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
         ),
     )
-    # pin keyed: it feeds both sides of the self-join
-    keyed = p.select("band_key", "id", "sig", F.explode(cells).alias("cell"))
+    # pin the celled rows too: they feed both sides of the self-join
+    celled = p.select(key, "id", *payload, F.explode(cells).alias("cell"))
     if pin:
-        keyed = keyed.localCheckpoint(eager=True)
-    a = keyed.select(
-        "band_key", "cell", F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
+        celled = celled.localCheckpoint(eager=True)
+
+    def side(s: str) -> DataFrame:
+        return celled.select(
+            key,
+            "cell",
+            F.col("id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in payload],
+        )
+
+    return (
+        side("a")
+        .join(side("b"), [key, "cell"])
+        .filter(F.col("id_a") < F.col("id_b"))
     )
-    b = keyed.select(
-        "band_key", "cell", F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    joined = a.join(b, ["band_key", "cell"]).filter(F.col("id_a") < F.col("id_b"))
+
+
+def minhash_candidate_pairs(
+    prepared: DataFrame, max_bucket: int = 4096, pin: bool = True
+) -> DataFrame:
+    """Band-bucket self-join (:func:`bucket_pairs`) → distinct
+    (id_a < id_b) candidate pairs with estimated Jaccard = fraction of
+    equal signature components.
+
+    The join shuffles on band_key (high-cardinality md5) — broadcast-free.
+    est_jaccard is computed *before* the pair distinct, so the distinct
+    shuffles (id_a, id_b, est) only — signature arrays never ride
+    through it.
+    """
+    joined = bucket_pairs(prepared, "band_key", ("sig",), max_bucket, pin)
     k = F.size(F.col("sig_a"))
     est = (
         F.size(
@@ -385,10 +417,6 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     identical — full recall at the default threshold (pigeonhole), unlike
     a 2-half scheme where a 1+2 split across halves escapes both blocks.
     """
-    # eager checkpoint: the (id, simhash) table feeds both sides of the
-    # block self-join; without the pin the full word-hash pass over the
-    # corpus ran once per side (runtime plan audit)
-    sim_df = sim_df.localCheckpoint(eager=True)
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     blocks = [
@@ -400,23 +428,13 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
         for i in range(SIMHASH_BLOCKS)
     ]
-    keyed = sim_df.select(
-        "id",
-        "simhash",
-        F.explode(F.array(*blocks)).alias("block"),
-    )
-    a = keyed.select("block", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = keyed.select("block", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"))
+    keyed = sim_df.select(F.explode(F.array(*blocks)).alias("block"), "id", "simhash")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
-        )
+        bucket_pairs(keyed, "block", ("simhash",))
+        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .distinct()
     )
 
 
@@ -546,45 +564,21 @@ def winnow_candidate_pairs(
     None = keep everything (small/benchmark corpora only).
 
     Scale shape: explode fingerprints (narrow), self-join shuffling on
-    the fingerprint value, then groupBy(id_a, id_b) count. A fingerprint
-    shared by m documents yields m^2 join rows, so the same mega-bucket
-    salt-split guard as :func:`minhash_candidate_pairs` applies: buckets
-    over ``max_bucket`` are decomposed into canonical grid cells
-    {min(i,g), max(i,g)} so no single task materializes the m^2 blowup.
-    The join carries only (fingerprint, id) — no payloads.
+    the fingerprint value (:func:`bucket_pairs`, salt-split over
+    ``max_bucket``), then groupBy(id_a, id_b) count. The join carries
+    only (fingerprint, id) — no payloads.
     """
-    # eager checkpoint: fp feeds the frequency count AND the pair join,
-    # and the winnow transform chain is the single most expensive
-    # projection in the repo — without the pin it re-executed per
-    # consumer (6 Generate nodes in the runtime plan; corpus text read
-    # repeatedly). The pinned table is (id, fingerprint) longs only.
     fp = winnow_fingerprints_exploded(df, id_col, text_col, k, window)
-    if pin:
-        fp = fp.localCheckpoint(eager=True)
-    counts = fp.groupBy("fingerprint").agg(F.count("*").alias("_m"))
-    if max_doc_freq is not None:
-        counts = counts.filter(F.col("_m") <= max_doc_freq)
-    splits = (F.ceil(F.col("_m") / F.lit(max_bucket))).cast("int").alias("_s")
-    p = fp.join(counts.select("fingerprint", splits), "fingerprint").withColumn(
-        "_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int")
-    )
-    cells = F.transform(
-        F.sequence(F.lit(0), F.col("_s") - 1),
-        lambda i: F.struct(
-            F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
-        ),
-    )
-    # pin keyed too: it feeds BOTH sides of the self-join (a re-derive
-    # would double the explode); (fingerprint, cell, id) scalars only
-    keyed = p.select("fingerprint", "id", F.explode(cells).alias("cell"))
-    if pin:
-        keyed = keyed.localCheckpoint(eager=True)
-    a = keyed.select("fingerprint", "cell", F.col("id").alias("id_a"))
-    b = keyed.select("fingerprint", "cell", F.col("id").alias("id_b"))
     joined = (
-        a.join(b, ["fingerprint", "cell"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # same-group pairs meet in s cells — collapse before counting
+        bucket_pairs(
+            fp,
+            "fingerprint",
+            max_bucket=max_bucket,
+            pin=pin,
+            max_count=max_doc_freq,
+        )
+        # same-group pairs of a split bucket meet in s cells — collapse
+        # before counting
         .select("fingerprint", "id_a", "id_b")
         .distinct()
     )
@@ -818,9 +812,9 @@ def minhash_incremental_pairs(
 
     The join shuffles on band_key. The same mega-bucket consideration
     applies; here the probe side is the (small) daily batch so bucket
-    blowup is bounded by |new ∩ bucket| · |index ∩ bucket| — salting can
-    be layered exactly as in minhash_candidate_pairs if a boilerplate
-    bucket dominates an epoch.
+    blowup is bounded by |new ∩ bucket| · |index ∩ bucket| — this
+    bipartite new × index shape is not the self-join
+    :func:`bucket_pairs` salts.
     """
     # eager checkpoint: new_prepared feeds BOTH the probe side and the
     # new-new half of the build side — without the pin the md5-shingle

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docling_plus_spark.operators.dedup import bucket_pairs
 from docling_plus_spark.operators.media_codecs import bmp_pixel_array
 
 # ---------------------------------------------------------------------------
@@ -304,12 +305,10 @@ def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
     Pigeonhole banding, not all-pairs: with ``N_BANDS`` = 8 bands, any
     two hashes within Hamming distance 7 share at least one identical
     8-bit band, so candidates form ONLY inside band buckets (the
-    SimHash block trick, ``dedup.py:simhash_near``).  ``max_hamming``
+    SimHash block trick, ``dedup.py:simhash_near_pairs``), through the
+    salted bucket self-join ``dedup.bucket_pairs``.  ``max_hamming``
     must stay < N_BANDS for the guarantee; the default 6 leaves slack.
-    Exchanges carry (band, 8-char string, id) — never pixels.  At
-    10^10 images a low-texture mega-bucket (e.g. the all-ascending
-    band) needs the same salt-split guard ``winnow_candidate_pairs``
-    applies; at oracle scale the exact unguarded form is the contract.
+    Exchanges carry (band key, id, 64-char string) — never pixels.
     """
     if max_hamming >= N_BANDS:
         raise ValueError("pigeonhole guarantee needs max_hamming < N_BANDS")
@@ -323,51 +322,31 @@ def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
     decoded = (
         hashes.filter(F.col("status") == "decoded")
         .groupBy("dhash")
-        .agg(F.min("media_id").alias("media_id"))
+        .agg(F.min("media_id").alias("id"))
     )
-    bands = decoded.select(
-        "media_id",
-        "dhash",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                lambda b: F.col("dhash").substr(
-                    b * BAND_BITS + 1, F.lit(BAND_BITS)
-                ),
-            )
-        ).alias("band_idx", "band"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
+    bands = [
+        F.concat(
+            F.lit(f"{b}:"), F.col("dhash").substr(b * BAND_BITS + 1, BAND_BITS)
         )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()  # a pair may share several bands
-    )
+        for b in range(N_BANDS)
+    ]
+    keyed = decoded.select(F.explode(F.array(*bands)).alias("band"), "id", "dhash")
     # "(?!$)" splits between every char with no trailing empty element
     diff = F.size(
         F.filter(
             F.zip_with(
-                F.split(F.col("ha"), "(?!$)"),
-                F.split(F.col("hb"), "(?!$)"),
+                F.split(F.col("dhash_a"), "(?!$)"),
+                F.split(F.col("dhash_b"), "(?!$)"),
                 lambda x, y: x != y,
             ),
             lambda v: v,
         )
     )
     return (
-        cand.withColumn("hamming", diff.cast("long"))
+        bucket_pairs(keyed, "band", ("dhash",))
+        .select("id_a", "id_b", diff.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .distinct()  # a pair may share several bands
     )
 
 

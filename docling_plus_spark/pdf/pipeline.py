@@ -164,6 +164,28 @@ def _page_to_elements(row) -> list:
     return out
 
 
+def pages_to_document(pages: list, name: str):
+    """Page row dicts → one DLDocument, in process: the layout path of
+    the byte-level backends (PDF, METS-GBS), which hold every page of a
+    document in one row. Elements are numbered page-major, per-page
+    order preserved."""
+    from .assemble import assemble_document
+    from .geometry import BBox, PageElement
+
+    elems = [e for page in pages for e in _page_to_elements(page)]
+    elems.sort(key=lambda e: (e["page_no"], e["cid"]))
+    page_elems = [
+        PageElement(
+            cid=i, label=e["label"], text=e["text"] or "",
+            page_no=int(e["page_no"]), page_width=float(e["width"]),
+            page_height=float(e["height"]),
+            bbox=BBox(l=e["l"], b=e["b"], r=e["r"], t=e["t"]),
+        )
+        for i, e in enumerate(elems)
+    ]
+    return assemble_document(page_elems, name=name)
+
+
 PAGE_FAILURE_LABEL = "_page_failure"
 
 

@@ -17,6 +17,7 @@ from docling_plus_spark.operators.ann import (
     embedding_near_dup,
 )
 from docling_plus_spark.operators.dedup import (
+    bucket_pairs,
     jaccard_on_pairs,
     minhash_candidate_pairs,
     minhash_dedup_keep,
@@ -198,34 +199,68 @@ def test_frame_sample_plan(spark):
     assert len({r["media_id"] for r in out}) == 5
 
 
-def test_megabucket_salt_split_preserves_pairs_and_bounds_cells(spark):
-    """1,000 identical docs land in one LSH bucket per band; the salt-split
-    guard must (a) still produce every C(1000,2) pair exactly once and
-    (b) bound each (band_key, gi, gj) join cell to ~max_bucket rows/side."""
-    n, cap = 1000, 100
+def _identical_docs(spark, n):
+    """n identical docs: every band's LSH bucket holds all n rows."""
     df = spark.range(n).select(
         F.col("id").cast("long").alias("doc_id"),
         F.lit("identical content repeated across the corpus").alias("text"),
     )
-    prepared = minhash_prepare(df, "doc_id", "text", k=16, bands=4).cache()
-    pairs = minhash_candidate_pairs(prepared, max_bucket=cap)
+    prepared = minhash_prepare(df, "doc_id", "text", k=16, bands=4)
+    return prepared.select("band_key", "id", "sig"), "band_key", ("sig",)
+
+
+def _dhash_shared_band0(spark, n):
+    """n distinct 64-bit dHashes sharing band 0 (a low-texture image
+    mega-bucket), keyed the way dhash_near_pairs keys its bands."""
+    hashes = [
+        "10110010" + format(i * 0x9E3779B97F4A7C15 % (1 << 56), "056b")
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(list(enumerate(hashes)), "id long, dhash string")
+    bands = [
+        F.concat(F.lit(f"{b}:"), F.col("dhash").substr(b * 8 + 1, 8))
+        for b in range(8)
+    ]
+    keyed = df.select(F.explode(F.array(*bands)).alias("band"), "id", "dhash")
+    return keyed, "band", ("dhash",)
+
+
+@pytest.mark.parametrize(
+    "shape", [_identical_docs, _dhash_shared_band0], ids=["minhash", "dhash"]
+)
+def test_megabucket_salt_split_preserves_pairs_and_bounds_cells(spark, shape):
+    """A 1,000-row bucket under cap 100: the salt-split guard must (a)
+    produce the same pair set as the unsplit join — every C(1000,2) pair,
+    since the whole bucket is one key — and (b) bound each salted group
+    of a (key, cell) join cell to ~max_bucket rows."""
+    n, cap = 1000, 100
+    keyed, key, payload = shape(spark, n)
+    keyed = keyed.cache()
+    guarded = bucket_pairs(keyed, key, payload, max_bucket=cap).cache()
+    wide = bucket_pairs(keyed, key, payload, max_bucket=1 << 30)
+    pairs = guarded.select("id_a", "id_b").distinct()
+    wide_pairs = wide.select("id_a", "id_b").distinct()
     assert pairs.count() == n * (n - 1) // 2
-    assert pairs.select("id_a", "id_b").distinct().count() == n * (n - 1) // 2
-    # bound check: reconstruct the salted cell assignment of side a
-    counts = prepared.groupBy("band_key").agg(F.count("*").alias("_m"))
-    p = prepared.join(
-        counts.select(
-            "band_key", F.ceil(F.col("_m") / F.lit(cap)).cast("int").alias("_s")
-        ),
-        "band_key",
-    ).withColumn("_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int"))
-    per_cell = (
-        p.groupBy("band_key", "_g").agg(F.count("*").alias("rows")).agg(
-            F.max("rows").alias("mx")
-        )
-    ).collect()[0]["mx"]
+    assert pairs.exceptAll(wide_pairs).count() == 0
+    assert wide_pairs.exceptAll(pairs).count() == 0
+    # bound check, read from the cells the helper joined: a diagonal
+    # cell (g, g) holds one salted group, any other cell two groups
+    rows = (
+        guarded.select(key, "cell", F.explode(F.array("id_a", "id_b")).alias("id"))
+        .distinct()
+        .groupBy(key, "cell")
+        .agg(F.count("*").alias("rows"))
+    )
+    diag = rows.filter(F.col("cell.u") == F.col("cell.v"))
+    group_max = diag.agg(F.max("rows")).collect()[0][0]
+    cell_max = rows.agg(F.max("rows")).collect()[0][0]
     # hash split is uneven but must stay within ~2x of the cap
-    assert per_cell <= 2 * cap
+    assert group_max <= 2 * cap
+    assert cell_max <= 2 * group_max
+    if key == "band_key":
+        assert minhash_candidate_pairs(keyed, max_bucket=cap).count() == (
+            n * (n - 1) // 2
+        )
 
 
 def test_megabucket_guard_noop_on_small_buckets(corpus):

@@ -1,5 +1,7 @@
 """Perceptual-hash image near-dup (operators/phash.py)."""
 
+import hashlib
+
 import duckdb
 import pytest
 
@@ -133,10 +135,18 @@ def test_laion_pipeline_composition(spark):
         groups.setdefault(r.dhash, []).append(r.is_dup)
     for flags in groups.values():
         assert flags.count(False) == 1
-    # the width gate really gates: the fixed //cdn2.test/pr.png image's
-    # seed fails min-width (seed % 8 + 9 < 12) so it never survives,
-    # while per-doc unique images do
-    assert not any(r.image_url.endswith("pr.png") for r in out)
+    # the width gate really gates: an image is seeded by the first 15
+    # hex digits of md5(image_url) and survives iff its width
+    # (seed % 8 + 9) is at least 12; harvested images below that never
+    # survive, while per-doc unique images do
+    def width(url: str) -> int:
+        return int(hashlib.md5(url.encode()).hexdigest()[:15], 16) % 8 + 9
+
+    kept = {r.image_url for r in out}
+    assert all(width(u) >= 12 for u in kept)
+    harvested = {r.image_url for r in e.queries()["image_alt_pairs"](spark, SF).collect()}
+    gated = {u for u in harvested if width(u) < 12}
+    assert gated and not gated & kept
     assert sum(1 for r in out if "/abs_" in r.image_url) > 100
 
 

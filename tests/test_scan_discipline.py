@@ -49,6 +49,9 @@ BOUNDS = [
     ("ivfpq_topk", 0, 2),            # base + subvector split pinned
     ("ann_recall", 0, 0),            # brute truth + ivf internals pinned
     ("ann_topk_ivf", 0, 0),          # base + ranked assignment pinned
+    ("image_dhash_near", 0, 0),      # bucket_pairs pins the decoded bands
+    ("ann_topk_bucketed", 0, 0),     # bucket_pairs pins the LSH-keyed vectors
+    ("embedding_near_dup", 0, 0),
 ]
 
 
