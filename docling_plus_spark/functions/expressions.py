@@ -57,55 +57,20 @@ def doc_hash(binary_col: Column) -> Column:
     return F.lower(F.sha2(binary_col, 256))
 
 
-def _lenient_head(binary_col: Column, n: int = 1024) -> Column:
-    """UTF-8 decode of the first ``n`` bytes, never throwing.
-
-    Spark 4 ANSI `decode` raises on malformed input; web bytes are dirty.
-    ``try_cast(binary as string)`` yields NULL on malformed sequences, so
-    try four prefix lengths (a UTF-8 code point is ≤4 bytes — one of them
-    cannot end mid-character); genuinely malformed content → NULL, which
-    callers treat as "sniff inconclusive".
-    """
-    attempts = [
-        F.substring(binary_col, 1, n - i).try_cast("string") for i in range(4)
-    ]
-    return F.coalesce(*attempts)
+# the reference's extension map (datamodel/document.py:586-610): the
+# url's lower-cased extension → format; anything else is 'text'
+EXTENSION_FORMATS: dict[str, str] = {
+    "html": "html", "htm": "html", "xhtml": "html", "xhtm": "html",
+    "pdf": "pdf", "xml": "xml", "json": "json", "md": "md", "markdown": "md",
+    "csv": "csv", "vtt": "vtt", "adoc": "asciidoc", "asciidoc": "asciidoc",
+    "docx": "docx", "pptx": "pptx", "xlsx": "xlsx", "xlsm": "xlsx",
+    "nxml": "xml_jats", "tar.gz": "mets_gbs", "wav": "audio", "mp3": "audio",
+    "flac": "audio", "ogg": "audio", "m4a": "audio",
+}
 
 
-def sniff_format(binary_col: Column, url_col: Column | None = None) -> Column:
-    """Content-sniff format detection over the first 1 KiB (S2).
-
-    Mirrors `_detect_html_xhtml` + magic-byte dispatch
-    (datamodel/document.py:488-548, :612-649): strip XML comments, lstrip;
-    XML declaration → html if 'xhtml' appears early else xml;
-    optional leading <script> then DOCTYPE/`<html|<head|<body` → html;
-    `%PDF` magic → pdf; JSON object sniff → json. Inconclusive content
-    falls back to the url extension (the reference's extension map,
-    document.py:586-610) when ``url_col`` is given, else 'text'.
-    """
-    head = F.lower(_lenient_head(binary_col, 1024))
-    # remove XML comments then lstrip (reference: document.py:626-628)
-    head = F.ltrim(F.regexp_replace(head, "(?s)<!--(.*?)-->", ""))
-    by_ext = F.lit("text")
-    if url_col is not None:
-        path = F.regexp_extract(url_col, "^[^?#]*", 0)
-        by_ext = (
-            F.when(path.rlike("(?i)\\.x?html?$"), F.lit("html"))
-            .when(path.rlike("(?i)\\.pdf$"), F.lit("pdf"))
-            .when(path.rlike("(?i)\\.xml$"), F.lit("xml"))
-            .when(path.rlike("(?i)\\.json$"), F.lit("json"))
-            .when(path.rlike("(?i)\\.(md|markdown)$"), F.lit("md"))
-            .when(path.rlike("(?i)\\.csv$"), F.lit("csv"))
-            .when(path.rlike("(?i)\\.vtt$"), F.lit("vtt"))
-            .when(path.rlike("(?i)\\.(adoc|asciidoc)$"), F.lit("asciidoc"))
-            .when(path.rlike("(?i)\\.docx$"), F.lit("docx"))
-            .when(path.rlike("(?i)\\.pptx$"), F.lit("pptx"))
-            .when(path.rlike("(?i)\\.(xlsx|xlsm)$"), F.lit("xlsx"))
-            .when(path.rlike("(?i)\\.nxml$"), F.lit("xml_jats"))
-            .when(path.rlike("(?i)\\.tar\\.gz$"), F.lit("mets_gbs"))
-            .when(path.rlike("(?i)\\.(wav|mp3|flac|ogg|m4a)$"), F.lit("audio"))
-            .otherwise(F.lit("text"))
-        )
+def _sniff_decision(head: Column, magic: Column, by_ext: Column) -> Column:
+    """:func:`sniff_format`'s branches over the prepared head and magic."""
     # XML DOCTYPE disambiguation (reference: document.py:550-584) — the
     # head is lowercased, so the doctype tokens are matched lowercase
     doctype = F.regexp_extract(head, "<!doctype [^>]+>", 0)
@@ -118,12 +83,10 @@ def sniff_format(binary_col: Column, url_col: Column | None = None) -> Column:
     jats_doctype = doctype.contains("jats-journalpublishing") | doctype.contains(
         "jats-archive"
     )
-    # image magic on the RAW bytes, before any decode (image bytes are
-    # not valid UTF-8, so the string head is NULL for them) — reference
-    # InputFormat.IMAGE detection (datamodel/base_models.py image mime
-    # map). BMP's weak 'BM' magic additionally requires a plausible DIB
-    # header size byte so text starting with "BM" is not misrouted.
-    magic = F.hex(F.substring(binary_col, 1, 16))
+    # image magic on the raw bytes — reference InputFormat.IMAGE
+    # detection (datamodel/base_models.py image mime map). BMP's weak
+    # 'BM' magic additionally requires a plausible DIB header size byte
+    # so text starting with "BM" is not misrouted.
     is_image = (
         magic.startswith("89504E47")                       # PNG
         | magic.startswith("FFD8FF")                       # JPEG
@@ -170,6 +133,39 @@ def sniff_format(binary_col: Column, url_col: Column | None = None) -> Column:
         # the vtt backend re-validates the signature case-sensitively)
         .when(head.rlike("^webvtt([ \\t\\n]|$)"), F.lit("vtt"))
         .otherwise(by_ext)
+    )
+
+
+def sniff_format(binary_col: Column, url_col: Column) -> Column:
+    """Content-sniff format detection over the first 1 KiB (S2).
+
+    Mirrors `_detect_html_xhtml` + magic-byte dispatch
+    (datamodel/document.py:488-548, :612-649): strip XML comments, lstrip;
+    XML declaration → html if 'xhtml' appears early else xml;
+    optional leading <script> then DOCTYPE/`<html|<head|<body` → html;
+    `%PDF` magic → pdf; JSON object sniff → json. Inconclusive content
+    falls back to the url extension (the reference's extension map,
+    document.py:586-610). The head and the 16-byte magic are let-bound
+    as a lambda variable, so each is computed once per row, not once per
+    branch that reads it.
+    """
+    # the cast never fails (malformed UTF-8 decodes to U+FFFD); remove
+    # XML comments, then lstrip as str.lstrip() does — Spark's ltrim
+    # strips only U+0020 — and a leading BOM (document.py:626-628)
+    head = F.lower(F.substring(binary_col, 1, 1024).cast("string"))
+    head = F.regexp_replace(head, "(?s)<!--(.*?)-->", "")
+    head = F.regexp_replace(head, "^[\\s\\x{feff}]+", "")
+    magic = F.hex(F.substring(binary_col, 1, 16))
+    # the path's extension (before any ?query or #fragment)
+    ext = F.regexp_extract(
+        F.lower(url_col), "^[^?#]*?\\.(tar\\.gz|[^./?#]+)(?:[?#]|$)", 1
+    )
+    ext_map = F.create_map(*[F.lit(x) for kv in EXTENSION_FORMATS.items() for x in kv])
+    by_ext = F.coalesce(ext_map[ext], F.lit("text"))
+    bound = F.array(F.struct(head.alias("head"), magic.alias("magic")))
+    return F.element_at(
+        F.transform(bound, lambda r: _sniff_decision(r["head"], r["magic"], by_ext)),
+        1,
     )
 
 

@@ -34,7 +34,7 @@ only runs inside buckets (bounded), never across the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from docling_plus_spark.functions.expressions import md5_long
@@ -224,12 +224,29 @@ def bucket_pairs(
     ``max_count`` drops keys held by more than that many rows before the
     join (winnowing's document-frequency cap).
     """
-    # eager checkpoint: keyed feeds the bucket count AND the join, and
-    # its lineage is each caller's hash pass (shingle md5s + signatures,
-    # winnow grams, word votes, image decode, vector normalize) — without
-    # the pin that pass re-executed per consumer (runtime plans showed
-    # repeated Generates). pin=False keeps the logical plan inspectable
-    # (plan-shape tests).
+    # the per-key row count is a window over keyed, so keyed (each
+    # caller's hash pass: shingle md5s + signatures, winnow grams, word
+    # votes, image decode, vector normalize) has one consumer, unpinned
+    p = keyed.withColumn("_m", F.count("*").over(Window.partitionBy(key)))
+    if max_count is not None:
+        p = p.filter(F.col("_m") <= max_count)
+    p = p.withColumn(
+        "_s", F.ceil(F.col("_m") / F.lit(max_bucket)).cast("int")
+    ).withColumn("_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int"))
+    # each row lands in every canonical cell {min(i,g), max(i,g)} that
+    # contains its group — a pair with groups (gx, gy) meets in exactly
+    # the cell (min(gx,gy), max(gx,gy)) regardless of id order
+    cells = F.transform(
+        F.sequence(F.lit(0), F.col("_s") - 1),
+        lambda i: F.struct(
+            F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
+        ),
+    )
+    celled = p.select(key, "id", *payload, F.explode(cells).alias("cell"))
+    # eager checkpoint: the celled rows feed both sides of the self-join;
+    # without the pin the hash pass re-executed per side (runtime plans
+    # showed repeated Generates). pin=False keeps the logical plan
+    # inspectable (plan-shape tests).
     #
     # Recoverability tradeoff (deliberate): localCheckpoint truncates
     # lineage and stores blocks UNREPLICATED on executors, so on a real
@@ -243,26 +260,6 @@ def bucket_pairs(
     # needs anyway. A caller who wants lazy, recomputable lineage (e.g.
     # composing into a larger plan) passes pin=False and may
     # persist(StorageLevel.MEMORY_AND_DISK) + count() instead.
-    if pin:
-        keyed = keyed.localCheckpoint(eager=True)
-    counts = keyed.groupBy(key).agg(F.count("*").alias("_m"))
-    if max_count is not None:
-        counts = counts.filter(F.col("_m") <= max_count)
-    splits = (F.ceil(F.col("_m") / F.lit(max_bucket))).cast("int").alias("_s")
-    p = keyed.join(counts.select(key, splits), key).withColumn(
-        "_g", F.pmod(F.xxhash64(F.col("id")), F.col("_s")).cast("int")
-    )
-    # each row lands in every canonical cell {min(i,g), max(i,g)} that
-    # contains its group — a pair with groups (gx, gy) meets in exactly
-    # the cell (min(gx,gy), max(gx,gy)) regardless of id order
-    cells = F.transform(
-        F.sequence(F.lit(0), F.col("_s") - 1),
-        lambda i: F.struct(
-            F.least(i, F.col("_g")).alias("u"), F.greatest(i, F.col("_g")).alias("v")
-        ),
-    )
-    # pin the celled rows too: they feed both sides of the self-join
-    celled = p.select(key, "id", *payload, F.explode(cells).alias("cell"))
     if pin:
         celled = celled.localCheckpoint(eager=True)
 

@@ -67,7 +67,7 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     """S2+S3+S4: derive format/doc_hash/nbytes, gate validity.
 
     All pure column expressions — Catalyst pushes the size gate to the
-    scan and whole-stage-codegens the sniff regexes.
+    scan; the sniff reads each row's head and magic once (let-bound).
     """
     return (
         pages.withColumn("nbytes", F.length("html").cast("long"))

@@ -524,27 +524,60 @@ def test_registry_dispatch():
 
 def test_sniff_doctype_disambiguation():
     # S2 content disambiguation (reference document.py:550-584): JATS and
-    # USPTO doctypes inside XML, and the plain-text PATN record form.
+    # USPTO doctypes inside XML, and the plain-text PATN record form; then
+    # the url extension fallback for inconclusive content (document.py:
+    # 586-610) and str.lstrip()-style leading whitespace / BOM.
     from pyspark.sql import functions as F
 
-    from docling_plus_spark.functions.expressions import sniff_format
+    from docling_plus_spark.functions.expressions import (
+        EXTENSION_FORMATS,
+        sniff_format,
+    )
     from docling_plus_spark.plans import build_session
 
     spark = build_session("local[2]", shuffle_partitions=2)
     spark.sparkContext.setLogLevel("ERROR")
-    rows = [
+    content = [
         ("jats", b'<?xml version="1.0"?><!DOCTYPE article PUBLIC "-//NLM//DTD'
-                 b' JATS (Z39.96)" "JATS-journalpublishing1.dtd"><article/>'),
+                 b' JATS (Z39.96)" "JATS-journalpublishing1.dtd"><article/>',
+         "xml_jats"),
         ("uspto", b'<?xml version="1.0"?><!DOCTYPE us-patent-grant SYSTEM'
-                  b' "us-patent-grant-v45-2014-04-03.dtd"><us-patent-grant/>'),
-        ("patn", b"PATN\r\nWKU 123\r\n"),
-        ("xml", b'<?xml version="1.0"?><root>plain</root>'),
-        ("vtt", b"WEBVTT\n\n00:01.000 --> 00:02.000\nhi\n"),
-        ("adoc", b"= Title\n\nbody\n"),
+                  b' "us-patent-grant-v45-2014-04-03.dtd"><us-patent-grant/>',
+         "xml_uspto"),
+        ("patn", b"PATN\r\nWKU 123\r\n", "xml_uspto"),
+        ("xml", b'<?xml version="1.0"?><root>plain</root>', "xml"),
+        ("vtt", b"WEBVTT\n\n00:01.000 --> 00:02.000\nhi\n", "vtt"),
+        # Spark's ltrim strips only U+0020; str.lstrip() strips all of these
+        ("crlf", b"\r\n<!DOCTYPE html><html><p>x</p></html>", "html"),
+        ("tab", b"\t<html><p>x</p></html>", "html"),
+        ("bom", "\ufeff<html><p>x</p></html>".encode(), "html"),
+        ("bom_ws", "\ufeff \n<!-- c -->\n{\"a\": 1}".encode(), "json"),
+    ]
+    rows = [(n, b, f"https://t.test/{n}", want) for n, b, want in content]
+    by_ext = [
+        ("html", "html"), ("htm", "html"), ("xhtml", "html"), ("xhtm", "html"),
+        ("pdf", "pdf"), ("xml", "xml"), ("json", "json"), ("md", "md"),
+        ("markdown", "md"), ("csv", "csv"), ("vtt", "vtt"),
+        ("adoc", "asciidoc"), ("asciidoc", "asciidoc"), ("docx", "docx"),
+        ("pptx", "pptx"), ("xlsx", "xlsx"), ("xlsm", "xlsx"),
+        ("nxml", "xml_jats"), ("tar.gz", "mets_gbs"), ("wav", "audio"),
+        ("mp3", "audio"), ("flac", "audio"), ("ogg", "audio"), ("m4a", "audio"),
+    ]
+    assert {e for e, _ in by_ext} == set(EXTENSION_FORMATS)
+    rows += [(e, b"= plain\n", f"https://t.test/a.{e}", f) for e, f in by_ext]
+    rows += [
+        (n, b"= plain\n", f"https://t.test/{u}", want)
+        for n, u, want in [
+            ("upper", "a.XLSM", "xlsx"),
+            ("query", "a.html?x=1.pdf", "html"),
+            ("fragment", "a.pdf#x.html", "pdf"),
+            ("tar_dir", "a/tar.gz", "text"),
+            ("tar_upper", "a.TAR.GZ", "mets_gbs"),
+            ("no_ext", "about", "text"),
+        ]
     ]
     df = spark.createDataFrame(
-        [(n, bytearray(b), f"https://t.test/{n}.{'adoc' if n=='adoc' else 'bin'}")
-         for n, b in rows],
+        [(n, bytearray(b), u) for n, b, u, _ in rows],
         "name string, html binary, url string",
     )
     got = {
@@ -553,10 +586,7 @@ def test_sniff_doctype_disambiguation():
             "name", sniff_format(F.col("html"), F.col("url")).alias("fmt")
         ).collect()
     }
-    assert got == {
-        "jats": "xml_jats", "uspto": "xml_uspto", "patn": "xml_uspto",
-        "xml": "xml", "vtt": "vtt", "adoc": "asciidoc",
-    }
+    assert got == {n: want for n, _, _, want in rows}
 
 
 def test_mixed_format_spark_dispatch():

@@ -64,6 +64,23 @@ def test_prepare_pushes_size_gate_into_scan_filter(spark):
     assert "Exchange" not in plan
 
 
+def test_prepare_sniffs_head_and_magic_once(spark):
+    """The format sniff reads each row's 1 KiB head and 16-byte magic
+    once: the decision branches share one let-bound copy instead of each
+    rebuilding it from the bytes."""
+    import re
+
+    from docling_plus_spark.plans.pipeline import prepare_pages
+
+    df = spark.createDataFrame(
+        [("u", bytearray(b"<p>x</p>"))], "url string, html binary"
+    )
+    plan = prepare_pages(df)._jdf.queryExecution().optimizedPlan().toString()
+    for n in (1024, 16):
+        found = re.findall(rf"substring\(html#\d+, 1, {n}\)", plan)
+        assert len(found) == 1, (n, len(found), plan[:1500])
+
+
 def test_minhash_candidates_no_cartesian(spark):
     from docling_plus_spark.operators.dedup import (
         minhash_candidate_pairs,

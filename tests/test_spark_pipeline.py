@@ -283,9 +283,9 @@ def test_audio_rows_classified_needs_asr(spark):
 
 
 def test_image_rows_classified_needs_ocr(spark):
-    """S8: raster content is detected by raw-byte magic (the UTF-8 head
-    is NULL for it) and classified needs_ocr — present in the output,
-    never silently dropped and never 'unsupported_format'."""
+    """S8: raster content is detected by raw-byte magic and classified
+    needs_ocr — present in the output, never silently dropped and never
+    'unsupported_format'."""
     from docling_plus_spark.functions.expressions import sniff_format
     from docling_plus_spark.operators.media_codecs import make_bmp
     from docling_plus_spark.plans import extract_pipeline
