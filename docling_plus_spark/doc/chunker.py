@@ -24,7 +24,7 @@ state, so the Spark stage (:func:`chunk_documents_stage`) is a narrow
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Iterator, Optional
+from typing import Iterator
 
 from docling_plus_spark.doc.document import (
     DLDocument,
@@ -55,9 +55,7 @@ def _table_text(doc: DLDocument, item: TableItem) -> str:
     )
 
 
-def hierarchical_chunks(
-    doc: DLDocument, count_tokens: Callable[[str], int] = whitespace_tokens
-) -> list[Chunk]:
+def hierarchical_chunks(doc: DLDocument) -> list[Chunk]:
     """One chunk per content item, heading-path metadata, merged lists."""
     chunks: list[Chunk] = []
     headings: dict[int, str] = {}  # level -> text
@@ -73,7 +71,7 @@ def hierarchical_chunks(
             Chunk(
                 text=text,
                 headings=active_headings(),
-                n_tokens=count_tokens(text),
+                n_tokens=whitespace_tokens(text),
                 item_refs=list(refs),
             )
         )
@@ -112,17 +110,13 @@ def hierarchical_chunks(
     return chunks
 
 
-def hybrid_chunks(
-    doc: DLDocument,
-    max_tokens: int = 512,
-    count_tokens: Callable[[str], int] = whitespace_tokens,
-) -> list[Chunk]:
+def hybrid_chunks(doc: DLDocument, max_tokens: int = 512) -> list[Chunk]:
     """Split-oversized-then-merge-peers refinement of
     :func:`hierarchical_chunks` (the HybridChunker contract: every
     output chunk fits ``max_tokens``; adjacent chunks under the same
     heading path are packed greedily)."""
     split: list[Chunk] = []
-    for ch in hierarchical_chunks(doc, count_tokens):
+    for ch in hierarchical_chunks(doc):
         if ch.n_tokens <= max_tokens:
             split.append(ch)
             continue
@@ -130,7 +124,7 @@ def hybrid_chunks(
         for i in range(0, len(words), max_tokens):
             piece = " ".join(words[i : i + max_tokens])
             split.append(
-                Chunk(piece, ch.headings, count_tokens(piece), ch.item_refs)
+                Chunk(piece, ch.headings, whitespace_tokens(piece), ch.item_refs)
             )
     merged: list[Chunk] = []
     for ch in split:
@@ -158,9 +152,7 @@ CHUNKS_SCHEMA = (
 )
 
 
-def chunk_documents_stage(
-    extracted, max_tokens: int = 512, json_col: str = "doc_json"
-):
+def chunk_documents_stage(extracted, max_tokens: int = 512):
     """(url, doc_json) → exploded chunk rows; narrow, zero shuffle."""
     import json as _json
 
@@ -170,7 +162,7 @@ def chunk_documents_stage(
         cols = ("url", "chunk_idx", "headings", "text", "n_tokens")
         for pdf in batches:
             rows = {c: [] for c in cols}
-            for url, doc_json in zip(pdf["url"], pdf[json_col]):
+            for url, doc_json in zip(pdf["url"], pdf["doc_json"]):
                 if not doc_json:
                     continue
                 try:
@@ -186,4 +178,4 @@ def chunk_documents_stage(
                     rows["n_tokens"].append(ch.n_tokens)
             yield pd.DataFrame(rows, columns=cols)
 
-    return extracted.select("url", json_col).mapInPandas(fn, CHUNKS_SCHEMA)
+    return extracted.select("url", "doc_json").mapInPandas(fn, CHUNKS_SCHEMA)

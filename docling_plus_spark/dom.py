@@ -599,25 +599,25 @@ class _Builder:
         return gtpos
 
 
-def parse_html(data: Union[bytes, str], encoding: str = "utf-8") -> Tag:
+def parse_html(data: Union[bytes, str]) -> Tag:
     """Parse HTML bytes/str into a DOM tree; root is a ``[document]`` tag."""
     if isinstance(data, bytes):
-        text = _decode_html_bytes(data, encoding)
+        text = _decode_html_bytes(data)
     else:
         text = data
     return _Builder(text).run()
 
 
-def _decode_html_bytes(data: bytes, default_encoding: str = "utf-8") -> str:
-    """Decode HTML bytes: BOM first, then a <meta charset> probe, then the
-    default with replacement (never raises — malformed rows become
+def _decode_html_bytes(data: bytes) -> str:
+    """Decode HTML bytes: BOM first, then a <meta charset> probe, then
+    UTF-8 with replacement (never raises — malformed rows become
     replacement chars and are flagged downstream, not job failures)."""
     if data.startswith(b"\xef\xbb\xbf"):
         return data[3:].decode("utf-8", errors="replace")
     if data.startswith((b"\xff\xfe", b"\xfe\xff")):
         return data.decode("utf-16", errors="replace")
     head = data[:2048].lower()
-    enc = default_encoding
+    enc = "utf-8"
     marker = b"charset="
     pos = head.find(marker)
     if pos != -1:
@@ -639,4 +639,4 @@ def _decode_html_bytes(data: bytes, default_encoding: str = "utf-8") -> str:
     try:
         return data.decode(enc, errors="replace")
     except LookupError:
-        return data.decode(default_encoding, errors="replace")
+        return data.decode("utf-8", errors="replace")

@@ -27,7 +27,6 @@ _LIST_DETECT_RE = re.compile(r"^(\s)*(\*|-|\d+\.|\w+\.) ")
 _LIST_PARSE_RE = re.compile(r"^(\s*)(\*|-|\d+\.)\s+(.*)")
 _TABLE_LINE_RE = re.compile(r"^\|.*\|")
 _PICTURE_RE = re.compile(r"^image::")
-_PICTURE_PARSE_RE = re.compile(r"^image::(.+)\[(.*)\]$")
 _CAPTION_RE = re.compile(r"^\.(.+)")
 
 _MAX_LEVELS = 10

@@ -37,19 +37,12 @@ from docling_plus_spark.html.backend import binary_hash_of
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _A = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
 _R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
-_MATH = "{http://schemas.openxmlformats.org/officeDocument/2006/math}"
 _WPS = "{http://schemas.microsoft.com/office/word/2010/wordprocessingShape}"
-_REL = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _VAL = _W + "val"
 
 _NUMBERED_FORMATS = {
     "decimal", "lowerRoman", "upperRoman", "lowerLetter", "upperLetter",
     "decimalZero",
-}
-
-_PLAIN_STYLES = {
-    "Paragraph", "Normal", "Subtitle", "Author", "DefaultText",
-    "ListParagraph", "ListBullet", "Quote",
 }
 
 

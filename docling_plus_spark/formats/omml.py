@@ -167,10 +167,10 @@ class OmmlConverter:
             if t is not None:
                 yield stag, t
 
-    def _children_str(self, elm, include=None) -> str:
+    def _children_str(self, elm) -> str:
         return "".join(
             t if isinstance(t, str) else (t.text if isinstance(t, _Pr) else str(t))
-            for _stag, t in self._children(elm, include)
+            for _stag, t in self._children(elm)
         )
 
     def _children_dict(self, elm, include=None) -> dict:

@@ -92,10 +92,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     return 0
 
 
-def main(argv: Optional[list] = None) -> int:
+def main() -> int:
     from docling_plus_spark.plans import build_session
 
-    args = parse_args(argv)
+    args = parse_args()
     spark = build_session()
     try:
         return run(spark, args)

@@ -51,20 +51,22 @@ def unit_vec(v: Column) -> Column:
     )
 
 
-def cosine_topk_bruteforce(
-    emb: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+#: DuckDB twin of ``unit_vec(embedding)``
+UNIT_EMBEDDING_SQL = (
+    "list_transform(embedding::double[], x -> x / "
+    "sqrt(list_dot_product(embedding::double[], embedding::double[])))"
+)
+
+
+def cosine_topk_bruteforce(emb: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbours per vector (self excluded)."""
     a = emb.select(
-        F.col(id_col).alias("id_a"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("emb_a"),
+        F.col("vec_id").alias("id_a"),
+        unit_vec(F.col("embedding").cast("array<double>")).alias("emb_a"),
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("emb_b"),
+        F.col("vec_id").alias("id_b"),
+        unit_vec(F.col("embedding").cast("array<double>")).alias("emb_b"),
     )
     pairs = a.crossJoin(b).filter(F.col("id_a") != F.col("id_b"))
     sim = F.round(_dot(F.col("emb_a"), F.col("emb_b")), 4).alias("cosine")
@@ -122,7 +124,6 @@ def scale_params(
     dim: int = 64,
     tables: int = 8,
     target_bucket: int = 64,
-    target_cluster: int = 256,
 ) -> dict:
     """Derive the ANN / SemDeDup parameter defaults from corpus size so
     per-bucket / per-list / per-cluster populations stay ~constant as the
@@ -154,8 +155,8 @@ def scale_params(
       scan Θ(n) again; candidates per query ≈ nprobe · n/n_lists = Θ(√n).
       Tune nprobe against :func:`ann_recall` on a sampled slice, not
       against corpus size.
-    * ``k_clusters`` — SemDeDup k-means k: ceil(n / target_cluster),
-      floor 8 — within-cluster pair work n·target instead of n²/k.
+    * ``k_clusters`` — SemDeDup k-means k: ceil(n / 256), floor 8 —
+      within-cluster pair work n·256 instead of n²/k.
 
     Pure arithmetic (no Spark action): callers that already know n pay
     nothing; callers that don't, pay one ``count()`` scalar action.
@@ -175,24 +176,18 @@ def scale_params(
         "tables": tables,
         "n_lists": n_lists,
         "nprobe": 4,
-        "k_clusters": max(8, math.ceil(n / target_cluster)),
+        "k_clusters": max(8, math.ceil(n / 256)),
     }
 
 
-def _lsh_candidates(
-    emb: DataFrame,
-    tables: int,
-    bits: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _lsh_candidates(emb: DataFrame, tables: int, bits: int) -> DataFrame:
     """Distinct (id_a < id_b, cosine) pairs sharing any LSH table bucket."""
     # bucket keys from the raw vector (sign buckets are scale-invariant);
     # the carried payload is pre-normalized so pair scoring is one dot
     keyed = emb.select(
-        F.explode(lsh_table_keys(F.col(vec_col), tables, bits)).alias("bucket"),
-        F.col(id_col).alias("id"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("emb"),
+        F.explode(lsh_table_keys(F.col("embedding"), tables, bits)).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        unit_vec(F.col("embedding").cast("array<double>")).alias("emb"),
     )
     # A pair collides in up to `tables` buckets. Score it *before* the
     # dedup so distinct shuffles 24-byte (id_a, id_b, cosine) rows, not
@@ -216,8 +211,6 @@ def cosine_topk_bucketed(
     k: int = 5,
     tables: int = 8,
     bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: neighbours searched within shared LSH buckets.
 
@@ -226,7 +219,7 @@ def cosine_topk_bucketed(
     Each pair is scored once and ranked from both ends (``_dot`` is
     symmetric, so the mirrored row carries the same cosine).
     """
-    pairs = _lsh_candidates(emb, tables, bits, id_col, vec_col)
+    pairs = _lsh_candidates(emb, tables, bits)
     scored = pairs.unionByName(
         pairs.select(
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "cosine"
@@ -245,11 +238,9 @@ def embedding_near_dup(
     threshold: float = 0.95,
     tables: int = 8,
     bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (multi-table LSH candidates)."""
-    scored = _lsh_candidates(emb, tables, bits, id_col, vec_col)
+    scored = _lsh_candidates(emb, tables, bits)
     return scored.filter(F.col("cosine") >= threshold)
 
 
@@ -258,8 +249,6 @@ def cosine_topk_ivf(
     k: int = 5,
     n_lists: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the classic coarse-quantize
     → probe → in-list scan plan.
@@ -285,8 +274,8 @@ def cosine_topk_ivf(
     # the normalize/assign lineage re-executed per consumer — 4 corpus
     # scans in the runtime plan
     base = emb.select(
-        F.col(id_col).alias("id"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("emb"),
+        F.col("vec_id").alias("id"),
+        unit_vec(F.col("embedding").cast("array<double>")).alias("emb"),
     ).localCheckpoint(eager=True)
     w_cent = Window.orderBy("id")
     cents = (
@@ -341,8 +330,6 @@ def ann_recall(
     k: int = 5,
     n_lists: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id_a, n_hits, recall) — IVF recall@k against the exact top-k.
 
@@ -360,11 +347,11 @@ def ann_recall(
     # join and the per-query totals — without the pin it re-executes
     # per consumer (the exact re-run class test_scan_discipline locks)
     truth = (
-        cosine_topk_bruteforce(emb, k, id_col, vec_col)
+        cosine_topk_bruteforce(emb, k)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    approx = cosine_topk_ivf(emb, k, n_lists, nprobe, id_col, vec_col).select(
+    approx = cosine_topk_ivf(emb, k, n_lists, nprobe).select(
         "id_a", F.col("id_b").alias("id_b_ivf")
     )
     hits = truth.join(
@@ -383,14 +370,7 @@ def ann_recall(
     )
 
 
-def bitext_mine(
-    emb: DataFrame,
-    k: int = 4,
-    tau: float = 1.0,
-    id_col: str = "vec_id",
-    lang_col: str = "lang",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def bitext_mine(emb: DataFrame, k: int = 4, tau: float = 1.0) -> DataFrame:
     """(id_a, id_b, cosine, margin) — margin-based bitext mining
     (Artetxe & Schwenk 2019; the CCMatrix/CCAligned recipe): mine
     sentence pairs across two languages whose *margin-scored*
@@ -413,15 +393,15 @@ def bitext_mine(
     """
     langs = [
         r[0]
-        for r in emb.select(F.col(lang_col)).distinct().orderBy(lang_col).collect()
+        for r in emb.select(F.col("lang")).distinct().orderBy("lang").collect()
     ]
     if len(langs) != 2:
         raise ValueError(f"bitext_mine needs exactly 2 languages, got {langs}")
     la, lb = langs
     base = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("uemb"),
+        F.col("vec_id").alias("id"),
+        "lang",
+        unit_vec(F.col("embedding").cast("array<double>")).alias("uemb"),
     )
     a = base.filter(F.col("lang") == la).select(
         F.col("id").alias("id_a"), F.col("uemb").alias("emb_a")
@@ -493,9 +473,6 @@ def bitext_mine_ivf(
     tau: float = 1.0,
     n_lists: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    lang_col: str = "lang",
-    vec_col: str = "embedding",
     pin: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cosine, margin) — margin-based bitext mining over
@@ -520,7 +497,7 @@ def bitext_mine_ivf(
     """
     langs = [
         r[0]
-        for r in emb.select(F.col(lang_col)).distinct().orderBy(lang_col).collect()
+        for r in emb.select(F.col("lang")).distinct().orderBy("lang").collect()
     ]
     if len(langs) != 2:
         raise ValueError(f"bitext_mine_ivf needs exactly 2 languages, got {langs}")
@@ -530,9 +507,9 @@ def bitext_mine_ivf(
     # single-scan discipline; pin=False keeps the logical plan
     # inspectable for the plan-shape locks
     base = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("emb"),
+        F.col("vec_id").alias("id"),
+        "lang",
+        unit_vec(F.col("embedding").cast("array<double>")).alias("emb"),
     )
     if pin:
         base = base.localCheckpoint(eager=True)
@@ -591,19 +568,12 @@ def bitext_mine_ivf_sql(
     tau: float = 1.0,
     n_lists: int = 16,
     nprobe: int = 4,
-    id_expr: str = "vec_id",
     lang_expr: str = "lang",
-    vec_expr: str = "embedding",
-    table: str = "embeddings",
 ) -> str:
     """DuckDB twin of :func:`bitext_mine_ivf` (two-language corpus)."""
-    unit = (
-        f"list_transform({vec_expr}::double[], x -> x / "
-        f"sqrt(list_dot_product({vec_expr}::double[], {vec_expr}::double[])))"
-    )
     return f"""
 WITH base AS (
-  SELECT {id_expr} AS id, {lang_expr} AS lang, {unit} AS uemb FROM {table}
+  SELECT vec_id AS id, {lang_expr} AS lang, {UNIT_EMBEDDING_SQL} AS uemb FROM embeddings
 ),
 langs AS (SELECT lang, row_number() OVER (ORDER BY lang) AS lr
           FROM (SELECT DISTINCT lang FROM base)),
@@ -671,19 +641,12 @@ WHERE guard.ok = 1 AND rka = 1 AND rkb = 1 AND margin >= {tau!r}
 def bitext_mine_sql(
     k: int = 4,
     tau: float = 1.0,
-    id_expr: str = "vec_id",
     lang_expr: str = "lang",
-    vec_expr: str = "embedding",
-    table: str = "embeddings",
 ) -> str:
     """DuckDB twin of :func:`bitext_mine` (two-language corpus)."""
-    unit = (
-        f"list_transform({vec_expr}::double[], x -> x / "
-        f"sqrt(list_dot_product({vec_expr}::double[], {vec_expr}::double[])))"
-    )
     return f"""
 WITH base AS (
-  SELECT {id_expr} AS id, {lang_expr} AS lang, {unit} AS uemb FROM {table}
+  SELECT vec_id AS id, {lang_expr} AS lang, {UNIT_EMBEDDING_SQL} AS uemb FROM embeddings
 ),
 langs AS (SELECT lang, row_number() OVER (ORDER BY lang) AS lr
           FROM (SELECT DISTINCT lang FROM base)),

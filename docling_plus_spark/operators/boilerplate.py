@@ -59,9 +59,7 @@ def _block_features(html: Column) -> Column:
     return F.split(lowered, _BLOCK_TAG_RE)
 
 
-def boilerplate_blocks(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def boilerplate_blocks(df: DataFrame) -> DataFrame:
     """(id, pos, n_chars, link_density, stop_density, label) per block.
 
     ``label`` ∈ good | bad: the jusText two-pass result. Pass 1 rates
@@ -73,8 +71,8 @@ def boilerplate_blocks(
     paragraphs.
     """
     blocks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(_block_features(F.col(html_col))).alias("i", "chunk"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(_block_features(F.col("html"))).alias("i", "chunk"),
     )
     # anchor text chars (inline <a> survives the block split),
     # normalized EXACTLY like the block text (tags → space, whitespace
@@ -231,16 +229,14 @@ FROM ctx
 """
 
 
-def main_content(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def main_content(df: DataFrame) -> DataFrame:
     """(id, main_text, n_good, n_bad) — good blocks joined in order.
 
     The consumer view of :func:`boilerplate_blocks`: the extracted
     main content per document, the statistical complement of the DOM
     path's furniture split.
     """
-    blocks = boilerplate_blocks(df, id_col, html_col)
+    blocks = boilerplate_blocks(df)
     # re-derive block text (features-only table avoids shuffling text;
     # here the consumer explicitly asks for it, so re-split and join on
     # (id, rank) — both sides partition on id). The split is the SAME
@@ -249,9 +245,9 @@ def main_content(
     # detail, not an output transform); block positions align because
     # the split boundaries and the empty filter are case-invariant.
     src = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
-            F.split(F.col(html_col), "(?i)" + _BLOCK_TAG_RE)
+            F.split(F.col("html"), "(?i)" + _BLOCK_TAG_RE)
         ).alias("i", "chunk"),
     )
     text = F.trim(

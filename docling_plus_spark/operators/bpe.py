@@ -44,14 +44,14 @@ SENT_L = "\x01"
 SENT_R = "\x02"
 
 
-def _word_table(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, freq, enc): lowercased whitespace tokens → distinct-word
-    frequencies → sentinel-encoded character symbols."""
+def _word_table(df: DataFrame) -> DataFrame:
+    """(word, freq, enc): lowercased whitespace tokens of ``text`` →
+    distinct-word frequencies → sentinel-encoded character symbols."""
     words = (
         df.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), r"\s+"),
+                    F.split(F.lower(F.col("text")), r"\s+"),
                     lambda w: (w != "")
                     & ~w.contains(SENT_L)
                     & ~w.contains(SENT_R),
@@ -106,15 +106,11 @@ def _merge_pattern(left: str, right: str) -> tuple[str, str]:
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train(df: DataFrame, n_merges: int = 8) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (step, left, right, pair_count), step 1-based in learned order."""
     spark = df.sparkSession
-    words = _word_table(df, text_col).localCheckpoint()
+    words = _word_table(df).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):
         top = (
@@ -136,12 +132,7 @@ def bpe_train(
     )
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge list to documents: (id, n_tokens,
     tokens_md5). The merge chain is a static unroll of literal
     replace-alls per word — pure codegen column expressions; the merge
@@ -149,7 +140,7 @@ def bpe_encode(
     in production — broadcast territory)."""
     word_enc = F.transform(
         F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"),
+            F.split(F.lower(F.col("text")), r"\s+"),
             lambda w: (w != "") & ~w.contains(SENT_L) & ~w.contains(SENT_R),
         ),
         lambda w: F.concat_ws(
@@ -166,7 +157,7 @@ def bpe_encode(
         col = F.transform(col, lambda e: F.replace(e, F.lit(old), F.lit(new)))
     toks = F.flatten(F.transform(col, _syms))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.md5(F.concat_ws(" ", toks)).alias("tokens_md5"),
     )
@@ -195,19 +186,15 @@ def _pairs_sql(wtab: str) -> str:
   GROUP BY 1, 2"""
 
 
-def _train_ctes(
-    n_merges: int,
-    text_expr: str,
-    table: str,
-) -> tuple[str, list[str]]:
+def _train_ctes(n_merges: int) -> tuple[str, list[str]]:
     """CTE body w0→b1→w1→…→w{n}; returns (body, per-step selects)."""
     parts = [
         f"""w0 AS (
   SELECT word, freq, {_ENC_SQL} AS enc
   FROM (
     SELECT w AS word, count(*) AS freq
-    FROM {table},
-         unnest(string_split_regex(lower({text_expr}), '\\s+')) AS t(w)
+    FROM documents,
+         unnest(string_split_regex(lower(text), '\\s+')) AS t(w)
     WHERE w <> '' AND w NOT LIKE '%' || chr(1) || '%'
       AND w NOT LIKE '%' || chr(2) || '%'
     GROUP BY w
@@ -238,37 +225,28 @@ def _train_ctes(
     return ",\n".join(parts), finals
 
 
-def bpe_train_sql(
-    n_merges: int = 8,
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
-    body, finals = _train_ctes(n_merges, text_expr, table)
+def bpe_train_sql(n_merges: int = 8) -> str:
+    body, finals = _train_ctes(n_merges)
     union = "\nUNION ALL\n".join(finals)
     return f"WITH {body}\n{union}\nORDER BY step"
 
 
-def bpe_encode_sql(
-    n_merges: int = 8,
-    text_expr: str = "text",
-    id_expr: str = "doc_id",
-    table: str = "documents",
-) -> str:
+def bpe_encode_sql(n_merges: int = 8) -> str:
     """DuckDB twin of train-then-encode: the trainer's final word table
     w{n} already holds every distinct word fully merged, so encoding is
     a join of each document's word stream against it (order kept via
     the word index)."""
-    body, _ = _train_ctes(n_merges, text_expr, table)
+    body, _ = _train_ctes(n_merges)
     return f"""WITH {body},
 docw AS (
   SELECT id, i, ws[i + 1] AS word
   FROM (
-    SELECT {id_expr} AS id,
-           list_filter(string_split_regex(lower({text_expr}), '\\s+'),
+    SELECT doc_id AS id,
+           list_filter(string_split_regex(lower(text), '\\s+'),
                        w -> w <> ''
                             AND w NOT LIKE '%' || chr(1) || '%'
                             AND w NOT LIKE '%' || chr(2) || '%') AS ws
-    FROM {table}
+    FROM documents
   ), unnest(range(0, len(ws))) AS t(i)
 ),
 tok AS (

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ann import _dot, unit_vec
+from .ann import UNIT_EMBEDDING_SQL, _dot, unit_vec
 
 
 def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
@@ -92,10 +92,10 @@ def _recompute(assigned: DataFrame) -> DataFrame:
     )
 
 
-def _base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _base(emb: DataFrame) -> DataFrame:
     return emb.select(
-        F.col(id_col).alias("id"),
-        unit_vec(F.col(vec_col).cast("array<double>")).alias("uemb"),
+        F.col("vec_id").alias("id"),
+        unit_vec(F.col("embedding").cast("array<double>")).alias("uemb"),
     )
 
 
@@ -114,16 +114,10 @@ def init_centroids(base: DataFrame, k: int) -> DataFrame:
     )
 
 
-def kmeans_lloyd(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``iters`` rounds of distributed spherical Lloyd; returns the final
-    assignment (id, cluster, ccos)."""
-    base = _base(emb, id_col, vec_col)
+def kmeans_lloyd(emb: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
+    """``iters`` rounds of distributed spherical Lloyd over ``(vec_id,
+    embedding)``; returns the final assignment (id, cluster, ccos)."""
+    base = _base(emb)
     cents = init_centroids(base, k)
     for _ in range(iters):
         cents = _recompute(_assign(base, cents)).localCheckpoint()
@@ -135,11 +129,10 @@ def semdedup(
     k: int = 8,
     tau: float = 0.97,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """SemDeDup: cluster, then inside each cluster drop every vector
-    whose cosine to a *lower-id* cluster-mate is ≥ ``tau`` (keep-lowest
+    """SemDeDup: cluster ``(vec_id, embedding)``, then inside each
+    cluster drop every vector whose cosine to a *lower-id* cluster-mate
+    is ≥ ``tau`` (keep-lowest
     exemplar rule — the deterministic stand-in for the paper's
     keep-farthest-from-centroid, chosen so the DuckDB twin replays
     selection exactly). Returns (id, cluster, kept)."""
@@ -147,7 +140,7 @@ def semdedup(
     # assignment (feeds BOTH self-join sides and the kept-join): without
     # the pins the normalize+assign pass re-executed per consumer
     # (6 corpus scans observed at sf0.001)
-    base = _base(emb, id_col, vec_col).localCheckpoint(eager=True)
+    base = _base(emb).localCheckpoint(eager=True)
     cents = init_centroids(base, k)
     for _ in range(iters):
         cents = _recompute(_assign(base, cents)).localCheckpoint()
@@ -169,11 +162,6 @@ def semdedup(
 
 # ---------------------------------------------------------------------------
 # DuckDB twins (unrolled CTE chains)
-
-_UNIT = (
-    "list_transform({v}::double[], x -> x / "
-    "sqrt(list_dot_product({v}::double[], {v}::double[])))"
-)
 
 
 def _assign_cte(base: str, cents: str) -> str:
@@ -205,14 +193,11 @@ def _recompute_cte(assigned: str) -> str:
 )"""
 
 
-def _lloyd_ctes(
-    k: int, iters: int, table: str, id_col: str, vec_col: str
-) -> tuple[str, str]:
+def _lloyd_ctes(k: int, iters: int, table: str) -> tuple[str, str]:
     """Shared CTE prefix for the twins; returns (WITH-body, final
     assignment CTE name)."""
-    unit = _UNIT.format(v=vec_col)
     parts = [
-        f"base AS (SELECT {id_col} AS id, {unit} AS uemb FROM {table})",
+        f"base AS (SELECT vec_id AS id, {UNIT_EMBEDDING_SQL} AS uemb FROM {table})",
         f"""cents0 AS (
   SELECT row_number() OVER (ORDER BY id) - 1 AS cluster, uemb AS cemb
   FROM (SELECT id, uemb FROM base ORDER BY id LIMIT {k}))""",
@@ -224,17 +209,8 @@ def _lloyd_ctes(
     return ",\n".join(parts), "afinal"
 
 
-def kmeans_lloyd_sql(
-    k: int = 8,
-    iters: int = 2,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pre_ctes: str = "",
-) -> str:
-    body, final = _lloyd_ctes(k, iters, table, id_col, vec_col)
-    if pre_ctes:
-        body = f"{pre_ctes},\n{body}"
+def kmeans_lloyd_sql(k: int = 8, iters: int = 2) -> str:
+    body, final = _lloyd_ctes(k, iters, "embeddings")
     return f"WITH {body}\nSELECT id, cluster, ccos FROM {final}"
 
 
@@ -243,11 +219,9 @@ def semdedup_sql(
     tau: float = 0.97,
     iters: int = 1,
     table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pre_ctes: str = "",
 ) -> str:
-    body, final = _lloyd_ctes(k, iters, table, id_col, vec_col)
+    body, final = _lloyd_ctes(k, iters, table)
     if pre_ctes:
         body = f"{pre_ctes},\n{body}"
     return f"""WITH {body},
@@ -276,9 +250,9 @@ FROM {final} f LEFT JOIN doomed d ON f.id = d.id"""
 # Euclidean, not spherical.
 
 
-def _sub_split(emb: DataFrame, m: int, id_col: str, vec_col: str) -> DataFrame:
+def _sub_split(emb: DataFrame, m: int) -> DataFrame:
     """(id, sub, svec): the m contiguous subvectors of each vector."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     d_sub = (F.size(v) / m).cast("int")
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -288,7 +262,7 @@ def _sub_split(emb: DataFrame, m: int, id_col: str, vec_col: str) -> DataFrame:
         ),
     )
     return emb.select(
-        F.col(id_col).alias("id"), F.explode(subs).alias("p")
+        F.col("vec_id").alias("id"), F.explode(subs).alias("p")
     ).select("id", F.col("p.sub").alias("sub"), F.col("p.svec").alias("svec"))
 
 
@@ -338,12 +312,11 @@ def pq_codes(
     m: int = 4,
     k: int = 16,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Train a PQ codebook (`iters` Lloyd rounds per subspace,
-    simultaneously) and encode: (id, sub, code, dist)."""
-    sv = _sub_split(emb, m, id_col, vec_col)
+    simultaneously) over ``(vec_id, embedding)`` and encode: (id, sub,
+    code, dist)."""
+    sv = _sub_split(emb, m)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
@@ -355,14 +328,7 @@ def pq_codes(
     return _pq_assign(sv, cents).select("id", "sub", "code", "dist")
 
 
-def pq_codes_sql(
-    m: int = 4,
-    k: int = 16,
-    iters: int = 1,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
+def pq_codes_sql(m: int = 4, k: int = 16, iters: int = 1) -> str:
     """DuckDB twin of :func:`pq_codes` (same seeding, rounding, ties)."""
     sq = (
         "round(list_aggregate(list_transform(range(1, len(s.svec) + 1), "
@@ -381,10 +347,10 @@ def pq_codes_sql(
 
     parts = [
         f"""sv AS (
-  SELECT {id_col} AS id, s AS sub,
-         ({vec_col}::double[])[s * (len({vec_col}) // {m}) + 1 :
-                               (s + 1) * (len({vec_col}) // {m})] AS svec
-  FROM {table}, unnest(range(0, {m})) AS t(s)
+  SELECT vec_id AS id, s AS sub,
+         (embedding::double[])[s * (len(embedding) // {m}) + 1 :
+                               (s + 1) * (len(embedding) // {m})] AS svec
+  FROM embeddings, unnest(range(0, {m})) AS t(s)
 )""",
         f"""cents0 AS (
   SELECT sub, rk - 1 AS code, svec AS cemb FROM (
@@ -415,10 +381,7 @@ def pq_adc_topk(
     m: int = 4,
     k_codes: int = 16,
     topk: int = 5,
-    iters: int = 1,
     query_mod: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k search over PQ codes — the query
     plan FAISS actually runs: per query, a tiny (sub, code) → partial-
@@ -430,12 +393,13 @@ def pq_adc_topk(
     (sub, code) and sums per (query, candidate). The only wide op
     shuffles (qid, xid, partial) triples — no embeddings move after
     encoding. Queries are the deterministic ``id % query_mod == 0``
-    slice so the DuckDB twin replays the same subset.
+    slice so the DuckDB twin replays the same subset. One Lloyd round
+    trains the codebook.
 
     Output: (qid, rk, xid, adist) — approximate distances rounded to 4
     (tie: ascending xid), self-matches excluded.
     """
-    sv = _sub_split(emb, m, id_col, vec_col)
+    sv = _sub_split(emb, m)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
@@ -444,8 +408,7 @@ def pq_adc_topk(
             "sub", (F.col("rk") - 1).alias("code"), F.col("svec").alias("cemb")
         )
     )
-    for _ in range(iters):
-        cents = _pq_recompute(_pq_assign(sv, cents)).localCheckpoint()
+    cents = _pq_recompute(_pq_assign(sv, cents)).localCheckpoint()
     codes = _pq_assign(sv, cents).select("id", "sub", "code")
     qsv = sv.filter(F.col("id") % query_mod == 0)
     pdist = qsv.join(F.broadcast(cents), "sub").select(
@@ -478,14 +441,10 @@ def pq_adc_topk_sql(
     m: int = 4,
     k_codes: int = 16,
     topk: int = 5,
-    iters: int = 1,
     query_mod: int = 20,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> str:
     """DuckDB twin of :func:`pq_adc_topk`."""
-    base = pq_codes_sql(m, k_codes, iters, table, id_col, vec_col)
+    base = pq_codes_sql(m, k_codes, 1)
     # reuse the pq CTE chain up to (but not including) the final SELECT
     body = base[len("WITH ") : base.rindex("SELECT id, sub, code, dist")]
     sqd = (
@@ -496,7 +455,7 @@ def pq_adc_topk_sql(
 codes AS (SELECT id AS xid, sub, code FROM afinal),
 pdist AS (
   SELECT q.id AS qid, q.sub, c.code, {sqd} AS pd
-  FROM sv q JOIN cents{iters} c USING (sub)
+  FROM sv q JOIN cents1 c USING (sub)
   WHERE q.id % {query_mod} = 0
 ),
 adist AS (
@@ -520,9 +479,6 @@ def ivfpq_topk(
     k_codes: int = 16,
     topk: int = 5,
     nprobe: int = 2,
-    query_mod: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ search — the full FAISS billion-scale plan assembled from
     this module's parts: a coarse quantizer routes vectors to inverted
@@ -536,20 +492,20 @@ def ivfpq_topk(
     on (list, sub, code) integers; the only per-pair work is summing m
     looked-up doubles. Output: (qid, rk, xid, adist), ascending ADC
     distance (round 4), tie on xid; self-matches excluded; queries are
-    the ``id % query_mod == 0`` slice.
+    the ``id % 20 == 0`` slice.
     """
     # pin the two shared vector tables: base feeds coarse training,
     # list assignment AND the query slice; sv feeds codebook training,
     # code assignment AND the query lookup tables — unpinned, the
     # normalize/split passes re-executed per consumer (4 corpus scans)
-    base = _base(emb, id_col, vec_col).localCheckpoint(eager=True)
+    base = _base(emb).localCheckpoint(eager=True)
     coarse = init_centroids(base, n_lists)
     coarse = _recompute(_assign(base, coarse)).localCheckpoint()
     assigned = _assign(base, coarse).select(
         "id", F.col("cluster").alias("list_id")
     )
     # PQ codes for the whole corpus (subspace k-means as in pq_codes)
-    sv = _sub_split(emb, m, id_col, vec_col).localCheckpoint(eager=True)
+    sv = _sub_split(emb, m).localCheckpoint(eager=True)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
@@ -562,7 +518,7 @@ def ivfpq_topk(
     codes = _pq_assign(sv, cents).select("id", "sub", "code")
 
     # queries probe their nprobe nearest lists
-    qbase = base.filter(F.col("id") % query_mod == 0)
+    qbase = base.filter(F.col("id") % 20 == 0)
     qscored = qbase.crossJoin(F.broadcast(coarse)).select(
         "id",
         "cluster",
@@ -575,7 +531,7 @@ def ivfpq_topk(
         .select(F.col("id").alias("qid"), F.col("cluster").alias("list_id"))
     )
     # ADC lookup tables per query
-    qsv = sv.filter(F.col("id") % query_mod == 0)
+    qsv = sv.filter(F.col("id") % 20 == 0)
     pdist = qsv.join(F.broadcast(cents), "sub").select(
         F.col("id").alias("qid"),
         "sub",
@@ -609,14 +565,10 @@ def ivfpq_topk_sql(
     k_codes: int = 16,
     topk: int = 5,
     nprobe: int = 2,
-    query_mod: int = 20,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> str:
     """DuckDB twin of :func:`ivfpq_topk`."""
-    coarse_body, final = _lloyd_ctes(n_lists, 1, table, id_col, vec_col)
-    pq = pq_codes_sql(m, k_codes, 1, table, id_col, vec_col)
+    coarse_body, final = _lloyd_ctes(n_lists, 1, "embeddings")
+    pq = pq_codes_sql(m, k_codes, 1)
     pq_body = pq[len("WITH ") : pq.rindex("SELECT id, sub, code, dist")]
     # the coarse chain and the PQ chain both emit cents*/a*/afinal CTE
     # names — scope the PQ chain's under a pq prefix
@@ -641,12 +593,12 @@ probes AS (
              ORDER BY round(list_dot_product(b.uemb, c.cemb), 4) DESC,
                       c.cluster) AS crk
     FROM base b CROSS JOIN cents1 c
-    WHERE b.id % {query_mod} = 0) WHERE crk <= {nprobe}
+    WHERE b.id % 20 = 0) WHERE crk <= {nprobe}
 ),
 pdist AS (
   SELECT q.id AS qid, q.sub, c.code, {sqd} AS pd
   FROM sv q JOIN pqcents1 c USING (sub)
-  WHERE q.id % {query_mod} = 0
+  WHERE q.id % 20 = 0
 ),
 cand AS (
   SELECT p.qid, a.id AS xid FROM probes p

@@ -90,13 +90,13 @@ def repetition_strip(
 
 
 def repetition_strip_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
+    id_expr: str = "doc_id", text_expr: str = "text"
 ) -> str:
     """DuckDB twin of :func:`repetition_strip` (full SELECT)."""
     return f"""
 WITH split AS (
   SELECT {id_expr} AS id, string_split({text_expr}, chr(10)) AS parts
-  FROM {table}
+  FROM documents
 ),
 lines AS (
   SELECT id, u.i AS pos, parts[u.i] AS line
@@ -120,7 +120,7 @@ reassembled AS (
 sizes AS (
   SELECT {id_expr} AS id,
          len(string_split({text_expr}, chr(10)))::bigint AS n_lines
-  FROM {table}
+  FROM documents
 )
 SELECT r.id, coalesce(r.clean_text, '') AS clean_text, s.n_lines,
        (s.n_lines - r.n_kept)::bigint AS n_removed
@@ -139,11 +139,11 @@ def _words(text_col: Column) -> Column:
     return F.filter(F.split(F.lower(text_col), _WORD_SPLIT), lambda t: t != "")
 
 
-def _dsir_features(text_col: Column, n_buckets: int) -> Column:
+def _dsir_features(text_col: Column) -> Column:
     """Hashed uni+bigram bucket ids (DSIR's bag-of-hashed-ngrams),
     computed with the engine-portable md5 hash so the oracle matches."""
     words = _words(text_col)
-    unis = F.transform(words, lambda w: F.pmod(md5_long(w), F.lit(n_buckets)))
+    unis = F.transform(words, lambda w: F.pmod(md5_long(w), F.lit(DSIR_BUCKETS)))
     bis = F.when(
         F.size(words) >= 2,
         F.transform(
@@ -154,34 +154,29 @@ def _dsir_features(text_col: Column, n_buckets: int) -> Column:
                         F.element_at(words, i), F.lit(" "), F.element_at(words, i + 1)
                     )
                 ),
-                F.lit(n_buckets),
+                F.lit(DSIR_BUCKETS),
             ),
         ),
     ).otherwise(F.array())
     return F.concat(unis, bis)
 
 
-def dsir_weights(
-    df: DataFrame,
-    target_filter: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+def dsir_weights(df: DataFrame, target_filter: Column) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS'23)
-    reduced to its n-gram core: hash word uni+bigrams into ``n_buckets``
-    buckets, fit add-one-smoothed bucket distributions over the target
-    subset (``target_filter``) and the raw corpus, and score each
-    document by the mean log-likelihood ratio of its features.
+    reduced to its n-gram core: hash the word uni+bigrams of ``text``
+    into ``DSIR_BUCKETS`` buckets, fit add-one-smoothed bucket
+    distributions over the target subset (``target_filter``) and the raw
+    corpus, and score each ``doc_id`` by the mean log-likelihood ratio
+    of its features.
     Positive = looks like the target distribution.
 
     Output: (id, n_feats, weight). Documents with no features are
     dropped (they have no evidence either way); the SQL twin agrees.
     """
     feats = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         target_filter.alias("is_target"),
-        F.explode(_dsir_features(F.col(text_col), n_buckets)).alias("b"),
+        F.explode(_dsir_features(F.col("text"))).alias("b"),
     )
     # reduce ONCE to per-(doc, bucket) counts: every downstream table —
     # raw/target bucket histograms, corpus totals, and the scoring pass
@@ -214,8 +209,8 @@ def dsir_weights(
         .select(
             "b",
             (
-                F.log((F.col("c_tgt") + 1) / (F.col("n_tgt") + n_buckets))
-                - F.log((F.col("c_raw") + 1) / (F.col("n_raw") + n_buckets))
+                F.log((F.col("c_tgt") + 1) / (F.col("n_tgt") + DSIR_BUCKETS))
+                - F.log((F.col("c_raw") + 1) / (F.col("n_raw") + DSIR_BUCKETS))
             ).alias("llr"),
         )
     )
@@ -235,8 +230,6 @@ def dsir_weights_sql(
     target_pred: str,
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`dsir_weights` (full SELECT)."""
     words = (
@@ -244,11 +237,11 @@ def dsir_weights_sql(
         f" x -> x <> '')"
     )
     h = "('0x'||substr(md5({v}),1,15))::ubigint % {b}"
-    uni = h.format(v="t.w", b=n_buckets)
-    bi = h.format(v="(w.ws[t.i] || ' ' || w.ws[t.i + 1])", b=n_buckets)
+    uni = h.format(v="t.w", b=DSIR_BUCKETS)
+    bi = h.format(v="(w.ws[t.i] || ' ' || w.ws[t.i + 1])", b=DSIR_BUCKETS)
     return f"""
 WITH w AS (
-  SELECT {id_expr} AS id, ({target_pred}) AS is_target, {words} AS ws FROM {table}
+  SELECT {id_expr} AS id, ({target_pred}) AS is_target, {words} AS ws FROM documents
 ),
 feats AS (
   SELECT id, is_target, ({uni})::bigint AS b
@@ -265,8 +258,8 @@ tot AS (
 ),
 hist AS (
   SELECT raw.b,
-         ln((coalesce(tgt.c_tgt, 0) + 1)::double / (tot.n_tgt + {n_buckets}))
-         - ln((raw.c_raw + 1)::double / (tot.n_raw + {n_buckets})) AS llr
+         ln((coalesce(tgt.c_tgt, 0) + 1)::double / (tot.n_tgt + {DSIR_BUCKETS}))
+         - ln((raw.c_raw + 1)::double / (tot.n_raw + {DSIR_BUCKETS})) AS llr
   FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot
 )
 SELECT feats.id, count(*) AS n_feats, round(avg(hist.llr), 6) AS weight
@@ -282,47 +275,41 @@ BLOOM_M = 1 << 18  #: filter bits
 BLOOM_K = 4  #: probes per key
 
 
-def _bloom_positions(key: Column, m: int, k: int) -> Column:
-    """``k`` deterministic bit positions for a key — md5 of the key
+def _bloom_positions(key: Column) -> Column:
+    """``BLOOM_K`` deterministic bit positions for a key — md5 of the key
     salted with the probe index, engine-portable."""
     return F.transform(
-        F.sequence(F.lit(1), F.lit(k)),
+        F.sequence(F.lit(1), F.lit(BLOOM_K)),
         lambda j: F.pmod(
-            md5_long(F.concat(key, F.lit("#"), j.cast("string"))), F.lit(m)
+            md5_long(F.concat(key, F.lit("#"), j.cast("string"))), F.lit(BLOOM_M)
         ),
     )
 
 
-def bloom_dedup(
-    df: DataFrame,
-    build_filter: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_dedup(df: DataFrame, build_filter: Column) -> DataFrame:
     """Flag probe-side documents whose text *may* already exist in the
     build-side subset, via a Bloom filter over ``md5(text)`` keys — the
     cross-snapshot dedup primitive (build = previously ingested
     snapshot, probe = new crawl) when the build side is too large to
-    broadcast as an exact key set but its ≤``m``-bit filter is not.
+    broadcast as an exact key set but its ≤``BLOOM_M``-bit filter is not.
 
-    The filter is materialized as its set-bit positions (a ≤``m``-row
-    table, broadcast); a probe key is a *maybe*-duplicate iff all ``k``
-    of its positions are set — the standard one-sided guarantee (no
-    false negatives, tunable false-positive rate (set_bits/m)^k).
+    The filter is materialized as its set-bit positions (a ≤``BLOOM_M``-row
+    table, broadcast); a probe key is a *maybe*-duplicate iff all
+    ``BLOOM_K`` of its positions are set — the standard one-sided
+    guarantee (no false negatives, false-positive rate
+    (set_bits/BLOOM_M)^BLOOM_K).
 
     Output: (id, hits, maybe_dup) for probe-side rows only.
     """
-    key = F.md5(F.col(text_col))
-    pos = F.explode(_bloom_positions(key, m, k)).alias("p")
+    key = F.md5(F.col("text"))
+    pos = F.explode(_bloom_positions(key)).alias("p")
     bits = df.filter(build_filter).select(pos).distinct()
-    probe = df.filter(~build_filter).select(F.col(id_col).alias("id"), pos)
+    probe = df.filter(~build_filter).select(F.col("doc_id").alias("id"), pos)
     return (
         probe.join(F.broadcast(bits.withColumn("set", F.lit(1))), "p", "left")
         .groupBy("id")
         .agg(F.count_if(F.col("set").isNotNull()).alias("hits"))
-        .select("id", "hits", (F.col("hits") == k).alias("maybe_dup"))
+        .select("id", "hits", (F.col("hits") == BLOOM_K).alias("maybe_dup"))
     )
 
 
@@ -330,25 +317,22 @@ def bloom_dedup_sql(
     build_pred: str,
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`bloom_dedup` (full SELECT)."""
     p = (
         f"(('0x'||substr(md5(md5({text_expr}) || '#' || j.j::varchar),1,15))"
-        f"::ubigint % {m})::bigint"
+        f"::ubigint % {BLOOM_M})::bigint"
     )
     return f"""
 WITH pos AS (
   SELECT {id_expr} AS id, ({build_pred}) AS is_build, {p} AS p
-  FROM {table}, unnest(range(1, {k} + 1)) AS j(j)
+  FROM documents, unnest(range(1, {BLOOM_K} + 1)) AS j(j)
 ),
 bits AS (SELECT DISTINCT p FROM pos WHERE is_build),
 probe AS (SELECT id, p FROM pos WHERE NOT is_build)
 SELECT probe.id,
        count(*) FILTER (bits.p IS NOT NULL) AS hits,
-       (count(*) FILTER (bits.p IS NOT NULL) = {k}) AS maybe_dup
+       (count(*) FILTER (bits.p IS NOT NULL) = {BLOOM_K}) AS maybe_dup
 FROM probe LEFT JOIN bits USING (p)
 GROUP BY 1
 """
@@ -363,8 +347,6 @@ SAMPLE_MOD = 1_000_000
 def distribution_match(
     df: DataFrame,
     target_props: dict[str, float],
-    id_col: str = "doc_id",
-    strata_col: str = "lang",
 ) -> DataFrame:
     """Downsample so the surviving corpus matches ``target_props``
     across strata, keeping as much data as feasible: the binding
@@ -383,7 +365,7 @@ def distribution_match(
         *[x for kv in sorted(target_props.items()) for x in (F.lit(kv[0]), F.lit(kv[1]))]
     )
     counts = (
-        df.groupBy(F.col(strata_col).alias("stratum"))
+        df.groupBy(F.col("lang").alias("stratum"))
         .agg(F.count("*").alias("c"))
         .withColumn("prop", props[F.col("stratum")])
         .filter(F.col("prop").isNotNull())
@@ -394,11 +376,11 @@ def distribution_match(
         "stratum",
         F.round(F.col("alpha") * F.col("prop") / F.col("c"), 9).alias("rate"),
     )
-    bucket = F.pmod(md5_long(F.col(id_col).cast("string")), F.lit(SAMPLE_MOD))
+    bucket = F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(SAMPLE_MOD))
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            F.col(strata_col).alias("stratum"),
+            F.col("doc_id").alias("id"),
+            F.col("lang").alias("stratum"),
             bucket.cast("long").alias("bucket"),
         )
         .join(F.broadcast(rates), "stratum")
@@ -407,20 +389,15 @@ def distribution_match(
     )
 
 
-def distribution_match_sql(
-    target_props: dict[str, float],
-    id_expr: str = "doc_id",
-    strata_expr: str = "lang",
-    table: str = "documents",
-) -> str:
+def distribution_match_sql(target_props: dict[str, float]) -> str:
     """DuckDB twin of :func:`distribution_match` (full SELECT)."""
     values = ", ".join(f"('{s}', {p})" for s, p in sorted(target_props.items()))
-    bucket = f"(('0x'||substr(md5({id_expr}::VARCHAR),1,15))::ubigint % {SAMPLE_MOD})"
+    bucket = f"(('0x'||substr(md5(doc_id::VARCHAR),1,15))::ubigint % {SAMPLE_MOD})"
     return f"""
 WITH props(stratum, prop) AS (VALUES {values}),
 counts AS (
-  SELECT {strata_expr} AS stratum, count(*) AS c
-  FROM {table} GROUP BY 1
+  SELECT lang AS stratum, count(*) AS c
+  FROM documents GROUP BY 1
 ),
 joined AS (
   SELECT counts.stratum, counts.c, props.prop
@@ -431,8 +408,8 @@ rates AS (
   SELECT stratum, round(alpha.alpha * prop / c, 9) AS rate
   FROM joined CROSS JOIN alpha
 )
-SELECT {id_expr} AS id, {strata_expr} AS stratum,
+SELECT doc_id AS id, lang AS stratum,
        {bucket}::bigint AS bucket, rates.rate
-FROM {table} JOIN rates ON rates.stratum = {strata_expr}
+FROM documents JOIN rates ON rates.stratum = lang
 WHERE {bucket} < rates.rate * {SAMPLE_MOD}
 """

@@ -43,7 +43,12 @@ from docling_plus_spark.functions.expressions import md5_long
 # ---------------------------------------------------------------------------
 # shingling
 
-def shingles(text_col: Column, n: int = 3) -> Column:
+#: word n-gram size of the near-duplicate shingles (MinHash, Jaccard,
+#: containment)
+SHINGLE_N = 3
+
+
+def shingles(text_col: Column, n: int = SHINGLE_N) -> Column:
     """Distinct word n-gram shingles of lower-cased text.
 
     Texts shorter than ``n`` words yield one whole-text shingle, so every
@@ -59,7 +64,7 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     )
 
 
-def shingles_sql(text_expr: str, n: int = 3) -> str:
+def shingles_sql(text_expr: str, n: int = SHINGLE_N) -> str:
     """DuckDB twin of :func:`shingles`."""
     ws = f"string_split_regex(lower(trim({text_expr})), '\\s+')"
     return (
@@ -176,7 +181,6 @@ def minhash_prepare(
     text_col: str = "text",
     k: int = 16,
     bands: int = 4,
-    n: int = 3,
 ) -> DataFrame:
     """(id, sig:array<long>, band_key exploded) — the LSH-ready table.
 
@@ -186,7 +190,7 @@ def minhash_prepare(
     rows = k // bands
     hs = df.select(
         F.col(id_col).alias("id"),
-        hashed_shingles(shingles(F.col(text_col), n)).alias("_hs"),
+        hashed_shingles(shingles(F.col(text_col))).alias("_hs"),
     )
     out = hs.select("id", minhash_signature_from_hashes(F.col("_hs"), k).alias("sig"))
     return out.select(
@@ -335,10 +339,9 @@ def jaccard_on_pairs(
     pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for (id_a, id_b) pairs."""
-    sh = df.select(F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh"))
+    sh = df.select(F.col(id_col).alias("id"), shingles(F.col(text_col)).alias("sh"))
     out = (
         pairs.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -616,11 +619,10 @@ def winnow_dedup_keep_sql(
     window: int = 4,
     min_shared: int = 2,
     max_doc_freq: int | None = None,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`winnow_dedup_keep`."""
     pairs = winnow_candidate_pairs_sql(
-        id_expr, text_expr, k, window, table, max_doc_freq
+        id_expr, text_expr, k, window, max_doc_freq
     )
     return f"""
 WITH pairs AS ({pairs}),
@@ -628,7 +630,7 @@ dropped AS (
   SELECT DISTINCT id_b AS id FROM pairs WHERE shared_fingerprints >= {min_shared}
 )
 SELECT DISTINCT d.{id_expr} AS keep_id
-FROM {table} d LEFT JOIN dropped ON d.{id_expr} = dropped.id
+FROM documents d LEFT JOIN dropped ON d.{id_expr} = dropped.id
 WHERE dropped.id IS NULL
 """
 
@@ -638,13 +640,12 @@ def winnow_fingerprints_sql(
     text_expr: str = "text",
     k: int = 8,
     window: int = 4,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`winnow_fingerprints` (full SELECT)."""
     B, M = WINNOW_BASE, WINNOW_MOD
     return f"""
 WITH g AS (
-  SELECT {id_expr} AS id, lower(trim({text_expr})) AS s FROM {table}
+  SELECT {id_expr} AS id, lower(trim({text_expr})) AS s FROM documents
 ),
 grams AS (
   SELECT id,
@@ -678,10 +679,9 @@ def winnow_fingerprints_exploded_sql(
     text_expr: str = "text",
     k: int = 8,
     window: int = 4,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`winnow_fingerprints_exploded`."""
-    inner = winnow_fingerprints_sql(id_expr, text_expr, k, window, table)
+    inner = winnow_fingerprints_sql(id_expr, text_expr, k, window)
     return f"""
 SELECT id, unnest(fingerprints) AS fingerprint
 FROM ({inner})
@@ -693,11 +693,10 @@ def winnow_candidate_pairs_sql(
     text_expr: str = "text",
     k: int = 8,
     window: int = 4,
-    table: str = "documents",
     max_doc_freq: int | None = None,
 ) -> str:
     """DuckDB twin of :func:`winnow_candidate_pairs`."""
-    exploded = winnow_fingerprints_exploded_sql(id_expr, text_expr, k, window, table)
+    exploded = winnow_fingerprints_exploded_sql(id_expr, text_expr, k, window)
     df_filter = ""
     if max_doc_freq is not None:
         df_filter = f""",
@@ -767,7 +766,6 @@ def decontaminate_sql(
     text_expr: str = "text",
     bench_cte: str = "benchmark",
     n: int = 8,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`decontaminate`; ``bench_cte`` must be a
     relation with a ``text`` column."""
@@ -775,7 +773,7 @@ def decontaminate_sql(
     bg = hashed_shingles_sql(shingles_sql("text", n))
     return f"""
 WITH doc_grams AS (
-  SELECT {id_expr} AS id, unnest(list_distinct({dg})) AS h FROM {table}
+  SELECT {id_expr} AS id, unnest(list_distinct({dg})) AS h FROM documents
 ),
 bench_grams AS (
   SELECT DISTINCT unnest({bg}) AS h FROM {bench_cte}
@@ -786,7 +784,7 @@ hits AS (
 )
 SELECT d.id, coalesce(n_hits > 0, false) AS contaminated,
        coalesce(n_hits, 0)::bigint AS n_hits
-FROM (SELECT DISTINCT {id_expr} AS id FROM {table}) d
+FROM (SELECT DISTINCT {id_expr} AS id FROM documents) d
 LEFT JOIN hits USING (id)
 """
 
@@ -860,13 +858,12 @@ def minhash_incremental_sql(
     index_cte: str,
     k: int = 16,
     bands: int = 4,
-    n: int = 3,
 ) -> str:
     """DuckDB twin of prepare(new) + prepare(index) +
     :func:`minhash_incremental_pairs`. ``new_cte``/``index_cte`` are CTE
     names with (id, text)."""
     rows = k // bands
-    sh = shingles_sql("text", n)
+    sh = shingles_sql("text")
     hs = hashed_shingles_sql(sh)
 
     def prep(src: str) -> str:
@@ -900,7 +897,6 @@ def containment_on_pairs(
     pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """One-sided containment |A∩B| / |A| for candidate pairs — the
     asymmetric companion to Jaccard (Broder's resemblance vs
@@ -913,7 +909,7 @@ def containment_on_pairs(
     ever meet, so cost is O(candidates), never O(n²).
     """
     sh = df.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh")
+        F.col(id_col).alias("id"), shingles(F.col(text_col)).alias("sh")
     )
     out = (
         pairs.join(

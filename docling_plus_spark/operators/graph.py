@@ -36,17 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_rounds: int = 20,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) with component = min node id in the component.
 
-    ``edges`` is an undirected edge list; isolated nodes absent from it
-    simply keep their own id (callers union them back, see
-    :func:`cc_dedup_keep`).
+    ``edges`` is an undirected ``(id_a, id_b)`` edge list; isolated
+    nodes absent from it simply keep their own id (callers union them
+    back, see :func:`cc_dedup_keep`). Label propagation stops at
+    convergence or after 20 rounds.
 
     Constraint propagation is disabled for the duration of the loop:
     Spark 4.1's ``localCheckpoint`` constraint rewrite throws
@@ -61,14 +57,12 @@ def connected_components(
     prev = spark.conf.get(_CONSTRAINT_CONF, "true")
     spark.conf.set(_CONSTRAINT_CONF, "false")
     try:
-        return _connected_components_loop(edges, src, dst, max_rounds)
+        return _connected_components_loop(edges)
     finally:
         spark.conf.set(_CONSTRAINT_CONF, prev)
 
 
-def _connected_components_loop(
-    edges: DataFrame, src: str, dst: str, max_rounds: int
-) -> DataFrame:
+def _connected_components_loop(edges: DataFrame) -> DataFrame:
     # current labeling as an edge set (node -> label), starting from the
     # symmetrized input; invariant: label <= node under min-aggregation
     # materialize the symmetrized edge set once: it is referenced by the
@@ -76,8 +70,8 @@ def _connected_components_loop(
     # recompute the upstream pipeline that produced the edges (e.g. the
     # whole minhash candidate generation)
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -90,7 +84,7 @@ def _connected_components_loop(
         )
     )
     labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    for _ in range(20):
         # each neighbor v of u inherits u's current label; min per node.
         # Both union legs get fresh aliases: a union leg sharing the
         # checkpointed LogicalRDD's attribute ids trips Spark 4.1's
@@ -144,7 +138,6 @@ def cc_dedup_keep(
     pairs: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    sim_col: str = "est_jaccard",
 ) -> DataFrame:
     """Connected-components dedup: one exemplar (min id) per
     near-duplicate cluster, plus every unpaired id.
@@ -153,7 +146,7 @@ def cc_dedup_keep(
     :func:`docling_plus_spark.operators.dedup.minhash_dedup_keep`:
     clusters are closed under similarity-edge reachability.
     """
-    e = pairs.filter(F.col(sim_col) >= threshold).select("id_a", "id_b")
+    e = pairs.filter(F.col("est_jaccard") >= threshold).select("id_a", "id_b")
     comp = connected_components(e)
     keep_in_comp = comp.groupBy("comp").agg(F.min("node").alias("keep_id"))
     ids = df.select(F.col(id_col).alias("id")).distinct()
@@ -170,10 +163,9 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
-    ``right_time <= left_time`` per key (``direction='backward'``, the
+    ``right_time <= left_time`` per key (the backward direction, the
     DuckDB/pandas ``merge_asof`` default).
 
     Plan: union both sides into one ordered stream per key and carry
@@ -183,8 +175,6 @@ def asof_join(
     an exactly-simultaneous right row IS visible to the left row,
     matching ASOF semantics.
     """
-    if direction != "backward":
-        raise ValueError("only direction='backward' is implemented")
     lcols = [c for c in left.columns]
     tagged_l = left.select(
         F.col(on).alias("_k"),
@@ -227,7 +217,6 @@ def cc_dedup_keep_best(
     quality: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    sim_col: str = "est_jaccard",
     score_col: str = "score",
 ) -> DataFrame:
     """Quality-aware exemplar selection: keep the *best* doc per
@@ -249,7 +238,7 @@ def cc_dedup_keep_best(
     table is |paired docs| rows, far smaller than the corpus), one
     max_by aggregation with map-side partials.
     """
-    e = pairs.filter(F.col(sim_col) >= threshold).select("id_a", "id_b")
+    e = pairs.filter(F.col("est_jaccard") >= threshold).select("id_a", "id_b")
     comp = connected_components(e)
     q = quality.select(
         F.col(id_col).alias("node"), F.col(score_col).alias("score")
@@ -296,11 +285,9 @@ def hyperball_registers(
     edges: DataFrame,
     m: int = 16,
     rounds: int = 4,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """``(node, bucket, register)`` — HyperLogLog registers of each
-    node's out-ball of radius ``rounds``.
+    node's out-ball of radius ``rounds`` over ``(src, dst)`` edges.
 
     HyperBall is how web-graph centralities are actually computed at
     10^12 nodes (Boldi & Vigna 2013; Common Crawl's published harmonic
@@ -326,7 +313,7 @@ def hyperball_registers(
     prev = spark.conf.get(_CONSTRAINT_CONF, "true")
     spark.conf.set(_CONSTRAINT_CONF, "false")
     try:
-        return _hyperball_loop(edges, m, rounds, src, dst)
+        return _hyperball_loop(edges, m, rounds)
     finally:
         spark.conf.set(_CONSTRAINT_CONF, prev)
 
@@ -346,12 +333,10 @@ def _hb_rho(h: Column, m: int) -> Column:
     ).cast("int")
 
 
-def _hyperball_loop(
-    edges: DataFrame, m: int, rounds: int, src: str, dst: str
-) -> DataFrame:
+def _hyperball_loop(edges: DataFrame, m: int, rounds: int) -> DataFrame:
     from docling_plus_spark.functions.expressions import md5_long
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

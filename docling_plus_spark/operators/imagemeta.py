@@ -172,7 +172,7 @@ def _le32(col: str, pos: int) -> Column:
     )
 
 
-def image_dims_header(media: DataFrame, col: str = "media") -> DataFrame:
+def image_dims_header(media: DataFrame) -> DataFrame:
     """(media_id, format, width, height, keep): dimensions from fixed
     header offsets, the size/aspect gate as a column — all whole-stage
     codegen, zero Python, no decode.
@@ -184,16 +184,16 @@ def image_dims_header(media: DataFrame, col: str = "media") -> DataFrame:
     Anything else (including truncated headers) → format
     'unrecognized', NULL dims — errors are rows, never failures.
     """
-    hexsig8 = F.hex(F.substring(F.col(col), 1, 8))
-    hexsig6 = F.hex(F.substring(F.col(col), 1, 6))
-    hexsig2 = F.hex(F.substring(F.col(col), 1, 2))
-    n = F.length(F.col(col))
+    hexsig8 = F.hex(F.substring(F.col("media"), 1, 8))
+    hexsig6 = F.hex(F.substring(F.col("media"), 1, 6))
+    hexsig2 = F.hex(F.substring(F.col("media"), 1, 2))
+    n = F.length(F.col("media"))
 
     is_png = (hexsig8 == "89504E470D0A1A0A") & (n >= 24)
     is_gif = hexsig6.isin("474946383761", "474946383961") & (n >= 10)
     is_bmp = (hexsig2 == "424D") & (n >= 26)
 
-    bmp_h_raw = _le32(col, 23)
+    bmp_h_raw = _le32("media", 23)
     bmp_h = F.when(
         bmp_h_raw >= F.lit(2147483648), F.lit(4294967296) - bmp_h_raw
     ).otherwise(bmp_h_raw)
@@ -205,13 +205,13 @@ def image_dims_header(media: DataFrame, col: str = "media") -> DataFrame:
         .otherwise(F.lit("unrecognized"))
     )
     width = (
-        F.when(is_png, _be32(col, 17))
-        .when(is_gif, _le16(col, 7))
-        .when(is_bmp, _le32(col, 19))
+        F.when(is_png, _be32("media", 17))
+        .when(is_gif, _le16("media", 7))
+        .when(is_bmp, _le32("media", 19))
     )
     height = (
-        F.when(is_png, _be32(col, 21))
-        .when(is_gif, _le16(col, 9))
+        F.when(is_png, _be32("media", 21))
+        .when(is_gif, _le16("media", 9))
         .when(is_bmp, bmp_h)
     )
     keep = (
@@ -243,9 +243,9 @@ def bmp_header_dims(col: str = "media") -> tuple[Column, Column]:
 # ---------------------------------------------------------------------------
 # DuckDB twin: replays the dimension formula, no byte parsing
 
-def image_dims_sql(table: str = "documents") -> str:
+def image_dims_sql() -> str:
     return f"""
-WITH ids AS (SELECT doc_id AS i FROM {table}),
+WITH ids AS (SELECT doc_id AS i FROM documents),
 m AS (
   SELECT i, i % {W_MOD} + 1 AS w, i % {H_MOD} + 1 AS h,
          i % {CORRUPT_MOD} = {CORRUPT_RES} AS corrupt,

@@ -26,12 +26,7 @@ _ALT_RE = r"""(?is)\balt\s*=\s*["']([^"']*)["']"""
 MIN_ALT_CHARS = 5
 
 
-def image_alt_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def image_alt_pairs(df: DataFrame) -> DataFrame:
     """(id, img_idx, image_url, alt_text) — caption-bearing images.
 
     ``image_url`` is resolved: absolute kept, protocol-relative gets
@@ -45,13 +40,13 @@ def image_alt_pairs(
     resolvers agree on semantics; keep them in sync if either changes.
     """
     tags = df.select(
-        F.col(id_col).alias("id"),
-        F.col(url_col).alias("page_url"),
+        F.col("doc_id").alias("id"),
+        F.col("url").alias("page_url"),
         # F.lit pattern (not an F.expr SQL literal): the regex contains
         # \b, which a Spark SQL single-quoted string would eat as a
         # backspace escape
         F.posexplode(
-            F.regexp_extract_all(F.col(html_col), F.lit(_IMG_RE), F.lit(0))
+            F.regexp_extract_all(F.col("html"), F.lit(_IMG_RE), F.lit(0))
         ).alias("raw_idx", "tag"),
     )
     src = F.regexp_extract(F.col("tag"), _SRC_RE, 1)

@@ -43,11 +43,7 @@ _HREF_DQ = r'(?i)<a\s[^>]*?href\s*=\s*"([^"]*)"'
 _HREF_SQ = r"(?i)<a\s[^>]*?href\s*=\s*'([^']*)'"
 
 
-def extract_outlinks(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_outlinks(pages: DataFrame) -> DataFrame:
     """Page rows → ``(src, dst)`` outlink edges, absolute-resolved.
 
     Resolution rules (F5 family, same as the url_resolve expression):
@@ -56,12 +52,12 @@ def extract_outlinks(
     relative paths joined with the page's directory. Fragments are
     stripped; empty hrefs dropped.
     """
-    s = F.col(html_col).cast("string")
+    s = F.col("html").cast("string")
     hrefs = F.concat(
         F.regexp_extract_all(s, F.lit(_HREF_DQ), F.lit(1)),
         F.regexp_extract_all(s, F.lit(_HREF_SQ), F.lit(1)),
     )
-    out = pages.select(F.col(url_col).alias("src"), F.explode(hrefs).alias("href"))
+    out = pages.select(F.col("url").alias("src"), F.explode(hrefs).alias("href"))
     href = F.regexp_replace(F.col("href"), r"#.*$", "")
     return (
         out.where(href != "")
@@ -83,11 +79,7 @@ def _resolve_href(href: Column, src: Column) -> Column:
     )
 
 
-def extract_anchors(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """Page rows → ``(src, dst, anchor)`` edges with anchor text.
 
     The WAT layer's second payload: the text *inside* each ``<a>`` tag,
@@ -99,7 +91,7 @@ def extract_anchors(
     group — the engine returns one group per call) zipped positionally,
     then explode + resolve. No Python, no shuffle.
     """
-    s = F.col(html_col).cast("string")
+    s = F.col("html").cast("string")
 
     def pairs(pat: str) -> Column:
         return F.zip_with(
@@ -109,7 +101,7 @@ def extract_anchors(
         )
 
     out = pages.select(
-        F.col(url_col).alias("src"),
+        F.col("url").alias("src"),
         F.explode(F.concat(pairs(_A_PAIR_DQ), pairs(_A_PAIR_SQ))).alias("p"),
     )
     href = F.regexp_replace(F.col("p.href"), r"#.*$", "")
@@ -163,17 +155,13 @@ def base_dir_of(url: Column) -> Column:
     return F.regexp_replace(url, r"[^/]*$", "")
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 8,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """(node, rank) after ``iterations`` damped-PageRank rounds.
+def pagerank(edges: DataFrame, iterations: int = 8) -> DataFrame:
+    """(node, rank) after ``iterations`` damped-PageRank rounds over
+    ``(src, dst)`` edges.
 
     ``rank_0 = 1/N``; ``rank_{k+1}(v) = (1-d)/N + d * Σ_{u→v}
-    rank_k(u)/outdeg(u)``. Nodes are the union of edge endpoints.
+    rank_k(u)/outdeg(u)`` with damping d = 0.85. Nodes are the union of
+    edge endpoints.
     See module docstring for the scale shape.
     """
     spark = edges.sparkSession
@@ -181,15 +169,14 @@ def pagerank(
     prev = spark.conf.get(_CONSTRAINT_CONF, "true")
     spark.conf.set(_CONSTRAINT_CONF, "false")
     try:
-        return _pagerank_loop(edges, iterations, damping, src, dst)
+        return _pagerank_loop(edges, iterations)
     finally:
         spark.conf.set(_CONSTRAINT_CONF, prev)
 
 
-def _pagerank_loop(
-    edges: DataFrame, iterations: int, damping: float, src: str, dst: str
-) -> DataFrame:
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+def _pagerank_loop(edges: DataFrame, iterations: int) -> DataFrame:
+    damping = 0.85
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -235,11 +222,7 @@ _META_PROP = (
 )
 
 
-def extract_head_meta(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_head_meta(pages: DataFrame) -> DataFrame:
     """``(url, title, meta_description, og_title, canonical, html_lang)``.
 
     Common Crawl's WAT records carry exactly this per-page head
@@ -253,9 +236,9 @@ def extract_head_meta(
     the DOM-parsing backend (html/backend.py) is the fallback when
     exactness beats throughput.
     """
-    s = F.col(html_col).cast("string")
+    s = F.col("html").cast("string")
     return pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         # NB: Spark's trim() strips only ' ' — titles wrap across
         # lines, so trim all leading/trailing whitespace by regex
         F.regexp_replace(
@@ -281,8 +264,6 @@ def extract_head_meta(
 def frontier_schedule(
     candidates: DataFrame,
     per_host_per_round: int = 4,
-    url_col: str = "url",
-    priority_col: str = "priority",
 ) -> DataFrame:
     """``(url, host, host_rank, fetch_round)`` — a politeness-bounded
     crawl schedule.
@@ -307,15 +288,15 @@ def frontier_schedule(
     """
     from pyspark.sql.window import Window
 
-    host = F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
     w = Window.partitionBy("host").orderBy(
-        F.col(priority_col).desc(), F.col(url_col)
+        F.col("priority").desc(), F.col("url")
     )
     return (
         candidates.select(
-            F.col(url_col).alias("url"),
+            "url",
             host.alias("host"),
-            F.col(priority_col).alias("priority"),
+            "priority",
         )
         .withColumn("host_rank", F.row_number().over(w) - 1)
         .select(
@@ -329,12 +310,7 @@ def frontier_schedule(
     )
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999): ``iterations`` rounds of
     auth(v) = Σ_{u→v} hub(u) then hub(u) = Σ_{u→v} auth(v), each vector
     max-normalized and rounded to 6 decimals per round so the unrolled
@@ -351,17 +327,13 @@ def hits(
     prev = spark.conf.get(conf, "true")
     spark.conf.set(conf, "false")
     try:
-        return _hits_loop(edges, iterations, src, dst)
+        return _hits_loop(edges, iterations)
     finally:
         spark.conf.set(conf, prev)
 
 
-def _hits_loop(
-    edges: DataFrame, iterations: int, src: str, dst: str
-) -> DataFrame:
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
+def _hits_loop(edges: DataFrame, iterations: int) -> DataFrame:
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

@@ -285,10 +285,8 @@ def resize_bmp(blob: bytes, out_w: int, out_h: int):
     return bytes(header + img), float(means[2]), float(means[1]), float(means[0])
 
 
-def media_resize_stage(
-    media: DataFrame, out_w: int = RESIZE_W, out_h: int = RESIZE_H
-) -> DataFrame:
-    """Resize every image to (out_w, out_h); non-images become
+def media_resize_stage(media: DataFrame) -> DataFrame:
+    """Resize every image to (RESIZE_W, RESIZE_H); non-images become
     ``not_image`` rows, corrupt bytes ``decode_error`` rows."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -305,15 +303,15 @@ def media_resize_stage(
                 else:
                     try:
                         out, mr, mg, mb = resize_bmp(
-                            bytes(blob or b""), out_w, out_h
+                            bytes(blob or b""), RESIZE_W, RESIZE_H
                         )
                     except Exception:  # noqa: BLE001 — corrupt → row
                         status = "decode_error"
                 ok = status == "resized"
                 rows["media_id"].append(mid)
                 rows["status"].append(status)
-                rows["width"].append(out_w if ok else 0)
-                rows["height"].append(out_h if ok else 0)
+                rows["width"].append(RESIZE_W if ok else 0)
+                rows["height"].append(RESIZE_H if ok else 0)
                 rows["mean_r"].append(mr if ok else None)
                 rows["mean_g"].append(mg if ok else None)
                 rows["mean_b"].append(mb if ok else None)
@@ -323,14 +321,14 @@ def media_resize_stage(
     return media.mapInPandas(fn, RESIZE_SCHEMA)
 
 
-def media_resize_oracle_sql(table: str = "documents") -> str:
+def media_resize_oracle_sql() -> str:
     """DuckDB twin of ``media_resize_stage(synth_real_media(...))``
     minus the opaque ``media_out`` bytes: replays the generative pixel
     formula at the nearest-neighbour sample coordinates.  (The bytes
     themselves are round-trip-proven Spark-side in
     tests/test_media_codecs.py — SQL cannot re-encode a BMP.)"""
     return f"""
-WITH ids AS (SELECT doc_id AS i FROM {table}),
+WITH ids AS (SELECT doc_id AS i FROM documents),
 bmp AS (
   SELECT i, i % {BMP_W_MOD} + 1 AS w, i % {BMP_H_MOD} + 1 AS h
   FROM ids WHERE i % 2 = 0 AND i % 97 != 3
@@ -362,12 +360,12 @@ FROM ids WHERE i % 2 = 1 AND i % 97 != 3
 """
 
 
-def media_stats_oracle_sql(table: str = "documents") -> str:
+def media_stats_oracle_sql() -> str:
     """DuckDB twin: replays the generative formulas (no decoder) —
     pixel channel means over the (x, y) grid and sample RMS/ZCR over
     the series, matching the Spark side's decoded values to 4 dp."""
     return f"""
-WITH ids AS (SELECT doc_id AS i FROM {table}),
+WITH ids AS (SELECT doc_id AS i FROM documents),
 bmp AS (
   SELECT i,
          i % {BMP_W_MOD} + 1 AS w, i % {BMP_H_MOD} + 1 AS h

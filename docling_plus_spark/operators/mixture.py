@@ -105,9 +105,7 @@ def mixture_plan(
 
 def mixture_plan_sql(
     weights: dict[str, float],
-    source_col: str = "source",
     ntok_expr: str = "n_chars",
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`mixture_plan`."""
     # ::double on the weight literals: a bare 0.3 in VALUES parses as
@@ -119,9 +117,9 @@ def mixture_plan_sql(
     return f"""
 WITH w(source, target_frac) AS (VALUES {wm}),
 tot AS (
-  SELECT {source_col} AS source, count(*)::bigint AS n_docs,
+  SELECT source AS source, count(*)::bigint AS n_docs,
          sum({ntok_expr})::bigint AS n_tokens
-  FROM {table} GROUP BY {source_col}
+  FROM documents GROUP BY source
 ),
 enr AS (
   SELECT t.source, n_docs, n_tokens,

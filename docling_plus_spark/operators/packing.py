@@ -40,13 +40,12 @@ def distributed_prefix_sum(
     order_cols: list[str],
     value_cols: list[str],
     inclusive: bool = False,
-    prefix: str = "cum_",
 ) -> DataFrame:
     """Two-phase distributed prefix sum (the module-docstring pattern,
     factored out so every total-order cumulative in the package shares
     one audited implementation).
 
-    Returns ``df``'s columns plus ``{prefix}{c}`` for each value column:
+    Returns ``df``'s columns plus ``cum_{c}`` for each value column:
     the running sum of ``c`` over rows ordered by ``order_cols``
     (exclusive of the current row unless ``inclusive``). Ties in
     ``order_cols`` must be broken by the caller (include a unique id as
@@ -100,7 +99,7 @@ def distributed_prefix_sum(
     out = d.join(F.broadcast(part_offsets), "_pid")
     for c in value_cols:
         out = out.withColumn(
-            f"{prefix}{c}",
+            f"cum_{c}",
             F.col(f"_poff_{c}")
             + F.coalesce(F.sum(c).over(w_intra), F.lit(0)),
         )
@@ -172,17 +171,12 @@ def sequence_pack(
     )
 
 
-def sequence_pack_sql(
-    budget: int,
-    id_expr: str = "doc_id",
-    ntok_expr: str = "n_tokens",
-    table: str = "t",
-) -> str:
+def sequence_pack_sql(budget: int, table: str = "t") -> str:
     """DuckDB twin of :func:`sequence_pack` (plain global window — the
     oracle does not need to scale)."""
     return f"""
 WITH d AS (
-  SELECT {id_expr} AS id, {ntok_expr} AS n FROM {table} WHERE {ntok_expr} > 0
+  SELECT doc_id AS id, n_tokens AS n FROM {table} WHERE n_tokens > 0
 ),
 o AS (
   SELECT id, n,
@@ -205,8 +199,6 @@ FROM s
 
 def stride_windows(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     length: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -217,7 +209,7 @@ def stride_windows(
 
     Output: (id, win_idx, start_tok, n_toks, window_md5)."""
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
     )
     wins = F.transform(
         F.sequence(
@@ -237,7 +229,7 @@ def stride_windows(
         ),
     )
     out = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).alias("n"),
         F.explode(wins).alias("p"),
     ).filter(F.col("p.start_tok") < F.col("n"))
@@ -250,20 +242,14 @@ def stride_windows(
     )
 
 
-def stride_windows_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-    length: int = 64,
-    stride: int = 48,
-) -> str:
+def stride_windows_sql(length: int = 64, stride: int = 48) -> str:
     """DuckDB twin of :func:`stride_windows`."""
     return rf"""
 WITH toks AS (
-  SELECT {id_expr} AS id,
-         list_filter(string_split_regex(lower({text_expr}), '\s+'),
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(lower(text), '\s+'),
                      t -> t <> '') AS ws
-  FROM {table}
+  FROM documents
 ),
 wins AS (
   SELECT id, i::int AS win_idx, (i * {stride})::bigint AS start_tok,
@@ -283,7 +269,6 @@ FROM wins
 def shard_manifest(
     df: DataFrame,
     target_bytes: int,
-    id_col: str = "doc_id",
     nbytes_col: str = "n_bytes",
 ) -> DataFrame:
     """(shard_id, id, doc_seq, byte_off, n_bytes) — WebDataset-style
@@ -303,7 +288,7 @@ def shard_manifest(
     dropped.
     """
     offs = distributed_prefix_sum(
-        df.select(F.col(id_col).alias("id"), F.col(nbytes_col).alias("n"))
+        df.select(F.col("doc_id").alias("id"), F.col(nbytes_col).alias("n"))
         .where(F.col("n") > 0),
         ["id"],
         ["n"],

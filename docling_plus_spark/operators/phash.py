@@ -167,7 +167,7 @@ def make_seed_bmp(seed: int) -> bytes:
     return bytes(header + img)
 
 
-def attach_seed_images(df: DataFrame, seed_col: str = "seed") -> DataFrame:
+def attach_seed_images(df: DataFrame) -> DataFrame:
     """Append a ``media`` binary column: one real BMP per row generated
     from the row's seed.  Narrow mapInPandas — zero shuffle."""
     schema = T.StructType(
@@ -178,24 +178,24 @@ def attach_seed_images(df: DataFrame, seed_col: str = "seed") -> DataFrame:
         for pdf in batches:
             pdf = pdf.copy()
             pdf["media"] = [
-                make_seed_bmp(int(s)) for s in pdf[seed_col]
+                make_seed_bmp(int(s)) for s in pdf["seed"]
             ]
             yield pdf
 
     return df.mapInPandas(fn, schema)
 
 
-def dhash_from_seed_sql(src: str, key: str = "media_id") -> str:
+def dhash_from_seed_sql(src: str) -> str:
     """CTE chain (to splice after a ``WITH`` list) computing the dHash
     of the role-0 formula image for each row of CTE ``src``, which must
-    expose ``{key}`` and ``seed``.  Ends in CTE ``hashes`` with columns
-    ({key}, width, height, dhash)."""
+    expose ``media_id`` and ``seed``.  Ends in CTE ``hashes`` with columns
+    (media_id, width, height, dhash)."""
     return f"""
 simg AS (
-  SELECT {key}, seed, seed % 8 + 9 AS w, seed % 5 + 8 AS h FROM {src}
+  SELECT media_id, seed, seed % 8 + 9 AS w, seed % 5 + 8 AS h FROM {src}
 ),
 sgrid AS (
-  SELECT p.{key}, p.w, p.h, x.x, y.y,
+  SELECT p.media_id, p.w, p.h, x.x, y.y,
          ((p.seed + 3 * sx + 7 * sy + sx * sy) % {GRAY_MOD})
        + ((2 * p.seed + 5 * sx + sy + 3 * sx * sy) % {GRAY_MOD})
        + ((3 * p.seed + sx + 11 * sy + 2 * sx * sy) % {GRAY_MOD}) AS gray
@@ -206,16 +206,16 @@ sgrid AS (
                              (y.y * p.h) // {DH_H} AS sy) s
 ),
 sbits AS (
-  SELECT a.{key}, a.w, a.h, a.x, a.y,
+  SELECT a.media_id, a.w, a.h, a.x, a.y,
          CASE WHEN b.gray > a.gray THEN '1' ELSE '0' END AS bit
   FROM sgrid a
-  JOIN sgrid b ON a.{key} = b.{key} AND a.y = b.y AND b.x = a.x + 1
+  JOIN sgrid b ON a.media_id = b.media_id AND a.y = b.y AND b.x = a.x + 1
 ),
 hashes AS (
-  SELECT {key},
+  SELECT media_id,
          max(w)::int AS width, max(h)::int AS height,
          string_agg(bit, '' ORDER BY y, x) AS dhash
-  FROM sbits GROUP BY {key}
+  FROM sbits GROUP BY media_id
 )"""
 
 
@@ -295,7 +295,13 @@ def dhash_dedup(hashes: DataFrame) -> DataFrame:
 N_BANDS, BAND_BITS = 8, 8        # 8 bands × 8 bits over the 64-bit hash
 
 
-def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
+#: Hamming radius of the dHash near-duplicate pairs
+DHASH_MAX_HAMMING = 6
+
+
+def dhash_near_pairs(
+    hashes: DataFrame, max_hamming: int = DHASH_MAX_HAMMING
+) -> DataFrame:
     """(id_a, id_b, hamming): exact-dup-class representative pairs
     whose dHashes differ in 1..``max_hamming`` of 64 bits — the
     perceptual near-match the exact-hash groupBy misses (re-encodes
@@ -350,10 +356,10 @@ def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
 
 
-def dhash_near_pairs_sql(table: str = "documents", max_hamming: int = 6) -> str:
+def dhash_near_pairs_sql() -> str:
     """Twin of ``dhash_near_pairs(image_dhash(synth_pair_images(...)))``."""
     return (
-        _dhash_cte(table)
+        _dhash_cte()
         + f""",
 reps AS (
   SELECT dhash, min(media_id) AS media_id FROM hashes GROUP BY dhash
@@ -378,7 +384,7 @@ SELECT id_a, id_b,
 FROM cand
 WHERE len(list_filter(range(1, 65),
                       i -> substr(ha, i::int, 1) != substr(hb, i::int, 1)))
-      <= {max_hamming}
+      <= {DHASH_MAX_HAMMING}
 """
     )
 
@@ -386,10 +392,10 @@ WHERE len(list_filter(range(1, 65),
 # ---------------------------------------------------------------------------
 # DuckDB twins: replay the generative math, no decoder
 
-def _dhash_cte(table: str) -> str:
+def _dhash_cte() -> str:
     """Shared CTE chain ending in ``hashes`` (decoded rows only)."""
     return f"""
-WITH ids AS (SELECT doc_id AS i FROM {table}),
+WITH ids AS (SELECT doc_id AS i FROM documents),
 img AS (
   SELECT i, i - (i % 3) AS g, i % 3 AS role FROM ids WHERE i % 97 != 3
 ),
@@ -432,24 +438,24 @@ hashes AS (
 """
 
 
-def image_dhash_sql(table: str = "documents") -> str:
+def image_dhash_sql() -> str:
     """Twin of ``image_dhash(synth_pair_images(...))``."""
     return (
-        _dhash_cte(table)
-        + f"""
+        _dhash_cte()
+        + """
 SELECT * FROM hashes
 UNION ALL
 SELECT i AS media_id, 'decode_error' AS status, 0 AS width, 0 AS height,
        NULL AS dhash
-FROM (SELECT doc_id AS i FROM {table}) WHERE i % 97 = 3
+FROM (SELECT doc_id AS i FROM documents) WHERE i % 97 = 3
 """
     )
 
 
-def dhash_dedup_sql(table: str = "documents") -> str:
+def dhash_dedup_sql() -> str:
     """Twin of ``dhash_dedup(image_dhash(synth_pair_images(...)))``."""
     return (
-        _dhash_cte(table)
+        _dhash_cte()
         + """
 SELECT media_id, dhash,
        media_id != min(media_id) OVER (PARTITION BY dhash) AS is_dup

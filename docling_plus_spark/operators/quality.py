@@ -176,7 +176,7 @@ def gopher_signals(
 
 
 def gopher_signals_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
+    id_expr: str = "doc_id", text_expr: str = "text"
 ) -> str:
     """DuckDB twin of :func:`gopher_signals` (full SELECT, same names)."""
     stop_list = ", ".join(f"'{s}'" for s in GOPHER_STOPWORDS)
@@ -187,7 +187,7 @@ WITH base AS (
                 w -> length(w) > 0) AS ws,
     list_filter(list_transform(string_split({text_expr}, chr(10)), l -> trim(l)),
                 l -> length(l) > 0) AS ls
-  FROM {table}
+  FROM documents
 ),
 m AS (
   SELECT id, t, ws, ls,
@@ -307,9 +307,7 @@ def c4_clean(
     )
 
 
-def c4_clean_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
-) -> str:
+def c4_clean_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
     """DuckDB twin of :func:`c4_clean` (full SELECT, same names)."""
     line_ok = (
         f"len(list_filter(regexp_split_to_array(l, '\\s+'), "
@@ -322,7 +320,7 @@ WITH base AS (
   SELECT {id_expr} AS id, {text_expr} AS t,
     list_filter(list_transform(string_split({text_expr}, chr(10)),
                 l -> trim(l)), l -> length(l) > 0) AS ls
-  FROM {table}
+  FROM documents
 ),
 k AS (
   SELECT id, t, ls, list_filter(ls, l -> {line_ok}) AS kept
@@ -401,32 +399,26 @@ def ccnet_buckets(
     )
 
 
-def ccnet_buckets_by_cutpoints(
-    scored: DataFrame,
-    id_col: str = "id",
-    lang_col: str = "lang",
-    score_col: str = "mean_nll",
-    accuracy: int = 10_000,
-) -> DataFrame:
+def ccnet_buckets_by_cutpoints(scored: DataFrame) -> DataFrame:
     """Scale variant: approx-quantile cutpoints, broadcast-joined.
 
     One map-side-combined aggregation computes the per-language 1/3 and
-    2/3 approximate percentiles (GK sketch, ``accuracy`` inverse-eps);
+    2/3 approximate percentiles (GK sketch, accuracy 10,000 inverse-eps);
     the cutpoint table is O(#languages) rows, broadcast back, and
     bucket assignment is a narrow comparison — no per-lang sort
     anywhere, so the plan is two scans + one broadcast join at any
     corpus size. Buckets near the cutpoints may differ from the exact
-    variant by the sketch's rank error (1/accuracy of the population).
+    variant by the sketch's rank error (1/10,000 of the population).
     """
-    cuts = scored.groupBy(lang_col).agg(
-        F.percentile_approx(score_col, [1.0 / 3, 2.0 / 3], accuracy).alias("cuts")
+    cuts = scored.groupBy("lang").agg(
+        F.percentile_approx("mean_nll", [1.0 / 3, 2.0 / 3], 10_000).alias("cuts")
     )
-    s = F.col(score_col)
+    s = F.col("mean_nll")
     return (
-        scored.join(F.broadcast(cuts), lang_col)
+        scored.join(F.broadcast(cuts), "lang")
         .select(
-            F.col(id_col).alias("id"),
-            F.col(lang_col).alias("lang"),
+            "id",
+            "lang",
             s.alias("score"),
             F.when(s <= F.element_at("cuts", 1), F.lit("head"))
             .when(s <= F.element_at("cuts", 2), F.lit("middle"))
@@ -577,7 +569,6 @@ def gopher_ngram_repetition(
 def gopher_ngram_repetition_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`gopher_ngram_repetition`."""
     gram_selects = []
@@ -608,7 +599,7 @@ WITH base AS (
   SELECT {id_expr} AS id,
          string_split_regex(trim({text_expr}), '\\s+') AS toks,
          length(array_to_string(string_split_regex(trim({text_expr}), '\\s+'), ' ')) AS total_chars
-  FROM {table}
+  FROM documents
 ),
 grams AS ({grams}
 ),
@@ -670,13 +661,16 @@ def _weight(w: Column) -> Column:
     )
 
 
+#: sigmoid gain of both hash classifiers
+CLASSIFIER_GAIN = 4.0
+
+
 def hash_classifier(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gain: float = 4.0,
 ) -> DataFrame:
-    """Score = sigmoid(gain * mean word weight); label = score >= 0.5.
+    """Score = sigmoid(4 * mean word weight); label = score >= 0.5.
 
     Output: (id, n_words, score, label) for documents with >= 1 word.
     Pure column expressions (split -> filter -> transform -> aggregate),
@@ -712,7 +706,7 @@ def hash_classifier(
         ).alias("s"),
     ).select("id", F.col("s.n_words").alias("n_words"), F.col("s.m").alias("m"))
     score = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(gain) * F.col("m"))), 6
+        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(CLASSIFIER_GAIN) * F.col("m"))), 6
     )
     return (
         out.filter(F.col("n_words") > 0)
@@ -729,7 +723,6 @@ def hash_classifier_sql(
     id_expr: str,
     text_expr: str,
     table: str = "documents",
-    gain: float = 4.0,
 ) -> str:
     """DuckDB twin of :func:`hash_classifier` (identical hash, weight
     formula, mean, sigmoid, rounding)."""
@@ -753,8 +746,8 @@ s AS (
   FROM w
 )
 SELECT id, n_words::bigint AS n_words,
-       round(1.0 / (1.0 + exp(-{gain} * m)), 6) AS score,
-       round(1.0 / (1.0 + exp(-{gain} * m)), 6) >= 0.5 AS label
+       round(1.0 / (1.0 + exp(-{CLASSIFIER_GAIN} * m)), 6) AS score,
+       round(1.0 / (1.0 + exp(-{CLASSIFIER_GAIN} * m)), 6) >= 0.5 AS label
 FROM s WHERE n_words > 0
 """
 
@@ -947,18 +940,12 @@ def lang_consistency(
     ).select("id", "lang", "s.*")
 
 
-def lang_consistency_sql(
-    langid_sql_expr: str,
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    lang_expr: str = "lang",
-    table: str = "documents",
-) -> str:
+def lang_consistency_sql(langid_sql_expr: str) -> str:
     """DuckDB twin of :func:`lang_consistency`.  ``langid_sql_expr`` is
     the caller-supplied SQL twin of ``langid_expr`` over the same text
     (it lives with the langid oracle, not here)."""
     expected = "CASE " + " ".join(
-        f"WHEN {lang_expr} = '{lg}' THEN '{sc}'"
+        f"WHEN lang = '{lg}' THEN '{sc}'"
         for lg, sc in EXPECTED_SCRIPT.items()
     ) + " ELSE NULL END"
     # evaluated in the outer SELECT, over sig's aliased `lang` column
@@ -967,11 +954,11 @@ def lang_consistency_sql(
     ) + ")"
     return f"""
 WITH sig AS (
-  SELECT {id_expr} AS id, {lang_expr} AS lang,
+  SELECT doc_id AS id, lang AS lang,
          {langid_sql_expr} AS lang_pred,
-         {main_script_sql(text_expr)} AS main_script,
+         {main_script_sql("text")} AS main_script,
          {expected} AS expected
-  FROM {table}
+  FROM documents
 )
 SELECT id, lang, lang_pred, main_script,
        CASE WHEN expected IS NOT NULL AND main_script != 'other'
@@ -995,15 +982,13 @@ FROM sig
 # twin matches bit-for-bit.
 
 
-def flesch_reading_ease(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def flesch_reading_ease(df: DataFrame) -> DataFrame:
     """(id, n_words, n_sentences, n_syllables, flesch): 206.835 −
     1.015·(words/sentences) − 84.6·(syllables/words), round 4."""
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     ws = F.filter(F.split(t, r"\s+"), lambda w: F.length(w) > 0)
     out = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.element_at(
             F.transform(
                 F.array(ws),
@@ -1044,17 +1029,15 @@ def flesch_reading_ease(
     return out.filter(F.col("n_words") > 0).withColumn("flesch", flesch)
 
 
-def flesch_reading_ease_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
-) -> str:
-    return rf"""
+def flesch_reading_ease_sql() -> str:
+    return r"""
 WITH w AS (
-  SELECT {id_expr} AS id,
-         list_filter(string_split_regex(lower({text_expr}), '\s+'),
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(lower(text), '\s+'),
                      x -> length(x) > 0) AS ws,
-         greatest(len(regexp_extract_all(lower({text_expr}), '[.!?]+')), 1)
+         greatest(len(regexp_extract_all(lower(text), '[.!?]+')), 1)
            AS n_sentences
-  FROM {table}
+  FROM documents
 ),
 m AS (
   SELECT id, len(ws) AS n_words, n_sentences,

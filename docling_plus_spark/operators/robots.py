@@ -44,11 +44,7 @@ _ACC_T = (
 )
 
 
-def robots_rules(
-    robots: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-) -> DataFrame:
+def robots_rules(robots: DataFrame) -> DataFrame:
     """``(host, rules)`` — the ``*`` group's rules per host.
 
     ``rules`` is ``array<struct<allow, path>>`` in file order. Hosts
@@ -59,7 +55,7 @@ def robots_rules(
     # CR[LF] to LF first (Spark trim() strips spaces only, so a
     # surviving \r would otherwise poison rule paths), then strip
     # comments per line and drop blank lines.
-    raw = F.split(F.regexp_replace(F.col(body_col), "\r\n?", "\n"), "\n")
+    raw = F.split(F.regexp_replace(F.col("robots_txt"), "\r\n?", "\n"), "\n")
     lines = F.filter(
         F.transform(raw, lambda l: F.trim(F.regexp_replace(l, "#.*$", ""))),
         lambda l: l != "",
@@ -102,9 +98,7 @@ def robots_rules(
         F.array().cast(_RULES_T).alias("rules"),
     )
     folded = F.aggregate(lines, init.cast(_ACC_T), step)
-    return robots.select(
-        F.col(host_col).alias("host"), folded["rules"].alias("rules")
-    )
+    return robots.select("host", folded["rules"].alias("rules"))
 
 
 def _rule_pattern(path: Column) -> Column:
@@ -121,22 +115,16 @@ def _rule_pattern(path: Column) -> Column:
     )
 
 
-def robots_gate(
-    pages: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def robots_gate(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """``(url, host, path, allowed, matched_rule)`` per page.
 
     Longest-match wins (precedence = octet length of the path spec);
     equal lengths → allow wins; no match / unknown host → allowed.
     """
-    host = F.regexp_extract(F.col(url_col), r"^([a-z]+://[^/]+)", 1)
-    path = F.regexp_extract(F.col(url_col), r"^[a-z]+://[^/]+(/.*)?$", 1)
+    host = F.regexp_extract(F.col("url"), r"^([a-z]+://[^/]+)", 1)
+    path = F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)?$", 1)
     path = F.when(path == "", F.lit("/")).otherwise(path)
-    p = pages.select(
-        F.col(url_col).alias("url"), host.alias("host"), path.alias("path")
-    )
+    p = pages.select("url", host.alias("host"), path.alias("path"))
     joined = p.join(F.broadcast(rules), "host", "left")
     rr = F.coalesce(F.col("rules"), F.array().cast(_RULES_T))
     matched = F.filter(
@@ -249,11 +237,7 @@ SELECT host, kind, pos, loc, lastmod FROM (
 """
 
 
-def robots_sitemaps(
-    df: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-) -> DataFrame:
+def robots_sitemaps(df: DataFrame) -> DataFrame:
     """``Sitemap:`` directives from robots.txt (RFC 9309 §2.3 — the
     directive lives outside groups and is case-insensitive): one row
     per (host, pos, sitemap_url). This is how a crawler discovers the
@@ -265,12 +249,12 @@ def robots_sitemaps(
     # vanish (stripping \r would merge adjacent lines and silently lose
     # directives).
     locs = F.regexp_extract_all(
-        F.regexp_replace(F.col(robots_col), "\r\n?", "\n"),
+        F.regexp_replace(F.col("robots_txt"), "\r\n?", "\n"),
         F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)[ \t]*$"),
         1,
     )
     out = df.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.posexplode(locs).alias("pos", "sitemap_url"),
     )
     return out.select("host", F.col("pos").cast("int"), "sitemap_url")
@@ -289,14 +273,7 @@ FROM (
 """
 
 
-def recrawl_schedule(
-    crawled: DataFrame,
-    sitemap: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "fetched_ts",
-    loc_col: str = "loc",
-    lastmod_col: str = "lastmod_ts",
-) -> DataFrame:
+def recrawl_schedule(crawled: DataFrame, sitemap: DataFrame) -> DataFrame:
     """(url, action, fetched_ts, lastmod_ts) — incremental recrawl plan.
 
     Joins the crawl index against the sitemap set (the consumer of
@@ -312,12 +289,8 @@ def recrawl_schedule(
     small one per host — AQE picks the broadcast automatically when it
     fits.
     """
-    c = crawled.select(
-        F.col(url_col).alias("url"), F.col(ts_col).alias("fetched_ts")
-    )
-    s = sitemap.select(
-        F.col(loc_col).alias("url"), F.col(lastmod_col).alias("lastmod_ts")
-    )
+    c = crawled.select("url", "fetched_ts")
+    s = sitemap.select(F.col("loc").alias("url"), "lastmod_ts")
     j = c.join(s, "url", "full_outer")
     action = (
         F.when(F.col("fetched_ts").isNull(), F.lit("new"))
@@ -344,11 +317,7 @@ FROM ({crawled_sql}) c FULL OUTER JOIN ({sitemap_sql}) s USING (url)
 """
 
 
-def robots_crawl_delay(
-    robots: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-) -> DataFrame:
+def robots_crawl_delay(robots: DataFrame) -> DataFrame:
     """(host, crawl_delay) — the ``*`` group's Crawl-delay seconds.
 
     Crawl-delay is not in RFC 9309 but is honored by most major
@@ -359,7 +328,7 @@ def robots_crawl_delay(
     LAST valid directive in the ``*`` group wins, non-numeric values
     are ignored, hosts without one get NULL.
     """
-    raw = F.split(F.regexp_replace(F.col(body_col), "\r\n?", "\n"), "\n")
+    raw = F.split(F.regexp_replace(F.col("robots_txt"), "\r\n?", "\n"), "\n")
     lines = F.filter(
         F.transform(raw, lambda l: F.trim(F.regexp_replace(l, "#.*$", ""))),
         lambda l: l != "",
@@ -396,9 +365,7 @@ def robots_crawl_delay(
         F.lit(None).cast("double").alias("delay"),
     )
     folded = F.aggregate(lines, init.cast(acc_t), step)
-    return robots.select(
-        F.col(host_col).alias("host"), folded["delay"].alias("crawl_delay")
-    )
+    return robots.select("host", folded["delay"].alias("crawl_delay"))
 
 
 def robots_crawl_delay_sql(

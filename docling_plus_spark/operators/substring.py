@@ -52,19 +52,14 @@ def _tokens(text_col: Column) -> Column:
     return F.split(F.trim(text_col), "\\s+")
 
 
-def kgram_occurrences(
-    df: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def kgram_occurrences(df: DataFrame, k: int) -> DataFrame:
     """(id, pos, h): one row per token k-gram occurrence.
 
     ``pos`` is the 0-based token index of the k-gram's first token;
     documents shorter than ``k`` tokens emit nothing (they cannot
     contain a duplicated k-token span).
     """
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(0), F.size(toks) - F.lit(k)),
         lambda i: F.struct(
@@ -74,7 +69,7 @@ def kgram_occurrences(
     )
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.explode(
                 F.when(F.size(toks) >= k, grams).otherwise(
                     F.array().cast("array<struct<pos:int,h:bigint>>")
@@ -140,25 +135,20 @@ def _merge_spans(spans_sorted: Column) -> Column:
     )
 
 
-def strip_duplicate_substrings(
-    df: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def strip_duplicate_substrings(df: DataFrame, k: int = 10) -> DataFrame:
     """(id, clean_text, n_tokens, removed_tokens, dup_spans).
 
     Documents with no duplicated >=k-token span pass through with
     whitespace-normalized text and removed_tokens = 0.
     """
-    occ = kgram_occurrences(df, k, id_col, text_col)
+    occ = kgram_occurrences(df, k)
     spans = (
         duplicate_spans(occ, k)
         .groupBy("id")
         .agg(F.sort_array(F.collect_list(F.struct("start", "end"))).alias("spans"))
     )
-    toks = _tokens(F.col(text_col))
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    toks = _tokens(F.col("text"))
+    base = df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
     merged = _merge_spans(
         F.coalesce(
             F.col("spans"), F.array().cast("array<struct<start:int,end:int>>")
@@ -204,35 +194,25 @@ def strip_duplicate_substrings(
 # DuckDB twins
 
 
-def kgram_occurrences_sql(
-    k: int,
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
-    toks = f"string_split_regex(trim({text_expr}), '\\s+')"
+def kgram_occurrences_sql(k: int) -> str:
+    toks = "string_split_regex(trim(text), '\\s+')"
     return f"""
-SELECT {id_expr} AS id, p AS pos,
+SELECT doc_id AS id, p AS pos,
        ('0x' || substr(md5(array_to_string(toks[p+1:p+{k}], ' ')), 1, 15))::bigint AS h
-FROM (SELECT {id_expr}, {toks} AS toks, {text_expr} FROM {table}),
+FROM (SELECT doc_id, {toks} AS toks, text FROM documents),
      unnest(range(0, greatest(0, len(toks) - {k} + 1))) AS u(p)
 """
 
 
-def strip_duplicate_substrings_sql(
-    k: int = 10,
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def strip_duplicate_substrings_sql(k: int = 10) -> str:
     """DuckDB twin of :func:`strip_duplicate_substrings`.
 
     The oracle marks removed token indices with an exploded
     index-level anti-set instead of span merging (same result, simpler
     SQL; the oracle does not need to scale).
     """
-    occ = kgram_occurrences_sql(k, id_expr, text_expr, table)
-    toks = f"string_split_regex(trim({text_expr}), '\\s+')"
+    occ = kgram_occurrences_sql(k)
+    toks = "string_split_regex(trim(text), '\\s+')"
     return f"""
 WITH occ AS ({occ}),
 dup AS (
@@ -258,7 +238,7 @@ span_totals AS (
   ) GROUP BY id
 ),
 base AS (
-  SELECT {id_expr} AS id, {toks} AS toks FROM {table}
+  SELECT doc_id AS id, {toks} AS toks FROM documents
 ),
 tok AS (
   SELECT b.id, idx, b.toks[idx + 1] AS t

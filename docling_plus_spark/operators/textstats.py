@@ -70,13 +70,12 @@ def tfidf_topk_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
     k: int = 3,
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`tfidf_topk`."""
     return f"""
 WITH terms AS (
   SELECT {id_expr} AS id, t.term
-  FROM {table},
+  FROM documents,
        unnest(list_filter(string_split_regex(lower({text_expr}), '{TOKEN_SPLIT}'),
                           x -> x <> '')) AS t(term)
 ),
@@ -86,7 +85,7 @@ tf AS (
 dfreq AS (
   SELECT term, count(*) AS df FROM tf GROUP BY 1
 ),
-n AS (SELECT count(DISTINCT {id_expr}) AS n FROM {table}),
+n AS (SELECT count(DISTINCT {id_expr}) AS n FROM documents),
 scored AS (
   SELECT tf.id, tf.term,
          round(tf.tf * ln(n.n::double / dfreq.df), 6) AS tfidf
@@ -173,12 +172,11 @@ def char_bigram_logprob(
 def char_bigram_logprob_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`char_bigram_logprob`."""
     return f"""
 WITH docs AS (
-  SELECT {id_expr} AS id, lower({text_expr}) AS s FROM {table}
+  SELECT {id_expr} AS id, lower({text_expr}) AS s FROM documents
 ),
 bg AS (
   SELECT id, substr(s, i, 2) AS bg
@@ -237,7 +235,6 @@ def inverted_index(
 def inverted_index_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    table: str = "documents",
     min_df: int = 1,
 ) -> str:
     """DuckDB twin of :func:`inverted_index` (same tokenizer contract
@@ -246,7 +243,7 @@ def inverted_index_sql(
 WITH raw AS (
   SELECT {id_expr} AS id,
          string_split_regex(lower({text_expr}), '[^a-z0-9]+') AS ts
-  FROM {table}
+  FROM documents
 ),
 -- position numbering over NON-EMPTY tokens only (split can emit ''
 -- at the boundaries): filter first, renumber with a window
@@ -421,15 +418,14 @@ GROUP BY 1, 2, 3
 # so the DuckDB twins match bit-for-bit.
 
 
-def char_entropy(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, n_chars, entropy): Shannon entropy in bits over the
-    document's character distribution. Explode → (id, char) counts →
-    per-id entropy; the shuffle carries (id, char, count) triples."""
+def char_entropy(df: DataFrame) -> DataFrame:
+    """(id, n_chars, entropy): Shannon entropy in bits over each
+    ``doc_id``'s character distribution of ``text``. Explode → (id, char)
+    counts → per-id entropy; the shuffle carries (id, char, count)
+    triples."""
     chars = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), "")).alias("c"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.col("text"), "")).alias("c"),
     ).filter(F.col("c") != "")
     counts = chars.groupBy("id", "c").agg(F.count("*").alias("k"))
     tot = counts.groupBy("id").agg(F.sum("k").alias("n"))
@@ -450,13 +446,11 @@ def char_entropy(
     )
 
 
-def char_entropy_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
-) -> str:
-    return f"""
+def char_entropy_sql() -> str:
+    return """
 WITH ch AS (
-  SELECT {id_expr} AS id, c, count(*) AS k
-  FROM {table}, unnest(string_split({text_expr}, '')) AS u(c)
+  SELECT doc_id AS id, c, count(*) AS k
+  FROM documents, unnest(string_split(text, '')) AS u(c)
   WHERE c <> '' GROUP BY 1, 2
 ),
 tot AS (SELECT id, sum(k) AS n FROM ch GROUP BY 1)
@@ -543,18 +537,12 @@ def pmi_pairs(
     )
 
 
-def pmi_pairs_sql(
-    text_expr: str = "text",
-    table: str = "documents",
-    window: int = 2,
-    min_count: int = 5,
-    topk: int = 20,
-) -> str:
+def pmi_pairs_sql(window: int = 2, min_count: int = 5, topk: int = 20) -> str:
     return f"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(lower({text_expr}), '{TOKEN_SPLIT}'),
+  SELECT list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),
                      t -> t <> '') AS ws
-  FROM {table}
+  FROM documents
 ),
 pairs AS (
   SELECT ws[i + 1] AS x, ws[i + 1 + d] AS y
@@ -582,14 +570,9 @@ SELECT rank, x, y, cxy, pmi FROM (
 """
 
 
-def vocab_growth(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_points: int = 10,
-) -> DataFrame:
-    """Heaps-law curve: cumulative (tokens_seen, distinct_words) at
-    ``n_points`` id-ordered corpus prefixes.
+def vocab_growth(df: DataFrame, n_points: int = 10) -> DataFrame:
+    """Heaps-law curve: cumulative (tokens_seen, distinct_words) of
+    ``text`` at ``n_points`` ``doc_id``-ordered corpus prefixes.
 
     Distributed form: a word's first occurrence is the min doc id that
     contains it (one vocabulary-keyed shuffle); cumulative sums over the
@@ -600,9 +583,9 @@ def vocab_growth(
     """
     from .packing import distributed_prefix_sum
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda t: t != ""
+            F.split(F.lower(F.col("text")), TOKEN_SPLIT), lambda t: t != ""
         ).alias("ws"),
     )
     per_doc = toks.select("id", F.size("ws").alias("n_toks"))
@@ -639,18 +622,13 @@ def vocab_growth(
     )
 
 
-def vocab_growth_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-    n_points: int = 10,
-) -> str:
+def vocab_growth_sql(n_points: int = 10) -> str:
     return f"""
 WITH toks AS (
-  SELECT {id_expr} AS id,
-         list_filter(string_split_regex(lower({text_expr}), '{TOKEN_SPLIT}'),
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),
                      t -> t <> '') AS ws
-  FROM {table}
+  FROM documents
 ),
 per_doc AS (SELECT id, len(ws) AS n_toks FROM toks),
 first AS (
@@ -667,19 +645,14 @@ cum AS (
              ROWS UNBOUNDED PRECEDING) AS vocab
   FROM per_doc p LEFT JOIN first f ON f.id = p.id
 ),
-nn AS (SELECT greatest(count(*) // {n_points}, 1) AS step FROM {table})
+nn AS (SELECT greatest(count(*) // {n_points}, 1) AS step FROM documents)
 SELECT id::bigint AS last_doc_id, tokens_seen::bigint AS tokens_seen,
        vocab::bigint AS vocab
 FROM cum WHERE (id + 1) % (SELECT step FROM nn) = 0
 """
 
 
-def ngram_novelty(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def ngram_novelty(df: DataFrame, n: int = 3) -> DataFrame:
     """(id, n_grams, novel_frac): fraction of a document's distinct
     n-grams whose FIRST corpus occurrence (min doc id) is this document
     — the corpus-order novelty curve (late documents full of already-
@@ -689,8 +662,8 @@ def ngram_novelty(
     from docling_plus_spark.operators.dedup import shingles
 
     g = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), n)).alias("gram"),
+        F.col("doc_id").alias("id"),
+        F.explode(shingles(F.col("text"), n)).alias("gram"),
     )
     first = g.groupBy("gram").agg(F.min("id").alias("fid"))
     per = (
@@ -714,18 +687,13 @@ def ngram_novelty(
     )
 
 
-def ngram_novelty_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-    n: int = 3,
-) -> str:
+def ngram_novelty_sql(n: int = 3) -> str:
     from docling_plus_spark.operators.dedup import shingles_sql
 
     return f"""
 WITH g AS (
-  SELECT {id_expr} AS id, gram
-  FROM {table}, unnest({shingles_sql(text_expr, n)}) AS u(gram)
+  SELECT doc_id AS id, gram
+  FROM documents, unnest({shingles_sql("text", n)}) AS u(gram)
 ),
 first AS (SELECT gram, min(id) AS fid FROM g GROUP BY 1)
 SELECT g.id, count(*)::bigint AS n_grams,
@@ -736,13 +704,12 @@ GROUP BY g.id
 """
 
 
-def kn_bigram_nll(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
-    """(id, n_bigrams, mean_nll) — per-document word-bigram NLL under
+#: Kneser-Ney absolute discount D of both bigram models
+KN_DISCOUNT = 0.75
+
+
+def kn_bigram_nll(df: DataFrame) -> DataFrame:
+    """(id, n_bigrams, mean_nll) — per-``doc_id`` ``text`` bigram NLL under
     interpolated Kneser-Ney (Kneser & Ney 1995; Chen & Goodman 1999's
     interpolated form with a fixed discount), fitted on the corpus
     itself. The proper-smoothing upgrade of the add-one char model in
@@ -765,9 +732,9 @@ def kn_bigram_nll(
     scalar.
     """
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
     )
-    d = df.select(F.col(id_col).alias("id"), words.alias("ws")).where(
+    d = df.select(F.col("doc_id").alias("id"), words.alias("ws")).where(
         F.size("ws") >= 2
     )
     bg = d.select(
@@ -794,7 +761,7 @@ def kn_bigram_nll(
     )
     cont = pair.groupBy("w2").agg(F.count("*").alias("n1plus_bw"))
     total_types = pair.agg(F.count("*").alias("n_types"))
-    dlit = F.lit(float(discount))
+    dlit = F.lit(KN_DISCOUNT)
     model = (
         pair.join(left, "w1")
         .join(cont, "w2")
@@ -829,7 +796,6 @@ def kn_bigram_nll(
 def kn_bigram_nll_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    discount: float = 0.75,
     table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`kn_bigram_nll`."""
@@ -855,8 +821,8 @@ cont AS (SELECT w2, count(*) AS n1plus_bw FROM pair GROUP BY 1),
 tot AS (SELECT count(*) AS n_types FROM pair),
 model AS (
   SELECT p.w1, p.w2,
-         -ln(greatest(p.c12 - {discount!r}, 0.0) / l.c1
-             + {discount!r} * l.n1plus_fw / l.c1
+         -ln(greatest(p.c12 - {KN_DISCOUNT!r}, 0.0) / l.c1
+             + {KN_DISCOUNT!r} * l.n1plus_fw / l.c1
                * c.n1plus_bw / t.n_types) AS nll
   FROM pair p JOIN lft l ON p.w1 = l.w1
   JOIN cont c ON p.w2 = c.w2

@@ -73,9 +73,7 @@ def pii_redact(
     )
 
 
-def pii_redact_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
-) -> str:
+def pii_redact_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
     """DuckDB twin of :func:`pii_redact` (full SELECT, same names)."""
 
     def esc(p: str) -> str:
@@ -92,7 +90,7 @@ def pii_redact_sql(
     return (
         f"SELECT {id_expr} AS id, {cur} AS redacted, "
         + ", ".join(count_cols)
-        + f" FROM {table}"
+        + " FROM documents"
     )
 
 
@@ -329,14 +327,13 @@ def paragraph_dedup(
 def paragraph_dedup_sql(
     id_expr: str = "doc_id",
     text_expr: str = "text",
-    table: str = "documents",
     max_docs: int = 10,
 ) -> str:
     """DuckDB twin of :func:`paragraph_dedup` (full SELECT)."""
     return f"""
 WITH lines AS (
   SELECT {id_expr} AS id, u.pos, u.line
-  FROM {table},
+  FROM documents,
        LATERAL (SELECT unnest(string_split({text_expr}, chr(10))) AS line,
                        generate_subscripts(string_split({text_expr}, chr(10)), 1) AS pos) u
   WHERE length(trim(u.line)) > 0
@@ -372,8 +369,6 @@ def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    id_col: str = "doc_id",
-    strata_col: str = "lang",
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff
     ``md5(id) mod 1e6 < rate(stratum) * 1e6``.
@@ -383,14 +378,14 @@ def stratified_sample(
     parallel (zero shuffle), and exact in expectation per stratum.
     Output: the kept (id, stratum, bucket) rows.
     """
-    bucket = F.pmod(md5_long(F.col(id_col).cast("string")), F.lit(SAMPLE_MOD))
+    bucket = F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(SAMPLE_MOD))
     rate: Column = F.lit(default_rate)
     for value, r in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == value, F.lit(r)).otherwise(rate)
+        rate = F.when(F.col("lang") == value, F.lit(r)).otherwise(rate)
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            F.col(strata_col).alias("stratum"),
+            F.col("doc_id").alias("id"),
+            F.col("lang").alias("stratum"),
             bucket.cast("long").alias("bucket"),
             rate.alias("_rate"),
         )
@@ -402,19 +397,16 @@ def stratified_sample(
 def stratified_sample_sql(
     rates: dict[str, float],
     default_rate: float = 0.0,
-    id_expr: str = "doc_id",
-    strata_expr: str = "lang",
-    table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`stratified_sample` (full SELECT)."""
     whens = " ".join(
-        f"WHEN {strata_expr} = '{v}' THEN {r}" for v, r in sorted(rates.items())
+        f"WHEN lang = '{v}' THEN {r}" for v, r in sorted(rates.items())
     )
     rate = f"(CASE {whens} ELSE {default_rate} END)"
-    bucket = f"(('0x'||substr(md5({id_expr}::VARCHAR),1,15))::bigint % {SAMPLE_MOD})"
+    bucket = f"(('0x'||substr(md5(doc_id::VARCHAR),1,15))::bigint % {SAMPLE_MOD})"
     return f"""
-SELECT {id_expr} AS id, {strata_expr} AS stratum, {bucket}::bigint AS bucket
-FROM {table}
+SELECT doc_id AS id, lang AS stratum, {bucket}::bigint AS bucket
+FROM documents
 WHERE {bucket} < {rate} * {SAMPLE_MOD}
 """
 
@@ -450,7 +442,7 @@ def bpe_token_stats(
 
 
 def bpe_token_stats_sql(
-    id_expr: str = "doc_id", text_expr: str = "text", table: str = "documents"
+    id_expr: str = "doc_id", text_expr: str = "text"
 ) -> str:
     """DuckDB twin of :func:`bpe_token_stats` (full SELECT)."""
     pat = BPE_SPLIT_RE.replace("'", "''")
@@ -464,7 +456,7 @@ SELECT {id_expr} AS id,
   {bpe}::bigint AS bpe_tokens,
   {ws}::bigint AS ws_tokens,
   round(length({text_expr})::double / greatest({bpe}, 1), 4) AS chars_per_token
-FROM {table}
+FROM documents
 """
 
 
@@ -530,12 +522,7 @@ FROM c GROUP BY host
 """
 
 
-def crawl_diff(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url",
-    hash_col: str = "doc_hash",
-) -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """``(url, change, old_hash, new_hash)`` between two crawl snapshots.
 
     The monthly-snapshot question every incremental pipeline asks
@@ -547,12 +534,8 @@ def crawl_diff(
     sides bucket by url on disk so the join is co-located with zero
     exchange — and the shuffle rows carry two hashes, never content.
     """
-    o = old.select(
-        F.col(url_col).alias("url"), F.col(hash_col).alias("old_hash")
-    )
-    n = new.select(
-        F.col(url_col).alias("url"), F.col(hash_col).alias("new_hash")
-    )
+    o = old.select("url", F.col("doc_hash").alias("old_hash"))
+    n = new.select("url", F.col("doc_hash").alias("new_hash"))
     j = o.join(n, "url", "full_outer")
     return j.select(
         "url",
@@ -566,11 +549,7 @@ def crawl_diff(
     )
 
 
-def bpe_merge_pairs(
-    df: DataFrame,
-    top_k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merge_pairs(df: DataFrame, top_k: int = 20) -> DataFrame:
     """``(rank, left, right, pair_count)`` — one BPE merge round's
     candidate table (Sennrich et al., ACL 2016, over character symbols).
 
@@ -595,7 +574,7 @@ def bpe_merge_pairs(
         df.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), r"\s+"),
+                    F.split(F.lower(F.col("text")), r"\s+"),
                     lambda w: w != "",
                 )
             ).alias("word")
@@ -636,16 +615,12 @@ def bpe_merge_pairs(
     )
 
 
-def bpe_merge_pairs_sql(
-    top_k: int = 20,
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def bpe_merge_pairs_sql(top_k: int = 20) -> str:
     """DuckDB twin of :func:`bpe_merge_pairs`."""
     return f"""
 WITH words AS (
   SELECT w AS word, count(*) AS freq
-  FROM {table}, unnest(string_split_regex(lower({text_expr}), '\\s+')) AS t(w)
+  FROM documents, unnest(string_split_regex(lower(text), '\\s+')) AS t(w)
   WHERE w <> ''
   GROUP BY w
 ),
@@ -667,12 +642,7 @@ SELECT rank, "left", "right", pair_count FROM (
 """
 
 
-def sentence_dedup(
-    df: DataFrame,
-    min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def sentence_dedup(df: DataFrame, min_count: int = 2) -> DataFrame:
     """``(id, clean_text, n_sentences, removed_sentences)`` — global
     sentence-level dedup, the C4 policy (Raffel et al. 2020 §2.2
     removed any three-sentence span occurring more than once; here the
@@ -694,7 +664,7 @@ def sentence_dedup(
     # join, and the per-doc stats — without the pin the sentence-split
     # pass over the corpus ran three times (runtime plan audit); pinned
     # rows are (id, idx, span ints, md5), never sentence text
-    sp = sentence_spans(df, id_col, text_col).localCheckpoint(eager=True)
+    sp = sentence_spans(df, "doc_id", "text").localCheckpoint(eager=True)
     freq = (
         sp.groupBy("sent_md5")
         .agg(
@@ -720,7 +690,7 @@ def sentence_dedup(
             F.collect_list(F.struct("sent_idx", "char_start", "char_end"))
         ).alias("ks")
     )
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    base = df.select(F.col("doc_id").alias("id"), F.col("text").alias("_t"))
     slices = F.transform(
         F.coalesce(
             F.col("ks"),
@@ -762,7 +732,6 @@ URL_FLAG_WORDS = ["casino", "poker", "bet", "xxx", "porn", "webcam"]
 def url_blocklist_filter(
     df: DataFrame,
     blocklist: DataFrame,
-    url_col: str = "url",
     max_hits: int = 2,
 ) -> DataFrame:
     """(url, host, blocked_host, kw_hits, allowed) per input row.
@@ -773,19 +742,19 @@ def url_blocklist_filter(
     match ``bet``.
     """
     host = F.lower(
-        F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)", 1)
+        F.regexp_extract(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)", 1)
     )
     kw = sum(
         (
             F.regexp_count(
-                F.lower(F.col(url_col)), F.lit(rf"\b{w}\b")
+                F.lower(F.col("url")), F.lit(rf"\b{w}\b")
             )
             for w in URL_FLAG_WORDS
         ),
         F.lit(0),
     )
     marked = df.select(
-        F.col(url_col).alias("url"),
+        "url",
         host.alias("host"),
         kw.cast("long").alias("kw_hits"),
     ).join(
@@ -837,13 +806,11 @@ FROM m LEFT JOIN bl ON m.host = bl.host
 """
 
 
-def host_quality_wilson(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    host_col: str = "host",
-    pass_col: str = "quality_pass",
-    z: float = 1.96,
-) -> DataFrame:
+#: normal quantile of the Wilson bound: 1.96, a 95% interval
+WILSON_Z = 1.96
+
+
+def host_quality_wilson(df: DataFrame) -> DataFrame:
     """Per-host quality rate with its Wilson-score lower bound — the
     statistically honest way to rank/blocklist domains (a 2/2 host must
     not outrank a 95/100 host; the lower bound handles small n).
@@ -852,19 +819,19 @@ def host_quality_wilson(
     Exact integer counts → one closed-form float per host, round 6 —
     bit-stable across engines. One host-keyed count shuffle.
     """
-    agg = df.groupBy(F.col(host_col).alias("host")).agg(
+    agg = df.groupBy("host").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.when(F.col(pass_col), 1).otherwise(0))
+        F.sum(F.when(F.col("quality_pass"), 1).otherwise(0))
         .cast("long")
         .alias("n_pass"),
     )
     n = F.col("n_docs").cast("double")
     p = F.col("n_pass").cast("double") / n
-    z2 = z * z
+    z2 = WILSON_Z * WILSON_Z
     low = (
         p
         + F.lit(z2) / (2 * n)
-        - F.lit(z) * F.sqrt(p * (1 - p) / n + F.lit(z2) / (4 * n * n))
+        - F.lit(WILSON_Z) * F.sqrt(p * (1 - p) / n + F.lit(z2) / (4 * n * n))
     ) / (1 + F.lit(z2) / n)
     return agg.select(
         "host",
@@ -880,11 +847,10 @@ def host_quality_wilson_sql(
     host_expr: str,
     pass_expr: str,
     table: str,
-    z: float = 1.96,
 ) -> str:
     """DuckDB twin of :func:`host_quality_wilson` (same operation
     order)."""
-    z2 = z * z
+    z2 = WILSON_Z * WILSON_Z
     return f"""
 WITH agg AS (
   SELECT {host_expr} AS host, count(*)::bigint AS n_docs,
@@ -894,7 +860,7 @@ WITH agg AS (
 SELECT host, n_docs, n_pass,
        round(n_pass::double / n_docs, 6) AS pass_rate,
        round((n_pass::double / n_docs + {z2} / (2 * n_docs::double)
-              - {z} * sqrt((n_pass::double / n_docs)
+              - {WILSON_Z} * sqrt((n_pass::double / n_docs)
                            * (1 - n_pass::double / n_docs) / n_docs::double
                            + {z2} / (4 * n_docs::double * n_docs::double)))
              / (1 + {z2} / n_docs::double), 6) AS wilson_low

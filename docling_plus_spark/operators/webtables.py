@@ -32,9 +32,7 @@ _CELL_TAG_RE = r"(?is)<(t[dh])[^>]*>.*?</t[dh]>"
 _CELL_TXT_RE = r"(?is)<t[dh][^>]*>(.*?)</t[dh]>"
 
 
-def web_tables(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def web_tables(df: DataFrame) -> DataFrame:
     """(id, table_idx, row_idx, col_idx, is_header, cell_text) per cell.
 
     ``is_header`` is true for ``<th>`` cells; ``cell_text`` is the
@@ -42,10 +40,10 @@ def web_tables(
     trimmed — may be empty for genuinely empty cells).
     """
     tables = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.expr(
-                f"regexp_extract_all({html_col}, '{_TABLE_RE}', 1)"
+                f"regexp_extract_all(html, '{_TABLE_RE}', 1)"
             )
         ).alias("table_idx", "tbody"),
     )
@@ -129,13 +127,11 @@ FROM cells
 """
 
 
-def web_table_shapes(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
+def web_table_shapes(df: DataFrame) -> DataFrame:
     """(id, table_idx, n_rows, n_cols, n_header_cells, rectangular) —
     the corpus-level table census (the WDC corpus's relational-table
     filter starts from exactly these shape statistics)."""
-    cells = web_tables(df, id_col, html_col)
+    cells = web_tables(df)
     per_row = cells.groupBy("id", "table_idx", "row_idx").agg(
         F.count("*").alias("row_cells")
     )

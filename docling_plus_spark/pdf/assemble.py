@@ -80,14 +80,13 @@ def assemble_document(
     elements: list,
     tables: dict | None = None,
     name: str = "doc",
-    dilate: bool = True,
 ) -> DLDocument:
     """Ordered assembly of one document.
 
     ``elements``: PageElement list (any order; text already sanitized per
     element). ``tables``: cid → TableData for TABLE elements.
     """
-    resolver = ReadingOrderResolver(dilate=dilate)
+    resolver = ReadingOrderResolver()
     ordered = resolver.predict_reading_order(elements)
     to_captions = resolver.predict_to_captions(ordered)
     to_footnotes = resolver.predict_to_footnotes(ordered)

@@ -12,17 +12,13 @@ from __future__ import annotations
 from .geometry import BBox, TextCell
 
 
-def merge_horizontal_cells(
-    cells: list,
-    overlap_frac: float = 0.5,
-    gap_factor: float = 1.0,
-) -> list:
+def merge_horizontal_cells(cells: list) -> list:
     """Fragments → line cells.
 
     Pass 1 groups cells into rows: a cell joins a row when its vertical
-    overlap with the row's envelope exceeds ``overlap_frac`` of the
-    smaller height. Pass 2 sorts each row by ``l`` and merges neighbours
-    whose gap ≤ ``gap_factor`` × average cell height. Indices are
+    overlap with the row's envelope exceeds half of the smaller height.
+    Pass 2 sorts each row by ``l`` and merges neighbours whose gap is at
+    most the average cell height. Indices are
     reassigned in (row-top, l) order — the parser's native order.
     """
     if not cells:
@@ -34,7 +30,7 @@ def merge_horizontal_cells(
             env = row["bbox"]
             inter = min(env.t, cell.bbox.t) - max(env.b, cell.bbox.b)
             min_h = min(env.height(), cell.bbox.height())
-            if min_h > 0 and inter / min_h > overlap_frac:
+            if min_h > 0 and inter / min_h > 0.5:
                 row["cells"].append(cell)
                 env = row["bbox"]
                 row["bbox"] = BBox(
@@ -55,7 +51,7 @@ def merge_horizontal_cells(
         cur = row_cells[0]
         for nxt in row_cells[1:]:
             gap = nxt.bbox.l - cur.bbox.r
-            if gap <= gap_factor * avg_h:
+            if gap <= avg_h:
                 cur = TextCell(
                     index=cur.index,
                     text=(cur.text + " " + nxt.text).strip()

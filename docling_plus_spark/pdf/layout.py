@@ -232,14 +232,14 @@ class LayoutPostprocessor:
         return pictures + wrappers
 
     # -- helpers ----------------------------------------------------------
-    def _assign_cells(self, clusters: list, min_overlap: float = 0.2) -> list:
+    def _assign_cells(self, clusters: list) -> list:
         """J1: cell → argmax cluster by intersection_over_self ≥ 0.2
         (layout_postprocessor.py:584-616)."""
         clusters = [replace(c, cells=[]) for c in clusters]
         for cell in self.cells:
             if not cell.text.strip() or cell.bbox.area() <= 0:
                 continue
-            best, best_ov = None, min_overlap
+            best, best_ov = None, 0.2
             for cl in clusters:
                 ov = cell.bbox.intersection_over_self(cl.bbox)
                 if ov > best_ov:
@@ -366,14 +366,9 @@ def _dedup_cells(cells: list) -> list:
 # ---------------------------------------------------------------------------
 # rule-based cluster proposer (NN substitute)
 
-def propose_clusters(
-    cells: list,
-    page_width: float,
-    page_height: float,
-    para_gap_factor: float = 1.5,
-) -> list:
+def propose_clusters(cells: list, page_width: float, page_height: float) -> list:
     """Geometric paragraph proposer: cells → lines (vertical overlap) →
-    blocks (vertical gap ≤ para_gap_factor × median line height AND
+    blocks (vertical gap ≤ 1.5 × median line height AND
     horizontal overlap). Labels: blocks in the top/bottom 4 % of the page
     → PAGE_HEADER / PAGE_FOOTER, everything else TEXT. This replaces the
     NN layout stage with the deterministic fallback strategy syndoc uses.
@@ -439,7 +434,7 @@ def propose_clusters(
             bb = blk["bbox"]
             delta = blk["last_top"] - lb.t
             if (
-                -med_h * 0.5 <= delta <= para_gap_factor * med_step
+                -med_h * 0.5 <= delta <= 1.5 * med_step
                 and bb.overlaps_horizontally(lb)
             ):
                 target = blk

@@ -15,8 +15,6 @@ from __future__ import annotations
 from docling_plus_spark.doc.document import TableCellModel, TableData
 
 CELL_TAGS = {"fcel", "ched", "rhed", "srow", "ecel"}
-_RIGHT_STOP = CELL_TAGS | {"ucel", "nl"}
-_DOWN_STOP = CELL_TAGS | {"lcel", "nl"}
 
 
 def otsl_rows(tags: list) -> list:

@@ -627,7 +627,7 @@ def _median(vals: list[float]) -> float:
     return s[mid] if n % 2 else (s[mid - 1] + s[mid]) / 2.0
 
 
-def extract_pdf_pages(data: bytes, max_pages: int = 0) -> list[dict]:
+def extract_pdf_pages(data: bytes) -> list[dict]:
     """``%PDF-`` bytes → list of page dicts:
     ``{page_no, width, height, cells:[{index,text,l,t,r,b}]}``
     with top-left-origin cell coordinates (parser contract).
@@ -636,11 +636,8 @@ def extract_pdf_pages(data: bytes, max_pages: int = 0) -> list[dict]:
     files — callers turn that into a classified failure row.
     """
     doc = PdfDocument(data)
-    pages = doc.pages()
-    if max_pages:
-        pages = pages[:max_pages]
     out: list[dict] = []
-    for pno, page in enumerate(pages, start=1):
+    for pno, page in enumerate(doc.pages(), start=1):
         # hostile-input contract: a mutated MediaBox (short array,
         # non-numeric entries, wrong type) degrades to US-Letter, never
         # raises — errors must become status rows, not job failures

@@ -56,9 +56,6 @@ class _State:
 class ReadingOrderResolver:
     """predict_reading_order / captions / footnotes / merges."""
 
-    def __init__(self, dilate: bool = True):
-        self.dilate = dilate
-
     # -- public API -------------------------------------------------------
     def predict_reading_order(self, elements: list) -> list:
         pages = sorted({e.page_no for e in elements})
@@ -143,10 +140,9 @@ class ReadingOrderResolver:
             return []
         st = _State()
         self._init_ud_maps(elems, st)
-        if self.dilate:
-            dilated = self._horizontal_dilation(elems, st)
-            st = _State()
-            self._init_ud_maps(dilated, st)
+        dilated = self._horizontal_dilation(elems, st)
+        st = _State()
+        self._init_ud_maps(dilated, st)
         heads = sorted(
             (elems[i] for i, ups in st.up.items() if not ups),
         )

@@ -27,11 +27,11 @@ def _escape(line: str) -> bytes:
     return raw.replace(b"\\", b"\\\\").replace(b"(", b"\\(").replace(b")", b"\\)")
 
 
-def wrap_lines(text: str, line_words: int = LINE_WORDS) -> list[str]:
+def wrap_lines(text: str) -> list[str]:
     words = text.split(" ")
     return [
-        " ".join(words[i:i + line_words])
-        for i in range(0, len(words), line_words)
+        " ".join(words[i:i + LINE_WORDS])
+        for i in range(0, len(words), LINE_WORDS)
     ] if text else []
 
 

@@ -19,14 +19,12 @@ from __future__ import annotations
 import numpy as np
 
 
-def match_cells(
-    table_bboxes: np.ndarray, word_bboxes: np.ndarray, iopdf_threshold: float = 0.2
-) -> np.ndarray:
+def match_cells(table_bboxes: np.ndarray, word_bboxes: np.ndarray) -> np.ndarray:
     """Assign each word to the table cell with max intersection-over-word.
 
     Parameters are ``(n_cells, 4)`` and ``(n_words, 4)`` arrays of
     ``[l, t, r, b]`` (top-left origin, t < b). Returns an ``(n_words,)``
-    int array of cell indices, -1 where no cell overlaps above the
+    int array of cell indices, -1 where no cell overlaps above the 0.2
     threshold (reference: _intersection_over_pdf_match, matches kept when
     iopdf > 0, best match elected by the post-processor; we elect argmax
     directly and gate on the configured pdf_cell_iou threshold analog).
@@ -43,7 +41,7 @@ def match_cells(
     )  # (1,W)
     iopdf = inter / word_area  # (C,W)
     best = iopdf.argmax(axis=0)
-    assigned = np.where(iopdf.max(axis=0) >= iopdf_threshold, best, -1)
+    assigned = np.where(iopdf.max(axis=0) >= 0.2, best, -1)
     return assigned.astype(np.int64)
 
 
@@ -73,8 +71,7 @@ def match_table(
     table_bboxes: np.ndarray,
     word_bboxes: np.ndarray,
     word_texts: list,
-    iopdf_threshold: float = 0.2,
 ) -> list:
     """match_cells + assemble_cell_texts in one call → per-cell texts."""
-    assignment = match_cells(table_bboxes, word_bboxes, iopdf_threshold)
+    assignment = match_cells(table_bboxes, word_bboxes)
     return assemble_cell_texts(len(table_bboxes), assignment, word_bboxes, word_texts)

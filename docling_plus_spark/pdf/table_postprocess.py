@@ -25,7 +25,6 @@ cells:
     unmatched pdf cell to the (row, col) whose bands it intersects with
     the smallest centroid depth; reuse the structural cell there or
     mint a new one
- (opt.) overlap correction: push intersecting cell bboxes apart
 
 Data shapes are the reference's wire dicts so unit tests can transcribe
 its behavior literally:
@@ -42,7 +41,6 @@ the right physical plan; SURVEY §2.3 J1 note).
 
 from __future__ import annotations
 
-import math
 import statistics
 from typing import Optional
 
@@ -445,49 +443,9 @@ def pick_orphan_cells(
 
 
 # --------------------------------------------------------------------------
-# overlap correction (optional last step)
-
-def correct_overlapping_cells(table_cells: list) -> list:
-    """Push intersecting bboxes apart along the smaller-overlap axis."""
-
-    def overlap(b1, b2):
-        return not (
-            b1[0] >= b2[2] or b1[2] <= b2[0] or b1[3] <= b2[1] or b1[1] >= b2[3]
-        )
-
-    for i in range(len(table_cells)):
-        for j in range(i + 1, len(table_cells)):
-            c1, c2 = table_cells[i], table_cells[j]
-            if c1 == c2 or not overlap(c1["bbox"], c2["bbox"]):
-                continue
-            b1, b2 = c1["bbox"], c2["bbox"]
-            ox = min(b1[2], b2[2]) - max(b1[0], b2[0])
-            oy = min(b1[3], b2[3]) - max(b1[1], b2[1])
-            if ox < oy:
-                if b1[0] < b2[0]:
-                    b1[2] -= math.ceil(ox / 2) + 2
-                    b2[0] += math.floor(ox / 2)
-                else:
-                    b2[2] -= math.ceil(ox / 2) + 2
-                    b1[0] += math.floor(ox / 2)
-            else:
-                if b1[1] < b2[1]:
-                    b1[3] -= math.ceil(oy / 2) + 2
-                    b2[1] += math.floor(oy / 2)
-                else:
-                    b2[3] -= math.ceil(oy / 2) + 2
-                    b1[1] += math.floor(oy / 2)
-            c1["bbox"] = [min(b1[0], b1[2]), min(b1[1], b1[3]),
-                          max(b1[0], b1[2]), max(b1[1], b1[3])]
-            c2["bbox"] = [min(b2[0], b2[2]), min(b2[1], b2[3]),
-                          max(b2[0], b2[2]), max(b2[1], b2[3])]
-    return table_cells
-
-
-# --------------------------------------------------------------------------
 # driver
 
-def process(matching_details: dict, do_correct_overlapping_cells: bool = False) -> dict:
+def process(matching_details: dict) -> dict:
     """The reference's full post-processing flow (process(), :1124)."""
     table_cells = matching_details["table_cells"]
     pdf_cells = [p for p in matching_details["pdf_cells"] if p["text"] != ""]
@@ -525,9 +483,6 @@ def process(matching_details: dict, do_correct_overlapping_cells: bool = False) 
         tab_rows, tab_columns, max_cell_id, aligned, pdf_cells, final_matches
     )
 
-    if do_correct_overlapping_cells and len(table_cells_out) <= 300:
-        table_cells_out = correct_overlapping_cells(table_cells_out)
-
     matching_details["table_cells"] = table_cells_out
     matching_details["matches"] = final_matches
     matching_details["pdf_cells"] = pdf_cells
@@ -537,9 +492,7 @@ def process(matching_details: dict, do_correct_overlapping_cells: bool = False) 
 # --------------------------------------------------------------------------
 # wiring: NN-predicted structure + word cells → repaired TableData
 
-def postprocess_predicted_table(
-    predicted_cells: list, word_cells: list, do_correct_overlapping_cells: bool = False
-):
+def postprocess_predicted_table(predicted_cells: list, word_cells: list):
     """Entry point for externally-predicted (TableFormer-style) structure.
 
     ``predicted_cells``: reference-shape table_cells (see module doc).
@@ -556,8 +509,7 @@ def postprocess_predicted_table(
             "table_cells": [dict(c) for c in predicted_cells],
             "pdf_cells": [dict(p) for p in word_cells],
             "matches": {},
-        },
-        do_correct_overlapping_cells=do_correct_overlapping_cells,
+        }
     )
     cells = details["table_cells"]
     matches = details["matches"]

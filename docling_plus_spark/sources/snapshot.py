@@ -93,14 +93,7 @@ class SnapshotTable:
         )
         self._write_manifest(m)
 
-    def append(self, df: DataFrame, epoch: Optional[int] = None,
-               extra: Optional[dict] = None) -> int:
-        """Write one epoch; manifest update is the commit."""
-        if epoch is None:
-            epoch = self.last_epoch + 1
-        part = self.stage(df, epoch)
-        self.commit(part, epoch, extra)
-        return epoch
+
 
     # -- read -------------------------------------------------------------
     def read(self) -> Optional[DataFrame]:

@@ -52,19 +52,18 @@ def warc_record_bytes(
     url: str,
     payload: bytes,
     ts: Optional[datetime] = None,
-    content_type: str = "text/html",
-    http_status: int = 200,
     gzip_member: bool = True,
 ) -> bytes:
-    """One WARC/1.0 ``response`` record (optionally as a gzip member).
+    """One WARC/1.0 ``response`` record of a 200 ``text/html`` response
+    (optionally as a gzip member).
 
     Deterministic: the record id is derived from the url, gzip mtime is
     pinned to 0 — identical inputs give identical bytes on any host.
     """
     ts = ts or datetime(2024, 1, 1, tzinfo=timezone.utc)
     http = (
-        f"HTTP/1.1 {http_status} OK\r\n"
-        f"Content-Type: {content_type}\r\n"
+        "HTTP/1.1 200 OK\r\n"
+        "Content-Type: text/html\r\n"
         f"Content-Length: {len(payload)}\r\n\r\n"
     ).encode("ascii") + payload
     rid = md5(url.encode("utf-8")).hexdigest()
@@ -230,9 +229,9 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     return files.select("path", "content").mapInPandas(_split, PAGE_SCHEMA)
 
 
-def warc_roundtrip_pages(pages: DataFrame, n_groups: int = 8) -> DataFrame:
+def warc_roundtrip_pages(pages: DataFrame) -> DataFrame:
     """Page rows → WARC blobs (one gzip-member file per url-hash group,
-    the deterministic writer) → parsed back to page rows.
+    8 groups, the deterministic writer) → parsed back to page rows.
 
     The container-validation path behind the `warc_extract` oracle
     query: proves write → member-gzip → split → HTTP-strip is an exact
@@ -253,7 +252,7 @@ def warc_roundtrip_pages(pages: DataFrame, n_groups: int = 8) -> DataFrame:
 
     blobs = (
         pages.select("url", "html")
-        .groupBy(F.pmod(F.xxhash64("url"), F.lit(n_groups)).alias("g"))
+        .groupBy(F.pmod(F.xxhash64("url"), F.lit(8)).alias("g"))
         .applyInPandas(lambda _k, pdf: _build(pdf), "warc binary")
     )
 
@@ -278,9 +277,7 @@ def warc_roundtrip_pages(pages: DataFrame, n_groups: int = 8) -> DataFrame:
 # WET sink (conversion records — the extracted-text sibling of WARC)
 
 
-def to_wet(
-    df: DataFrame, url_col: str = "url", text_col: str = "text"
-) -> DataFrame:
+def to_wet(df: DataFrame) -> DataFrame:
     """Extraction output → per-document WET ``conversion`` record bytes
     ``(url, wet)`` — the format Common Crawl publishes extracted text
     in, consumable by any WET reader unchanged.
@@ -291,8 +288,8 @@ def to_wet(
     plus the utf-8 text payload. Concatenate the ``wet`` column per
     output file partition to get valid ``.warc.wet`` bytes.
     """
-    url = F.col(url_col)
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    url = F.col("url")
+    text = F.coalesce(F.col("text"), F.lit(""))
     rid = F.md5(url)
     crlf = F.lit("\r\n")
     rec = F.concat(

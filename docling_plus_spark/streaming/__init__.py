@@ -1,3 +1,3 @@
 """Streaming execution of the extraction pipeline."""
 
-from .stream import extract_stream, run_stream_once  # noqa: F401
+from .stream import run_stream_once  # noqa: F401

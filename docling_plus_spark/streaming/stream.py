@@ -17,29 +17,11 @@ The reference is batch-only; its bounded-queue staged pipeline
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_plus_spark.plans.pipeline import extract_pipeline
 from docling_plus_spark.sources.web_pages import WEB_PAGES_SCHEMA
-
-
-def extract_stream(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """readStream over a pages-table directory → streaming EXTRACT rows."""
-    reader = (
-        spark.readStream.schema(WEB_PAGES_SCHEMA)
-        .format("parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.load(input_path)
-    return extract_pipeline(pages)
 
 
 def run_stream_once(
@@ -48,13 +30,19 @@ def run_stream_once(
     output_path: str,
     checkpoint_path: str,
 ) -> None:
-    """Drain all available input once (Trigger.AvailableNow) and stop.
+    """readStream over a pages-table directory → EXTRACT rows: drain all
+    available input once (Trigger.AvailableNow) and stop.
 
     Restart-safe: the checkpoint records consumed files, so re-running
     only processes newly arrived ones — the streaming twin of the
     snapshot anti-join resume.
     """
-    out = extract_stream(spark, input_path)
+    pages = (
+        spark.readStream.schema(WEB_PAGES_SCHEMA)
+        .format("parquet")
+        .load(input_path)
+    )
+    out = extract_pipeline(pages)
     q = (
         out.writeStream.format("parquet")
         .option("path", output_path)
@@ -110,14 +98,9 @@ def dedup_stream(pages: DataFrame, key_col: str = "doc_hash") -> DataFrame:
     )
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Event-time tumbling-window counts with a watermark.
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Event-time counts per ``user_id`` over ``ts``: 10-minute tumbling
+    windows, 30-minute watermark.
 
     The streaming-correctness triple this encodes:
 
@@ -134,27 +117,22 @@ def windowed_event_counts(
     streaming run — asserted in tests/test_streaming_window.py.
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col(key_col))
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window(F.col("ts"), "10 minutes"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("window.start").alias("win_start"),
-            F.col(key_col),
+            F.col("user_id"),
             F.col("n_events"),
         )
     )
 
 
-def session_event_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 minute",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
+def session_event_counts(events: DataFrame) -> DataFrame:
     """Streaming sessionization with Spark's native ``session_window``
     (merge-on-overlap gap windows) — the stateful-streaming twin of the
-    batch lag/cumsum sessionize query.
+    batch lag/cumsum sessionize query. Sessions of ``user_id`` over
+    ``ts``: 30-minute gap, 1-minute watermark.
 
     Semantics (full timestamp precision): an event extends its user's
     open session iff it arrives at or before ``last_event + gap`` — the
@@ -168,13 +146,13 @@ def session_event_counts(
     :func:`windowed_event_counts`, and at 10^12 events it shards on
     ``user_id`` with RocksDB state exactly like :func:`dedup_stream`.
     """
-    sw = F.session_window(F.col(ts_col), gap)
+    sw = F.session_window(F.col("ts"), "30 minutes")
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), sw.alias("sw"))
+        events.withWatermark("ts", "1 minute")
+        .groupBy(F.col("user_id"), sw.alias("sw"))
         .agg(F.count("*").alias("n_events"))
         .select(
-            key_col,
+            "user_id",
             F.col("sw.start").cast("double").alias("session_start"),
             F.col("sw.end").cast("double").alias("session_end"),
             F.col("n_events").cast("long").alias("n_events"),
@@ -187,23 +165,20 @@ def run_session_stream_once(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    schema: str = "user_id long, ts timestamp, event_id long",
-    gap: str = "30 minutes",
-    watermark: str = "1 minute",
-    max_files_per_trigger: int = 1,
 ) -> None:
-    """Drain event files through the session aggregation (append mode:
-    a session reaches the sink only once the watermark proves it can no
-    longer grow). A caller that needs ALL sessions of a bounded input
-    flushed appends one far-future sentinel event in a later file: the
-    no-data finalization batch then closes every real session."""
+    """Drain ``(user_id, ts, event_id)`` event files, one per trigger,
+    through the session aggregation (append mode: a session reaches the
+    sink only once the watermark proves it can no longer grow). A caller
+    that needs ALL sessions of a bounded input flushed appends one
+    far-future sentinel event in a later file: the no-data finalization
+    batch then closes every real session."""
     ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        spark.readStream.schema("user_id long, ts timestamp, event_id long")
+        .option("maxFilesPerTrigger", "1")
         .format("parquet")
         .load(input_path)
     )
-    out = session_event_counts(ev, gap=gap, watermark=watermark)
+    out = session_event_counts(ev)
     q = (
         out.writeStream.format("parquet")
         .outputMode("append")

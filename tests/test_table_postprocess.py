@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from docling_plus_spark.pdf.table_postprocess import (
     align_table_cells_to_pdf,
-    correct_overlapping_cells,
     deduplicate_columns,
     final_assignment,
     find_alignment_in_column,
@@ -233,14 +232,6 @@ def test_orphan_pickup_mints_new_cell_when_slot_empty():
 
 def test_merge_two_bboxes():
     assert merge_two_bboxes([0, 0, 5, 5], [3, -1, 9, 4]) == [0, -1, 9, 5]
-
-
-# ---------------------------------------------------------------- overlap
-def test_correct_overlapping_cells_pushes_apart():
-    cells = [tc(0, 0, 0, [0, 0, 12, 10]), tc(1, 0, 1, [8, 0, 20, 10])]
-    out = correct_overlapping_cells(cells)
-    b0, b1 = out[0]["bbox"], out[1]["bbox"]
-    assert b0[2] <= b1[0]  # no longer overlapping
 
 
 # ---------------------------------------------------------------- driver
