@@ -3643,7 +3643,7 @@ labeled AS (
             "docling_plus_spark.operators.webclean",
             fromlist=["host_quality_wilson_sql"],
         ).host_quality_wilson_sql(
-            "doc_id", "host", "quality_pass", "labeled"
+            "host", "quality_pass", "labeled"
         ).lstrip().removeprefix("WITH "),
         "robots_sitemaps": """
 WITH r AS (

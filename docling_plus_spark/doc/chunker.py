@@ -48,7 +48,7 @@ class Chunk:
     item_refs: list = field(default_factory=list)
 
 
-def _table_text(doc: DLDocument, item: TableItem) -> str:
+def _table_text(item: TableItem) -> str:
     rows = item.data.grid if item.data is not None else []
     return "\n".join(
         ", ".join(getattr(c, "text", "") or "" for c in row) for row in rows
@@ -105,7 +105,7 @@ def hierarchical_chunks(doc: DLDocument) -> list[Chunk]:
         if isinstance(item, TextItem):
             emit(item.text, [item.get_ref()])
         elif isinstance(item, TableItem):
-            emit(_table_text(doc, item), [item.get_ref()])
+            emit(_table_text(item), [item.get_ref()])
     flush_list()
     return chunks
 

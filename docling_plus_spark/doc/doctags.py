@@ -165,7 +165,7 @@ def _otsl_cells(table: dict) -> str:
     return "".join(toks)
 
 
-def _serialize_item(doc: dict, item: dict, out: list, caption_refs: set) -> None:
+def _serialize_item(doc: dict, item: dict, out: list) -> None:
     ref = item.get("self_ref", "")
     label = item.get("label", "")
     kind = ref.split("/")[1] if ref.startswith("#/") and "/" in ref[2:] else ""
@@ -253,7 +253,7 @@ def export_to_doctags(doc: dict) -> str:
                 if prev_page is not None and page > prev_page:
                     lines.append("<page_break>")
                 prev_page = page
-            _serialize_item(doc, child, lines, caption_refs)
+            _serialize_item(doc, child, lines)
             # do not traverse picture content; tables' caption children
             # are handled inline; other containers (e.g. nested groups
             # under list items) recurse
@@ -271,7 +271,7 @@ def export_to_doctags(doc: dict) -> str:
                 if prev_page is not None and page > prev_page:
                     out.append("<page_break>")
                 prev_page = page
-            _serialize_item(doc, child, out, caption_refs)
+            _serialize_item(doc, child, out)
 
     body = doc.get("body") or {}
     walk(body)

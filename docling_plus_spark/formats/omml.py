@@ -119,7 +119,7 @@ def _uni2latex(ch: str) -> str:
 class _Pr:
     """Property bag: captures chr/pos/begChr/endChr/type vals + brk."""
 
-    def __init__(self, elm, conv):
+    def __init__(self, elm):
         self.vals: dict = {}
         self.text = ""
         parts = []
@@ -153,7 +153,7 @@ class OmmlConverter:
         if stag in self._DIRECT:
             return self._children_str(elm)
         if stag.endswith("Pr"):
-            return _Pr(elm, self)
+            return _Pr(elm)
         return None
 
     def _children(self, elm, include=None):

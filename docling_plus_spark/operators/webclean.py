@@ -842,12 +842,7 @@ def host_quality_wilson(df: DataFrame) -> DataFrame:
     )
 
 
-def host_quality_wilson_sql(
-    id_expr: str,
-    host_expr: str,
-    pass_expr: str,
-    table: str,
-) -> str:
+def host_quality_wilson_sql(host_expr: str, pass_expr: str, table: str) -> str:
     """DuckDB twin of :func:`host_quality_wilson` (same operation
     order)."""
     z2 = WILSON_Z * WILSON_Z

@@ -17,6 +17,7 @@ production contract) skip it.
 
 from __future__ import annotations
 
+from bisect import bisect_right
 from dataclasses import replace
 
 from .geometry import (
@@ -366,7 +367,7 @@ def _dedup_cells(cells: list) -> list:
 # ---------------------------------------------------------------------------
 # rule-based cluster proposer (NN substitute)
 
-def propose_clusters(cells: list, page_width: float, page_height: float) -> list:
+def propose_clusters(cells: list, page_height: float) -> list:
     """Geometric paragraph proposer: cells → lines (vertical overlap) →
     blocks (vertical gap ≤ 1.5 × median line height AND
     horizontal overlap). Labels: blocks in the top/bottom 4 % of the page
@@ -377,32 +378,57 @@ def propose_clusters(cells: list, page_width: float, page_height: float) -> list
         return []
     # group into lines by vertical-interval overlap ≥ 0.5 of min height
     # AND horizontal proximity (gap ≤ 1×height) — without the horizontal
-    # test, side-by-side columns at the same y would fuse into one line
+    # test, side-by-side columns at the same y would fuse into one line.
+    # Cells come by top edge, descending: once a cell's top is at or
+    # below the bottom of a line's last cell, no later cell can join the
+    # line, so it leaves the scan and the first fit among the rest is
+    # unchanged. A NaN top breaks the order; then no line is retired.
+    ordered = sorted(cells, key=lambda c: (-c.bbox.t, c.bbox.l))
+    retire = all(a.bbox.t >= b.bbox.t for a, b in zip(ordered, ordered[1:]))
     lines: list = []
-    for cell in sorted(cells, key=lambda c: (-c.bbox.t, c.bbox.l)):
-        placed = False
-        for line in lines:
+    live: list = []
+    for cell in ordered:
+        cb = cell.bbox
+        ch = cb.t - cb.b
+        target = None
+        still = []
+        for line in live:
             ref = line[-1].bbox
-            inter = min(ref.t, cell.bbox.t) - max(ref.b, cell.bbox.b)
-            min_h = min(ref.height(), cell.bbox.height())
-            hgap = max(cell.bbox.l - ref.r, ref.l - cell.bbox.r)
-            if min_h > 0 and inter / min_h > 0.5 and hgap <= min_h:
-                line.append(cell)
-                placed = True
-                break
-        if not placed:
-            lines.append([cell])
+            if retire and cb.t <= ref.b:
+                continue
+            still.append(line)
+            if target is None:
+                rh = ref.t - ref.b
+                min_h = ch if ch < rh else rh
+                inter = (cb.t if cb.t < ref.t else ref.t) - (cb.b if cb.b > ref.b else ref.b)
+                hgap = cb.l - ref.r
+                if ref.l - cb.r > hgap:
+                    hgap = ref.l - cb.r
+                if min_h > 0 and inter / min_h > 0.5 and hgap <= min_h:
+                    target = line
+        live = still
+        if target is None:
+            line = [cell]
+            lines.append(line)
+            live.append(line)
+        else:
+            target.append(cell)
     line_boxes = []
     for line in lines:
         line.sort(key=lambda c: c.bbox.l)
-        line_boxes.append(
-            BBox(
-                l=min(c.bbox.l for c in line),
-                b=min(c.bbox.b for c in line),
-                r=max(c.bbox.r for c in line),
-                t=max(c.bbox.t for c in line),
-            )
-        )
+        first = line[0].bbox
+        l, b, r, t = first.l, first.b, first.r, first.t
+        for c in line[1:]:
+            cb = c.bbox
+            if cb.l < l:
+                l = cb.l
+            if cb.b < b:
+                b = cb.b
+            if cb.r > r:
+                r = cb.r
+            if cb.t > t:
+                t = cb.t
+        line_boxes.append(BBox(l=l, b=b, r=r, t=t))
     heights = sorted(b.height() for b in line_boxes)
     med_h = heights[len(heights) // 2] if heights else 1.0
     # paragraph threshold from the page's own leading: the median
@@ -412,50 +438,66 @@ def propose_clusters(cells: list, page_width: float, page_height: float) -> list
     # the step, so bbox-gap vs line-HEIGHT misclassifies; step-vs-median-
     # step separates them robustly on both synthetic fixtures (step
     # 1.2×h, para 2×h extra) and real pages (step ≈ 1.04×h, para ≈ 2×).
+    # A line's step is to the lowest line above it (top > own top + EPS)
+    # that overlaps it horizontally: scan up the lines sorted by top.
+    # NaN tops are no line's step (every comparison with them is false).
+    by_top = sorted((lb for lb in line_boxes if lb.t == lb.t), key=lambda lb: lb.t)
+    tops = [lb.t for lb in by_top]
     steps = []
-    for i, lb in enumerate(line_boxes):
-        best = None
-        for j, ob in enumerate(line_boxes):
-            if ob.t > lb.t + EPS and ob.overlaps_horizontally(lb):
-                d = ob.t - lb.t
-                if best is None or d < best:
-                    best = d
-        if best is not None:
-            steps.append(best)
+    for lb in line_boxes:
+        for k in range(bisect_right(tops, lb.t + EPS), len(by_top)):
+            ob = by_top[k]
+            if ob.overlaps_horizontally(lb):
+                steps.append(ob.t - lb.t)
+                break
     steps.sort()
     med_step = steps[len(steps) // 2] if steps else med_h * 1.2
-    # merge consecutive (top-down) lines into blocks
+    # merge consecutive (top-down) lines into blocks. Once a block's last
+    # top is more than the paragraph step above a line, it is so for every
+    # later (lower) line too: the block leaves the scan.
+    max_delta = 1.5 * med_step
     order = sorted(range(len(lines)), key=lambda i: -line_boxes[i].t)
-    blocks: list = []
+    retire = all(line_boxes[i].t >= line_boxes[j].t for i, j in zip(order, order[1:]))
+    blocks: list = []  # [l, b, r, t, last_top]
+    live = []
     for i in order:
         lb = line_boxes[i]
         target = None
-        for blk in blocks:
-            bb = blk["bbox"]
-            delta = blk["last_top"] - lb.t
+        still = []
+        for blk in live:
+            delta = blk[4] - lb.t
+            if retire and delta > max_delta:
+                continue
+            still.append(blk)
             if (
-                -med_h * 0.5 <= delta <= 1.5 * med_step
-                and bb.overlaps_horizontally(lb)
+                target is None
+                and -med_h * 0.5 <= delta <= max_delta
+                and blk[0] < lb.r and lb.l < blk[2]
             ):
                 target = blk
-                break
+        live = still
         if target is None:
-            blocks.append({"bbox": lb, "lines": [i], "last_top": lb.t})
+            blk = [lb.l, lb.b, lb.r, lb.t, lb.t]
+            blocks.append(blk)
+            live.append(blk)
         else:
-            target["lines"].append(i)
-            target["last_top"] = min(target["last_top"], lb.t)
-            bb = target["bbox"]
-            target["bbox"] = BBox(
-                l=min(bb.l, lb.l), b=min(bb.b, lb.b), r=max(bb.r, lb.r), t=max(bb.t, lb.t)
-            )
+            if lb.t < target[4]:
+                target[4] = lb.t
+            if lb.l < target[0]:
+                target[0] = lb.l
+            if lb.b < target[1]:
+                target[1] = lb.b
+            if lb.r > target[2]:
+                target[2] = lb.r
+            if lb.t > target[3]:
+                target[3] = lb.t
     out = []
-    for k, blk in enumerate(blocks):
-        bb = blk["bbox"]
-        if bb.t > 0.95 * page_height:
+    for k, (l, b, r, t, _) in enumerate(blocks):
+        if t > 0.95 * page_height:
             label = LABEL_PAGE_HEADER
-        elif bb.b < 0.05 * page_height:
+        elif b < 0.05 * page_height:
             label = LABEL_PAGE_FOOTER
         else:
             label = LABEL_TEXT
-        out.append(Cluster(id=k, label=label, bbox=bb, confidence=1.0))
+        out.append(Cluster(id=k, label=label, bbox=BBox(l=l, b=b, r=r, t=t), confidence=1.0))
     return out

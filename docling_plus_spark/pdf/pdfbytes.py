@@ -522,7 +522,7 @@ class PdfDocument:
         if entry[0] == "ofs":
             obj = self._parse_at(entry[1], num)
         else:
-            obj = self._objstm_object(entry[1], entry[2], num)
+            obj = self._objstm_object(entry[1], num)
         self._cache[num] = obj
         return obj
 
@@ -570,7 +570,7 @@ class PdfDocument:
             raw = data[j:end] if end >= 0 else data[j:]
         return Stream(d, raw)
 
-    def _objstm_object(self, stm_num: int, idx: int, expect_num: int) -> Any:
+    def _objstm_object(self, stm_num: int, expect_num: int) -> Any:
         if stm_num not in self._objstm_cache:
             objs: dict[int, Any] = {}
             stm = self.get_object(stm_num)

@@ -135,23 +135,27 @@ _STD_HIGH = {
 }
 
 
-def _base_encoding_map(name: str) -> dict[int, str]:
+def _code_page(codec: str) -> dict[int, str]:
     out: dict[int, str] = {}
-    if name == "WinAnsiEncoding":
-        for c in range(32, 256):
-            ch = bytes([c]).decode("cp1252", "ignore")
-            if ch:
-                out[c] = ch
-    elif name == "MacRomanEncoding":
-        for c in range(32, 256):
-            ch = bytes([c]).decode("mac_roman", "ignore")
-            if ch:
-                out[c] = ch
-    else:  # StandardEncoding / PDFDocEncoding approximation
-        for c in range(32, 127):
-            out[c] = chr(c)
-        out.update(_STD_HIGH)
+    for c in range(32, 256):
+        ch = bytes([c]).decode(codec, "ignore")
+        if ch:
+            out[c] = ch
     return out
+
+
+#: the base encodings, built once; StandardEncoding also stands in for
+#: PDFDocEncoding and any unknown name
+_BASE_ENCODINGS = {
+    "WinAnsiEncoding": _code_page("cp1252"),
+    "MacRomanEncoding": _code_page("mac_roman"),
+}
+_STANDARD_ENCODING = {c: chr(c) for c in range(32, 127)} | _STD_HIGH
+
+
+def _base_encoding_map(name: str) -> dict[int, str]:
+    """A fresh copy of the named base encoding: ``Differences`` edits it."""
+    return dict(_BASE_ENCODINGS.get(name, _STANDARD_ENCODING))
 
 
 # ---------------------------------------------------------------------------
@@ -220,11 +224,16 @@ class Glyph:
 
 
 class BaseFont:
+    """Metrics every font kind shares; a kind's ``decode`` maps the bytes
+    of a show operator to its glyphs."""
+
     two_byte = False
 
     def __init__(self) -> None:
         self.ascent = 0.8
         self.descent = -0.2
+        # code → Glyph: a font maps a code to the same glyph every time
+        self._glyphs: dict[int, Glyph] = {}
 
     def _descriptor_metrics(self, doc: PdfDocument, fd: Any) -> None:
         fd = doc.resolve(fd)
@@ -235,9 +244,6 @@ class BaseFont:
                 self.ascent = float(asc) / 1000.0
             if isinstance(dsc, (int, float)) and dsc < 0:
                 self.descent = float(dsc) / 1000.0
-
-    def decode(self, raw: bytes) -> list[Glyph]:  # pragma: no cover
-        raise NotImplementedError
 
 
 class SimpleFont(BaseFont):
@@ -308,17 +314,19 @@ class SimpleFont(BaseFont):
             w = w * self.font_matrix[0] * 1000.0
         return w
 
+    def _glyph(self, code: int) -> Glyph:
+        if code in self.tounicode:
+            text = self.tounicode[code]
+        elif code in self.enc_map:
+            text = self.enc_map[code]
+        else:
+            text = bytes([code]).decode("cp1252", "ignore")
+        glyph = self._glyphs[code] = Glyph(text, self._width(code), code == 32)
+        return glyph
+
     def decode(self, raw: bytes) -> list[Glyph]:
-        out = []
-        for code in raw:
-            if code in self.tounicode:
-                text = self.tounicode[code]
-            elif code in self.enc_map:
-                text = self.enc_map[code]
-            else:
-                text = bytes([code]).decode("cp1252", "ignore")
-            out.append(Glyph(text, self._width(code), code == 32))
-        return out
+        glyphs = self._glyphs
+        return [glyphs[c] if c in glyphs else self._glyph(c) for c in raw]
 
 
 class Type0Font(BaseFont):
@@ -375,13 +383,18 @@ class Type0Font(BaseFont):
             else:
                 break
 
+    def _glyph(self, code: int) -> Glyph:
+        text = self.tounicode.get(code, "")
+        glyph = self._glyphs[code] = Glyph(
+            text, self.widths.get(code, self.default_width), text == " ")
+        return glyph
+
     def decode(self, raw: bytes) -> list[Glyph]:
+        glyphs = self._glyphs
         out = []
         for i in range(0, len(raw) - len(raw) % 2, 2):
             code = (raw[i] << 8) | raw[i + 1]
-            text = self.tounicode.get(code, "")
-            w = self.widths.get(code, self.default_width)
-            out.append(Glyph(text, w, text == " "))
+            out.append(glyphs[code] if code in glyphs else self._glyph(code))
         return out
 
 

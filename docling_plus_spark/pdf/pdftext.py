@@ -16,6 +16,7 @@ one dict per page with ``page_no/width/height`` and ``cells`` carrying
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from typing import Any, Iterator
 
 from .geometry import BBox, TextCell
@@ -85,32 +86,18 @@ def _content_tokens(data: bytes) -> Iterator[tuple[str, Any]]:
         i += 1  # unknown byte: skip
 
 
-class _GlyphQuad:
-    __slots__ = (
-        "text", "l", "b", "r", "t", "size", "baseline", "is_space", "font",
-        "run",
-    )
-
-    def __init__(self, text, l, b, r, t, size, baseline, is_space, font=None,
-                 run=0):
-        self.text = text
-        self.l, self.b, self.r, self.t = l, b, r, t
-        self.size = size
-        self.baseline = baseline
-        self.is_space = is_space
-        self.font = font  # BaseFont identity (segmentation signal)
-        self.run = run    # show-op counter (segmentation signal)
-
-
 class _TextExtractor:
-    """One page's content execution → glyph quads (device space, y-up)."""
+    """One page's content execution → glyph quads."""
 
     MAX_GLYPHS = 200_000
     MAX_FORM_DEPTH = 8
 
     def __init__(self, doc: PdfDocument):
         self.doc = doc
-        self.glyphs: list[_GlyphQuad] = []
+        # one glyph quad per painted glyph, device space (y-up): (text, l,
+        # b, r, t, size, baseline, is_space, font, run); font (a BaseFont's
+        # identity) and run (the show-op counter) are segmentation signals
+        self.glyphs: list[tuple] = []
         self._font_cache: dict[int, BaseFont | None] = {}
         self._run = 0  # incremented per show op
 
@@ -165,17 +152,28 @@ class _TextExtractor:
             asc = font.ascent * tfs + ts
             dsc = font.descent * tfs + ts
             sx = tfs * th
+            word_space = 0.0 if font.two_byte else tw
+            if fast:
+                # everything but the x extent is the same for every glyph
+                dy0 = d * dsc + f
+                dy1 = d * asc + f
+                gb = dy1 if dy1 < dy0 else dy0
+                gt = dy1 if dy1 > dy0 else dy0
+                baseline = d * ts + f
+                size = abs(d * tfs) or tfs
+            else:
+                size = abs(d * tfs) or abs(b * tfs) or tfs
             xoff = 0.0
             glyphs_out = self.glyphs
             for g in font.decode(raw):
                 w0 = g.width / 1000.0
-                adv = (w0 * tfs + tc + (tw if g.is_space and not font.two_byte else 0.0)) * th
+                adv = (w0 * tfs + tc + (word_space if g.is_space else 0.0)) * th
                 # unmapped glyphs with real width (symbol-font bullets,
                 # broken encodings) are kept as U+FFFD: docling-parse
                 # keeps them as cells (redp5110 p2: 9 list bullets)
                 text = g.text
                 if not text and not g.is_space and w0 > 0:
-                    text = "�"
+                    text = "\ufffd"
                 if text or g.is_space:
                     is_space = g.is_space or text.isspace()
                     xl = xoff
@@ -183,15 +181,11 @@ class _TextExtractor:
                     if fast:
                         dx0 = a * xl + e
                         dx1 = a * xr + e
-                        dy0 = d * dsc + f
-                        dy1 = d * asc + f
-                        baseline = d * ts + f
-                        size = abs(d * tfs)
-                        glyphs_out.append(_GlyphQuad(
+                        glyphs_out.append((
                             " " if is_space else text,
-                            min(dx0, dx1), min(dy0, dy1),
-                            max(dx0, dx1), max(dy0, dy1),
-                            size or tfs, baseline, is_space, font, run,
+                            dx1 if dx1 < dx0 else dx0, gb,
+                            dx1 if dx1 > dx0 else dx0, gt,
+                            size, baseline, is_space, font, run,
                         ))
                     else:
                         pts = (
@@ -200,8 +194,7 @@ class _TextExtractor:
                         )
                         xs = [p[0] for p in pts]
                         ys = [p[1] for p in pts]
-                        size = abs(d * tfs) or abs(b * tfs) or tfs
-                        glyphs_out.append(_GlyphQuad(
+                        glyphs_out.append((
                             " " if is_space else text,
                             min(xs), min(ys), max(xs), max(ys),
                             size, _apply(mc, xl, ts)[1], is_space, font, run,
@@ -340,71 +333,77 @@ def _direction(text: str) -> int:
 
 class _Word:
     __slots__ = (
-        "text", "l", "b", "r", "t", "size", "is_space", "font", "run",
+        "text", "l", "b", "r", "t", "size", "em", "is_space", "font", "run",
+        "dir",
     )
 
-    def __init__(self, glyphs: list[_GlyphQuad]):
-        g0 = glyphs[0]
-        self.font = g0.font
-        self.run = glyphs[-1].run
-        l, b, r, t, size = g0.l, g0.b, g0.r, g0.t, g0.size
-        parts = [g0.text]
-        for g in glyphs[1:]:
-            parts.append(g.text)
-            if g.l < l:
-                l = g.l
-            if g.b < b:
-                b = g.b
-            if g.r > r:
-                r = g.r
-            if g.t > t:
-                t = g.t
-            if g.size > size:
-                size = g.size
-        self.text = "".join(parts)
+    def __init__(self, text, l, b, r, t, size, font, run):
+        self.text = text
         self.l, self.b, self.r, self.t, self.size = l, b, r, t, size
-        self.is_space = not self.text.strip()
+        self.em = 1e-6 if size < 1e-6 else size  # max(size, 1e-6)
+        self.is_space = not text.strip()
+        self.font = font  # the first glyph's
+        self.run = run    # the last glyph's
+        self.dir = _direction(text)
 
 
-def _glyphs_to_words(glyphs: list[_GlyphQuad]) -> list[_Word]:
+def _glyphs_to_words(glyphs: list[tuple]) -> list[_Word]:
     """Emission-order word assembly: breaks on space↔text transitions,
     baseline jumps, inter-word kern gaps (> WORD_GAP em), backwards
     motion, and FONT changes (docling-parse segments per style run even
     inside a visually continuous token — calibration: the glyph-level
     font break alone moved the golden cell-count deviation 151 → 124
     and exact pages 10 → 14; e.g. redp5110's 'ibm.com/redbooks' is two
-    fonts and two golden cells)."""
+    fonts and two golden cells). A word's box is the running envelope
+    of its glyphs."""
     words: list[_Word] = []
-    cur: list[_GlyphQuad] = []
-    cur_r = 0.0  # running right edge of the current word
-    mode: bool | None = None
-    prev: _GlyphQuad | None = None
-    for g in glyphs:
-        brk = g.is_space is not mode
-        if prev is not None and cur and not brk:
-            gap = g.l - cur_r
-            em = g.size if g.size > 1e-6 else 1e-6
-            if abs(g.baseline - prev.baseline) > 0.5 * max(g.size, prev.size, 1e-6):
+    if not glyphs:
+        return words
+    (text, wl, wb, wr, wt, wsize, p_base, mode, wfont, run) = glyphs[0]
+    parts = [text]
+    p_size, p_font = wsize, wfont
+    for text, l, b, r, t, size, baseline, is_space, font, run_g in glyphs[1:]:
+        brk = is_space is not mode
+        if not brk:
+            gap = l - wr
+            em = size if size > 1e-6 else 1e-6
+            if gap > WORD_GAP * em or gap < -2.0 * em:
                 brk = True
-            elif gap > WORD_GAP * em or gap < -2.0 * em:
-                brk = True
-            elif g.font is not prev.font:
-                brk = True
-            elif abs(g.size - prev.size) > SIZE_BREAK_FRAC * max(
-                g.size, prev.size, 1e-6
-            ):
-                # superscript/subscript size run (fraction numerators
-                # and denominators set at half size in the body font)
-                brk = True
-        if brk and cur:
-            words.append(_Word(cur))
-            cur = []
-        mode = g.is_space
-        cur.append(g)
-        cur_r = g.r if len(cur) == 1 else max(cur_r, g.r)
-        prev = g
-    if cur:
-        words.append(_Word(cur))
+            # one show op has one font and size: within it the font and
+            # size tests cannot break, nor can the baseline test while
+            # the baseline stays
+            elif baseline != p_base or run_g != run:
+                # max(size, p_size, 1e-6)
+                big = p_size if p_size > size else size
+                if 1e-6 > big:
+                    big = 1e-6
+                brk = (
+                    abs(baseline - p_base) > 0.5 * big
+                    or font is not p_font
+                    # superscript/subscript size run (fraction numerators
+                    # and denominators set at half size in the body font)
+                    or abs(size - p_size) > SIZE_BREAK_FRAC * big
+                )
+        if brk:
+            words.append(_Word("".join(parts), wl, wb, wr, wt, wsize, wfont, run))
+            parts = [text]
+            wl, wb, wr, wt, wsize, wfont = l, b, r, t, size, font
+            mode = is_space
+        else:
+            parts.append(text)
+            if l < wl:
+                wl = l
+            if b < wb:
+                wb = b
+            if r > wr:
+                wr = r
+            if t > wt:
+                wt = t
+            if size > wsize:
+                wsize = size
+        run = run_g
+        p_base, p_size, p_font = baseline, size, font
+    words.append(_Word("".join(parts), wl, wb, wr, wt, wsize, wfont, run))
     return words
 
 
@@ -441,47 +440,70 @@ def _words_to_cells(words: list[_Word]) -> list[TextCell]:
     above; aggregate deviation 28/1623 = 1.7%, 22/32 pages exact)."""
     if not words:
         return []
-    rows: list[dict] = []
-    for w in sorted(words, key=lambda w: (-w.t, w.l)):
-        placed = False
-        for row in rows:
-            inter = min(row["t"], w.t) - max(row["b"], w.b)
-            min_h = min(row["t"] - row["b"], w.t - w.b)
-            if min_h > 0 and inter / min_h > 0.5:
-                row["words"].append(w)
-                row["t"] = max(row["t"], w.t)
-                row["b"] = min(row["b"], w.b)
-                placed = True
-                break
-        if not placed:
-            rows.append({"t": w.t, "b": w.b, "words": [w]})
+    ordered = sorted(words, key=lambda w: (-w.t, w.l))
+    # Words come by top edge, descending: once a word's top is at or
+    # below a row's bottom, no later word can overlap the row, so it
+    # leaves the scan and the first fit among the rest is unchanged.
+    # A NaN top breaks the order; then no row is retired.
+    retire = all(a.t >= b.t for a, b in zip(ordered, ordered[1:]))
+    rows: list[list] = []  # [t, b, words], in creation order
+    live: list[list] = []
+    for w in ordered:
+        wt, wb = w.t, w.b
+        wh = wt - wb
+        target = None
+        still = []
+        for row in live:
+            rt, rb = row[0], row[1]
+            if retire and wt <= rb:
+                continue
+            still.append(row)
+            if target is None:
+                rh = rt - rb
+                min_h = wh if wh < rh else rh
+                inter = (wt if wt < rt else rt) - (wb if wb > rb else rb)
+                if min_h > 0 and inter / min_h > 0.5:
+                    target = row
+        live = still
+        if target is None:
+            row = [wt, wb, [w]]
+            rows.append(row)
+            live.append(row)
+        else:
+            target[2].append(w)
+            if wt > target[0]:
+                target[0] = wt
+            if wb < target[1]:
+                target[1] = wb
 
     cells: list[TextCell] = []
 
     def emit(seg: list[_Word]) -> None:
-        for part in (seg,):
-            if not part:
-                continue
-            text_parts: list[str] = []
-            for i, w in enumerate(part):
-                if i > 0:
-                    gap = w.l - part[i - 1].r
-                    if gap > 0.08 * max(w.size, 1e-6) and not (
-                            w.is_space or part[i - 1].is_space):
-                        text_parts.append(" ")
-                text_parts.append(w.text)
-            text = "".join(text_parts)
-            if not text.strip():
-                text = " "
-            cells.append(TextCell(
-                index=len(cells), text=text,
-                bbox=BBox(
-                    l=min(w.l for w in part), b=min(w.b for w in part),
-                    r=max(w.r for w in part), t=max(w.t for w in part))))
+        first = seg[0]
+        text_parts = [first.text]
+        l, b, r, t = first.l, first.b, first.r, first.t
+        prev = first
+        for w in seg[1:]:
+            if w.l - prev.r > 0.08 * w.em and not (w.is_space or prev.is_space):
+                text_parts.append(" ")
+            text_parts.append(w.text)
+            if w.l < l:
+                l = w.l
+            if w.b < b:
+                b = w.b
+            if w.r > r:
+                r = w.r
+            if w.t > t:
+                t = w.t
+            prev = w
+        text = "".join(text_parts)
+        if not text.strip():
+            text = " "
+        cells.append(TextCell(index=len(cells), text=text, bbox=BBox(l=l, b=b, r=r, t=t)))
 
-    for row in sorted(rows, key=lambda r: -r["t"]):
-        rw = sorted(row["words"], key=lambda w: (w.l, w.run))
-        row_rtl = any(_direction(w.text) == -1 for w in rw)
+    for row in sorted(rows, key=lambda r: -r[0]):
+        rw = sorted(row[2], key=lambda w: (w.l, w.run))
+        row_rtl = any(w.dir == -1 for w in rw)
         # duplicate-space layer: a space word overlapping the row's
         # already-covered span whose show-run is far from every
         # non-space word's run was painted by a separate whitespace
@@ -490,27 +512,27 @@ def _words_to_cells(words: list[_Word]) -> list[TextCell]:
         # by the 1-em wide-space rule; the dup rule over-fired there)
         if len(rw) > 1 and not row_rtl:
             dups: list[_Word] = []
-            keep: list[_Word] = []
-            for i, w in enumerate(rw):
-                if w.is_space and i > 0:
-                    cov = max(x.r for x in rw[:i])
-                    ov = min(cov, w.r) - w.l
-                    if ov > 0.5 * max(w.r - w.l, 1e-6):
-                        others = [
-                            x for x in rw if x is not w and not x.is_space
-                        ]
-                        near = min(
-                            (abs(w.run - x.run) for x in others), default=0
-                        )
-                        if others and near >= DUP_SPACE_RUN_DIST:
-                            dups.append(w)
-                            continue
-                keep.append(w)
+            keep: list[_Word] = [rw[0]]
+            cov = rw[0].r  # the right edge of the words before w
+            runs = None    # the non-space words' show runs, sorted
+            for w in rw[1:]:
+                dup = False
+                if w.is_space:
+                    width = w.r - w.l
+                    ov = (w.r if w.r < cov else cov) - w.l
+                    if ov > 0.5 * (1e-6 if width < 1e-6 else width):
+                        if runs is None:
+                            runs = sorted(x.run for x in rw if not x.is_space)
+                        k = bisect_left(runs, w.run)
+                        dup = bool(runs) and (
+                            (k == len(runs) or runs[k] - w.run >= DUP_SPACE_RUN_DIST)
+                            and (k == 0 or w.run - runs[k - 1] >= DUP_SPACE_RUN_DIST))
+                (dups if dup else keep).append(w)
+                if w.r > cov:
+                    cov = w.r
             for d in dups:
                 emit([d])
             rw = keep
-            if not rw:
-                continue
         # RTL rows (Arabic/Hebrew forms) segment on tighter whitespace:
         # form pages pad label fields with literal space runs of ~1 em,
         # and docling-parse keeps each field its own cell
@@ -520,102 +542,104 @@ def _words_to_cells(words: list[_Word]) -> list[TextCell]:
         if len(rw) > 2:
             gaps: list[float] = []
             r_run = rw[0].r
-            for i in range(1, len(rw)):
-                gaps.append((rw[i].l - r_run) / max(rw[i].size, 1e-6))
-                r_run = max(r_run, rw[i].r)
+            for w in rw[1:]:
+                gaps.append((w.l - r_run) / w.em)
+                if w.r > r_run:
+                    r_run = w.r
             med = _median(gaps)
             if med >= REL_MIN_MED:
-                thr_rel = max(REL_MIN_GAP, REL_RATIO * med)
-        seg: list[_Word] = [rw[0]]
-        seg_r = rw[0].r
-        seg_dir = _direction(rw[0].text)
-        seg_font = rw[0].font
-        seg_size = rw[0].size
+                thr_rel = REL_RATIO * med
+                if not thr_rel > REL_MIN_GAP:
+                    thr_rel = REL_MIN_GAP
+        # a font switch on a space word breaks only outside RTL rows
+        sp_ok = not row_rtl
+        first = rw[0]
+        seg: list[_Word] = [first]
+        seg_r = first.r
+        seg_dir = first.dir
+        seg_font = first.font
+        seg_size = first.size
+        # each rule is tested only when the ones before it did not break
         for w in rw[1:]:
             gap = w.l - seg_r
-            w_dir = _direction(w.text)
-            em = max(w.size, 1e-6)
-            # bidi boundary: a strong-direction change starts a new
-            # textline cell (RTL pages interleave Arabic/Hebrew runs
-            # with Latin identifiers; parsers segment at the switch)
-            bidi = w_dir != 0 and seg_dir != 0 and w_dir != seg_dir
-            # a wide whitespace run (checkbox fields, table gutters
-            # filled with literal spaces) separates cells just like an
-            # empty gap of the same width would
-            wide_space = w.is_space and ((w.r - w.l) > wide_thr * em)
-            # in RTL rows, punctuation-only neutral runs set in a
-            # Latin font attach to the adjacent Arabic run (a lone
-            # '.' must not become its own cell); digits/identifiers
-            # still split per font
-            rtl_guard = (
-                row_rtl
-                and (
-                    (
-                        w_dir == 0
-                        and len(w.text.strip()) <= 2
-                        and not _ALNUM_RE.search(w.text)
-                    )
-                    or (
-                        seg_dir == 0
-                        and 0 < sum(len(x.text.strip()) for x in seg) <= 2
-                        and not any(_ALNUM_RE.search(x.text) for x in seg)
-                    )
+            em = w.em
+            if gap > CELL_GAP * em:
+                brk = True
+            elif w.dir != 0 and seg_dir != 0 and w.dir != seg_dir:
+                # bidi boundary: a strong-direction change starts a new
+                # textline cell (RTL pages interleave Arabic/Hebrew runs
+                # with Latin identifiers; parsers segment at the switch)
+                brk = True
+            elif w.is_space and (w.r - w.l) > wide_thr * em:
+                # a wide whitespace run (checkbox fields, table gutters
+                # filled with literal spaces) separates cells just like
+                # an empty gap of the same width would
+                brk = True
+            elif thr_rel is not None and gap > thr_rel * em:
+                brk = True
+            elif not w.is_space and gap < -OV_THR * em and _same_line(seg[-1], w):
+                brk = True
+            else:
+                # a font switch (bold/italic/superscript runs) starts a
+                # new cell — docling-parse segments sanitized cells per
+                # style run. On non-RTL rows this applies to SPACE words
+                # too (a list bullet's trailing space is set in the body
+                # font, a separate style run → its own cell boundary)
+                brk = (
+                    (not w.is_space or sp_ok)
+                    and w.font is not None
+                    and seg_font is not None
+                    and w.font is not seg_font
                 )
-            )
-            # a font switch (bold/italic/superscript runs) starts a new
-            # cell — docling-parse segments sanitized cells per style
-            # run. On non-RTL rows this applies to SPACE words too (a
-            # list bullet's trailing space is set in the body font, a
-            # separate style run → its own cell boundary)
-            sp_ok = not row_rtl
-            font_break = (
-                (not w.is_space or sp_ok)
-                and w.font is not None
-                and seg_font is not None
-                and w.font is not seg_font
-                and not rtl_guard
-            )
-            size_break = (
-                not w.is_space
-                and abs(w.size - seg_size) > SIZE_BREAK_FRAC
-                * max(w.size, seg_size, 1e-6)
-                and not rtl_guard
-            )
-            rel_break = thr_rel is not None and gap > thr_rel * em
-            prev = seg[-1]
-            vint = min(prev.t, w.t) - max(prev.b, w.b)
-            vmin = min(prev.t - prev.b, w.t - w.b)
-            same_line = vmin > 0 and vint / vmin > OV_VERT
-            ov_break = (
-                not w.is_space and gap < -OV_THR * em and same_line
-            )
-            if (
-                gap > CELL_GAP * em
-                or bidi
-                or wide_space
-                or font_break
-                or size_break
-                or rel_break
-                or ov_break
-            ):
+                if not brk and not w.is_space:
+                    big = seg_size if seg_size > w.size else w.size
+                    if 1e-6 > big:
+                        big = 1e-6
+                    brk = abs(w.size - seg_size) > SIZE_BREAK_FRAC * big
+                if brk and row_rtl:
+                    brk = not _rtl_guard(w, seg, seg_dir)
+            if brk:
                 emit(seg)
                 seg = [w]
                 seg_r = w.r
-                seg_dir = w_dir
+                seg_dir = w.dir
                 seg_font = w.font
                 seg_size = w.size
             else:
                 seg.append(w)
                 if w.r > seg_r:
                     seg_r = w.r
-                if w_dir != 0:
-                    seg_dir = w_dir
+                if w.dir != 0:
+                    seg_dir = w.dir
                 if w.font is not None and (not w.is_space or sp_ok):
                     seg_font = w.font
                 if not w.is_space:
                     seg_size = w.size
         emit(seg)
     return cells
+
+
+def _same_line(prev: _Word, w: _Word) -> bool:
+    """Vertical overlap beyond OV_VERT of the smaller height: with a
+    jump back over the segment, a re-painted layer (double-strike rule)."""
+    ph = prev.t - prev.b
+    wh = w.t - w.b
+    vmin = wh if wh < ph else ph
+    vint = (w.t if w.t < prev.t else prev.t) - (w.b if w.b > prev.b else prev.b)
+    return vmin > 0 and vint / vmin > OV_VERT
+
+
+def _rtl_guard(w: _Word, seg: list[_Word], seg_dir: int) -> bool:
+    """In RTL rows, punctuation-only neutral runs set in a Latin font
+    attach to the adjacent Arabic run (a lone '.' must not become its
+    own cell); digits/identifiers still split per font."""
+    if w.dir == 0 and len(w.text.strip()) <= 2 and not _ALNUM_RE.search(w.text):
+        return True
+    return (
+        seg_dir == 0
+        and 0 < sum(len(x.text.strip()) for x in seg) <= 2
+        and not any(_ALNUM_RE.search(x.text) for x in seg)
+    )
 
 
 def _median(vals: list[float]) -> float:

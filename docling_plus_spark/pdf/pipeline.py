@@ -135,7 +135,7 @@ def _page_to_elements(row) -> list:
             for c in raw_clusters
         ]
     else:
-        clusters = propose_clusters(cells, width, height)
+        clusters = propose_clusters(cells, height)
     post = LayoutPostprocessor(cells, clusters, width, height).postprocess()
     out = []
     for k, cl in enumerate(post):

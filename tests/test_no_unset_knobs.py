@@ -10,6 +10,10 @@ name). A call that only forwards an unset parameter of its own function
 finds nothing new. A function that escapes as a value (a dict entry, a
 callback argument or a ``getattr`` target) is exempt, since its callers
 cannot be seen.
+
+Nor may a package function take a parameter its body never reads: callers
+set it, so the scan above cannot see it. Signatures an interface fixes are
+exempt (see ``_interface_fixed``).
 """
 
 from __future__ import annotations
@@ -133,6 +137,48 @@ def unset_knobs():
         unset = now
 
 
+def _interface_fixed(path, owner, fn, param) -> bool:
+    """The curation stages all take the parsed ``args``; ``HTMLParser``
+    calls its ``handle_*`` hooks with the tag; the format registry calls
+    every ``convert_*`` converter with ``name`` and ``filename``."""
+    if path.name == "job_curate.py" and fn.name.startswith("_st_"):
+        return True
+    if (isinstance(owner, ast.ClassDef) and fn.name.startswith("handle_")
+            and any(_name(b) == "HTMLParser" for b in owner.bases)):
+        return True
+    return fn.name.startswith("convert_") and param in ("name", "filename")
+
+
+def unread_parameters():
+    """``where(param)`` of each parameter of a package function that no
+    ``Name`` in its body reads (``self``/``cls`` of methods aside)."""
+    out = []
+    for path, tree in _sources():
+        if PACKAGE not in path.parents:
+            continue
+        for owner in ast.walk(tree):
+            for fn in ast.iter_child_nodes(owner):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                args = fn.args
+                params = [a.arg for a in args.posonlyargs + args.args + args.kwonlyargs]
+                params += [a.arg for a in (args.vararg, args.kwarg) if a is not None]
+                if isinstance(owner, ast.ClassDef) and not any(
+                        _name(d) == "staticmethod" for d in fn.decorator_list):
+                    params = params[1:]
+                read = {n.id for stmt in fn.body for n in ast.walk(stmt)
+                        if isinstance(n, ast.Name)}
+                out += [f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}({p})"
+                        for p in params
+                        if p not in read and not _interface_fixed(path, owner, fn, p)]
+    return out
+
+
 def test_every_defaulted_parameter_is_set_by_some_caller():
     knobs = unset_knobs()
     assert not knobs, f"{len(knobs)} parameters no caller sets:\n" + "\n".join(knobs)
+
+
+def test_every_parameter_is_read():
+    unread = unread_parameters()
+    assert not unread, f"{len(unread)} parameters no body reads:\n" + "\n".join(unread)

@@ -182,7 +182,7 @@ def test_propose_clusters_separates_columns():
                     BBox(l=x0, b=700 - ln * 14, r=x0 + 200, t=712 - ln * 14),
                 )
             )
-    blocks = propose_clusters(cells, 612, 792)
+    blocks = propose_clusters(cells, 792)
     assert len(blocks) == 2
 
 

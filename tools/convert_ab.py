@@ -2,11 +2,17 @@
 
 Exports ``<rev>``'s ``docling_plus_spark`` with ``git archive`` into a
 temporary directory and starts two worker processes, one importing that
-tree and one the working tree. Both convert the perfbench ``web_mixed``
-corpus through the extract stage's row builder in lockstep, one document at
-a time, alternating which side converts each document first.
+tree and one the working tree. Both convert three corpora per seed through
+the extract stage's row builder in lockstep, one document at a time,
+alternating which side converts each document first:
 
-* Identity: on the first round every page is also converted with every
+* the perfbench ``web_mixed`` pages (format ``html``);
+* the PDF rows of the perfbench ``small_docs`` corpus (format ``pdf``);
+* the PDFs of ``tests/pdf_variety.py`` (format ``pdf``): kerned ``TJ``
+  arrays, font and size runs, rotated text, composite fonts, RTL text,
+  space layers and custom encodings.
+
+* Identity: on the first round every document is also converted with every
   surface (text, md, itxt, json, doctags, html); each output column (the
   six surfaces, status, failure_class, error, num_items, num_tables) must
   be identical on both sides.
@@ -14,11 +20,12 @@ a time, alternating which side converts each document first.
   itxt), per side and round (one round is one pass over the corpus). Each
   worker freezes its import heap (``gc.freeze``) before converting.
 
-Prints the identity verdict and the CPU ratio working/base per round with
-its median and spread. The per-round totals are mostly the wiki_duck-scale
-pages, so it also prints the median page: per side, the median over pages
-of each page's median CPU over the rounds (what perfbench's ``doc_ms_p50``
-tracks), and its ratio. Exits 1 on any mismatch.
+Prints, per corpus, the identity verdict and the CPU ratio working/base per
+round with its median and spread. web_mixed's per-round totals are mostly
+its wiki_duck-scale pages, so it also prints the median document: per side,
+the median over documents of each document's median CPU over the rounds
+(what perfbench's ``doc_ms_p50`` tracks), and its ratio. Exits 1 on any
+mismatch.
 
 Usage: python tools/convert_ab.py --base <rev> [--seed N [N ...]]
 """
@@ -55,7 +62,7 @@ def _digest(value) -> str:
 
 
 def worker(root: str) -> None:
-    """Serve ``(url, html, check)`` requests on stdin with ``(cpu_s,
+    """Serve ``(url, data, fmt, check)`` requests on stdin with ``(cpu_s,
     digests)``; the digests (of the full row) only when ``check``."""
     sys.path.insert(0, root)
     import gc
@@ -72,15 +79,15 @@ def worker(root: str) -> None:
     stdout.flush()
     while True:
         try:
-            url, html, check = pickle.load(stdin)
+            url, data, fmt, check = pickle.load(stdin)
         except EOFError:
             return
         t0 = time.process_time()
-        timed_row(url, html, "html", None)
+        timed_row(url, data, fmt, None)
         cpu = time.process_time() - t0
         digests = None
         if check:
-            out = full_row(url, html, "html", None)
+            out = full_row(url, data, fmt, None)
             digests = {c: _digest(out[c]) for c in COMPARED}
         pickle.dump((cpu, digests), stdout)
         stdout.flush()
@@ -95,8 +102,8 @@ class _Side:
         )
         self.package_dir = pickle.load(self.proc.stdout)
 
-    def convert(self, url: str, html: bytes, check: bool):
-        pickle.dump((url, html, check), self.proc.stdin)
+    def convert(self, url: str, data: bytes, fmt: str, check: bool):
+        pickle.dump((url, data, fmt, check), self.proc.stdin)
         self.proc.stdin.flush()
         return pickle.load(self.proc.stdout)
 
@@ -128,27 +135,39 @@ def bench_corpus():
     return sys.modules[name]
 
 
+def pdf_variety():
+    """``tests/pdf_variety.py``, the seeded generator of varied PDFs."""
+    name = "pdf_variety"
+    if name not in sys.modules:
+        spec = importlib.util.spec_from_file_location(
+            name, os.path.join(REPO, "tests", "pdf_variety.py"))
+        module = importlib.util.module_from_spec(spec)
+        sys.modules[name] = module
+        spec.loader.exec_module(module)
+    return sys.modules[name]
+
+
 def compare(base: _Side, head: _Side, docs: list) -> tuple:
-    """``(mismatches, [head/base CPU ratio per round], {side: median page
-    CPU})``."""
+    """``docs`` as ``(url, data, fmt)`` → ``(mismatches, [head/base CPU
+    ratio per round], {side: median page CPU})``."""
     mismatches = []
     ratios = []
     # per side, per page: its CPU seconds in each round
     page_cpu = {side.name: [[] for _ in docs] for side in (base, head)}
     for rnd in range(ROUNDS):
         cpu = {base.name: 0.0, head.name: 0.0}
-        for i, doc in enumerate(docs):
+        for i, (url, data, fmt) in enumerate(docs):
             order = (base, head) if (i + rnd) % 2 == 0 else (head, base)
             got = {}
             for side in order:
-                seconds, digests = side.convert(doc.url, doc.html, rnd == 0)
+                seconds, digests = side.convert(url, data, fmt, rnd == 0)
                 cpu[side.name] += seconds
                 page_cpu[side.name][i].append(seconds)
                 got[side.name] = digests
             if rnd == 0:
                 differ = [c for c in COMPARED if got[base.name][c] != got[head.name][c]]
                 if differ:
-                    mismatches.append((doc.url, differ))
+                    mismatches.append((url, differ))
         ratios.append(cpu[head.name] / cpu[base.name])
         print(f"  round {rnd + 1}: base {cpu[base.name]:.2f} s, "
               f"working {cpu[head.name]:.2f} s, ratio {ratios[-1]:.3f}", flush=True)
@@ -161,12 +180,26 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
     ap.add_argument("--base", required=True, help="git revision to compare against")
     ap.add_argument("--seed", type=int, nargs="+", default=[0],
-                    help="web_mixed corpus seed(s) (default 0)")
+                    help="corpus seed(s) (default 0)")
     args = ap.parse_args(argv)
 
+    # small_docs writes its PDFs with the working tree's pdf.synth
+    sys.path.insert(0, REPO)
     corpus = bench_corpus()
-    # the web_mixed workload's corpus size (perfbench/workloads.py WEB_DOCS)
-    web_docs = 16 * corpus.FIXTURE_BLOCK
+    variety = pdf_variety()
+
+    def corpora(seed: int) -> list:
+        """``(title, docs)`` per corpus at ``seed``; the sizes are the
+        perfbench workloads' (perfbench/workloads.py WEB_DOCS, SMALL_DOCS)."""
+        web = corpus.web_pages(seed, 16 * corpus.FIXTURE_BLOCK).docs
+        small = corpus.small_docs(seed, 8_000).docs
+        return [
+            (f"web_mixed seed {seed}", [(d.url, d.html, "html") for d in web]),
+            (f"small_docs seed {seed}, pdf rows",
+             [(d.url, d.html, "pdf") for d in small if d.kind == "pdf"]),
+            (f"pdf_variety seed {seed}",
+             [(url, data, "pdf") for url, data in variety.variety_pdfs(seed)]),
+        ]
 
     failed = False
     with tempfile.TemporaryDirectory(prefix="convert_ab-") as tmp:
@@ -180,20 +213,20 @@ def main(argv=None) -> int:
             print(f"base tree ({args.base}): {base.package_dir}")
             print(f"working tree: {head.package_dir}")
             for seed in args.seed:
-                docs = corpus.web_pages(seed, web_docs).docs
-                print(f"web_mixed seed {seed}: {len(docs)} pages", flush=True)
-                mismatches, ratios, median_page = compare(base, head, docs)
-                for url, cols in mismatches[:10]:
-                    print(f"  MISMATCH {url}: {', '.join(cols)}")
-                print(f"  identical: {not mismatches} "
-                      f"({len(docs) - len(mismatches)}/{len(docs)} pages, "
-                      f"{len(COMPARED)} columns)")
-                print(f"  cpu ratio working/base: median {statistics.median(ratios):.3f}, "
-                      f"spread {min(ratios):.3f}-{max(ratios):.3f} over {len(ratios)} rounds")
-                print(f"  median page cpu: base {median_page[base.name] * 1e3:.3f} ms, "
-                      f"working {median_page[head.name] * 1e3:.3f} ms, ratio "
-                      f"{median_page[head.name] / median_page[base.name]:.3f}")
-                failed |= bool(mismatches)
+                for title, docs in corpora(seed):
+                    print(f"{title}: {len(docs)} documents", flush=True)
+                    mismatches, ratios, median_page = compare(base, head, docs)
+                    for url, cols in mismatches[:10]:
+                        print(f"  MISMATCH {url}: {', '.join(cols)}")
+                    print(f"  identical: {not mismatches} "
+                          f"({len(docs) - len(mismatches)}/{len(docs)} documents, "
+                          f"{len(COMPARED)} columns)")
+                    print(f"  cpu ratio working/base: median {statistics.median(ratios):.3f}, "
+                          f"spread {min(ratios):.3f}-{max(ratios):.3f} over {len(ratios)} rounds")
+                    print(f"  median document cpu: base {median_page[base.name] * 1e3:.3f} ms, "
+                          f"working {median_page[head.name] * 1e3:.3f} ms, ratio "
+                          f"{median_page[head.name] / median_page[base.name]:.3f}")
+                    failed |= bool(mismatches)
         finally:
             for side in sides:
                 side.close()
