@@ -29,66 +29,63 @@ def merge_horizontal_cells(cells: list) -> list:
     # leaves the scan and the first fit among the rest is unchanged.
     # A NaN top breaks the order; then no row is retired.
     retire = all(a.bbox.t >= b.bbox.t for a, b in zip(ordered, ordered[1:]))
-    rows: list = []  # [t, b, cells] of the row's envelope, in creation order
+    rows: list = []  # in creation order
     live: list = []
     for cell in ordered:
-        ct, cb = cell.bbox.t, cell.bbox.b
-        ch = ct - cb
         target = None
         still = []
         for row in live:
-            rt, rb = row[0], row[1]
-            if retire and ct <= rb:
+            env = row["bbox"]
+            if retire and cell.bbox.t <= env.b:
                 continue
             still.append(row)
             if target is None:
-                rh = rt - rb
-                min_h = ch if ch < rh else rh
-                inter = (ct if ct < rt else rt) - (cb if cb > rb else rb)
+                inter = min(env.t, cell.bbox.t) - max(env.b, cell.bbox.b)
+                min_h = min(env.height(), cell.bbox.height())
                 if min_h > 0 and inter / min_h > 0.5:
                     target = row
         live = still
         if target is None:
-            row = [ct, cb, [cell]]
+            row = {"bbox": cell.bbox, "cells": [cell]}
             rows.append(row)
             live.append(row)
         else:
-            target[2].append(cell)
-            if ct > target[0]:
-                target[0] = ct
-            if cb < target[1]:
-                target[1] = cb
+            target["cells"].append(cell)
+            env = target["bbox"]
+            target["bbox"] = BBox(
+                l=min(env.l, cell.bbox.l),
+                b=min(env.b, cell.bbox.b),
+                r=max(env.r, cell.bbox.r),
+                t=max(env.t, cell.bbox.t),
+            )
 
     merged: list = []
-    for row in sorted(rows, key=lambda r: -r[0]):
-        row_cells = sorted(row[2], key=lambda c: c.bbox.l)
+    for row in sorted(rows, key=lambda r: -r["bbox"].t):
+        row_cells = sorted(row["cells"], key=lambda c: c.bbox.l)
         avg_h = sum(c.bbox.height() for c in row_cells) / len(row_cells)
         cur = row_cells[0]
-        # the merged cell so far; a bbox is built once per merged run
-        text, from_ocr, bbox = cur.text, cur.from_ocr, cur.bbox
-        l, b, r, t = bbox.l, bbox.b, bbox.r, bbox.t
         for nxt in row_cells[1:]:
-            nb = nxt.bbox
-            gap = nb.l - r
+            gap = nxt.bbox.l - cur.bbox.r
             if gap <= avg_h:
-                text = ((text + " " + nxt.text).strip() if gap > 0.1 * avg_h
-                        else text + nxt.text)
-                from_ocr = from_ocr or nxt.from_ocr
-                bbox = None
-                if nb.b < b:
-                    b = nb.b
-                r = nb.r
-                if nb.t > t:
-                    t = nb.t
+                cur = TextCell(
+                    index=cur.index,
+                    text=(cur.text + " " + nxt.text).strip()
+                    if gap > 0.1 * avg_h
+                    else cur.text + nxt.text,
+                    bbox=BBox(
+                        l=cur.bbox.l,
+                        b=min(cur.bbox.b, nxt.bbox.b),
+                        r=nxt.bbox.r,
+                        t=max(cur.bbox.t, nxt.bbox.t),
+                    ),
+                    from_ocr=cur.from_ocr or nxt.from_ocr,
+                )
             else:
-                merged.append((text, bbox if bbox is not None else BBox(l=l, b=b, r=r, t=t),
-                               from_ocr))
-                text, from_ocr, bbox = nxt.text, nxt.from_ocr, nb
-                l, b, r, t = nb.l, nb.b, nb.r, nb.t
-        merged.append((text, bbox if bbox is not None else BBox(l=l, b=b, r=r, t=t),
-                       from_ocr))
+                merged.append(cur)
+                cur = nxt
+        merged.append(cur)
 
     return [
-        TextCell(index=i, text=text, bbox=bbox, from_ocr=from_ocr)
-        for i, (text, bbox, from_ocr) in enumerate(merged)
+        TextCell(index=i, text=c.text, bbox=c.bbox, from_ocr=c.from_ocr)
+        for i, c in enumerate(merged)
     ]

@@ -388,22 +388,17 @@ def propose_clusters(cells: list, page_height: float) -> list:
     lines: list = []
     live: list = []
     for cell in ordered:
-        cb = cell.bbox
-        ch = cb.t - cb.b
         target = None
         still = []
         for line in live:
             ref = line[-1].bbox
-            if retire and cb.t <= ref.b:
+            if retire and cell.bbox.t <= ref.b:
                 continue
             still.append(line)
             if target is None:
-                rh = ref.t - ref.b
-                min_h = ch if ch < rh else rh
-                inter = (cb.t if cb.t < ref.t else ref.t) - (cb.b if cb.b > ref.b else ref.b)
-                hgap = cb.l - ref.r
-                if ref.l - cb.r > hgap:
-                    hgap = ref.l - cb.r
+                inter = min(ref.t, cell.bbox.t) - max(ref.b, cell.bbox.b)
+                min_h = min(ref.height(), cell.bbox.height())
+                hgap = max(cell.bbox.l - ref.r, ref.l - cell.bbox.r)
                 if min_h > 0 and inter / min_h > 0.5 and hgap <= min_h:
                     target = line
         live = still
@@ -416,19 +411,14 @@ def propose_clusters(cells: list, page_height: float) -> list:
     line_boxes = []
     for line in lines:
         line.sort(key=lambda c: c.bbox.l)
-        first = line[0].bbox
-        l, b, r, t = first.l, first.b, first.r, first.t
-        for c in line[1:]:
-            cb = c.bbox
-            if cb.l < l:
-                l = cb.l
-            if cb.b < b:
-                b = cb.b
-            if cb.r > r:
-                r = cb.r
-            if cb.t > t:
-                t = cb.t
-        line_boxes.append(BBox(l=l, b=b, r=r, t=t))
+        line_boxes.append(
+            BBox(
+                l=min(c.bbox.l for c in line),
+                b=min(c.bbox.b for c in line),
+                r=max(c.bbox.r for c in line),
+                t=max(c.bbox.t for c in line),
+            )
+        )
     heights = sorted(b.height() for b in line_boxes)
     med_h = heights[len(heights) // 2] if heights else 1.0
     # paragraph threshold from the page's own leading: the median
@@ -458,46 +448,42 @@ def propose_clusters(cells: list, page_height: float) -> list:
     max_delta = 1.5 * med_step
     order = sorted(range(len(lines)), key=lambda i: -line_boxes[i].t)
     retire = all(line_boxes[i].t >= line_boxes[j].t for i, j in zip(order, order[1:]))
-    blocks: list = []  # [l, b, r, t, last_top]
+    blocks: list = []
     live = []
     for i in order:
         lb = line_boxes[i]
         target = None
         still = []
         for blk in live:
-            delta = blk[4] - lb.t
+            delta = blk["last_top"] - lb.t
             if retire and delta > max_delta:
                 continue
             still.append(blk)
             if (
                 target is None
                 and -med_h * 0.5 <= delta <= max_delta
-                and blk[0] < lb.r and lb.l < blk[2]
+                and blk["bbox"].overlaps_horizontally(lb)
             ):
                 target = blk
         live = still
         if target is None:
-            blk = [lb.l, lb.b, lb.r, lb.t, lb.t]
+            blk = {"bbox": lb, "last_top": lb.t}
             blocks.append(blk)
             live.append(blk)
         else:
-            if lb.t < target[4]:
-                target[4] = lb.t
-            if lb.l < target[0]:
-                target[0] = lb.l
-            if lb.b < target[1]:
-                target[1] = lb.b
-            if lb.r > target[2]:
-                target[2] = lb.r
-            if lb.t > target[3]:
-                target[3] = lb.t
+            target["last_top"] = min(target["last_top"], lb.t)
+            bb = target["bbox"]
+            target["bbox"] = BBox(
+                l=min(bb.l, lb.l), b=min(bb.b, lb.b), r=max(bb.r, lb.r), t=max(bb.t, lb.t)
+            )
     out = []
-    for k, (l, b, r, t, _) in enumerate(blocks):
-        if t > 0.95 * page_height:
+    for k, blk in enumerate(blocks):
+        bb = blk["bbox"]
+        if bb.t > 0.95 * page_height:
             label = LABEL_PAGE_HEADER
-        elif b < 0.05 * page_height:
+        elif bb.b < 0.05 * page_height:
             label = LABEL_PAGE_FOOTER
         else:
             label = LABEL_TEXT
-        out.append(Cluster(id=k, label=label, bbox=BBox(l=l, b=b, r=r, t=t), confidence=1.0))
+        out.append(Cluster(id=k, label=label, bbox=bb, confidence=1.0))
     return out

@@ -122,34 +122,30 @@ def export_tree(rev: str, dest: str) -> None:
         tf.extractall(dest, filter="data")
 
 
+def _load(name: str, *path: str):
+    """The module at ``REPO/<path>``, imported once as ``name``."""
+    if name not in sys.modules:
+        spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, *path))
+        module = importlib.util.module_from_spec(spec)
+        sys.modules[name] = module  # dataclasses look their module up
+        spec.loader.exec_module(module)
+    return sys.modules[name]
+
+
 def bench_corpus():
     """The benchmark's seeded corpus generators (``perfbench/corpus.py``,
     loaded read-only; the tests load it here too)."""
-    name = "perfbench_corpus"
-    if name not in sys.modules:
-        spec = importlib.util.spec_from_file_location(
-            name, os.path.join(REPO, "perfbench", "corpus.py"))
-        module = importlib.util.module_from_spec(spec)
-        sys.modules[name] = module  # its dataclasses look their module up
-        spec.loader.exec_module(module)
-    return sys.modules[name]
+    return _load("perfbench_corpus", "perfbench", "corpus.py")
 
 
 def pdf_variety():
-    """``tests/pdf_variety.py``, the seeded generator of varied PDFs."""
-    name = "pdf_variety"
-    if name not in sys.modules:
-        spec = importlib.util.spec_from_file_location(
-            name, os.path.join(REPO, "tests", "pdf_variety.py"))
-        module = importlib.util.module_from_spec(spec)
-        sys.modules[name] = module
-        spec.loader.exec_module(module)
-    return sys.modules[name]
+    """The seeded generator of varied PDFs (``tests/pdf_variety.py``)."""
+    return _load("pdf_variety", "tests", "pdf_variety.py")
 
 
 def compare(base: _Side, head: _Side, docs: list) -> tuple:
     """``docs`` as ``(url, data, fmt)`` → ``(mismatches, [head/base CPU
-    ratio per round], {side: median page CPU})``."""
+    ratio per round], {side: median document CPU})``."""
     mismatches = []
     ratios = []
     # per side, per page: its CPU seconds in each round
