@@ -153,24 +153,28 @@ def make_table_doc(doc_idx: int, n_rows: int = 3, n_cols: int = 3):
     return [page], (intro, expected_grid)
 
 
-def synth_pdf_pages(spark: SparkSession, n_docs: int = 20) -> DataFrame:
-    """Mixed corpus: alternating single-column (2 pages) and two-column."""
+def pages_frame(spark: SparkSession, pages: list) -> DataFrame:
+    """Page dicts (as the make_* generators emit them) → a PAGES_SCHEMA
+    DataFrame."""
     from docling_plus_spark.pdf.pipeline import PAGES_SCHEMA
 
-    rows: list = []
-    for i in range(n_docs):
-        pages, _ = (
-            make_single_column_doc(i) if i % 2 == 0 else make_two_column_doc(i)
+    rows = [
+        (
+            p["url"], p["page_no"], p["width"], p["height"],
+            [(c["index"], c["text"], c["l"], c["t"], c["r"], c["b"]) for c in p["cells"]],
+            None if p["clusters"] is None else [
+                (c["id"], c["label"], c["confidence"], c["l"], c["t"], c["r"], c["b"])
+                for c in p["clusters"]
+            ],
         )
-        for p in pages:
-            rows.append(
-                (
-                    p["url"], p["page_no"], p["width"], p["height"],
-                    [
-                        (c["index"], c["text"], c["l"], c["t"], c["r"], c["b"])
-                        for c in p["cells"]
-                    ],
-                    None,
-                )
-            )
+        for p in pages
+    ]
     return spark.createDataFrame(rows, PAGES_SCHEMA)
+
+
+def synth_pdf_pages(spark: SparkSession, n_docs: int = 20) -> DataFrame:
+    """Mixed corpus: alternating single-column (2 pages) and two-column."""
+    pages: list = []
+    for i in range(n_docs):
+        pages += (make_single_column_doc(i) if i % 2 == 0 else make_two_column_doc(i))[0]
+    return pages_frame(spark, pages)
