@@ -1,6 +1,6 @@
 """HTML serialization of a DoclingDocument dict (S10 sink).
 
-Reference surface: ``DoclingDocument.save_as_html(..., split_page_view=)``
+Reference surface: ``DoclingDocument.save_as_html(...)``
 (hook ``docling/docling/cli/main.py:228-259``; the serializer itself lives
 in the external docling-core package, not vendored in the reference
 snapshot, and the reference repo ships no output-HTML goldens). This is
@@ -11,9 +11,8 @@ therefore a from-scratch sink reproducing the *contract*:
   formula→``<div class="formula">``, tables→``<table>`` with real
   rowspan/colspan and ``<th>`` headers, pictures→``<figure>`` with
   ``<figcaption>``;
-* ``split_page_view=True`` renders one ``<div class="page">`` per
-  provenance page (PDF-path documents), mirroring the reference's
-  split-page export; documents without provenance collapse to one page;
+* the body renders as one ``<div class="page">`` (the reference's
+  single-page view; its split-page view has no caller here);
 * verified by round-trip (tests/test_html_sink.py): our HTML re-converted
   by our own HTML backend yields an identical element tree (itxt) for
   every reference HTML fixture — the "Done" criterion from the round-1
@@ -22,7 +21,7 @@ therefore a from-scratch sink reproducing the *contract*:
 Operates on the plain dict form (``DLDocument.export_to_dict()`` or a
 docling-JSON file), so the same code serves the HTML path (no prov) and
 the PDF path / reference JSONs (prov + pages); it resolves ``$ref``
-pointers and reads provenance pages with the DocTags sink's helpers. Only
+pointers with the DocTags sink's helper. Only
 the body content layer is rendered. Pure string function — applied per row
 inside the existing serialization ``mapInPandas`` stage.
 """
@@ -30,9 +29,7 @@ inside the existing serialization ``mapInPandas`` stage.
 from __future__ import annotations
 
 import html as _html
-from typing import Optional
-
-from .doctags import _first_page, _resolve
+from .doctags import _resolve
 
 _STYLE = (
     "html{background-color:#f5f5f5;}body{margin:2em auto;max-width:50em;"
@@ -134,7 +131,7 @@ def _table_html(doc: dict, item: dict, writer: "_HtmlWriter") -> str:
                         writer._walk(grp, blocks)
                     finally:
                         writer._in_cell = prev
-                inner = "".join(b for b, _ in blocks)
+                inner = "".join(blocks)
             else:
                 inner = _esc(cell.get("text", ""))
             out.append(f"<{tag}{''.join(attrs)}>{inner}</{tag}>")
@@ -150,7 +147,7 @@ class _HtmlWriter:
         self._in_cell = False
 
     def body_blocks(self) -> list:
-        """(block_html, first_page_no) for every top-level renderable."""
+        """The HTML of every top-level renderable, in document order."""
         blocks: list = []
         self._walk(self.doc.get("body") or {}, blocks)
         return blocks
@@ -216,18 +213,15 @@ class _HtmlWriter:
                     continue
                 label = child.get("label", "")
                 if label in ("list", "ordered_list"):
-                    blocks.append((self._list_html(child), self._group_page(child)))
+                    blocks.append(self._list_html(child))
                 elif label == "inline":
                     blk = self._inline_group_html(child)
                     if blk:
-                        blocks.append((blk, self._group_page(child)))
+                        blocks.append(blk)
                 elif label == "section" and child.get("name") == "details":
                     sub: list = []
                     self._walk(child, sub)
-                    blocks.append((
-                        "<details>" + "".join(b for b, _ in sub) + "</details>",
-                        self._group_page(child),
-                    ))
+                    blocks.append("<details>" + "".join(sub) + "</details>")
                 else:
                     self._walk(child, blocks)
                 continue
@@ -237,18 +231,9 @@ class _HtmlWriter:
                 continue
             blk = self._item_html(child, kind)
             if blk:
-                blocks.append((blk, _first_page(child)))
+                blocks.append(blk)
             if kind not in ("pictures", "tables"):
                 self._walk(child, blocks)
-
-    def _group_page(self, group: dict) -> Optional[int]:
-        for cref in group.get("children") or []:
-            child = _resolve(self.doc, cref["$ref"])
-            if child is not None:
-                pg = _first_page(child)
-                if pg is not None:
-                    return pg
-        return None
 
     def _item_html(self, item: dict, kind: str) -> str:
         if kind == "tables":
@@ -355,34 +340,11 @@ class _HtmlWriter:
         return joined if bare else (f"<p>{joined}</p>" if joined else "")
 
 
-def export_to_html(doc: dict, split_page_view: bool = False) -> str:
-    """Serialize a DoclingDocument dict to a standalone HTML page.
-
-    ``split_page_view=True``: one ``<div class="page">`` per provenance
-    page in ascending page order (items without provenance land on the
-    first page), reproducing the reference's split-page export contract.
-    """
-    writer = _HtmlWriter(doc)
-    blocks = writer.body_blocks()
+def export_to_html(doc: dict) -> str:
+    """Serialize a DoclingDocument dict to a standalone HTML page."""
+    blocks = _HtmlWriter(doc).body_blocks()
     name = str(doc.get("name") or "document")
-
-    if split_page_view:
-        page_nos = sorted(
-            {p for _, p in blocks if p is not None}
-            | {int(k) for k in (doc.get("pages") or {})}
-        ) or [1]
-        by_page: dict = {p: [] for p in page_nos}
-        for blk, pg in blocks:
-            key = pg if pg in by_page else page_nos[0]
-            by_page[key].append(blk)
-        divs = []
-        for p in page_nos:
-            inner = "\n".join(by_page[p])
-            divs.append(f'<div class="page" data-page="{p}">\n{inner}\n</div>')
-        body = "\n".join(divs)
-    else:
-        body = '<div class="page">\n' + "\n".join(b for b, _ in blocks) + "\n</div>"
-
+    body = '<div class="page">\n' + "\n".join(blocks) + "\n</div>"
     return (
         "<!DOCTYPE html>\n"
         '<html lang="en">\n<head>\n<meta charset="UTF-8">\n'

@@ -28,8 +28,9 @@ from .table_match import match_table
 
 
 def table_data_to_json(data: TableData) -> str:
-    """Compact wire form for the ELEMENTS table_json column (rides the
-    per-document shuffle instead of a driver-side dict)."""
+    """Compact wire form of a table: ``{num_rows, num_cols, cells}`` with
+    one ``[text, row, col, row_span, col_span, column_header]`` list per
+    cell — the ``table_json`` column of ``repair_predicted_tables``."""
     return json.dumps(
         {
             "num_rows": data.num_rows,
@@ -48,26 +49,6 @@ def table_data_to_json(data: TableData) -> str:
         }
     )
 
-
-def table_data_from_json(payload: str) -> TableData:
-    obj = json.loads(payload)
-    return TableData(
-        num_rows=obj["num_rows"],
-        num_cols=obj["num_cols"],
-        table_cells=[
-            TableCellModel(
-                text=t,
-                start_row_offset_idx=ri,
-                end_row_offset_idx=ri + rs,
-                start_col_offset_idx=ci,
-                end_col_offset_idx=ci + cs,
-                row_span=rs,
-                col_span=cs,
-                column_header=hdr,
-            )
-            for t, ri, ci, rs, cs, hdr in obj["cells"]
-        ],
-    )
 
 _COL_GAP_TOL = 2.0  # points; left edges closer than this share a column
 

@@ -1,4 +1,4 @@
-"""HTML sink (S10): round-trip + split-page-view tests.
+"""HTML sink (S10): round-trip and page-view tests.
 
 The reference's HTML export lives in external docling-core (hook
 ``docling/docling/cli/main.py:228-259``) and ships no output goldens, so
@@ -8,7 +8,6 @@ re-converted by our own HTML backend yields an identical element tree
 """
 
 import json
-import re
 from pathlib import Path
 
 import pytest
@@ -35,21 +34,9 @@ def test_html_roundtrip_itxt_identical(name):
 
 
 @needs_reference
-def test_split_page_view_one_div_per_page():
-    doc = json.loads((GT / "2206.01062.json").read_text())
-    h = export_to_html(doc, split_page_view=True)
-    pages = re.findall(r'<div class="page" data-page="(\d+)">', h)
-    assert pages == [str(i) for i in range(1, 10)]  # 9-page paper, in order
-    # a known page-4 element lands in the page-4 div
-    p4 = h.index('data-page="4"')
-    p5 = h.index('data-page="5"')
-    assert "DocLayNet dataset overview" in h[p4:p5]
-
-
-@needs_reference
 def test_single_view_is_one_page_div():
     doc = json.loads((GT / "2206.01062.json").read_text())
-    h = export_to_html(doc, split_page_view=False)
+    h = export_to_html(doc)
     assert h.count('<div class="page"') == 1
 
 

@@ -257,31 +257,21 @@ def test_failed_pages_surface_as_partial_success(spark):
     assert all(r["status"] == "success" and r["num_failed_pages"] == 0 for r in ok)
 
 
-def test_table_overrides_dataframe(spark):
-    """Precomputed table structures flow in as a DataFrame joined before
-    the shuffle (no driver-side dict side channel)."""
+def test_pages_without_elements_still_yield_a_row(spark):
+    """Output is total over the input: a document whose pages yield no
+    elements (no cells, or only a blank cell) is one success row with no
+    items, as ``convert_pdf`` gives for a PDF without text."""
     from docling_plus_spark.pdf import pipeline as pp
-    from pdf_fixtures import make_table_doc
+    from pdf_fixtures import PAGE_H, PAGE_W, pages_frame
 
-    rows = []
-    for i in range(2):
-        pages_list, _ = make_table_doc(i)
-        for p in pages_list:
-            rows.append((
-                p["url"], p["page_no"], p["width"], p["height"],
-                [(c["index"], c["text"], c["l"], c["t"], c["r"], c["b"])
-                 for c in p["cells"]],
-                [(c["id"], c["label"], c["confidence"],
-                  c["l"], c["t"], c["r"], c["b"]) for c in p["clusters"]],
-            ))
-    pages = spark.createDataFrame(rows, pp.PAGES_SCHEMA)
-    elements = pp.pages_to_elements(pages)
-    tbl_elems = elements.filter("label = 'table'").select("url", "page_no", "cid")
-    assert tbl_elems.count() == 2
-    from pyspark.sql import functions as F
-    ov = tbl_elems.withColumn(
-        "table_json",
-        F.lit('{"num_rows": 1, "num_cols": 1, "cells": [["OVERRIDE", 0, 0, 1, 1, false]]}'),
-    )
-    out = pp.elements_to_documents(elements, table_overrides=ov).collect()
-    assert any("OVERRIDE" in (r["md"] or "") for r in out)
+    blank = {"index": 0, "text": "  ", "l": 72.0, "t": 72.0, "r": 82.0, "b": 84.0}
+    pages = pages_frame(spark, [
+        {"url": f"https://synthpdf.test/{name}/0", "page_no": 0, "width": PAGE_W,
+         "height": PAGE_H, "cells": cells, "clusters": None}
+        for name, cells in (("empty", []), ("blank", [blank]))
+    ])
+    out = {r["url"]: r for r in pp.pdf_pipeline(pages).collect()}
+    assert sorted(out) == ["https://synthpdf.test/blank/0", "https://synthpdf.test/empty/0"]
+    for row in out.values():
+        assert (row["status"], row["failure_class"], row["error"]) == ("success", None, None)
+        assert (row["num_pages"], row["num_failed_pages"], row["num_items"]) == (1, 0, 0)

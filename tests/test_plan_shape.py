@@ -209,6 +209,33 @@ def test_pdf_bytes_extract_no_shuffle(spark):
     assert maps == ["MapInPandas"], plan
 
 
+def test_pdf_pipeline_one_grouped_stage(spark):
+    """The page-table PDF path is one grouped stage: a single hash
+    exchange on url brings a document's pages together and one
+    FlatMapGroupsInPandas turns them into the document row; no per-page
+    map stage runs before the shuffle. Building it warns nothing."""
+    import re
+    import warnings
+
+    from pdf_fixtures import synth_pdf_pages
+
+    from docling_plus_spark.pdf.pipeline import pdf_pipeline
+
+    pages = synth_pdf_pages(spark, 2)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = pdf_pipeline(pages)
+    assert not [w for w in caught if "type hints" in str(w.message)], caught
+    plan = _plan(out)
+    exchanges = [
+        b for b in plan.split("\n\n") if re.match(r"\(\d+\) Exchange", b)
+    ]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"^Arguments: hashpartitioning\(url#\d+, 4\)", exchanges[0], re.M), plan
+    maps = re.findall(r"^\(\d+\) (\w*(?:Map|Pandas)\w*)", plan, re.M)
+    assert maps == ["FlatMapGroupsInPandas"], plan
+
+
 def test_job_epoch_scatters_only_after_limit(spark, tmp_path, monkeypatch):
     """job.run's epoch is extract_pipeline over the anti-joined rows, the
     benchmarked plan. A global limit gathers its rows onto one partition,

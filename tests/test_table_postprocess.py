@@ -294,7 +294,7 @@ def test_postprocess_predicted_table_assembles_texts():
 
 
 def test_repair_predicted_tables_spark_stage():
-    """End-to-end through the Spark stage into elements_to_documents."""
+    """End-to-end through the Spark stage: one repaired grid per prediction."""
     import json
 
     import pytest

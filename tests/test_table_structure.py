@@ -5,11 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_fixtures import make_table_doc
-from docling_plus_spark.pdf.table_structure import (
-    table_data_from_json,
-    table_data_to_json,
-)
+from pdf_fixtures import make_table_doc, pages_frame
+from docling_plus_spark.pdf.table_structure import table_data_to_json
 
 
 def _mk_cells(grid, x0=72.0, y0=140.0, col_w=120.0, row_h=20.0):
@@ -60,30 +57,30 @@ def test_infer_structure_missing_cell():
 
 
 def test_table_json_roundtrip():
+    """``table_data_to_json`` writes the shape ``table_repair``'s
+    ``from_json`` schema reads: num_rows, num_cols and one
+    [text, row, col, row_span, col_span, column_header] list per cell."""
+    import json
+
     from docling_plus_spark.pdf.table_structure import infer_table_structure
 
     data = infer_table_structure(_mk_cells([["x", "y"], ["1", "2"]]))
-    rt = table_data_from_json(table_data_to_json(data))
-    assert [c.text for c in rt.table_cells] == [c.text for c in data.table_cells]
-    assert rt.num_rows == data.num_rows and rt.num_cols == data.num_cols
+    obj = json.loads(table_data_to_json(data))
+    assert sorted(obj) == ["cells", "num_cols", "num_rows"]
+    assert (obj["num_rows"], obj["num_cols"]) == (data.num_rows, data.num_cols)
+    assert obj["cells"] == [
+        [c.text, c.start_row_offset_idx, c.start_col_offset_idx,
+         c.row_span, c.col_span, c.column_header]
+        for c in data.table_cells
+    ]
+    assert [c[0] for c in obj["cells"]] == ["x", "y", "1", "2"]
 
 
 def test_table_doc_through_pipeline(spark):
-    from docling_plus_spark.pdf.pipeline import PAGES_SCHEMA, pdf_pipeline
+    from docling_plus_spark.pdf.pipeline import pdf_pipeline
 
     pages, (intro, expected_grid) = make_table_doc(7)
-    rows = [
-        (
-            p["url"], p["page_no"], p["width"], p["height"],
-            [(c["index"], c["text"], c["l"], c["t"], c["r"], c["b"]) for c in p["cells"]],
-            [
-                (c["id"], c["label"], c["confidence"], c["l"], c["t"], c["r"], c["b"])
-                for c in p["clusters"]
-            ],
-        )
-        for p in pages
-    ]
-    df = spark.createDataFrame(rows, PAGES_SCHEMA)
+    df = pages_frame(spark, pages)
     out = pdf_pipeline(df).collect()
     assert len(out) == 1
     row = out[0]
@@ -94,6 +91,18 @@ def test_table_doc_through_pipeline(spark):
     # markdown: pipe table with first row as header
     assert f"| {expected_grid[0][0]}" in row["md"]
     assert f"| {expected_grid[1][0]}" in row["md"]
+
+
+def test_table_doc_in_process():
+    """The byte-level backends' in-process assembly keeps a given table
+    cluster's inferred grid, as the Spark stage does."""
+    from docling_plus_spark.doc.serializers import export_to_text
+    from docling_plus_spark.pdf.pipeline import pages_to_document
+
+    pages, (intro, expected_grid) = make_table_doc(7)
+    doc = pages_to_document(pages, name="table")
+    expected_text = intro + "\n" + "\n".join("\t".join(r) for r in expected_grid)
+    assert export_to_text(doc) == expected_text
 
 
 @pytest.fixture(scope="module")
