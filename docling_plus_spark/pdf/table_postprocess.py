@@ -34,8 +34,8 @@ its behavior literally:
 * ``pdf_cells``: ``{"id", "text", "bbox"}``
 * ``matches``: ``{str(pdf_cell_id): [{"table_cell_id", "iou"|"iopdf"|"post"}]}``
 
-This runs per table inside the per-document ``applyInPandas`` group (a
-table is ~10²-10³ cells — in-group Python, not a distributed join, is
+This runs per table inside the ``repair_predicted_tables`` map stage (a
+table is ~10²-10³ cells — in-task Python, not a distributed join, is
 the right physical plan; SURVEY §2.3 J1 note).
 """
 
