@@ -345,20 +345,20 @@ _CORPUS_CTE = """corpus AS (
 )"""
 
 
-def _minhash_oracle_prefix(k: int = 16, bands: int = 4) -> str:
+def _minhash_oracle_prefix() -> str:
     from docling_plus_spark.operators.dedup import (
+        MINHASH_K as k,
         hashed_shingles_sql,
         lsh_band_keys_sql,
         minhash_signature_sql,
         shingles_sql,
     )
 
-    rows = k // bands
     return f"""{_CORPUS_CTE},
 sh AS (SELECT id, {shingles_sql("text")} AS shingles FROM corpus),
 hs AS (SELECT id, {hashed_shingles_sql("shingles")} AS hs FROM sh),
-sig AS (SELECT id, {minhash_signature_sql("hs", k)} AS sig FROM hs),
-bands AS (SELECT id, sig, unnest({lsh_band_keys_sql("sig", bands, rows)}) AS band_key FROM sig),
+sig AS (SELECT id, {minhash_signature_sql("hs")} AS sig FROM hs),
+bands AS (SELECT id, sig, unnest({lsh_band_keys_sql("sig")}) AS band_key FROM sig),
 cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.sig AS sig_a, b.sig AS sig_b
   FROM bands a JOIN bands b USING (band_key) WHERE a.id < b.id
@@ -379,7 +379,7 @@ def _q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _neardup_corpus(spark, sf_dir)
     hs = d.select("id", hashed_shingles(shingles(F.col("text"))).alias("_hs"))
-    sig = minhash_signature_from_hashes(F.col("_hs"), 16)
+    sig = minhash_signature_from_hashes(F.col("_hs"))
     return hs.select(
         "id",
         *[F.element_at(sig, i + 1).alias(f"s{i}") for i in range(4)],
@@ -393,14 +393,14 @@ def _q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _neardup_corpus(spark, sf_dir)
-    return minhash_candidate_pairs(minhash_prepare(d, "id", "text", 16, 4))
+    return minhash_candidate_pairs(minhash_prepare(d, "id"))
 
 
 def _q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.dedup import minhash_dedup_keep
 
     d = _neardup_corpus(spark, sf_dir)
-    return minhash_dedup_keep(d, "id", "text", 16, 4, threshold=0.7)
+    return minhash_dedup_keep(d, "id", threshold=0.7)
 
 
 def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,7 +414,7 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.split(F.trim(F.col("text")), r"\s+"), 10, 40), " "
         ).alias("text")
     )
-    return decontaminate(d, bench, "doc_id", "text", "text", n=8)
+    return decontaminate(d, bench)
 
 
 def _q_cc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,8 +427,8 @@ def _q_cc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.graph import cc_dedup_keep
 
     d = _neardup_corpus(spark, sf_dir)
-    pairs = minhash_candidate_pairs(minhash_prepare(d, "id", "text", 16, 4))
-    return cc_dedup_keep(d, pairs, "id", threshold=0.7)
+    pairs = minhash_candidate_pairs(minhash_prepare(d, "id"))
+    return cc_dedup_keep(d, pairs)
 
 
 def _q_cc_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,13 +445,11 @@ def _q_cc_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.graph import cc_dedup_keep_best
 
     d = _neardup_corpus(spark, sf_dir)
-    pairs = minhash_candidate_pairs(minhash_prepare(d, "id", "text", 16, 4))
+    pairs = minhash_candidate_pairs(minhash_prepare(d, "id"))
     quality = d.select(
         "id", F.pmod(F.col("id") * 31, F.lit(101)).cast("double").alias("score")
     )
-    return cc_dedup_keep_best(
-        d, pairs, quality, "id", threshold=0.7, score_col="score"
-    )
+    return cc_dedup_keep_best(d, pairs, quality)
 
 
 def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,10 +479,10 @@ def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _neardup_corpus(spark, sf_dir)
-    cand = minhash_candidate_pairs(minhash_prepare(d, "id", "text", 16, 4)).select(
+    cand = minhash_candidate_pairs(minhash_prepare(d, "id")).select(
         "id_a", "id_b"
     )
-    return jaccard_on_pairs(d, cand, "id", "text")
+    return jaccard_on_pairs(d, cand)
 
 
 def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,7 +493,7 @@ def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.cluster import ivfpq_topk
 
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
-    return ivfpq_topk(emb, n_lists=8, m=4, k_codes=16, topk=5, nprobe=2)
+    return ivfpq_topk(emb)
 
 
 def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,10 +508,10 @@ def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _neardup_corpus(spark, sf_dir)
-    cand = minhash_candidate_pairs(minhash_prepare(d, "id", "text", 16, 4)).select(
+    cand = minhash_candidate_pairs(minhash_prepare(d, "id")).select(
         "id_a", "id_b"
     )
-    return containment_on_pairs(d, cand, "id", "text")
+    return containment_on_pairs(d, cand)
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,7 +524,7 @@ def _q_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.dedup import simhash, simhash_near_pairs
 
     d = _neardup_corpus(spark, sf_dir)
-    return simhash_near_pairs(simhash(d, "id", "text"), max_hamming=3)
+    return simhash_near_pairs(simhash(d, "id"))
 
 
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,7 +558,7 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.ann import ann_recall
 
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
-    return ann_recall(emb, k=5, n_lists=32, nprobe=4)
+    return ann_recall(emb)
 
 
 def _q_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,7 +582,7 @@ def _q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("vec_id") % 2 == 0, "en").otherwise("de").alias("lang"),
         "embedding",
     )
-    return bitext_mine(emb, k=4, tau=1.0)
+    return bitext_mine(emb)
 
 
 def _q_bitext_mine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,7 +597,7 @@ def _q_bitext_mine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("vec_id") % 2 == 0, "en").otherwise("de").alias("lang"),
         "embedding",
     )
-    return bitext_mine_ivf(emb, k=4, tau=1.0, n_lists=16, nprobe=4)
+    return bitext_mine_ivf(emb)
 
 
 def _q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,7 +621,7 @@ def _q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = hash_classifier(d).select("id", F.col("score").alias("clf_score"))
     k = kn_bigram_nll(d).select("id", "mean_nll")
     ranked = distributed_rank(
-        k, ["mean_nll", "id"], rank_col="nll_rank"
+        k, ["mean_nll", "id"]
     ).crossJoin(F.broadcast(k.select(F.count("*").alias("n_docs"))))
     k2 = ranked.select(
         "id",
@@ -657,7 +655,7 @@ def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.cluster import kmeans_lloyd
 
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
-    return kmeans_lloyd(emb, k=8, iters=2)
+    return kmeans_lloyd(emb)
 
 
 def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,7 +672,7 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
     )
-    return semdedup(corpus, k=8, tau=0.97, iters=1)
+    return semdedup(corpus)
 
 
 def _q_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,7 +682,7 @@ def _q_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form function of the bucket so the DuckDB twin is exact."""
     from docling_plus_spark.operators.quality import hash_classifier
 
-    return hash_classifier(_docs(spark, sf_dir), "doc_id", "text")
+    return hash_classifier(_docs(spark, sf_dir))
 
 
 def _q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,7 +713,7 @@ def _q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocklist = spark.createDataFrame(
         [("h0.test",), ("h1.test",), ("H2.TEST",)], "host string"
     )
-    return url_blocklist_filter(urls, blocklist, max_hits=2)
+    return url_blocklist_filter(urls, blocklist)
 
 
 def _q_script_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,7 +722,7 @@ def _q_script_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/quality.py:script_composition)."""
     from docling_plus_spark.operators.quality import script_composition
 
-    return script_composition(_docs(spark, sf_dir), "doc_id", "text")
+    return script_composition(_docs(spark, sf_dir))
 
 
 def _q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,7 +733,7 @@ def _q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.cluster import pq_codes
 
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
-    return pq_codes(emb, m=4, k=16, iters=1)
+    return pq_codes(emb, k=16)
 
 
 def _q_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,7 +743,7 @@ def _q_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textstats.py:countmin_heavy_hitters)."""
     from docling_plus_spark.operators.textstats import countmin_heavy_hitters
 
-    return countmin_heavy_hitters(_docs(spark, sf_dir), "text", d=4, w=1024, topk=20)
+    return countmin_heavy_hitters(_docs(spark, sf_dir))
 
 
 def _q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,7 +784,7 @@ def _q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir)
     labeled = d.join(
-        hash_classifier(d, "doc_id", "text").select(
+        hash_classifier(d).select(
             F.col("id").alias("doc_id"), "label"
         ),
         "doc_id",
@@ -900,7 +898,7 @@ def _q_sitemap_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(""))
     xml = F.concat(F.lit("<urlset>"), urls, idx, F.lit("</urlset>"))
     sm = d.select(host.alias("host"), xml.alias("sitemap_xml"))
-    return sitemap_urls(sm, "host", "sitemap_xml")
+    return sitemap_urls(sm)
 
 
 def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,16 +906,22 @@ def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/textstats.py:ngram_novelty)."""
     from docling_plus_spark.operators.textstats import ngram_novelty
 
-    return ngram_novelty(_docs(spark, sf_dir), n=3)
+    return ngram_novelty(_docs(spark, sf_dir))
 
 
 def _q_stride_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-stride overlapping token windows — the training-example
     cutter complementing sequence_pack (operators/packing.py:
     stride_windows); window text identity proven via md5."""
-    from docling_plus_spark.operators.packing import stride_windows
+    from docling_plus_spark.operators.packing import (
+        STRIDE_LENGTH,
+        STRIDE_STEP,
+        stride_windows,
+    )
 
-    return stride_windows(_docs(spark, sf_dir), length=32, stride=24)
+    return stride_windows(
+        _docs(spark, sf_dir), length=STRIDE_LENGTH, stride=STRIDE_STEP
+    )
 
 
 def _q_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -941,7 +945,7 @@ def _q_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textstats.py:pmi_pairs); vocabulary-keyed shuffles only."""
     from docling_plus_spark.operators.textstats import pmi_pairs
 
-    return pmi_pairs(_docs(spark, sf_dir), "text", window=2, min_count=5, topk=20)
+    return pmi_pairs(_docs(spark, sf_dir))
 
 
 def _q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,7 +954,7 @@ def _q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vocab-keyed min-id shuffle, cumulative window over doc ids."""
     from docling_plus_spark.operators.textstats import vocab_growth
 
-    return vocab_growth(_docs(spark, sf_dir), n_points=10)
+    return vocab_growth(_docs(spark, sf_dir))
 
 
 def _q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,10 +975,10 @@ def _q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id", "lang", toks.alias("n_tokens"), F.length("text").alias("n_chars")
     )
-    score = hash_classifier(d, "doc_id", "text").select(
+    score = hash_classifier(d).select(
         F.col("id").alias("doc_id"), "score"
     )
-    script = script_composition(d, "doc_id", "text").select(
+    script = script_composition(d).select(
         F.col("id").alias("doc_id"), "main_script"
     )
     j = base.join(score, "doc_id", "left").join(script, "doc_id")
@@ -1010,7 +1014,7 @@ def _q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.quality import hash_classifier
 
     d = _docs(spark, sf_dir)
-    passed = hash_classifier(d, "doc_id", "text").filter(F.col("label"))
+    passed = hash_classifier(d).filter(F.col("label"))
     s1 = d.join(passed.select("id"), d.doc_id == F.col("id")).select(
         "doc_id", "text"
     )
@@ -1062,8 +1066,8 @@ def _q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return minhash_incremental_pairs(
-        minhash_prepare(new, "id", "text", 16, 4),
-        minhash_prepare(index, "id", "text", 16, 4),
+        minhash_prepare(new, "id"),
+        minhash_prepare(index, "id"),
     )
 
 
@@ -1075,7 +1079,7 @@ def _q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.cluster import pq_adc_topk
 
     emb = read_split(spark, f"{sf_dir}/embeddings.parquet")
-    return pq_adc_topk(emb, m=4, k_codes=16, topk=5, query_mod=20)
+    return pq_adc_topk(emb, k_codes=16, topk=5, query_mod=20)
 
 
 def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1085,7 +1089,7 @@ def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     application)."""
     from docling_plus_spark.operators.bpe import bpe_train
 
-    return bpe_train(_docs(spark, sf_dir), n_merges=8)
+    return bpe_train(_docs(spark, sf_dir))
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,7 +1102,7 @@ def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     merges = [
         (r["left"], r["right"])
-        for r in bpe_train(d, n_merges=8).orderBy("step").collect()
+        for r in bpe_train(d).orderBy("step").collect()
     ]
     return bpe_encode(d, merges)
 
@@ -1109,7 +1113,7 @@ def _q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.dedup import winnow_fingerprints_exploded
 
     d = _docs(spark, sf_dir)
-    return winnow_fingerprints_exploded(d, "doc_id", "text", k=8, window=4)
+    return winnow_fingerprints_exploded(d)
 
 
 def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1118,24 +1122,25 @@ def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-wide, so the unfiltered join's OUTPUT is ~all-pairs
     # (measured 259 s at sf0.1); ubiquitous fingerprints carry no
     # dedup signal and are dropped before the join
-    from docling_plus_spark.operators.dedup import winnow_candidate_pairs
+    from docling_plus_spark.operators.dedup import (
+        WINNOW_MAX_DOC_FREQ,
+        winnow_candidate_pairs,
+    )
 
     d = _docs(spark, sf_dir)
-    return winnow_candidate_pairs(
-        d, "doc_id", "text", k=8, window=4, max_doc_freq=20
-    )
+    return winnow_candidate_pairs(d, max_doc_freq=WINNOW_MAX_DOC_FREQ)
 
 
 def _q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.textstats import tfidf_topk
 
-    return tfidf_topk(_docs(spark, sf_dir), "doc_id", "text", k=3)
+    return tfidf_topk(_docs(spark, sf_dir))
 
 
 def _q_char_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.textstats import char_bigram_logprob
 
-    return char_bigram_logprob(_docs(spark, sf_dir), "doc_id", "text")
+    return char_bigram_logprob(_docs(spark, sf_dir))
 
 
 def _q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,10 +1153,10 @@ def _q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.textstats import char_bigram_logprob
 
     d = _docs(spark, sf_dir)
-    scored = char_bigram_logprob(d, "doc_id", "text").join(
+    scored = char_bigram_logprob(d).join(
         d.select(F.col("doc_id").alias("id"), "lang"), "id"
     )
-    return ccnet_buckets(scored, "id", "lang", "mean_nll")
+    return ccnet_buckets(scored)
 
 
 def _q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,7 +1175,7 @@ def _q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("!"),
     )
     return sentence_dedup(
-        d.select("doc_id", text.alias("text")), min_count=2
+        d.select("doc_id", text.alias("text"))
     )
 
 
@@ -1189,7 +1194,7 @@ def _q_sentence_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("! Trailing fragment without terminator"),
     )
     return sentence_spans(
-        d.select("doc_id", text.alias("text")), "doc_id", "text"
+        d.select("doc_id", text.alias("text"))
     )
 
 
@@ -1209,7 +1214,7 @@ def _q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         d.select(i.alias("src"), F.pmod(i * 7 + 26, F.lit(n)).alias("dst"))
     )
-    return hyperball_registers(e, m=16, rounds=4)
+    return hyperball_registers(e)
 
 
 def _q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,7 +1223,7 @@ def _q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), char pairs weighted by word freq, deterministic top-20."""
     from docling_plus_spark.operators.webclean import bpe_merge_pairs
 
-    return bpe_merge_pairs(_docs(spark, sf_dir), top_k=20)
+    return bpe_merge_pairs(_docs(spark, sf_dir))
 
 
 def _q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1237,7 +1242,7 @@ def _q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         F.pmod(F.col("doc_id") * 13, F.lit(97)).cast("double").alias("priority"),
     )
-    return frontier_schedule(cand, per_host_per_round=4)
+    return frontier_schedule(cand)
 
 
 def _q_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,7 +1311,7 @@ def _q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode over all 9 n sizes, counts-only shuffles."""
     from docling_plus_spark.operators.quality import gopher_ngram_repetition
 
-    return gopher_ngram_repetition(_docs(spark, sf_dir), "doc_id", "text")
+    return gopher_ngram_repetition(_docs(spark, sf_dir))
 
 
 def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1315,13 +1320,13 @@ def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, min_df=2 Zipf-tail pruning. Scalar posting rows."""
     from docling_plus_spark.operators.textstats import inverted_index
 
-    return inverted_index(_docs(spark, sf_dir), "doc_id", "text", min_df=2)
+    return inverted_index(_docs(spark, sf_dir))
 
 
 def _q_repetition_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.curation import repetition_strip
 
-    return repetition_strip(_docs(spark, sf_dir), "doc_id", "text")
+    return repetition_strip(_docs(spark, sf_dir))
 
 
 def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1345,26 +1350,27 @@ def _q_distribution_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docling_plus_spark.operators.dedup import winnow_dedup_keep
+    from docling_plus_spark.operators.dedup import (
+        WINNOW_MAX_DOC_FREQ,
+        winnow_dedup_keep,
+    )
 
     d = _docs(spark, sf_dir)
-    return winnow_dedup_keep(
-        d, "doc_id", "text", k=8, window=4, min_shared=2, max_doc_freq=20
-    )
+    return winnow_dedup_keep(d, max_doc_freq=WINNOW_MAX_DOC_FREQ)
 
 
 def _q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.quality import gopher_signals
 
     d = _docs(spark, sf_dir)
-    return gopher_signals(d, "doc_id", "text")
+    return gopher_signals(d)
 
 
 def _q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.quality import c4_clean
 
     d = _docs(spark, sf_dir)
-    return c4_clean(d, "doc_id", "text")
+    return c4_clean(d)
 
 
 # --- web-corpus cleaning family (operators/webclean.py). The documents
@@ -1415,7 +1421,7 @@ def _q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_PII_SYNTH_SPARK).alias("text")
     )
-    return pii_redact(d, "doc_id", "text")
+    return pii_redact(d)
 
 
 _SURT_SYNTH_SPARK = (
@@ -1451,7 +1457,7 @@ def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_URL_SYNTH_SPARK).alias("url")
     )
-    return url_dedup(d, "doc_id", "url")
+    return url_dedup(d)
 
 
 def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1466,7 @@ def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_PARA_SYNTH_SPARK).alias("text")
     )
-    return paragraph_dedup(d, "doc_id", "text", max_docs=10)
+    return paragraph_dedup(d)
 
 
 def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1477,13 +1483,13 @@ def _q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", "text", F.expr(_HOST_SYNTH_SPARK).alias("url")
     )
-    return host_stats(d, "doc_id", "url", "text")
+    return host_stats(d)
 
 
 def _q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_plus_spark.operators.webclean import bpe_token_stats
 
-    return bpe_token_stats(_docs(spark, sf_dir), "doc_id", "text")
+    return bpe_token_stats(_docs(spark, sf_dir))
 
 
 _FIELDS_SYNTH_SPARK = (
@@ -1513,7 +1519,7 @@ def _q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_FIELDS_SYNTH_SPARK).alias("text")
     )
-    return extract_fields(d, INVOICE_TEMPLATE, "doc_id", "text")
+    return extract_fields(d, INVOICE_TEMPLATE)
 
 
 def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1526,7 +1532,7 @@ def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = synth_pages_from_documents(spark, sf_dir)
     extracted = extract_pipeline(pages, include=("json",))
-    return chunk_documents_stage(extracted, max_tokens=64)
+    return chunk_documents_stage(extracted)
 
 
 def _q_media_codec_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,7 +1647,7 @@ def _q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = synth_media_from_documents(spark, sf_dir)
-    return frame_sample_plan(media, every_n=10)
+    return frame_sample_plan(media)
 
 
 # ---------------------------------------------------------------------------
@@ -2196,7 +2202,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(inp, "*"))
     )
     q = (
-        dedup_stream(stream, key_col="doc_hash")
+        dedup_stream(stream)
         .writeStream.format("parquet")
         .option("path", outp)
         .option("checkpointLocation", ckpt)
@@ -2625,7 +2631,7 @@ def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
-    return sequence_pack(d, budget=128, id_col="doc_id", ntok_col="n_tokens")
+    return sequence_pack(d, budget=128)
 
 
 def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2634,11 +2640,12 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     once in the corpus is cut from all but its canonical (min (id,pos))
     occurrence. k-gram hash groupBy + join back; text never shuffles."""
     from docling_plus_spark.operators.substring import (
+        STRIP_K,
         strip_duplicate_substrings,
     )
 
     return strip_duplicate_substrings(
-        _docs(spark, sf_dir).select("doc_id", "text"), k=8
+        _docs(spark, sf_dir).select("doc_id", "text"), k=STRIP_K
     )
 
 
@@ -2975,7 +2982,7 @@ def _q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.col("n_chars").alias("n_bytes")
     )
-    return shard_manifest(d, target_bytes=65536, nbytes_col="n_bytes")
+    return shard_manifest(d, target_bytes=65536)
 
 
 def _q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3147,7 +3154,7 @@ def _q_laion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     media = attach_seed_images(pairs)
-    w, _h = bmp_header_dims("media")
+    w, _h = bmp_header_dims()
     survivors = media.filter(w >= 12)  # the LAION min-size gate
     hashed = image_dhash(survivors.select("media_id", "media"))
     deduped = dhash_dedup(hashed)
@@ -3185,7 +3192,7 @@ def _q_extract_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"),
         F.length("main_text").alias("n_bytes"),
     )
-    return shard_manifest(sized, target_bytes=32768, nbytes_col="n_bytes")
+    return shard_manifest(sized, target_bytes=32768)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -3637,7 +3644,7 @@ labeled AS (
 """.format(hc=__import__(
             "docling_plus_spark.operators.quality",
             fromlist=["hash_classifier_sql"],
-        ).hash_classifier_sql("doc_id", "text", "documents"))
+        ).hash_classifier_sql("doc_id", "text"))
         + ", "
         + __import__(
             "docling_plus_spark.operators.webclean",
@@ -3687,11 +3694,11 @@ WITH sm AS (
         "ngram_novelty": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["ngram_novelty_sql"],
-        ).ngram_novelty_sql(n=3),
+        ).ngram_novelty_sql(),
         "stride_windows": __import__(
             "docling_plus_spark.operators.packing",
             fromlist=["stride_windows_sql"],
-        ).stride_windows_sql(length=32, stride=24),
+        ).stride_windows_sql(),
         "flesch": __import__(
             "docling_plus_spark.operators.quality",
             fromlist=["flesch_reading_ease_sql"],
@@ -3702,11 +3709,11 @@ WITH sm AS (
         ).char_entropy_sql(),
         "pmi_pairs": __import__(
             "docling_plus_spark.operators.textstats", fromlist=["pmi_pairs_sql"]
-        ).pmi_pairs_sql(window=2, min_count=5, topk=20),
+        ).pmi_pairs_sql(),
         "vocab_growth": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["vocab_growth_sql"],
-        ).vocab_growth_sql(n_points=10),
+        ).vocab_growth_sql(),
         "dataset_card": """
 WITH base AS (
   SELECT doc_id, lang,
@@ -3743,15 +3750,15 @@ FROM agg a JOIN modal m ON a.lang = m.lang
             hc=__import__(
                 "docling_plus_spark.operators.quality",
                 fromlist=["hash_classifier_sql"],
-            ).hash_classifier_sql("doc_id", "text", "documents"),
+            ).hash_classifier_sql("doc_id", "text"),
             sc=__import__(
                 "docling_plus_spark.operators.quality",
                 fromlist=["script_composition_sql"],
-            ).script_composition_sql("doc_id", "text", "documents"),
+            ).script_composition_sql("doc_id", "text"),
         ),
         "ivfpq_topk": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["ivfpq_topk_sql"]
-        ).ivfpq_topk_sql(n_lists=8, m=4, k_codes=16, topk=5, nprobe=2),
+        ).ivfpq_topk_sql(),
         "simhash": _simhash_oracle(),
         "simhash_near": _simhash_near_oracle(),
         "ann_topk": f"""
@@ -3770,13 +3777,10 @@ SELECT id_a, rk, id_b, cosine FROM (
         "ann_topk_ivf": _ann_ivf_oracle(n_lists=32),
         "kmeans": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["kmeans_lloyd_sql"]
-        ).kmeans_lloyd_sql(k=8, iters=2),
+        ).kmeans_lloyd_sql(),
         "semdedup": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["semdedup_sql"]
         ).semdedup_sql(
-            k=8,
-            tau=0.97,
-            iters=1,
             table="corpus",
             pre_ctes="""corpus AS (
   SELECT vec_id, embedding FROM embeddings
@@ -3787,7 +3791,7 @@ SELECT id_a, rk, id_b, cosine FROM (
         ),
         "hash_classifier": __import__(
             "docling_plus_spark.operators.quality", fromlist=["hash_classifier_sql"]
-        ).hash_classifier_sql("doc_id", "text", "documents"),
+        ).hash_classifier_sql("doc_id", "text"),
         "url_filter": __import__(
             "docling_plus_spark.operators.webclean",
             fromlist=["url_blocklist_filter_sql"],
@@ -3802,22 +3806,21 @@ SELECT id_a, rk, id_b, cosine FROM (
       ELSE '/doc/' || doc_id::varchar END AS url
   FROM documents) u""",
             "('h0.test'), ('h1.test'), ('H2.TEST')",
-            max_hits=2,
         ),
         "bpe_train": __import__(
             "docling_plus_spark.operators.bpe", fromlist=["bpe_train_sql"]
-        ).bpe_train_sql(8),
+        ).bpe_train_sql(),
         "bpe_encode": __import__(
             "docling_plus_spark.operators.bpe", fromlist=["bpe_encode_sql"]
-        ).bpe_encode_sql(8),
+        ).bpe_encode_sql(),
         "script_composition": __import__(
             "docling_plus_spark.operators.quality",
             fromlist=["script_composition_sql"],
-        ).script_composition_sql("doc_id", "text", "documents"),
+        ).script_composition_sql("doc_id", "text"),
         "countmin_topk": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["countmin_heavy_hitters_sql"],
-        ).countmin_heavy_hitters_sql("text", "documents", d=4, w=1024, topk=20),
+        ).countmin_heavy_hitters_sql(),
         "streaming_sessionize": """
 WITH g AS (
   SELECT user_id, ts, event_id,
@@ -3860,7 +3863,7 @@ UNION ALL SELECT 4, 'sampled', count(*)::bigint FROM s4
 """.format(hc=__import__(
             "docling_plus_spark.operators.quality",
             fromlist=["hash_classifier_sql"],
-        ).hash_classifier_sql("doc_id", "text", "documents")),
+        ).hash_classifier_sql("doc_id", "text")),
         "minhash_incremental": "WITH idx AS (SELECT doc_id AS id, text FROM documents),\n"
         "newdocs AS (\n"
         "  SELECT doc_id + 100000 AS id, text || ' epoch tail' AS text\n"
@@ -3872,13 +3875,13 @@ UNION ALL SELECT 4, 'sampled', count(*)::bigint FROM s4
         + __import__(
             "docling_plus_spark.operators.dedup",
             fromlist=["minhash_incremental_sql"],
-        ).minhash_incremental_sql("newdocs", "idx", 16, 4),
+        ).minhash_incremental_sql("newdocs", "idx"),
         "pq_adc_topk": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["pq_adc_topk_sql"]
-        ).pq_adc_topk_sql(m=4, k_codes=16, topk=5, query_mod=20),
+        ).pq_adc_topk_sql(k_codes=16, topk=5, query_mod=20),
         "pq_codes": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["pq_codes_sql"]
-        ).pq_codes_sql(m=4, k=16, iters=1),
+        ).pq_codes_sql(k=16),
         "winnow_fingerprint": _winnow_oracle(),
         "winnow_pairs": _winnow_pairs_oracle(),
         "winnow_dedup": _winnow_dedup_oracle(),
@@ -3888,7 +3891,7 @@ UNION ALL SELECT 4, 'sampled', count(*)::bigint FROM s4
         "inverted_index": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["inverted_index_sql"],
-        ).inverted_index_sql("doc_id", "text", min_df=2),
+        ).inverted_index_sql(),
         "sentence_dedup": r"""
 WITH raw AS (
   SELECT doc_id AS id,
@@ -3990,13 +3993,11 @@ UNION ALL
 SELECT doc_id, (doc_id*7+26) % (SELECT count(*) FROM documents)
 FROM documents
 """,
-            m=16,
-            rounds=4,
         ),
         "bpe_merge_pairs": __import__(
             "docling_plus_spark.operators.webclean",
             fromlist=["bpe_merge_pairs_sql"],
-        ).bpe_merge_pairs_sql(top_k=20),
+        ).bpe_merge_pairs_sql(),
         "frontier_schedule": """
 WITH cand AS (
   SELECT 'https://h' || (doc_id % 7)::varchar || '.test/doc/' || doc_id::varchar AS url,
@@ -4045,7 +4046,7 @@ FROM old FULL OUTER JOIN new ON old.url = new.url
         "gopher_repetition": __import__(
             "docling_plus_spark.operators.quality",
             fromlist=["gopher_ngram_repetition_sql"],
-        ).gopher_ngram_repetition_sql("doc_id", "text"),
+        ).gopher_ngram_repetition_sql(),
         "repetition_strip": _curation_oracle("repetition_strip"),
         "dsir_weights": _curation_oracle("dsir_weights"),
         "bloom_dedup": _curation_oracle("bloom_dedup"),
@@ -4163,7 +4164,7 @@ FROM t
         "substring_dedup": __import__(
             "docling_plus_spark.operators.substring",
             fromlist=["strip_duplicate_substrings_sql"],
-        ).strip_duplicate_substrings_sql(8),
+        ).strip_duplicate_substrings_sql(),
         "sequence_pack": __import__(
             "docling_plus_spark.operators.packing", fromlist=["sequence_pack_sql"]
         ).sequence_pack_sql(
@@ -4291,9 +4292,9 @@ def _quality_ensemble_oracle() -> str:
     )
     from docling_plus_spark.operators.textstats import kn_bigram_nll_sql
 
-    g = gopher_signals_sql("doc_id", "text")
+    g = gopher_signals_sql()
     c = hash_classifier_sql("doc_id", "text")
-    k = kn_bigram_nll_sql("doc_id", "text")
+    k = kn_bigram_nll_sql()
     return f"""
 WITH g AS ({g}), c AS ({c}), k AS ({k}),
 ranked AS (
@@ -4313,8 +4314,6 @@ def _bitext_mine_oracle() -> str:
     from docling_plus_spark.operators.ann import bitext_mine_sql
 
     return bitext_mine_sql(
-        k=4,
-        tau=1.0,
         lang_expr="CASE WHEN vec_id % 2 = 0 THEN 'en' ELSE 'de' END",
     )
 
@@ -4323,10 +4322,6 @@ def _bitext_mine_ivf_oracle() -> str:
     from docling_plus_spark.operators.ann import bitext_mine_ivf_sql
 
     return bitext_mine_ivf_sql(
-        k=4,
-        tau=1.0,
-        n_lists=16,
-        nprobe=4,
         lang_expr="CASE WHEN vec_id % 2 = 0 THEN 'en' ELSE 'de' END",
     )
 
@@ -4335,7 +4330,7 @@ def _extract_shard_plan_oracle() -> str:
     from docling_plus_spark.operators.boilerplate import main_content_sql
     from docling_plus_spark.operators.packing import shard_manifest_sql
 
-    mc = main_content_sql("doc_id", _BP_HTML_SQL, "documents")
+    mc = main_content_sql(_BP_HTML_SQL)
     inner = shard_manifest_sql(32768, "id", "length(main_text)", "mc")
     # merge the two WITH chains (DuckDB rejects nested top-level WITH)
     inner = inner.replace("\nWITH ", "", 1)
@@ -4345,7 +4340,7 @@ def _extract_shard_plan_oracle() -> str:
 def _kn_perplexity_oracle() -> str:
     from docling_plus_spark.operators.textstats import kn_bigram_nll_sql
 
-    return kn_bigram_nll_sql("doc_id", "text")
+    return kn_bigram_nll_sql()
 
 
 def _ann_recall_oracle() -> str:
@@ -4386,7 +4381,7 @@ def _image_alt_pairs_oracle() -> str:
         "'https://h' || (doc_id % 7)::varchar || '.test/d/' "
         "|| doc_id::varchar || '/page.html'"
     )
-    return image_alt_pairs_sql("doc_id", url, _IMG_HTML_SQL, "documents")
+    return image_alt_pairs_sql(url, html_expr=_IMG_HTML_SQL)
 
 
 def _laion_pipeline_oracle() -> str:
@@ -4397,7 +4392,7 @@ def _laion_pipeline_oracle() -> str:
         "'https://h' || (doc_id % 7)::varchar || '.test/d/' "
         "|| doc_id::varchar || '/page.html'"
     )
-    pairs = image_alt_pairs_sql("doc_id", url, _IMG_HTML_SQL, "documents")
+    pairs = image_alt_pairs_sql(url, html_expr=_IMG_HTML_SQL)
     return f"""
 WITH pairs AS ({pairs}),
 seeded AS (
@@ -4428,13 +4423,13 @@ def _mixture_plan_oracle() -> str:
 def _web_tables_oracle() -> str:
     from docling_plus_spark.operators.webtables import web_tables_sql
 
-    return web_tables_sql("doc_id", _WT_HTML_SQL, "documents")
+    return web_tables_sql(_WT_HTML_SQL)
 
 
 def _web_table_shapes_oracle() -> str:
     from docling_plus_spark.operators.webtables import web_table_shapes_sql
 
-    return web_table_shapes_sql("doc_id", _WT_HTML_SQL, "documents")
+    return web_table_shapes_sql(_WT_HTML_SQL)
 
 
 def _boilerplate_blocks_oracle() -> str:
@@ -4442,13 +4437,13 @@ def _boilerplate_blocks_oracle() -> str:
         boilerplate_blocks_sql,
     )
 
-    return boilerplate_blocks_sql("doc_id", _BP_HTML_SQL, "documents")
+    return boilerplate_blocks_sql(_BP_HTML_SQL)
 
 
 def _main_content_oracle() -> str:
     from docling_plus_spark.operators.boilerplate import main_content_sql
 
-    return main_content_sql("doc_id", _BP_HTML_SQL, "documents")
+    return main_content_sql(_BP_HTML_SQL)
 
 
 def _shard_manifest_oracle() -> str:
@@ -4486,7 +4481,7 @@ def _minhash_sig_oracle() -> str:
         shingles_sql,
     )
 
-    sig = minhash_signature_sql("hs", 16)
+    sig = minhash_signature_sql("hs")
     cols = ", ".join(f"sig[{i + 1}] AS s{i}" for i in range(4))
     return f"""
 WITH {_CORPUS_CTE},
@@ -4532,17 +4527,18 @@ JOIN shx a ON a.id = p.id_a JOIN shx b ON b.id = p.id_b
 def _simhash_oracle() -> str:
     from docling_plus_spark.operators.dedup import simhash_sql
 
-    return simhash_sql("doc_id", "text")
+    return simhash_sql("doc_id")
 
 
 def _simhash_near_oracle() -> str:
     from docling_plus_spark.operators.dedup import (
         SIMHASH_BITS,
         SIMHASH_BLOCKS,
+        SIMHASH_MAX_HAMMING,
         simhash_sql,
     )
 
-    base = simhash_sql("id", "text").replace("FROM documents", "FROM corpus")
+    base = simhash_sql("id").replace("FROM documents", "FROM corpus")
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     blocks = "\n  UNION ALL\n".join(
@@ -4561,7 +4557,7 @@ cand AS (
   FROM keyed a JOIN keyed b USING (block) WHERE a.id < b.id
 )
 SELECT id_a, id_b, bit_count(xor(sh_a, sh_b))::int AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
+FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
@@ -4609,19 +4605,19 @@ SELECT id_a, rk, id_b, cosine FROM (
 def _gopher_oracle() -> str:
     from docling_plus_spark.operators.quality import gopher_signals_sql
 
-    return gopher_signals_sql("doc_id", "text")
+    return gopher_signals_sql()
 
 
 def _c4_oracle() -> str:
     from docling_plus_spark.operators.quality import c4_clean_sql
 
-    return c4_clean_sql("doc_id", "text")
+    return c4_clean_sql()
 
 
 def _pii_oracle() -> str:
     from docling_plus_spark.operators.webclean import pii_redact_sql
 
-    return pii_redact_sql("doc_id", _PII_SYNTH_SQL)
+    return pii_redact_sql(_PII_SYNTH_SQL)
 
 
 def _url_dedup_oracle() -> str:
@@ -4633,7 +4629,7 @@ def _url_dedup_oracle() -> str:
 def _paragraph_oracle() -> str:
     from docling_plus_spark.operators.webclean import paragraph_dedup_sql
 
-    return paragraph_dedup_sql("doc_id", _PARA_SYNTH_SQL, max_docs=10)
+    return paragraph_dedup_sql(_PARA_SYNTH_SQL)
 
 
 def _sample_oracle() -> str:
@@ -4649,8 +4645,7 @@ def _fields_oracle() -> str:
     )
 
     return extract_fields_sql(
-        INVOICE_TEMPLATE, "doc_id",
-        _FIELDS_SYNTH_SQL, "documents",
+        INVOICE_TEMPLATE, _FIELDS_SYNTH_SQL,
     )
 
 
@@ -4716,50 +4711,48 @@ def _decontaminate_oracle() -> str:
         "string_split_regex(trim(text), '\\s+')[10:49], ' ') AS text "
         "FROM documents WHERE doc_id % 25 = 0)"
     )
-    return decontaminate_sql("doc_id", "text", bench, n=8)
+    return decontaminate_sql(bench)
 
 
 def _host_stats_oracle() -> str:
     from docling_plus_spark.operators.webclean import host_stats_sql
 
-    return host_stats_sql("doc_id", _HOST_SYNTH_SQL, "text", "documents")
+    return host_stats_sql(_HOST_SYNTH_SQL)
 
 
 def _bpe_oracle() -> str:
     from docling_plus_spark.operators.webclean import bpe_token_stats_sql
 
-    return bpe_token_stats_sql("doc_id", "text")
+    return bpe_token_stats_sql()
 
 
 def _winnow_oracle() -> str:
     from docling_plus_spark.operators.dedup import winnow_fingerprints_exploded_sql
 
-    return winnow_fingerprints_exploded_sql("doc_id", "text", k=8, window=4)
+    return winnow_fingerprints_exploded_sql()
 
 
 def _winnow_pairs_oracle() -> str:
     from docling_plus_spark.operators.dedup import winnow_candidate_pairs_sql
 
-    return winnow_candidate_pairs_sql(
-        "doc_id", "text", k=8, window=4, max_doc_freq=20
-    )
+    return winnow_candidate_pairs_sql()
 
 
 def _tfidf_oracle() -> str:
     from docling_plus_spark.operators.textstats import tfidf_topk_sql
 
-    return tfidf_topk_sql("doc_id", "text", k=3)
+    return tfidf_topk_sql()
 
 
 def _curation_oracle(name: str) -> str:
     from docling_plus_spark.operators import curation as c
 
     if name == "repetition_strip":
-        return c.repetition_strip_sql("doc_id", "text")
+        return c.repetition_strip_sql()
     if name == "dsir_weights":
-        return c.dsir_weights_sql("lang = 'en'", "doc_id", "text")
+        return c.dsir_weights_sql("lang = 'en'")
     if name == "bloom_dedup":
-        return c.bloom_dedup_sql("doc_id % 2 = 0", "doc_id", "text")
+        return c.bloom_dedup_sql("doc_id % 2 = 0")
     if name == "distribution_match":
         return c.distribution_match_sql(
             {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15}
@@ -4770,7 +4763,7 @@ def _curation_oracle(name: str) -> str:
 def _char_lm_oracle() -> str:
     from docling_plus_spark.operators.textstats import char_bigram_logprob_sql
 
-    return char_bigram_logprob_sql("doc_id", "text")
+    return char_bigram_logprob_sql()
 
 
 def _ccnet_oracle() -> str:
@@ -4779,18 +4772,16 @@ def _ccnet_oracle() -> str:
 
     scored = (
         "SELECT s.id, d.lang, s.mean_nll FROM ("
-        + char_bigram_logprob_sql("doc_id", "text")
+        + char_bigram_logprob_sql()
         + ") s JOIN documents d ON d.doc_id = s.id"
     )
-    return ccnet_buckets_sql(scored, "id", "lang", "mean_nll")
+    return ccnet_buckets_sql(scored)
 
 
 def _winnow_dedup_oracle() -> str:
     from docling_plus_spark.operators.dedup import winnow_dedup_keep_sql
 
-    return winnow_dedup_keep_sql(
-        "doc_id", "text", k=8, window=4, min_shared=2, max_doc_freq=20
-    )
+    return winnow_dedup_keep_sql()
 
 
 def _lsh_keyed_cte() -> str:

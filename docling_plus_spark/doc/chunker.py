@@ -152,8 +152,9 @@ CHUNKS_SCHEMA = (
 )
 
 
-def chunk_documents_stage(extracted, max_tokens: int = 512):
-    """(url, doc_json) → exploded chunk rows; narrow, zero shuffle."""
+def chunk_documents_stage(extracted):
+    """(url, doc_json) → exploded rows of 64-token chunks; narrow, zero
+    shuffle."""
     import json as _json
 
     import pandas as pd
@@ -167,7 +168,7 @@ def chunk_documents_stage(extracted, max_tokens: int = 512):
                     continue
                 try:
                     doc = DLDocument.from_dict(_json.loads(doc_json))
-                    out = hybrid_chunks(doc, max_tokens=max_tokens)
+                    out = hybrid_chunks(doc, max_tokens=64)
                 except Exception:  # noqa: BLE001 — bad doc → zero chunks
                     out = []
                 for idx, ch in enumerate(out):

@@ -32,14 +32,14 @@ from pyspark.sql import functions as F
 def _st_gopher(df: DataFrame, args) -> DataFrame:
     from docling_plus_spark.operators.quality import gopher_signals
 
-    keep = gopher_signals(df, "doc_id", "text").filter("gopher_pass")
+    keep = gopher_signals(df).filter("gopher_pass")
     return df.join(keep.select(F.col("id").alias("doc_id")), "doc_id")
 
 
 def _st_c4(df: DataFrame, args) -> DataFrame:
     from docling_plus_spark.operators.quality import c4_clean
 
-    cleaned = c4_clean(df, "doc_id", "text").filter("c4_keep")
+    cleaned = c4_clean(df).filter("c4_keep")
     return (
         df.drop("text")
         .join(
@@ -54,7 +54,7 @@ def _st_c4(df: DataFrame, args) -> DataFrame:
 def _st_classifier(df: DataFrame, args) -> DataFrame:
     from docling_plus_spark.operators.quality import hash_classifier
 
-    keep = hash_classifier(df, "doc_id", "text").filter("label")
+    keep = hash_classifier(df).filter("label")
     return df.join(keep.select(F.col("id").alias("doc_id")), "doc_id")
 
 
@@ -73,7 +73,7 @@ def _st_minhash_dedup(df: DataFrame, args) -> DataFrame:
     from docling_plus_spark.operators.dedup import minhash_dedup_keep
 
     keep = minhash_dedup_keep(
-        df, "doc_id", "text", threshold=args.minhash_threshold
+        df, "doc_id", threshold=args.minhash_threshold
     )
     return df.join(keep.select(F.col("keep_id").alias("doc_id")), "doc_id")
 
@@ -91,7 +91,7 @@ def _st_lang_gate(df: DataFrame, args) -> DataFrame:
         "script_mismatch", "langid_mismatch",
     )
     doomed = (
-        lang_consistency(df, "doc_id", "text", "lang")
+        lang_consistency(df)
         .filter(F.col("verdict").isin(*bad))
         .select(F.col("id").alias("doc_id"))
     )
@@ -123,8 +123,7 @@ def _st_mixture(df: DataFrame, args) -> DataFrame:
             weights[k.strip()] = float(v)
     if not weights:
         raise SystemExit("--mix-weights required for the mixture stage")
-    plan = mixture_plan(df, weights, source_col="source",
-                        ntok_col="n_chars")
+    plan = mixture_plan(df, weights)
     rates = plan.select("source", "sample_rate")
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10

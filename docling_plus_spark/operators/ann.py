@@ -52,6 +52,11 @@ def unit_vec(v: Column) -> Column:
 
 
 #: DuckDB twin of ``unit_vec(embedding)``
+#: smallest margin score of a mined bitext pair, and the neighbours its
+#: margin averages over (the DuckDB twin's; the Spark operators' default)
+BITEXT_TAU = 1.0
+BITEXT_K = 4
+
 UNIT_EMBEDDING_SQL = (
     "list_transform(embedding::double[], x -> x / "
     "sqrt(list_dot_product(embedding::double[], embedding::double[])))"
@@ -325,13 +330,9 @@ def cosine_topk_ivf(
     )
 
 
-def ann_recall(
-    emb: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """(id_a, n_hits, recall) — IVF recall@k against the exact top-k.
+def ann_recall(emb: DataFrame) -> DataFrame:
+    """(id_a, n_hits, recall) — IVF recall@5 (32 lists, 4 probed)
+    against the exact top-5.
 
     The evaluation loop every ANN deployment runs before trusting an
     index: for each query, the fraction of its true (brute-force)
@@ -347,11 +348,11 @@ def ann_recall(
     # join and the per-query totals — without the pin it re-executes
     # per consumer (the exact re-run class test_scan_discipline locks)
     truth = (
-        cosine_topk_bruteforce(emb, k)
+        cosine_topk_bruteforce(emb, k=5)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    approx = cosine_topk_ivf(emb, k, n_lists, nprobe).select(
+    approx = cosine_topk_ivf(emb, k=5, n_lists=32, nprobe=4).select(
         "id_a", F.col("id_b").alias("id_b_ivf")
     )
     hits = truth.join(
@@ -370,11 +371,11 @@ def ann_recall(
     )
 
 
-def bitext_mine(emb: DataFrame, k: int = 4, tau: float = 1.0) -> DataFrame:
+def bitext_mine(emb: DataFrame, k: int = BITEXT_K) -> DataFrame:
     """(id_a, id_b, cosine, margin) — margin-based bitext mining
     (Artetxe & Schwenk 2019; the CCMatrix/CCAligned recipe): mine
     sentence pairs across two languages whose *margin-scored*
-    similarity beats ``tau``, keeping only mutual top-1 matches.
+    similarity reaches ``BITEXT_TAU``, keeping only mutual top-1 matches.
 
         margin(x, y) = cos(x, y) /
             ((avg_k cosNN_B(x) + avg_k cosNN_A(y)) / 2)
@@ -418,12 +419,10 @@ def bitext_mine(emb: DataFrame, k: int = 4, tau: float = 1.0) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # feeds kNN means both ways + scoring
     )
-    return _bitext_margin_mutual_top1(pairs, k, tau)
+    return _bitext_margin_mutual_top1(pairs, k)
 
 
-def _bitext_margin_mutual_top1(
-    pairs: DataFrame, k: int, tau: float
-) -> DataFrame:
+def _bitext_margin_mutual_top1(pairs: DataFrame, k: int) -> DataFrame:
     """Shared margin-scoring + mutual-top-1 tail of bitext mining:
     ``pairs`` is (id_a, id_b, cosine) for the candidate set (brute =
     all cross-lingual pairs; IVF = probed-list pairs only). The margin
@@ -462,15 +461,14 @@ def _bitext_margin_mutual_top1(
         scored.withColumn("rka", F.row_number().over(wma))
         .withColumn("rkb", F.row_number().over(wmb))
         .filter((F.col("rka") == 1) & (F.col("rkb") == 1))
-        .filter(F.col("margin") >= tau)
+        .filter(F.col("margin") >= BITEXT_TAU)
         .select("id_a", "id_b", "cosine", "margin")
     )
 
 
 def bitext_mine_ivf(
     emb: DataFrame,
-    k: int = 4,
-    tau: float = 1.0,
+    k: int = BITEXT_K,
     n_lists: int = 16,
     nprobe: int = 4,
     pin: bool = True,
@@ -560,12 +558,11 @@ def bitext_mine_ivf(
     pairs = _dir(la, lb).unionAll(_dir(lb, la)).distinct()
     if pin:
         pairs = pairs.localCheckpoint(eager=True)
-    return _bitext_margin_mutual_top1(pairs, k, tau)
+    return _bitext_margin_mutual_top1(pairs, k)
 
 
 def bitext_mine_ivf_sql(
-    k: int = 4,
-    tau: float = 1.0,
+    k: int = BITEXT_K,
     n_lists: int = 16,
     nprobe: int = 4,
     lang_expr: str = "lang",
@@ -634,15 +631,11 @@ mranked AS (
   FROM scored
 )
 SELECT id_a, id_b, cosine, margin FROM mranked, guard
-WHERE guard.ok = 1 AND rka = 1 AND rkb = 1 AND margin >= {tau!r}
+WHERE guard.ok = 1 AND rka = 1 AND rkb = 1 AND margin >= {BITEXT_TAU}
 """
 
 
-def bitext_mine_sql(
-    k: int = 4,
-    tau: float = 1.0,
-    lang_expr: str = "lang",
-) -> str:
+def bitext_mine_sql(lang_expr: str = "lang") -> str:
     """DuckDB twin of :func:`bitext_mine` (two-language corpus)."""
     return f"""
 WITH base AS (
@@ -667,13 +660,13 @@ knn_a AS (
   SELECT id_a, avg(cosine) AS mean_a FROM (
     SELECT *, row_number() OVER (PARTITION BY id_a
         ORDER BY cosine DESC, id_b) AS rk FROM pairs
-  ) WHERE rk <= {k} GROUP BY id_a
+  ) WHERE rk <= {BITEXT_K} GROUP BY id_a
 ),
 knn_b AS (
   SELECT id_b, avg(cosine) AS mean_b FROM (
     SELECT *, row_number() OVER (PARTITION BY id_b
         ORDER BY cosine DESC, id_a) AS rk FROM pairs
-  ) WHERE rk <= {k} GROUP BY id_b
+  ) WHERE rk <= {BITEXT_K} GROUP BY id_b
 ),
 scored AS (
   SELECT p.id_a, p.id_b, p.cosine,
@@ -689,5 +682,5 @@ ranked AS (
   FROM scored
 )
 SELECT id_a, id_b, cosine, margin FROM ranked, guard
-WHERE guard.ok = 1 AND rka = 1 AND rkb = 1 AND margin >= {tau!r}
+WHERE guard.ok = 1 AND rka = 1 AND rkb = 1 AND margin >= {BITEXT_TAU}
 """

@@ -157,18 +157,16 @@ def boilerplate_blocks(df: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_blocks_sql(
-    id_expr: str = "doc_id", html_expr: str = "html", table: str = "documents"
-) -> str:
+def boilerplate_blocks_sql(html_expr: str = "html") -> str:
     """DuckDB twin of :func:`boilerplate_blocks`."""
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
     return rf"""
 WITH chunks AS (
-  SELECT {id_expr} AS id, i - 1 AS i, ch[i] AS chunk
+  SELECT doc_id AS id, i - 1 AS i, ch[i] AS chunk
   FROM (
-    SELECT {id_expr},
+    SELECT doc_id,
            string_split_regex(lower({html_expr}), '{_BLOCK_TAG_RE}') AS ch
-    FROM {table}
+    FROM documents
   ), unnest(range(1, len(ch) + 1)) AS u(i)
 ),
 feats AS (
@@ -286,19 +284,17 @@ def main_content(df: DataFrame) -> DataFrame:
     )
 
 
-def main_content_sql(
-    id_expr: str = "doc_id", html_expr: str = "html", table: str = "documents"
-) -> str:
+def main_content_sql(html_expr: str = "html") -> str:
     """DuckDB twin of :func:`main_content`."""
-    blocks = boilerplate_blocks_sql(id_expr, html_expr, table)
+    blocks = boilerplate_blocks_sql(html_expr)
     return rf"""
 WITH blocks AS ({blocks}),
 chunks AS (
-  SELECT {id_expr} AS id, i - 1 AS i, ch[i] AS chunk
+  SELECT doc_id AS id, i - 1 AS i, ch[i] AS chunk
   FROM (
-    SELECT {id_expr},
+    SELECT doc_id,
            string_split_regex({html_expr}, '(?i){_BLOCK_TAG_RE}') AS ch
-    FROM {table}
+    FROM documents
   ), unnest(range(1, len(ch) + 1)) AS u(i)
 ),
 texts AS (

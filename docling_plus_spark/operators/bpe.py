@@ -40,6 +40,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: merges the DuckDB twins learn (the Spark trainer's default)
+BPE_MERGES = 8
+
 SENT_L = "\x01"
 SENT_R = "\x02"
 
@@ -106,7 +109,7 @@ def _merge_pattern(left: str, right: str) -> tuple[str, str]:
     )
 
 
-def bpe_train(df: DataFrame, n_merges: int = 8) -> DataFrame:
+def bpe_train(df: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (step, left, right, pair_count), step 1-based in learned order."""
     spark = df.sparkSession
@@ -225,18 +228,18 @@ def _train_ctes(n_merges: int) -> tuple[str, list[str]]:
     return ",\n".join(parts), finals
 
 
-def bpe_train_sql(n_merges: int = 8) -> str:
+def bpe_train_sql(n_merges: int = BPE_MERGES) -> str:
     body, finals = _train_ctes(n_merges)
     union = "\nUNION ALL\n".join(finals)
     return f"WITH {body}\n{union}\nORDER BY step"
 
 
-def bpe_encode_sql(n_merges: int = 8) -> str:
+def bpe_encode_sql() -> str:
     """DuckDB twin of train-then-encode: the trainer's final word table
     w{n} already holds every distinct word fully merged, so encoding is
     a join of each document's word stream against it (order kept via
     the word index)."""
-    body, _ = _train_ctes(n_merges)
+    body, _ = _train_ctes(BPE_MERGES)
     return f"""WITH {body},
 docw AS (
   SELECT id, i, ws[i + 1] AS word
@@ -253,7 +256,7 @@ tok AS (
   SELECT d.id, d.i,
          string_split(substr(w.enc, 2, length(w.enc) - 2),
                       chr(2) || chr(1)) AS syms
-  FROM docw d JOIN w{n_merges} w USING (word)
+  FROM docw d JOIN w{BPE_MERGES} w USING (word)
 )
 SELECT id,
        len(flatten(list(syms ORDER BY i)))::bigint AS n_tokens,

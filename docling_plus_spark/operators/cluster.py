@@ -43,6 +43,23 @@ from pyspark.sql.window import Window
 
 from .ann import UNIT_EMBEDDING_SQL, _dot, unit_vec
 
+#: clusters and Lloyd rounds of k-means and of SemDeDup, and SemDeDup's
+#: cosine above which a cluster-mate is dropped (the DuckDB twins'
+#: values; the Spark operators' defaults)
+KMEANS_K = 8
+KMEANS_ITERS = 2
+SEMDEDUP_K = 8
+SEMDEDUP_TAU = 0.97
+SEMDEDUP_ITERS = 1
+#: PQ subspaces and codebook Lloyd rounds; IVF-PQ lists, codes per
+#: subspace, lists probed per query and neighbours returned
+PQ_M = 4
+PQ_ITERS = 1
+IVF_N_LISTS = 8
+IVF_K_CODES = 16
+IVF_NPROBE = 2
+IVF_TOPK = 5
+
 
 def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (id, uemb) × (cluster, cemb) →
@@ -114,7 +131,9 @@ def init_centroids(base: DataFrame, k: int) -> DataFrame:
     )
 
 
-def kmeans_lloyd(emb: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
+def kmeans_lloyd(
+    emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
+) -> DataFrame:
     """``iters`` rounds of distributed spherical Lloyd over ``(vec_id,
     embedding)``; returns the final assignment (id, cluster, ccos)."""
     base = _base(emb)
@@ -126,9 +145,9 @@ def kmeans_lloyd(emb: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
 
 def semdedup(
     emb: DataFrame,
-    k: int = 8,
-    tau: float = 0.97,
-    iters: int = 1,
+    k: int = SEMDEDUP_K,
+    tau: float = SEMDEDUP_TAU,
+    iters: int = SEMDEDUP_ITERS,
 ) -> DataFrame:
     """SemDeDup: cluster ``(vec_id, embedding)``, then inside each
     cluster drop every vector whose cosine to a *lower-id* cluster-mate
@@ -209,19 +228,13 @@ def _lloyd_ctes(k: int, iters: int, table: str) -> tuple[str, str]:
     return ",\n".join(parts), "afinal"
 
 
-def kmeans_lloyd_sql(k: int = 8, iters: int = 2) -> str:
-    body, final = _lloyd_ctes(k, iters, "embeddings")
+def kmeans_lloyd_sql() -> str:
+    body, final = _lloyd_ctes(KMEANS_K, KMEANS_ITERS, "embeddings")
     return f"WITH {body}\nSELECT id, cluster, ccos FROM {final}"
 
 
-def semdedup_sql(
-    k: int = 8,
-    tau: float = 0.97,
-    iters: int = 1,
-    table: str = "embeddings",
-    pre_ctes: str = "",
-) -> str:
-    body, final = _lloyd_ctes(k, iters, table)
+def semdedup_sql(table: str = "embeddings", pre_ctes: str = "") -> str:
+    body, final = _lloyd_ctes(SEMDEDUP_K, SEMDEDUP_ITERS, table)
     if pre_ctes:
         body = f"{pre_ctes},\n{body}"
     return f"""WITH {body},
@@ -229,7 +242,7 @@ doomed AS (
   SELECT DISTINCT a.id
   FROM {final} a JOIN {final} b USING (cluster)
   WHERE a.id > b.id
-    AND round(list_dot_product(a.uemb, b.uemb), 4) >= {tau}
+    AND round(list_dot_product(a.uemb, b.uemb), 4) >= {SEMDEDUP_TAU}
 )
 SELECT f.id, f.cluster, d.id IS NULL AS kept
 FROM {final} f LEFT JOIN doomed d ON f.id = d.id"""
@@ -250,12 +263,12 @@ FROM {final} f LEFT JOIN doomed d ON f.id = d.id"""
 # Euclidean, not spherical.
 
 
-def _sub_split(emb: DataFrame, m: int) -> DataFrame:
-    """(id, sub, svec): the m contiguous subvectors of each vector."""
+def _sub_split(emb: DataFrame) -> DataFrame:
+    """(id, sub, svec): the ``PQ_M`` contiguous subvectors of each vector."""
     v = F.col("embedding").cast("array<double>")
-    d_sub = (F.size(v) / m).cast("int")
+    d_sub = (F.size(v) / PQ_M).cast("int")
     subs = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda s: F.struct(
             s.cast("int").alias("sub"),
             F.slice(v, s * d_sub + 1, d_sub).alias("svec"),
@@ -307,28 +320,23 @@ def _pq_recompute(assigned: DataFrame) -> DataFrame:
     )
 
 
-def pq_codes(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    iters: int = 1,
-) -> DataFrame:
-    """Train a PQ codebook (`iters` Lloyd rounds per subspace,
-    simultaneously) over ``(vec_id, embedding)`` and encode: (id, sub,
-    code, dist)."""
-    sv = _sub_split(emb, m)
+def pq_codes(emb: DataFrame, k: int = 16) -> DataFrame:
+    """Train a PQ codebook of ``k`` codes in each of ``PQ_M`` subspaces
+    (``PQ_ITERS`` Lloyd rounds per subspace, simultaneously) over
+    ``(vec_id, embedding)`` and encode: (id, sub, code, dist)."""
+    sv = _sub_split(emb)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("sub", (F.col("rk") - 1).alias("code"), F.col("svec").alias("cemb"))
     )
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         cents = _pq_recompute(_pq_assign(sv, cents)).localCheckpoint()
     return _pq_assign(sv, cents).select("id", "sub", "code", "dist")
 
 
-def pq_codes_sql(m: int = 4, k: int = 16, iters: int = 1) -> str:
+def pq_codes_sql(k: int = 16) -> str:
     """DuckDB twin of :func:`pq_codes` (same seeding, rounding, ties)."""
     sq = (
         "round(list_aggregate(list_transform(range(1, len(s.svec) + 1), "
@@ -348,9 +356,9 @@ def pq_codes_sql(m: int = 4, k: int = 16, iters: int = 1) -> str:
     parts = [
         f"""sv AS (
   SELECT vec_id AS id, s AS sub,
-         (embedding::double[])[s * (len(embedding) // {m}) + 1 :
-                               (s + 1) * (len(embedding) // {m})] AS svec
-  FROM embeddings, unnest(range(0, {m})) AS t(s)
+         (embedding::double[])[s * (len(embedding) // {PQ_M}) + 1 :
+                               (s + 1) * (len(embedding) // {PQ_M})] AS svec
+  FROM embeddings, unnest(range(0, {PQ_M})) AS t(s)
 )""",
         f"""cents0 AS (
   SELECT sub, rk - 1 AS code, svec AS cemb FROM (
@@ -359,7 +367,7 @@ def pq_codes_sql(m: int = 4, k: int = 16, iters: int = 1) -> str:
     FROM sv) WHERE rk <= {k}
 )""",
     ]
-    for n in range(iters):
+    for n in range(PQ_ITERS):
         parts.append(f"a{n} AS {assign('sv', f'cents{n}')}")
         parts.append(
             f"""cents{n + 1} AS (
@@ -371,14 +379,13 @@ def pq_codes_sql(m: int = 4, k: int = 16, iters: int = 1) -> str:
   SELECT sub, code, list(mv ORDER BY i) AS cemb FROM mm GROUP BY 1, 2
 )"""
         )
-    parts.append(f"afinal AS {assign('sv', f'cents{iters}')}")
+    parts.append(f"afinal AS {assign('sv', f'cents{PQ_ITERS}')}")
     body = ",\n".join(parts)
     return f"WITH {body}\nSELECT id, sub, code, dist FROM afinal"
 
 
 def pq_adc_topk(
     emb: DataFrame,
-    m: int = 4,
     k_codes: int = 16,
     topk: int = 5,
     query_mod: int = 20,
@@ -399,7 +406,7 @@ def pq_adc_topk(
     Output: (qid, rk, xid, adist) — approximate distances rounded to 4
     (tie: ascending xid), self-matches excluded.
     """
-    sv = _sub_split(emb, m)
+    sv = _sub_split(emb)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
@@ -426,7 +433,7 @@ def pq_adc_topk(
         # a candidate only scores if it matched the query's lookup rows in
         # ALL m subspaces (it always does: every (sub, code) of every
         # candidate exists in the query's full lookup table)
-        .filter(F.col("nsub") == m)
+        .filter(F.col("nsub") == PQ_M)
         .drop("nsub")
     )
     wq = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("xid"))
@@ -437,14 +444,9 @@ def pq_adc_topk(
     )
 
 
-def pq_adc_topk_sql(
-    m: int = 4,
-    k_codes: int = 16,
-    topk: int = 5,
-    query_mod: int = 20,
-) -> str:
+def pq_adc_topk_sql(k_codes: int = 16, topk: int = 5, query_mod: int = 20) -> str:
     """DuckDB twin of :func:`pq_adc_topk`."""
-    base = pq_codes_sql(m, k_codes, 1)
+    base = pq_codes_sql(k_codes)
     # reuse the pq CTE chain up to (but not including) the final SELECT
     body = base[len("WITH ") : base.rindex("SELECT id, sub, code, dist")]
     sqd = (
@@ -463,7 +465,7 @@ adist AS (
   FROM pdist p JOIN codes x USING (sub, code)
   WHERE p.qid != x.xid
   GROUP BY 1, 2
-  HAVING count(*) = {m}
+  HAVING count(*) = {PQ_M}
 )
 SELECT qid, rk, xid, adist FROM (
   SELECT *, row_number() OVER (PARTITION BY qid
@@ -472,19 +474,12 @@ SELECT qid, rk, xid, adist FROM (
 ) WHERE rk <= {topk}"""
 
 
-def ivfpq_topk(
-    emb: DataFrame,
-    n_lists: int = 8,
-    m: int = 4,
-    k_codes: int = 16,
-    topk: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
+def ivfpq_topk(emb: DataFrame) -> DataFrame:
     """IVF-PQ search — the full FAISS billion-scale plan assembled from
     this module's parts: a coarse quantizer routes vectors to inverted
     lists (spherical k-means seeds, 1 Lloyd round), PQ codes compress
-    every vector to m bytes, and a query scans only its ``nprobe``
-    nearest lists using ADC lookup tables (no vector math per pair).
+    every vector to m bytes, and a query scans only its ``IVF_NPROBE``
+    nearest of ``IVF_N_LISTS`` lists using ADC lookup tables (no vector math per pair).
 
     Simplification vs FAISS: codes quantize the raw vectors, not the
     per-list residuals — residual encoding changes constants, not the
@@ -499,17 +494,17 @@ def ivfpq_topk(
     # code assignment AND the query lookup tables — unpinned, the
     # normalize/split passes re-executed per consumer (4 corpus scans)
     base = _base(emb).localCheckpoint(eager=True)
-    coarse = init_centroids(base, n_lists)
+    coarse = init_centroids(base, IVF_N_LISTS)
     coarse = _recompute(_assign(base, coarse)).localCheckpoint()
     assigned = _assign(base, coarse).select(
         "id", F.col("cluster").alias("list_id")
     )
     # PQ codes for the whole corpus (subspace k-means as in pq_codes)
-    sv = _sub_split(emb, m).localCheckpoint(eager=True)
+    sv = _sub_split(emb).localCheckpoint(eager=True)
     w = Window.partitionBy("sub").orderBy("id")
     cents = (
         sv.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k_codes)
+        .filter(F.col("rk") <= IVF_K_CODES)
         .select(
             "sub", (F.col("rk") - 1).alias("code"), F.col("svec").alias("cemb")
         )
@@ -527,7 +522,7 @@ def ivfpq_topk(
     wq = Window.partitionBy("id").orderBy(F.desc("ccos"), F.asc("cluster"))
     probes = (
         qscored.withColumn("crk", F.row_number().over(wq))
-        .filter(F.col("crk") <= nprobe)
+        .filter(F.col("crk") <= IVF_NPROBE)
         .select(F.col("id").alias("qid"), F.col("cluster").alias("list_id"))
     )
     # ADC lookup tables per query
@@ -548,27 +543,21 @@ def ivfpq_topk(
         .filter(F.col("qid") != F.col("xid"))
         .groupBy("qid", "xid")
         .agg(F.round(F.sum("pd"), 4).alias("adist"), F.count("*").alias("ns"))
-        .filter(F.col("ns") == m)
+        .filter(F.col("ns") == PQ_M)
         .drop("ns")
     )
     wr = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("xid"))
     return (
         joined.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= topk)
+        .filter(F.col("rk") <= IVF_TOPK)
         .select("qid", "rk", "xid", "adist")
     )
 
 
-def ivfpq_topk_sql(
-    n_lists: int = 8,
-    m: int = 4,
-    k_codes: int = 16,
-    topk: int = 5,
-    nprobe: int = 2,
-) -> str:
+def ivfpq_topk_sql() -> str:
     """DuckDB twin of :func:`ivfpq_topk`."""
-    coarse_body, final = _lloyd_ctes(n_lists, 1, "embeddings")
-    pq = pq_codes_sql(m, k_codes, 1)
+    coarse_body, final = _lloyd_ctes(IVF_N_LISTS, 1, "embeddings")
+    pq = pq_codes_sql(IVF_K_CODES)
     pq_body = pq[len("WITH ") : pq.rindex("SELECT id, sub, code, dist")]
     # the coarse chain and the PQ chain both emit cents*/a*/afinal CTE
     # names — scope the PQ chain's under a pq prefix
@@ -593,7 +582,7 @@ probes AS (
              ORDER BY round(list_dot_product(b.uemb, c.cemb), 4) DESC,
                       c.cluster) AS crk
     FROM base b CROSS JOIN cents1 c
-    WHERE b.id % 20 = 0) WHERE crk <= {nprobe}
+    WHERE b.id % 20 = 0) WHERE crk <= {IVF_NPROBE}
 ),
 pdist AS (
   SELECT q.id AS qid, q.sub, c.code, {sqd} AS pd
@@ -611,10 +600,10 @@ adist AS (
   JOIN pdist d ON d.qid = c.qid AND d.sub = x.sub AND d.code = x.code
   WHERE c.qid != c.xid
   GROUP BY 1, 2
-  HAVING count(*) = {m}
+  HAVING count(*) = {PQ_M}
 )
 SELECT qid, rk, xid, adist FROM (
   SELECT *, row_number() OVER (PARTITION BY qid
                                ORDER BY adist ASC, xid) AS rk
   FROM adist
-) WHERE rk <= {topk}"""
+) WHERE rk <= {IVF_TOPK}"""

@@ -40,9 +40,7 @@ from docling_plus_spark.functions.expressions import md5_long
 # Intra-document repetition stripping (RefinedWeb-style line dedup)
 
 
-def repetition_strip(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_strip(df: DataFrame) -> DataFrame:
     """Remove repeated lines *within* each document, keeping the first
     occurrence (blank lines always survive — they are layout, not
     content). The intra-document counterpart of the cross-corpus
@@ -54,8 +52,8 @@ def repetition_strip(
     preserves original line order.
     """
     lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     )
     w = Window.partitionBy("id", "line").orderBy("pos")
     kept = lines.withColumn("rk", F.row_number().over(w)).filter(
@@ -75,8 +73,8 @@ def repetition_strip(
         )
         .join(
             df.select(
-                F.col(id_col).alias("id"),
-                F.size(F.split(F.col(text_col), "\n")).cast("long").alias("n_lines"),
+                F.col("doc_id").alias("id"),
+                F.size(F.split(F.col("text"), "\n")).cast("long").alias("n_lines"),
             ),
             "id",
         )
@@ -89,13 +87,11 @@ def repetition_strip(
     )
 
 
-def repetition_strip_sql(
-    id_expr: str = "doc_id", text_expr: str = "text"
-) -> str:
+def repetition_strip_sql() -> str:
     """DuckDB twin of :func:`repetition_strip` (full SELECT)."""
     return f"""
 WITH split AS (
-  SELECT {id_expr} AS id, string_split({text_expr}, chr(10)) AS parts
+  SELECT doc_id AS id, string_split(text, chr(10)) AS parts
   FROM documents
 ),
 lines AS (
@@ -118,8 +114,8 @@ reassembled AS (
   FROM kept GROUP BY id
 ),
 sizes AS (
-  SELECT {id_expr} AS id,
-         len(string_split({text_expr}, chr(10)))::bigint AS n_lines
+  SELECT doc_id AS id,
+         len(string_split(text, chr(10)))::bigint AS n_lines
   FROM documents
 )
 SELECT r.id, coalesce(r.clean_text, '') AS clean_text, s.n_lines,
@@ -226,14 +222,10 @@ def dsir_weights(df: DataFrame, target_filter: Column) -> DataFrame:
     )
 
 
-def dsir_weights_sql(
-    target_pred: str,
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-) -> str:
+def dsir_weights_sql(target_pred: str) -> str:
     """DuckDB twin of :func:`dsir_weights` (full SELECT)."""
     words = (
-        f"list_filter(string_split_regex(lower({text_expr}), '{_WORD_SPLIT}'),"
+        f"list_filter(string_split_regex(lower(text), '{_WORD_SPLIT}'),"
         f" x -> x <> '')"
     )
     h = "('0x'||substr(md5({v}),1,15))::ubigint % {b}"
@@ -241,7 +233,7 @@ def dsir_weights_sql(
     bi = h.format(v="(w.ws[t.i] || ' ' || w.ws[t.i + 1])", b=DSIR_BUCKETS)
     return f"""
 WITH w AS (
-  SELECT {id_expr} AS id, ({target_pred}) AS is_target, {words} AS ws FROM documents
+  SELECT doc_id AS id, ({target_pred}) AS is_target, {words} AS ws FROM documents
 ),
 feats AS (
   SELECT id, is_target, ({uni})::bigint AS b
@@ -313,19 +305,15 @@ def bloom_dedup(df: DataFrame, build_filter: Column) -> DataFrame:
     )
 
 
-def bloom_dedup_sql(
-    build_pred: str,
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-) -> str:
+def bloom_dedup_sql(build_pred: str) -> str:
     """DuckDB twin of :func:`bloom_dedup` (full SELECT)."""
     p = (
-        f"(('0x'||substr(md5(md5({text_expr}) || '#' || j.j::varchar),1,15))"
+        f"(('0x'||substr(md5(md5(text) || '#' || j.j::varchar),1,15))"
         f"::ubigint % {BLOOM_M})::bigint"
     )
     return f"""
 WITH pos AS (
-  SELECT {id_expr} AS id, ({build_pred}) AS is_build, {p} AS p
+  SELECT doc_id AS id, ({build_pred}) AS is_build, {p} AS p
   FROM documents, unnest(range(1, {BLOOM_K} + 1)) AS j(j)
 ),
 bits AS (SELECT DISTINCT p FROM pos WHERE is_build),

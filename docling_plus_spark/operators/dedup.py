@@ -85,6 +85,9 @@ def shingles_sql(text_expr: str, n: int = SHINGLE_N) -> str:
 # (64-bit long) and DuckDB (BIGINT, which *errors* on overflow).
 
 MINHASH_PRIME = (1 << 31) - 1
+#: signature length and LSH bands of the MinHash dedup (4 rows per band)
+MINHASH_K = 16
+MINHASH_BANDS = 4
 
 
 def _perm_constants(k: int) -> tuple[list[int], list[int]]:
@@ -123,12 +126,13 @@ def _affine_perm(a: int, b: int):
     )
 
 
-def minhash_signature_from_hashes(hs_col: Column, k: int = 16) -> Column:
+def minhash_signature_from_hashes(hs_col: Column) -> Column:
     """sig[j] = min over hashed shingles of (a_j·h + b_j) mod p."""
-    a, b = _perm_constants(k)
-    return F.array(
-        *[F.array_min(F.transform(hs_col, _affine_perm(a[j], b[j]))) for j in range(k)]
-    )
+    a, b = _perm_constants(MINHASH_K)
+    return F.array(*[
+        F.array_min(F.transform(hs_col, _affine_perm(a[j], b[j])))
+        for j in range(MINHASH_K)
+    ])
 
 
 def hashed_shingles_sql(shingles_expr: str) -> str:
@@ -139,21 +143,22 @@ def hashed_shingles_sql(shingles_expr: str) -> str:
     )
 
 
-def minhash_signature_sql(hs_expr: str, k: int = 16) -> str:
+def minhash_signature_sql(hs_expr: str) -> str:
     """DuckDB twin of :func:`minhash_signature_from_hashes` — takes the
     *hashed* shingle list expression (compute it once in a CTE)."""
-    a, b = _perm_constants(k)
+    a, b = _perm_constants(MINHASH_K)
     mins = ", ".join(
         f"list_min(list_transform({hs_expr}, "
         f"h -> ({a[j]}::bigint * h + {b[j]}::bigint) % {MINHASH_PRIME}))"
-        for j in range(k)
+        for j in range(MINHASH_K)
     )
     return f"[{mins}]"
 
 
-def lsh_band_keys(sig_col: Column, bands: int, rows: int) -> Column:
+def lsh_band_keys(sig_col: Column) -> Column:
     """Array of band bucket keys: md5 of each band's signature slice,
     prefixed with the band index (buckets never collide across bands)."""
+    rows = MINHASH_K // MINHASH_BANDS
     return F.array(
         *[
             F.md5(
@@ -162,40 +167,33 @@ def lsh_band_keys(sig_col: Column, bands: int, rows: int) -> Column:
                     F.concat_ws(",", F.slice(sig_col, b * rows + 1, rows)),
                 )
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
 
 
-def lsh_band_keys_sql(sig_expr: str, bands: int, rows: int) -> str:
+def lsh_band_keys_sql(sig_expr: str) -> str:
+    rows = MINHASH_K // MINHASH_BANDS
     keys = ", ".join(
         f"md5('{b}|' || array_to_string({sig_expr}[{b * rows + 1}:{(b + 1) * rows}], ','))"
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     )
     return f"[{keys}]"
 
 
-def minhash_prepare(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-) -> DataFrame:
+def minhash_prepare(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, sig:array<long>, band_key exploded) — the LSH-ready table.
 
     Two projections on purpose: the hashed-shingle array is computed in
     its own select so the k signature mins reuse it (one md5 pass/row).
     """
-    rows = k // bands
     hs = df.select(
         F.col(id_col).alias("id"),
-        hashed_shingles(shingles(F.col(text_col))).alias("_hs"),
+        hashed_shingles(shingles(F.col("text"))).alias("_hs"),
     )
-    out = hs.select("id", minhash_signature_from_hashes(F.col("_hs"), k).alias("sig"))
-    return out.select(
-        "id", "sig", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("band_key")
-    )
+    out = hs.select("id", minhash_signature_from_hashes(F.col("_hs")).alias("sig"))
+    keys = lsh_band_keys(F.col("sig"))
+    return out.select("id", "sig", F.explode(keys).alias("band_key"))
 
 
 def bucket_pairs(
@@ -314,13 +312,10 @@ def minhash_candidate_pairs(
 def minhash_dedup_keep(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
     threshold: float = 0.7,
 ) -> DataFrame:
     """Greedy dedup: ids that survive (no lower-id near-duplicate)."""
-    prepared = minhash_prepare(df, id_col, text_col, k, bands)
+    prepared = minhash_prepare(df, id_col)
     pairs = minhash_candidate_pairs(prepared)
     dropped = (
         pairs.filter(F.col("est_jaccard") >= threshold)
@@ -334,14 +329,10 @@ def minhash_dedup_keep(
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (exact verify on candidates)
 
-def jaccard_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact shingle-set Jaccard for (id_a, id_b) pairs."""
-    sh = df.select(F.col(id_col).alias("id"), shingles(F.col(text_col)).alias("sh"))
+def jaccard_on_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact shingle-set Jaccard for (id_a, id_b) pairs of ``df``'s
+    (id, text) rows."""
+    sh = df.select("id", shingles(F.col("text")).alias("sh"))
     out = (
         pairs.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -361,7 +352,7 @@ def jaccard_on_pairs(
 SIMHASH_BITS = 32
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """32-bit SimHash: per-token md5→bigint, bit-vote over tokens.
 
     explode → partial-aggregated groupBy (map-side combine makes the
@@ -369,7 +360,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), "\\s+")).alias("tok"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).alias("tok"),
     ).withColumn("h", md5_long(F.col("tok")))
     votes = [
         F.sum(
@@ -385,7 +376,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return agg.select("id", sim.alias("simhash"))
 
 
-def simhash_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
+def simhash_sql(id_expr: str = "doc_id") -> str:
     """DuckDB twin of :func:`simhash` (returns a full SELECT)."""
     votes = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
@@ -398,7 +389,7 @@ def simhash_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
     return f"""
 WITH toks AS (
   SELECT {id_expr} AS id,
-         ('0x'||substr(md5(unnest(string_split_regex(lower(trim({text_expr})), '\\s+'))),1,15))::bigint AS h
+         ('0x'||substr(md5(unnest(string_split_regex(lower(trim(text)), '\\s+'))),1,15))::bigint AS h
   FROM documents
 ), agg AS (SELECT id, {votes} FROM toks GROUP BY id)
 SELECT id, {bits} AS simhash FROM agg
@@ -406,15 +397,17 @@ SELECT id, {bits} AS simhash FROM agg
 
 
 SIMHASH_BLOCKS = 4
+#: largest Hamming distance of a SimHash near-duplicate pair
+SIMHASH_MAX_HAMMING = 3
 
 
-def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_near_pairs(sim_df: DataFrame) -> DataFrame:
     """Candidate pairs by 4-block pigeonhole, verified by exact popcount
-    of xor ≤ ``max_hamming``.
+    of xor ≤ ``SIMHASH_MAX_HAMMING``.
 
     With 4 blocks of 8 bits, any pair at Hamming distance ≤ 3 has its
     differing bits spread over at most 3 blocks, so at least one block is
-    identical — full recall at the default threshold (pigeonhole), unlike
+    identical — full recall at this threshold (pigeonhole), unlike
     a 2-half scheme where a 1+2 split across halves escapes both blocks.
     """
     width = SIMHASH_BITS // SIMHASH_BLOCKS
@@ -433,7 +426,7 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     return (
         bucket_pairs(keyed, "block", ("simhash",))
         .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
@@ -443,19 +436,21 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 WINNOW_BASE = 257
 WINNOW_MOD = (1 << 31) - 1
+#: gram length in characters, window of grams, fingerprints a pair must
+#: share to be dropped, and the document frequency above which the SQL
+#: twin drops a fingerprint
+WINNOW_K = 8
+WINNOW_WINDOW = 4
+WINNOW_MIN_SHARED = 2
+WINNOW_MAX_DOC_FREQ = 20
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
-    MOSS scheme): polynomial hash of every k-char gram, then the minimum
-    hash of each ``window`` of consecutive grams, distinct and sorted.
-    Guarantees every match of length >= k+window-1 shares a fingerprint.
+    MOSS scheme) of ``df``'s (doc_id, text) rows: polynomial hash of every
+    k-char gram (``WINNOW_K``), then the minimum hash of each window of
+    ``WINNOW_WINDOW`` consecutive grams, distinct and sorted. Guarantees
+    every match of length >= k+window-1 shares a fingerprint.
 
     Pure JVM column expressions, no Python, no shuffle. Each intermediate
     array (char codes, gram hashes) is LET-BOUND by wrapping it in a
@@ -468,7 +463,7 @@ def winnow_fingerprints(
     arithmetic (base 257 mod 2^31-1, code points) is replayed exactly by
     the DuckDB oracle twin.
     """
-    s = F.lower(F.trim(F.col(text_col)))
+    s = F.lower(F.trim(F.col("text")))
     # split('') yields one element per code point (trailing empty only for
     # the empty string, whose ascii() of 0 hashes to the same [0] gram the
     # previous length==0 special case emitted).
@@ -483,19 +478,19 @@ def winnow_fingerprints(
 
     def _grams(cs: Column) -> Column:
         n = F.size(cs)
-        return F.when(n < k, F.array(_hash(cs))).otherwise(
+        return F.when(n < WINNOW_K, F.array(_hash(cs))).otherwise(
             F.transform(
-                F.sequence(F.lit(1), n - F.lit(k - 1)),
-                lambda i: _hash(F.slice(cs, i, F.lit(k))),
+                F.sequence(F.lit(1), n - F.lit(WINNOW_K - 1)),
+                lambda i: _hash(F.slice(cs, i, F.lit(WINNOW_K))),
             )
         )
 
     def _wins(gs: Column) -> Column:
         n = F.size(gs)
-        return F.when(n <= window, F.array(F.array_min(gs))).otherwise(
+        return F.when(n <= WINNOW_WINDOW, F.array(F.array_min(gs))).otherwise(
             F.transform(
-                F.sequence(F.lit(1), n - F.lit(window - 1)),
-                lambda w: F.array_min(F.slice(gs, w, window)),
+                F.sequence(F.lit(1), n - F.lit(WINNOW_WINDOW - 1)),
+                lambda w: F.array_min(F.slice(gs, w, WINNOW_WINDOW)),
             )
         )
 
@@ -512,18 +507,10 @@ def winnow_fingerprints(
         ),
         1,
     )
-    return df.select(
-        F.col(id_col).alias("id"), fingerprints.alias("fingerprints")
-    )
+    return df.select(F.col("doc_id").alias("id"), fingerprints.alias("fingerprints"))
 
 
-def winnow_fingerprints_exploded(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints_exploded(df: DataFrame) -> DataFrame:
     """Scalar-row projection of :func:`winnow_fingerprints`:
     one ``(id, fingerprint)`` row per selected fingerprint.
 
@@ -533,16 +520,12 @@ def winnow_fingerprints_exploded(
     signature components to scalars before anything crosses a contract
     boundary. Still pure JVM expressions, still shuffle-free.
     """
-    fps = winnow_fingerprints(df, id_col, text_col, k, window)
+    fps = winnow_fingerprints(df)
     return fps.select("id", F.explode("fingerprints").alias("fingerprint"))
 
 
 def winnow_candidate_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
     max_bucket: int = 4096,
     max_doc_freq: int | None = None,
     pin: bool = True,
@@ -568,7 +551,7 @@ def winnow_candidate_pairs(
     ``max_bucket``), then groupBy(id_a, id_b) count. The join carries
     only (fingerprint, id) — no payloads.
     """
-    fp = winnow_fingerprints_exploded(df, id_col, text_col, k, window)
+    fp = winnow_fingerprints_exploded(df)
     joined = (
         bucket_pairs(
             fp,
@@ -587,86 +570,63 @@ def winnow_candidate_pairs(
     )
 
 
-def winnow_dedup_keep(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-    min_shared: int = 2,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
+def winnow_dedup_keep(df: DataFrame, max_doc_freq: int | None = None) -> DataFrame:
     """Greedy MOSS dedup: ids that survive after dropping every document
-    with >= ``min_shared`` rare fingerprints in common with a lower id —
+    with >= ``WINNOW_MIN_SHARED`` rare fingerprints in common with a lower id —
     the same keep-lowest-id policy as :func:`minhash_dedup_keep`, so the
     two schemes are drop-in alternatives."""
-    pairs = winnow_candidate_pairs(
-        df, id_col, text_col, k, window, max_doc_freq=max_doc_freq
-    )
+    pairs = winnow_candidate_pairs(df, max_doc_freq=max_doc_freq)
     dropped = (
-        pairs.filter(F.col("shared_fingerprints") >= min_shared)
+        pairs.filter(F.col("shared_fingerprints") >= WINNOW_MIN_SHARED)
         .select(F.col("id_b").alias("id"))
         .distinct()
     )
-    ids = df.select(F.col(id_col).alias("id")).distinct()
+    ids = df.select(F.col("doc_id").alias("id")).distinct()
     return ids.join(dropped, "id", "left_anti").select(F.col("id").alias("keep_id"))
 
 
-def winnow_dedup_keep_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    k: int = 8,
-    window: int = 4,
-    min_shared: int = 2,
-    max_doc_freq: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`winnow_dedup_keep`."""
-    pairs = winnow_candidate_pairs_sql(
-        id_expr, text_expr, k, window, max_doc_freq
-    )
+def winnow_dedup_keep_sql() -> str:
+    """DuckDB twin of :func:`winnow_dedup_keep` at
+    ``max_doc_freq=WINNOW_MAX_DOC_FREQ``."""
+    pairs = winnow_candidate_pairs_sql()
     return f"""
 WITH pairs AS ({pairs}),
 dropped AS (
-  SELECT DISTINCT id_b AS id FROM pairs WHERE shared_fingerprints >= {min_shared}
+  SELECT DISTINCT id_b AS id FROM pairs WHERE shared_fingerprints >= {WINNOW_MIN_SHARED}
 )
-SELECT DISTINCT d.{id_expr} AS keep_id
-FROM documents d LEFT JOIN dropped ON d.{id_expr} = dropped.id
+SELECT DISTINCT d.doc_id AS keep_id
+FROM documents d LEFT JOIN dropped ON d.doc_id = dropped.id
 WHERE dropped.id IS NULL
 """
 
 
-def winnow_fingerprints_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> str:
+def winnow_fingerprints_sql() -> str:
     """DuckDB twin of :func:`winnow_fingerprints` (full SELECT)."""
     B, M = WINNOW_BASE, WINNOW_MOD
     return f"""
 WITH g AS (
-  SELECT {id_expr} AS id, lower(trim({text_expr})) AS s FROM documents
+  SELECT doc_id AS id, lower(trim(text)) AS s FROM documents
 ),
 grams AS (
   SELECT id,
     CASE
       WHEN length(s) = 0 THEN [0::bigint]
-      WHEN length(s) < {k} THEN
+      WHEN length(s) < {WINNOW_K} THEN
         [list_reduce(list_prepend(0::bigint,
            list_transform(range(1, length(s)+1), j -> ascii(substr(s, j::int, 1))::bigint)),
            (acc, c) -> (acc * {B} + c) % {M})]
       ELSE
-        list_transform(range(1, length(s) - {k} + 2),
+        list_transform(range(1, length(s) - {WINNOW_K} + 2),
           i -> list_reduce(list_prepend(0::bigint,
-                 list_transform(range(0, {k}), j -> ascii(substr(s, (i + j)::int, 1))::bigint)),
+                 list_transform(range(0, {WINNOW_K}), j -> ascii(substr(s, (i + j)::int, 1))::bigint)),
                  (acc, c) -> (acc * {B} + c) % {M}))
     END AS gh
   FROM g
 ),
 fps AS (
   SELECT id,
-    CASE WHEN len(gh) <= {window} THEN [list_min(gh)]
-    ELSE list_transform(range(1, len(gh) - {window} + 2), w -> list_min(gh[w:w+{window}-1]))
+    CASE WHEN len(gh) <= {WINNOW_WINDOW} THEN [list_min(gh)]
+    ELSE list_transform(range(1, len(gh) - {WINNOW_WINDOW} + 2), w -> list_min(gh[w:w+{WINNOW_WINDOW}-1]))
     END AS wins
   FROM grams
 )
@@ -674,42 +634,26 @@ SELECT id, list_sort(list_distinct(wins)) AS fingerprints FROM fps
 """
 
 
-def winnow_fingerprints_exploded_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> str:
+def winnow_fingerprints_exploded_sql() -> str:
     """DuckDB twin of :func:`winnow_fingerprints_exploded`."""
-    inner = winnow_fingerprints_sql(id_expr, text_expr, k, window)
+    inner = winnow_fingerprints_sql()
     return f"""
 SELECT id, unnest(fingerprints) AS fingerprint
 FROM ({inner})
 """
 
 
-def winnow_candidate_pairs_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    k: int = 8,
-    window: int = 4,
-    max_doc_freq: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`winnow_candidate_pairs`."""
-    exploded = winnow_fingerprints_exploded_sql(id_expr, text_expr, k, window)
-    df_filter = ""
-    if max_doc_freq is not None:
-        df_filter = f""",
-keep AS (
-  SELECT fingerprint FROM fp GROUP BY 1 HAVING count(*) <= {max_doc_freq}
-)"""
-        join_src = "fp a JOIN keep USING (fingerprint) JOIN fp b ON a.fingerprint = b.fingerprint AND a.id < b.id"
-    else:
-        join_src = "fp a JOIN fp b ON a.fingerprint = b.fingerprint AND a.id < b.id"
+def winnow_candidate_pairs_sql() -> str:
+    """DuckDB twin of :func:`winnow_candidate_pairs` at
+    ``max_doc_freq=WINNOW_MAX_DOC_FREQ``."""
+    exploded = winnow_fingerprints_exploded_sql()
     return f"""
-WITH fp AS ({exploded}){df_filter}
+WITH fp AS ({exploded}),
+keep AS (
+  SELECT fingerprint FROM fp GROUP BY 1 HAVING count(*) <= {WINNOW_MAX_DOC_FREQ}
+)
 SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared_fingerprints
-FROM {join_src}
+FROM fp a JOIN keep USING (fingerprint) JOIN fp b ON a.fingerprint = b.fingerprint AND a.id < b.id
 GROUP BY 1, 2
 """
 
@@ -717,16 +661,14 @@ GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 # Benchmark decontamination
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """Flag documents sharing any word ``n``-gram with a benchmark set
-    (the standard eval-decontamination step before pre-training).
+#: word n-gram size of benchmark decontamination
+DECONTAM_N = 8
+
+
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Flag documents (doc_id, text) sharing any word
+    ``DECONTAM_N``-gram with a benchmark set's texts (the standard
+    eval-decontamination step before pre-training).
 
     Output: (id, contaminated, n_hits) — ``n_hits`` = distinct matching
     n-gram hashes. Plan: the benchmark's n-gram hash set is tiny next
@@ -738,22 +680,22 @@ def decontaminate(
     from pyspark.sql.functions import broadcast
 
     doc_grams = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.array_distinct(
-                hashed_shingles(shingles(F.col(text_col), n))
+                hashed_shingles(shingles(F.col("text"), DECONTAM_N))
             )
         ).alias("h"),
     )
     bench_grams = broadcast(
         benchmark.select(
-            F.explode(hashed_shingles(shingles(F.col(bench_text_col), n))).alias("h")
+            F.explode(hashed_shingles(shingles(F.col("text"), DECONTAM_N))).alias("h")
         ).distinct()
     )
     hits = doc_grams.join(bench_grams, "h").groupBy("id").agg(
         F.count_distinct("h").alias("n_hits")
     )
-    ids = docs.select(F.col(id_col).alias("id")).distinct()
+    ids = docs.select(F.col("doc_id").alias("id")).distinct()
     return ids.join(hits, "id", "left").select(
         "id",
         F.coalesce(F.col("n_hits") > 0, F.lit(False)).alias("contaminated"),
@@ -761,22 +703,16 @@ def decontaminate(
     )
 
 
-def decontaminate_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    bench_cte: str = "benchmark",
-    n: int = 8,
-) -> str:
+def decontaminate_sql(bench_cte: str = "benchmark") -> str:
     """DuckDB twin of :func:`decontaminate`; ``bench_cte`` must be a
     relation with a ``text`` column."""
-    dg = hashed_shingles_sql(shingles_sql(text_expr, n))
-    bg = hashed_shingles_sql(shingles_sql("text", n))
+    grams = hashed_shingles_sql(shingles_sql("text", DECONTAM_N))
     return f"""
 WITH doc_grams AS (
-  SELECT {id_expr} AS id, unnest(list_distinct({dg})) AS h FROM documents
+  SELECT doc_id AS id, unnest(list_distinct({grams})) AS h FROM documents
 ),
 bench_grams AS (
-  SELECT DISTINCT unnest({bg}) AS h FROM {bench_cte}
+  SELECT DISTINCT unnest({grams}) AS h FROM {bench_cte}
 ),
 hits AS (
   SELECT id, count(DISTINCT h) AS n_hits
@@ -784,7 +720,7 @@ hits AS (
 )
 SELECT d.id, coalesce(n_hits > 0, false) AS contaminated,
        coalesce(n_hits, 0)::bigint AS n_hits
-FROM (SELECT DISTINCT {id_expr} AS id FROM documents) d
+FROM (SELECT DISTINCT doc_id AS id FROM documents) d
 LEFT JOIN hits USING (id)
 """
 
@@ -853,23 +789,17 @@ def minhash_incremental_pairs(
     ).distinct()
 
 
-def minhash_incremental_sql(
-    new_cte: str,
-    index_cte: str,
-    k: int = 16,
-    bands: int = 4,
-) -> str:
+def minhash_incremental_sql(new_cte: str, index_cte: str) -> str:
     """DuckDB twin of prepare(new) + prepare(index) +
     :func:`minhash_incremental_pairs`. ``new_cte``/``index_cte`` are CTE
     names with (id, text)."""
-    rows = k // bands
     sh = shingles_sql("text")
     hs = hashed_shingles_sql(sh)
 
     def prep(src: str) -> str:
         return f"""(
-  SELECT id, sig, unnest({lsh_band_keys_sql('sig', bands, rows)}) AS band_key
-  FROM (SELECT id, {minhash_signature_sql('hs', k)} AS sig
+  SELECT id, sig, unnest({lsh_band_keys_sql('sig')}) AS band_key
+  FROM (SELECT id, {minhash_signature_sql('hs')} AS sig
         FROM (SELECT id, {hs} AS hs FROM {src}))
 )"""
 
@@ -886,18 +816,13 @@ others AS (
   SELECT band_key, id AS other_id, sig, false AS vs_index FROM prep_new
 )
 SELECT DISTINCT n.id AS new_id, o.other_id,
-       round({eq} / {k}.0, 6) AS est_jaccard, o.vs_index
+       round({eq} / {MINHASH_K}.0, 6) AS est_jaccard, o.vs_index
 FROM prep_new n JOIN others o USING (band_key)
 WHERE o.vs_index OR n.id < o.other_id
 """
 
 
-def containment_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def containment_on_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """One-sided containment |A∩B| / |A| for candidate pairs — the
     asymmetric companion to Jaccard (Broder's resemblance vs
     containment): a tweet quoted inside an article has Jaccard ≈ 0 but
@@ -908,9 +833,7 @@ def containment_on_pairs(
     the candidate list against the shingle table; only candidate pairs
     ever meet, so cost is O(candidates), never O(n²).
     """
-    sh = df.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col)).alias("sh")
-    )
+    sh = df.select("id", shingles(F.col("text")).alias("sh"))
     out = (
         pairs.join(
             sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),

@@ -31,33 +31,23 @@ INVOICE_TEMPLATE: dict[str, str] = {
 }
 
 
-def extract_fields(
-    df: DataFrame,
-    template: dict[str, str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def extract_fields(df: DataFrame, template: dict[str, str]) -> DataFrame:
     """(id, <field>...) — one ``regexp_extract`` per template field;
     unmatched fields are ''."""
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *[
-            F.regexp_extract(F.col(text_col), pat, 1).alias(name)
+            F.regexp_extract(F.col("text"), pat, 1).alias(name)
             for name, pat in template.items()
         ],
     )
 
 
-def extract_fields_sql(
-    template: dict[str, str],
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def extract_fields_sql(template: dict[str, str], text_expr: str = "text") -> str:
     """DuckDB twin of :func:`extract_fields` (full SELECT)."""
     cols = ", ".join(
         f"regexp_extract({text_expr}, '{pat.replace(chr(39), chr(39) * 2)}', 1)"
         f" AS {name}"
         for name, pat in template.items()
     )
-    return f"SELECT {id_expr} AS id, {cols} FROM {table}"
+    return f"SELECT doc_id AS id, {cols} FROM documents"

@@ -133,23 +133,22 @@ def _connected_components_loop(edges: DataFrame) -> DataFrame:
     return labels.select("node", "comp")
 
 
-def cc_dedup_keep(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
+#: estimated Jaccard from which a candidate pair is a dedup edge
+CC_THRESHOLD = 0.7
+
+
+def cc_dedup_keep(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected-components dedup: one exemplar (min id) per
-    near-duplicate cluster, plus every unpaired id.
+    near-duplicate cluster, plus every unpaired id of ``df``.
 
     Output: (keep_id). Upgrade of the greedy rule in
     :func:`docling_plus_spark.operators.dedup.minhash_dedup_keep`:
     clusters are closed under similarity-edge reachability.
     """
-    e = pairs.filter(F.col("est_jaccard") >= threshold).select("id_a", "id_b")
+    e = pairs.filter(F.col("est_jaccard") >= CC_THRESHOLD).select("id_a", "id_b")
     comp = connected_components(e)
     keep_in_comp = comp.groupBy("comp").agg(F.min("node").alias("keep_id"))
-    ids = df.select(F.col(id_col).alias("id")).distinct()
+    ids = df.select("id").distinct()
     unpaired = ids.join(
         comp.select(F.col("node").alias("id")), "id", "left_anti"
     ).select(F.col("id").alias("keep_id"))
@@ -212,12 +211,7 @@ def asof_join(
 
 
 def cc_dedup_keep_best(
-    df: DataFrame,
-    pairs: DataFrame,
-    quality: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    score_col: str = "score",
+    df: DataFrame, pairs: DataFrame, quality: DataFrame
 ) -> DataFrame:
     """Quality-aware exemplar selection: keep the *best* doc per
     near-duplicate cluster, not the min-id one.
@@ -227,7 +221,8 @@ def cc_dedup_keep_best(
     copy for a boilerplate-ridden one): clusters are the connected
     components of the similarity graph; within each, the kept id
     maximizes ``(score, -id)`` — deterministic tie-break on min id.
-    Unpaired docs are kept as themselves with their own score.
+    Unpaired docs are kept as themselves with their own score. ``df``
+    has an ``id`` column and ``quality`` (id, score).
 
     Output: ``(keep_id, comp, score)`` — ``comp`` is the cluster label
     (min node id), so consumers can join back for lineage.
@@ -238,11 +233,9 @@ def cc_dedup_keep_best(
     table is |paired docs| rows, far smaller than the corpus), one
     max_by aggregation with map-side partials.
     """
-    e = pairs.filter(F.col("est_jaccard") >= threshold).select("id_a", "id_b")
+    e = pairs.filter(F.col("est_jaccard") >= CC_THRESHOLD).select("id_a", "id_b")
     comp = connected_components(e)
-    q = quality.select(
-        F.col(id_col).alias("node"), F.col(score_col).alias("score")
-    )
+    q = quality.select(F.col("id").alias("node"), F.col("score"))
     best = (
         comp.join(q, "node")
         .groupBy("comp")
@@ -259,7 +252,7 @@ def cc_dedup_keep_best(
             F.col("b.score").alias("score"),
         )
     )
-    ids = df.select(F.col(id_col).alias("id")).distinct()
+    ids = df.select("id").distinct()
     unpaired = (
         ids.join(comp.select(F.col("node").alias("id")), "id", "left_anti")
         .join(q.withColumnRenamed("node", "id"), "id", "left")
@@ -279,12 +272,15 @@ def cc_dedup_keep_best(
 #: register hash layout: 60-bit md5_long → low bits pick the bucket,
 #: the remaining W bits feed the leading-zero rank.
 _HB_MD5_BITS = 60  # md5_long width; W = 60 - log2(m) rank bits remain
+#: registers per node and radius of the DuckDB twin (the Spark default)
+HYPERBALL_M = 16
+HYPERBALL_ROUNDS = 4
 
 
 def hyperball_registers(
     edges: DataFrame,
-    m: int = 16,
-    rounds: int = 4,
+    m: int = HYPERBALL_M,
+    rounds: int = HYPERBALL_ROUNDS,
 ) -> DataFrame:
     """``(node, bucket, register)`` — HyperLogLog registers of each
     node's out-ball of radius ``rounds`` over ``(src, dst)`` edges.
@@ -367,7 +363,7 @@ def _hyperball_loop(edges: DataFrame, m: int, rounds: int) -> DataFrame:
     return reg
 
 
-def hyperball_estimate(registers: DataFrame, m: int = 16) -> DataFrame:
+def hyperball_estimate(registers: DataFrame, m: int = HYPERBALL_M) -> DataFrame:
     """``(node, est_ball)`` — HLL estimate per node from its registers:
     ``alpha_m * m^2 / sum(2^-register)`` with the standard small-range
     linear-counting correction (Flajolet et al. 2007: raw HLL
@@ -392,21 +388,17 @@ def hyperball_estimate(registers: DataFrame, m: int = 16) -> DataFrame:
     return got.select("node", F.round(est, 4).alias("est_ball"))
 
 
-def hyperball_registers_sql(
-    edges_cte: str,
-    m: int = 16,
-    rounds: int = 4,
-) -> str:
+def hyperball_registers_sql(edges_cte: str) -> str:
     """DuckDB twin of :func:`hyperball_registers` over an ``edges``
     CTE body providing (src, dst)."""
-    p = m.bit_length() - 1
+    p = HYPERBALL_M.bit_length() - 1
     w = _HB_MD5_BITS - p
     init = f"""
 r0 AS (
   SELECT node,
-         (h % {m})::int AS bucket,
-         (CASE WHEN h // {m} > 0
-               THEN {w + 1} - length(bin(h // {m}))
+         (h % {HYPERBALL_M})::int AS bucket,
+         (CASE WHEN h // {HYPERBALL_M} > 0
+               THEN {w + 1} - length(bin(h // {HYPERBALL_M}))
                ELSE {w + 1} END)::int AS register
   FROM (
     SELECT node,
@@ -415,7 +407,7 @@ r0 AS (
   )
 )"""
     steps = []
-    for i in range(rounds):
+    for i in range(HYPERBALL_ROUNDS):
         steps.append(f"""
 r{i + 1} AS (
   SELECT node, bucket, max(register)::int AS register FROM (
@@ -427,5 +419,5 @@ r{i + 1} AS (
 )""")
     return (
         f"WITH edges AS ({edges_cte}),{init},{','.join(steps)}\n"
-        f"SELECT node, bucket, register FROM r{rounds}"
+        f"SELECT node, bucket, register FROM r{HYPERBALL_ROUNDS}"
     )

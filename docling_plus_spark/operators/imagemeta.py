@@ -227,13 +227,13 @@ def image_dims_header(media: DataFrame) -> DataFrame:
     )
 
 
-def bmp_header_dims(col: str = "media") -> tuple[Column, Column]:
-    """(width, height) columns from a known-BMP binary column — the
+def bmp_header_dims() -> tuple[Column, Column]:
+    """(width, height) columns from the known-BMP ``media`` column — the
     header-only parse for composed pipelines that just synthesized the
     bytes (negative height normalized as in :func:`image_dims_header`).
     Pure codegen."""
-    w = _le32(col, 19)
-    h_raw = _le32(col, 23)
+    w = _le32("media", 19)
+    h_raw = _le32("media", 23)
     h = F.when(
         h_raw >= F.lit(2147483648), F.lit(4294967296) - h_raw
     ).otherwise(h_raw)

@@ -85,23 +85,18 @@ def image_alt_pairs(df: DataFrame) -> DataFrame:
     )
 
 
-def image_alt_pairs_sql(
-    id_expr: str = "doc_id",
-    url_expr: str = "url",
-    html_expr: str = "html",
-    table: str = "documents",
-) -> str:
+def image_alt_pairs_sql(url_expr: str = "url", html_expr: str = "html") -> str:
     """DuckDB twin of :func:`image_alt_pairs`."""
     src_re = _SRC_RE.replace("'", "''")
     alt_re = _ALT_RE.replace("'", "''")
     return rf"""
 WITH tags AS (
-  SELECT {id_expr} AS id, {url_expr} AS page_url, i - 1 AS raw_idx,
+  SELECT doc_id AS id, {url_expr} AS page_url, i - 1 AS raw_idx,
          tg[i] AS tag
   FROM (
-    SELECT {id_expr}, {url_expr},
+    SELECT doc_id, {url_expr},
            regexp_extract_all({html_expr}, '{_IMG_RE}') AS tg
-    FROM {table}
+    FROM documents
   ), unnest(range(1, len(tg) + 1)) AS u(i)
 ),
 ex AS (

@@ -261,20 +261,21 @@ def extract_head_meta(pages: DataFrame) -> DataFrame:
     )
 
 
-def frontier_schedule(
-    candidates: DataFrame,
-    per_host_per_round: int = 4,
-) -> DataFrame:
+#: requests a host may get in one fetch round
+FRONTIER_PER_HOST = 4
+
+
+def frontier_schedule(candidates: DataFrame) -> DataFrame:
     """``(url, host, host_rank, fetch_round)`` — a politeness-bounded
     crawl schedule.
 
     The frontier question: given scored candidate urls (priority =
     PageRank / freshness / whatever :func:`pagerank` produced), in
     which fetch round may each be crawled so that no host sees more
-    than ``per_host_per_round`` requests per round? Within a host,
+    than ``FRONTIER_PER_HOST`` requests per round? Within a host,
     urls are taken best-priority-first (ties → lexicographic url, so
     the schedule is engine-independent); round = ``rank //
-    per_host_per_round``.
+    FRONTIER_PER_HOST``.
 
     Scale: one window shuffle keyed on host. Mega-hosts (the CC crawl's
     top domains hold 10^7+ urls) concentrate a partition each — but the
@@ -303,7 +304,7 @@ def frontier_schedule(
             "url",
             "host",
             "host_rank",
-            (F.col("host_rank") / per_host_per_round).cast("int").alias(
+            (F.col("host_rank") / FRONTIER_PER_HOST).cast("int").alias(
                 "fetch_round"
             ),
         )

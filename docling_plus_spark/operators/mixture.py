@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def mixture_plan(
-    df: DataFrame,
-    weights: dict[str, float],
-    source_col: str = "source",
-    ntok_col: str = "n_chars",
-) -> DataFrame:
+def mixture_plan(df: DataFrame, weights: dict[str, float]) -> DataFrame:
     """(source, n_docs, n_tokens, actual_frac, target_frac,
     sample_rate, repeat_epochs) — the training-mixture plan.
 
@@ -50,9 +45,9 @@ def mixture_plan(
     """
     from pyspark.sql.window import Window
 
-    tot = df.groupBy(F.col(source_col).alias("source")).agg(
+    tot = df.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(ntok_col).cast("long").alias("n_tokens"),
+        F.sum("n_chars").cast("long").alias("n_tokens"),
     )
     wmap = F.map_from_arrays(
         F.array(*[F.lit(k) for k in weights]),
@@ -103,10 +98,7 @@ def mixture_plan(
     return present.unionAll(missing)
 
 
-def mixture_plan_sql(
-    weights: dict[str, float],
-    ntok_expr: str = "n_chars",
-) -> str:
+def mixture_plan_sql(weights: dict[str, float]) -> str:
     """DuckDB twin of :func:`mixture_plan`."""
     # ::double on the weight literals: a bare 0.3 in VALUES parses as
     # DECIMAL, which would poison every downstream column type (the
@@ -118,7 +110,7 @@ def mixture_plan_sql(
 WITH w(source, target_frac) AS (VALUES {wm}),
 tot AS (
   SELECT source AS source, count(*)::bigint AS n_docs,
-         sum({ntok_expr})::bigint AS n_tokens
+         sum(n_chars)::bigint AS n_tokens
   FROM documents GROUP BY source
 ),
 enr AS (

@@ -101,7 +101,11 @@ def decode_media_stage(media: DataFrame, allow_stub: bool = True) -> DataFrame:
     return media.select("media_id", "kind", "media").mapInPandas(fn, DECODED_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
+#: one frame sampled in every FRAME_EVERY_N
+FRAME_EVERY_N = 10
+
+
+def frame_sample_plan(media: DataFrame) -> DataFrame:
     """Video frame-sampling plumbing: explode a (stubbed) frame index list.
 
     Real implementation would emit decoded frames; the plan shape — one
@@ -113,6 +117,6 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
     return media.select(
         "media_id",
         F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
+            F.sequence(F.lit(0), n_frames - 1, F.lit(FRAME_EVERY_N))
         ).alias("frame_idx"),
     )

@@ -106,28 +106,21 @@ def distributed_prefix_sum(
     return out.drop("_pid", *[f"_poff_{c}" for c in value_cols])
 
 
-def distributed_rank(
-    df: DataFrame, order_cols: list[str], rank_col: str = "rank"
-) -> DataFrame:
-    """1-based global rank by ``order_cols`` (which must form a total
-    order) via :func:`distributed_prefix_sum` of a literal 1 — the
-    scale-true replacement for ``row_number() OVER (ORDER BY ...)``
-    with no partition key."""
+def distributed_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """1-based global rank ``nll_rank`` by ``order_cols`` (which must
+    form a total order) via :func:`distributed_prefix_sum` of a literal
+    1 — the scale-true replacement for ``row_number() OVER (ORDER BY
+    ...)`` with no partition key."""
     one = "_rank_one"
     out = distributed_prefix_sum(
         df.withColumn(one, F.lit(1)), order_cols, [one], inclusive=True
     )
-    return out.withColumn(rank_col, F.col(f"cum_{one}")).drop(
+    return out.withColumn("nll_rank", F.col(f"cum_{one}")).drop(
         one, f"cum_{one}"
     )
 
 
-def sequence_pack(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    ntok_col: str = "n_tokens",
-) -> DataFrame:
+def sequence_pack(df: DataFrame, budget: int) -> DataFrame:
     """(window_id, id, tok_from, tok_to, win_off) packing plan rows.
 
     Document ``id`` contributes its token span ``[tok_from, tok_to)``
@@ -137,7 +130,7 @@ def sequence_pack(
     Consumers join back on ``id`` to slice actual token arrays.
     """
     offs = distributed_prefix_sum(
-        df.select(F.col(id_col).alias("id"), F.col(ntok_col).alias("n"))
+        df.select(F.col("doc_id").alias("id"), F.col("n_tokens").alias("n"))
         .where(F.col("n") > 0),
         ["id"],
         ["n"],
@@ -242,7 +235,12 @@ def stride_windows(
     )
 
 
-def stride_windows_sql(length: int = 64, stride: int = 48) -> str:
+#: window length and stride, in tokens, of the DuckDB twin
+STRIDE_LENGTH = 32
+STRIDE_STEP = 24
+
+
+def stride_windows_sql() -> str:
     """DuckDB twin of :func:`stride_windows`."""
     return rf"""
 WITH toks AS (
@@ -252,13 +250,13 @@ WITH toks AS (
   FROM documents
 ),
 wins AS (
-  SELECT id, i::int AS win_idx, (i * {stride})::bigint AS start_tok,
-         ws[i * {stride} + 1 : i * {stride} + {length}] AS w
+  SELECT id, i::int AS win_idx, (i * {STRIDE_STEP})::bigint AS start_tok,
+         ws[i * {STRIDE_STEP} + 1 : i * {STRIDE_STEP} + {STRIDE_LENGTH}] AS w
   FROM toks,
        unnest(range(0, greatest(
-         ceil((len(ws) - {length})::double / {stride})::bigint, 0) + 1))
+         ceil((len(ws) - {STRIDE_LENGTH})::double / {STRIDE_STEP})::bigint, 0) + 1))
          AS t(i)
-  WHERE i * {stride} < len(ws)
+  WHERE i * {STRIDE_STEP} < len(ws)
 )
 SELECT id, win_idx, start_tok, len(w)::bigint AS n_toks,
        md5(array_to_string(w, ' ')) AS window_md5
@@ -266,11 +264,7 @@ FROM wins
 """
 
 
-def shard_manifest(
-    df: DataFrame,
-    target_bytes: int,
-    nbytes_col: str = "n_bytes",
-) -> DataFrame:
+def shard_manifest(df: DataFrame, target_bytes: int) -> DataFrame:
     """(shard_id, id, doc_seq, byte_off, n_bytes) — WebDataset-style
     shard assignment for training-data export.
 
@@ -288,7 +282,7 @@ def shard_manifest(
     dropped.
     """
     offs = distributed_prefix_sum(
-        df.select(F.col("doc_id").alias("id"), F.col(nbytes_col).alias("n"))
+        df.select(F.col("doc_id").alias("id"), F.col("n_bytes").alias("n"))
         .where(F.col("n") > 0),
         ["id"],
         ["n"],

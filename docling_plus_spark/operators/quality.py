@@ -53,9 +53,7 @@ def _nonzero(c: Column) -> Column:
     return F.when(c == 0, F.lit(1)).otherwise(c)
 
 
-def gopher_signals(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_signals(df: DataFrame) -> DataFrame:
     """Per-document Gopher quality/repetition signals + pass verdict.
 
     Output: (id, word_count, mean_word_len, symbol_ratio, bullet_frac,
@@ -63,7 +61,7 @@ def gopher_signals(
     gopher_pass). Pure column expressions; the words and lines arrays
     are let-bound so each is computed once per row.
     """
-    t = F.col(text_col)
+    t = F.col("text")
 
     words_expr = F.filter(
         F.split(t, r"\s+"), lambda w: F.length(w) > 0
@@ -170,22 +168,20 @@ def gopher_signals(
         ),
         1,
     )
-    return df.select(F.col(id_col).alias("id"), sig.alias("s")).select(
+    return df.select(F.col("doc_id").alias("id"), sig.alias("s")).select(
         "id", "s.*"
     )
 
 
-def gopher_signals_sql(
-    id_expr: str = "doc_id", text_expr: str = "text"
-) -> str:
+def gopher_signals_sql() -> str:
     """DuckDB twin of :func:`gopher_signals` (full SELECT, same names)."""
     stop_list = ", ".join(f"'{s}'" for s in GOPHER_STOPWORDS)
     return f"""
 WITH base AS (
-  SELECT {id_expr} AS id, {text_expr} AS t,
-    list_filter(regexp_split_to_array({text_expr}, '\\s+'),
+  SELECT doc_id AS id, text AS t,
+    list_filter(regexp_split_to_array(text, '\\s+'),
                 w -> length(w) > 0) AS ws,
-    list_filter(list_transform(string_split({text_expr}, chr(10)), l -> trim(l)),
+    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
                 l -> length(l) > 0) AS ls
   FROM documents
 ),
@@ -251,9 +247,7 @@ C4_BAD_LINE = ["javascript"]
 _TERMINAL = ['.', '!', '?', '"']
 
 
-def c4_clean(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def c4_clean(df: DataFrame) -> DataFrame:
     """C4 cleaning: keep lines that end in terminal punctuation, have
     >= 5 words, and don't mention javascript; keep the page iff the
     retained text has >= 3 sentences and the raw page has no
@@ -263,7 +257,7 @@ def c4_clean(
     projection of let-bound HOF column expressions — no Python, no
     shuffle; DuckDB twin :func:`c4_clean_sql` matches bit-for-bit.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     lines_expr = F.filter(
         F.transform(F.split(t, r"\n"), F.trim), lambda l: F.length(l) > 0
     )
@@ -302,12 +296,12 @@ def c4_clean(
         )
 
     out = F.element_at(F.transform(F.array(lines_expr), _out), 1)
-    return df.select(F.col(id_col).alias("id"), out.alias("s")).select(
+    return df.select(F.col("doc_id").alias("id"), out.alias("s")).select(
         "id", "s.*"
     )
 
 
-def c4_clean_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
+def c4_clean_sql() -> str:
     """DuckDB twin of :func:`c4_clean` (full SELECT, same names)."""
     line_ok = (
         f"len(list_filter(regexp_split_to_array(l, '\\s+'), "
@@ -317,8 +311,8 @@ def c4_clean_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
     )
     return f"""
 WITH base AS (
-  SELECT {id_expr} AS id, {text_expr} AS t,
-    list_filter(list_transform(string_split({text_expr}, chr(10)),
+  SELECT doc_id AS id, text AS t,
+    list_filter(list_transform(string_split(text, chr(10)),
                 l -> trim(l)), l -> length(l) > 0) AS ls
   FROM documents
 ),
@@ -358,12 +352,7 @@ FROM m
 # CCNet-style per-language perplexity bucketing (Wenzek et al., LREC 2020)
 
 
-def ccnet_buckets(
-    scored: DataFrame,
-    id_col: str = "id",
-    lang_col: str = "lang",
-    score_col: str = "mean_nll",
-) -> DataFrame:
+def ccnet_buckets(scored: DataFrame) -> DataFrame:
     """``(id, lang, score, bucket)`` — head / middle / tail thirds.
 
     CCNet's curation core: within each language, order documents by LM
@@ -383,15 +372,15 @@ def ccnet_buckets(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(lang_col).orderBy(score_col, id_col)
-    n = Window.partitionBy(lang_col)
+    w = Window.partitionBy("lang").orderBy("mean_nll", "id")
+    n = Window.partitionBy("lang")
     rn = F.row_number().over(w)
     cnt = F.count("*").over(n)
     idx = F.floor(F.lit(3) * (rn - 1) / cnt)
     return scored.select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
-        F.col(score_col).alias("score"),
+        F.col("id"),
+        F.col("lang"),
+        F.col("mean_nll").alias("score"),
         F.element_at(
             F.array(F.lit("head"), F.lit("middle"), F.lit("tail")),
             (idx + 1).cast("int"),
@@ -428,20 +417,15 @@ def ccnet_buckets_by_cutpoints(scored: DataFrame) -> DataFrame:
     )
 
 
-def ccnet_buckets_sql(
-    scored_cte: str,
-    id_expr: str = "id",
-    lang_expr: str = "lang",
-    score_expr: str = "mean_nll",
-) -> str:
+def ccnet_buckets_sql(scored_cte: str) -> str:
     """DuckDB twin of :func:`ccnet_buckets` over a scored CTE body."""
     return f"""
 WITH scored AS ({scored_cte})
-SELECT {id_expr} AS id, {lang_expr} AS lang, {score_expr} AS score,
+SELECT id AS id, lang AS lang, mean_nll AS score,
        (['head', 'middle', 'tail'])[
          (floor(3.0 * (row_number() OVER (
-             PARTITION BY {lang_expr} ORDER BY {score_expr}, {id_expr}) - 1)
-           / count(*) OVER (PARTITION BY {lang_expr})))::int + 1
+             PARTITION BY lang ORDER BY mean_nll, id) - 1)
+           / count(*) OVER (PARTITION BY lang)))::int + 1
        ] AS bucket
 FROM scored
 """
@@ -458,11 +442,7 @@ GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
-def gopher_ngram_repetition(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def gopher_ngram_repetition(df: DataFrame) -> DataFrame:
     """``(id, top2..top4, dup5..dup10, repetition_pass)`` per document.
 
     Character-fraction convention (stated once, shared with the DuckDB
@@ -481,9 +461,9 @@ def gopher_ngram_repetition(
     wire twice more ((id,n) stats, then per-id pivot). Tokenization:
     whitespace runs, matching gopher_signals' contract.
     """
-    toks = F.split(F.trim(F.col(text_col)), "\\s+")
+    toks = F.split(F.trim(F.col("text")), "\\s+")
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         toks.alias("toks"),
         F.length(F.concat_ws(" ", toks)).alias("total_chars"),
     )
@@ -566,10 +546,7 @@ def gopher_ngram_repetition(
     return pivoted.select(*out_cols, ok.alias("repetition_pass"))
 
 
-def gopher_ngram_repetition_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-) -> str:
+def gopher_ngram_repetition_sql() -> str:
     """DuckDB twin of :func:`gopher_ngram_repetition`."""
     gram_selects = []
     for n in range(2, 11):
@@ -596,9 +573,9 @@ def gopher_ngram_repetition_sql(
         checks.append(f"{e} <= {thr}")
     return f"""
 WITH base AS (
-  SELECT {id_expr} AS id,
-         string_split_regex(trim({text_expr}), '\\s+') AS toks,
-         length(array_to_string(string_split_regex(trim({text_expr}), '\\s+'), ' ')) AS total_chars
+  SELECT doc_id AS id,
+         string_split_regex(trim(text), '\\s+') AS toks,
+         length(array_to_string(string_split_regex(trim(text), '\\s+'), ' ')) AS total_chars
   FROM documents
 ),
 grams AS ({grams}
@@ -665,11 +642,7 @@ def _weight(w: Column) -> Column:
 CLASSIFIER_GAIN = 4.0
 
 
-def hash_classifier(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hash_classifier(df: DataFrame) -> DataFrame:
     """Score = sigmoid(4 * mean word weight); label = score >= 0.5.
 
     Output: (id, n_words, score, label) for documents with >= 1 word.
@@ -679,12 +652,12 @@ def hash_classifier(
     sum-order noise (weights themselves are exact rationals k/1000003).
     """
     ws = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: F.length(x) > 0
+        F.split(F.lower(F.col("text")), r"\s+"), lambda x: F.length(x) > 0
     )
     # let-bind the token array (CollapseProject would otherwise inline
     # the split into every downstream use — see module docstring)
     out = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.element_at(
             F.transform(
                 F.array(ws),
@@ -719,11 +692,7 @@ def hash_classifier(
     )
 
 
-def hash_classifier_sql(
-    id_expr: str,
-    text_expr: str,
-    table: str = "documents",
-) -> str:
+def hash_classifier_sql(id_expr: str, text_expr: str) -> str:
     """DuckDB twin of :func:`hash_classifier` (identical hash, weight
     formula, mean, sigmoid, rounding)."""
     return rf"""
@@ -731,7 +700,7 @@ WITH w AS (
   SELECT {id_expr} AS id,
          list_filter(string_split_regex(lower({text_expr}), '\s+'),
                      x -> length(x) > 0) AS ws
-  FROM {table}
+  FROM documents
 ),
 s AS (
   SELECT id, len(ws) AS n_words,
@@ -770,23 +739,19 @@ SCRIPT_CLASSES = [
 ]
 
 
-def script_composition(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def script_composition(df: DataFrame) -> DataFrame:
     """(id, n_chars, latin_frac, …, digit_frac, main_script): per-script
     character fractions over non-whitespace chars plus the argmax script
     ('other' when nothing matches). Fractions are exact integer ratios
     rounded to 6 — bit-stable across engines."""
-    t = F.col(text_col)
+    t = F.col("text")
     nws = F.length(F.regexp_replace(t, r"\s", ""))
     counts = {
         name: F.regexp_count(t, F.lit(java)).cast("long")
         for name, java, _ in SCRIPT_CLASSES
     }
     denom = F.greatest(nws, F.lit(1))
-    cols = [F.col(id_col).alias("id"), nws.cast("long").alias("n_chars")]
+    cols = [F.col("doc_id").alias("id"), nws.cast("long").alias("n_chars")]
     cols += [
         F.round(counts[name].cast("double") / denom, 6).alias(f"{name}_frac")
         for name, _, _ in SCRIPT_CLASSES
@@ -811,11 +776,7 @@ def main_script_expr(t: Column) -> Column:
     return main
 
 
-def script_composition_sql(
-    id_expr: str,
-    text_expr: str,
-    table: str = "documents",
-) -> str:
+def script_composition_sql(id_expr: str, text_expr: str) -> str:
     """DuckDB twin of :func:`script_composition`."""
     cnt = {
         name: rf"len(regexp_extract_all({text_expr}, '{re2}'))::bigint"
@@ -831,7 +792,7 @@ SELECT {id_expr} AS id,
        {nws}::bigint AS n_chars,
        {fracs},
        {main_script_sql(text_expr)} AS main_script
-FROM {table}
+FROM documents
 """
 
 
@@ -869,12 +830,7 @@ EXPECTED_SCRIPT = {
 LANGID_SUPPORTED = ("en", "es", "de", "fr")
 
 
-def lang_consistency(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def lang_consistency(df: DataFrame) -> DataFrame:
     """(id, lang, lang_pred, main_script, verdict): per-document audit
     of the declared language against the text.  Verdict precedence
     (deterministic, twin-replayed):
@@ -892,8 +848,8 @@ def lang_consistency(
     """
     from docling_plus_spark.functions.expressions import langid_expr
 
-    t = F.col(text_col)
-    lang = F.col(lang_col)
+    t = F.col("text")
+    lang = F.col("lang")
     expected = F.lit(None).cast("string")
     for lg, sc in EXPECTED_SCRIPT.items():
         expected = F.when(lang == lg, F.lit(sc)).otherwise(expected)
@@ -936,7 +892,7 @@ def lang_consistency(
         1,
     )
     return df.select(
-        F.col(id_col).alias("id"), lang.alias("lang"), sig.alias("s")
+        F.col("doc_id").alias("id"), lang.alias("lang"), sig.alias("s")
     ).select("id", "lang", "s.*")
 
 

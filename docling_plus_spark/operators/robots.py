@@ -151,11 +151,7 @@ def robots_gate(pages: DataFrame, rules: DataFrame) -> DataFrame:
     )
 
 
-def sitemap_urls(
-    df: DataFrame,
-    id_col: str = "host",
-    xml_col: str = "sitemap_xml",
-) -> DataFrame:
+def sitemap_urls(df: DataFrame) -> DataFrame:
     """Extract <loc> / <lastmod> pairs from sitemap XML (sitemaps.org
     protocol — the other half of crawl discovery next to robots.txt).
 
@@ -166,10 +162,10 @@ def sitemap_urls(
     can recurse.
     """
     urlblocks = F.regexp_extract_all(
-        F.col(xml_col), F.lit(r"(?s)<url>(.*?)</url>"), 1
+        F.col("sitemap_xml"), F.lit(r"(?s)<url>(.*?)</url>"), 1
     )
     idxblocks = F.regexp_extract_all(
-        F.col(xml_col), F.lit(r"(?s)<sitemap>(.*?)</sitemap>"), 1
+        F.col("sitemap_xml"), F.lit(r"(?s)<sitemap>(.*?)</sitemap>"), 1
     )
 
     def emit(blocks, kind):
@@ -193,7 +189,7 @@ def sitemap_urls(
         )
 
     out = df.select(
-        F.col(id_col).alias("host"),
+        F.col("host"),
         F.explode(
             F.concat(emit(urlblocks, "url"), emit(idxblocks, "index"))
         ).alias("e"),

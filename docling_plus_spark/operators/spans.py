@@ -106,11 +106,7 @@ def span_offsets_stage(pages: DataFrame) -> DataFrame:
 _SENT_CHUNK = r"[^.!?]*[.!?]+\s*|[^.!?]+"
 
 
-def sentence_spans(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
+def sentence_spans(df):
     """``(id, sent_idx, char_start, char_end, sent_md5)`` per sentence.
 
     The sentence layer C4-style curation operates on (sentence-level
@@ -127,7 +123,7 @@ def sentence_spans(
     from pyspark.sql import functions as F
 
     chunks = F.regexp_extract_all(
-        F.col(text_col), F.lit(_SENT_CHUNK), F.lit(0)
+        F.col("text"), F.lit(_SENT_CHUNK), F.lit(0)
     )
     # fold chunks -> (start, end_trimmed) spans via cumulative length
     acc_t = "struct<pos:int,spans:array<struct<s:int,e:int>>>"
@@ -155,8 +151,8 @@ def sentence_spans(
         ),
     )
     out = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("_t"),
+        F.col("doc_id").alias("id"),
+        F.col("text").alias("_t"),
         F.posexplode(
             F.filter(folded["spans"], lambda r: r["e"] > r["s"])
         ).alias("sent_idx", "sp"),

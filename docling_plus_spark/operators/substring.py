@@ -194,24 +194,28 @@ def strip_duplicate_substrings(df: DataFrame, k: int = 10) -> DataFrame:
 # DuckDB twins
 
 
-def kgram_occurrences_sql(k: int) -> str:
+#: shortest duplicated span, in tokens, the DuckDB twin strips
+STRIP_K = 8
+
+
+def kgram_occurrences_sql() -> str:
     toks = "string_split_regex(trim(text), '\\s+')"
     return f"""
 SELECT doc_id AS id, p AS pos,
-       ('0x' || substr(md5(array_to_string(toks[p+1:p+{k}], ' ')), 1, 15))::bigint AS h
+       ('0x' || substr(md5(array_to_string(toks[p+1:p+{STRIP_K}], ' ')), 1, 15))::bigint AS h
 FROM (SELECT doc_id, {toks} AS toks, text FROM documents),
-     unnest(range(0, greatest(0, len(toks) - {k} + 1))) AS u(p)
+     unnest(range(0, greatest(0, len(toks) - {STRIP_K} + 1))) AS u(p)
 """
 
 
-def strip_duplicate_substrings_sql(k: int = 10) -> str:
+def strip_duplicate_substrings_sql() -> str:
     """DuckDB twin of :func:`strip_duplicate_substrings`.
 
     The oracle marks removed token indices with an exploded
     index-level anti-set instead of span merging (same result, simpler
     SQL; the oracle does not need to scale).
     """
-    occ = kgram_occurrences_sql(k)
+    occ = kgram_occurrences_sql()
     toks = "string_split_regex(trim(text), '\\s+')"
     return f"""
 WITH occ AS ({occ}),
@@ -222,7 +226,7 @@ dup AS (
 removed AS (
   SELECT o.id, ti AS tok_idx
   FROM occ o JOIN dup d USING (h),
-       unnest(range(o.pos, o.pos + {k})) AS u(ti)
+       unnest(range(o.pos, o.pos + {STRIP_K})) AS u(ti)
   WHERE o.id <> d.canon.id OR o.pos <> d.canon.pos
   GROUP BY o.id, ti
 ),

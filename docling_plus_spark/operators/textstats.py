@@ -24,6 +24,22 @@ from pyspark.sql import functions as F
 
 TOKEN_SPLIT = "[^a-z0-9]+"
 
+#: what each DuckDB twin computes, and its Spark operator by default:
+#: top terms per document (TF-IDF), smallest document frequency kept in
+#: the inverted index, count-min rows, columns and top terms, PMI
+#: following-token window, smallest pair count and top pairs, vocab-growth
+#: prefixes, and the novelty n-gram size
+TFIDF_K = 3
+INVERTED_MIN_DF = 2
+CMS_D = 4
+CMS_W = 1024
+CMS_TOPK = 20
+PMI_WINDOW = 2
+PMI_MIN_COUNT = 5
+PMI_TOPK = 20
+VOCAB_POINTS = 10
+NOVELTY_N = 3
+
 
 def _terms(text_col: Column) -> Column:
     return F.filter(
@@ -31,21 +47,16 @@ def _terms(text_col: Column) -> Column:
     )
 
 
-def tfidf_topk(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_topk(df: DataFrame, k: int = TFIDF_K) -> DataFrame:
     """Top-``k`` terms per document by TF-IDF (natural-log IDF
     ``ln(N/df)``, raw term counts); ties broken by term text so the
     output is total-order deterministic."""
     terms = df.select(
-        F.col(id_col).alias("id"), F.explode(_terms(F.col(text_col))).alias("term")
+        F.col("doc_id").alias("id"), F.explode(_terms(F.col("text"))).alias("term")
     )
     tf = terms.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n_docs = df.select(F.countDistinct(F.col(id_col)).alias("n"))
+    n_docs = df.select(F.countDistinct(F.col("doc_id")).alias("n"))
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
@@ -66,17 +77,13 @@ def tfidf_topk(
     )
 
 
-def tfidf_topk_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    k: int = 3,
-) -> str:
+def tfidf_topk_sql() -> str:
     """DuckDB twin of :func:`tfidf_topk`."""
     return f"""
 WITH terms AS (
-  SELECT {id_expr} AS id, t.term
+  SELECT doc_id AS id, t.term
   FROM documents,
-       unnest(list_filter(string_split_regex(lower({text_expr}), '{TOKEN_SPLIT}'),
+       unnest(list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),
                           x -> x <> '')) AS t(term)
 ),
 tf AS (
@@ -85,7 +92,7 @@ tf AS (
 dfreq AS (
   SELECT term, count(*) AS df FROM tf GROUP BY 1
 ),
-n AS (SELECT count(DISTINCT {id_expr}) AS n FROM documents),
+n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
 scored AS (
   SELECT tf.id, tf.term,
          round(tf.tf * ln(n.n::double / dfreq.df), 6) AS tfidf
@@ -96,15 +103,11 @@ ranked AS (
          row_number() OVER (PARTITION BY id ORDER BY tfidf DESC, term) AS rk
   FROM scored
 )
-SELECT id, rk, term, tfidf FROM ranked WHERE rk <= {k}
+SELECT id, rk, term, tfidf FROM ranked WHERE rk <= {TFIDF_K}
 """
 
 
-def char_bigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def char_bigram_logprob(df: DataFrame) -> DataFrame:
     """Per-document mean character-bigram negative log-likelihood under
     a model fitted on the corpus itself (add-one smoothing over the
     observed unigram vocabulary) — the KenLM-perplexity-style quality
@@ -124,9 +127,9 @@ def char_bigram_logprob(
     eager checkpoint (exchange reuse alone does not survive the
     optimizer here — verified by runtime scan counts).
     """
-    s = F.lower(F.col(text_col))
+    s = F.lower(F.col("text"))
     docs = (
-        df.select(F.col(id_col).alias("id"), s.alias("s"))
+        df.select(F.col("doc_id").alias("id"), s.alias("s"))
         .where(F.length("s") >= 2)
     )
     # one explode of character positions; substr(i, 2) builds the bigram
@@ -169,14 +172,11 @@ def char_bigram_logprob(
     )
 
 
-def char_bigram_logprob_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-) -> str:
+def char_bigram_logprob_sql() -> str:
     """DuckDB twin of :func:`char_bigram_logprob`."""
     return f"""
 WITH docs AS (
-  SELECT {id_expr} AS id, lower({text_expr}) AS s FROM documents
+  SELECT doc_id AS id, lower(text) AS s FROM documents
 ),
 bg AS (
   SELECT id, substr(s, i, 2) AS bg
@@ -196,12 +196,7 @@ GROUP BY 1
 """
 
 
-def inverted_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 1,
-) -> DataFrame:
+def inverted_index(df: DataFrame, min_df: int = INVERTED_MIN_DF) -> DataFrame:
     """``(term, id, tf, first_pos, df)`` — scalarized posting lists.
 
     The index-construction half of a corpus search layer (the shape
@@ -218,7 +213,7 @@ def inverted_index(
     the DataFrame here IS that sink's input, already term-shuffled.
     """
     toks = (
-        df.select(F.col(id_col).alias("id"), _terms(F.col(text_col)).alias("ts"))
+        df.select(F.col("doc_id").alias("id"), _terms(F.col("text")).alias("ts"))
         .select("id", F.posexplode("ts").alias("pos", "term"))
     )
     postings = toks.groupBy("term", "id").agg(
@@ -232,17 +227,13 @@ def inverted_index(
     )
 
 
-def inverted_index_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    min_df: int = 1,
-) -> str:
+def inverted_index_sql() -> str:
     """DuckDB twin of :func:`inverted_index` (same tokenizer contract
     as :data:`TOKEN_SPLIT`)."""
     return f"""
 WITH raw AS (
-  SELECT {id_expr} AS id,
-         string_split_regex(lower({text_expr}), '[^a-z0-9]+') AS ts
+  SELECT doc_id AS id,
+         string_split_regex(lower(text), '[^a-z0-9]+') AS ts
   FROM documents
 ),
 -- position numbering over NON-EMPTY tokens only (split can emit ''
@@ -263,7 +254,7 @@ postings AS (
 ),
 dfreq AS (
   SELECT term, count(*) AS df FROM postings GROUP BY term
-  HAVING count(*) >= {min_df}
+  HAVING count(*) >= {INVERTED_MIN_DF}
 )
 SELECT p.term, p.id, p.tf, p.first_pos, d.df
 FROM postings p JOIN dfreq d USING (term)
@@ -291,10 +282,9 @@ def _cms_col(term: Column, row: int, w: int) -> Column:
 
 def countmin_heavy_hitters(
     df: DataFrame,
-    text_col: str = "text",
-    d: int = 4,
-    w: int = 1024,
-    topk: int = 20,
+    d: int = CMS_D,
+    w: int = CMS_W,
+    topk: int = CMS_TOPK,
 ) -> DataFrame:
     """(rank, term, exact_count, cms_estimate) for the exact top-k terms.
 
@@ -306,7 +296,7 @@ def countmin_heavy_hitters(
     (row, col) that moves only integers.
     """
     terms = df.select(
-        F.explode(_terms(F.lower(F.col(text_col)))).alias("term")
+        F.explode(_terms(F.lower(F.col("text")))).alias("term")
     )
     counters = (
         terms.select(
@@ -361,31 +351,25 @@ def countmin_heavy_hitters(
     )
 
 
-def countmin_heavy_hitters_sql(
-    text_expr: str = "text",
-    table: str = "documents",
-    d: int = 4,
-    w: int = 1024,
-    topk: int = 20,
-) -> str:
+def countmin_heavy_hitters_sql() -> str:
     """DuckDB twin of :func:`countmin_heavy_hitters`."""
     def col_of(term: str, j: int) -> str:
         return (
             f"list_reduce(list_transform(string_split_regex("
             f"substr(md5('{j}|' || {term}), 1, 6), ''), "
             f"c -> strpos('0123456789abcdef', c) - 1), "
-            f"(a, b) -> a * 16 + b) % {w}"
+            f"(a, b) -> a * 16 + b) % {CMS_W}"
         )
 
     rows_union = "\n    UNION ALL\n    ".join(
         f"SELECT {j} AS row, {col_of('term', j)} AS col, term FROM terms"
-        for j in range(d)
+        for j in range(CMS_D)
     )
     return rf"""
 WITH terms AS (
   SELECT t AS term
-  FROM {table},
-       unnest(string_split_regex(lower({text_expr}), '{TOKEN_SPLIT}')) AS u(t)
+  FROM documents,
+       unnest(string_split_regex(lower(text), '{TOKEN_SPLIT}')) AS u(t)
   WHERE t <> ''
 ),
 rc AS (
@@ -396,7 +380,7 @@ exact AS (SELECT term, count(*) AS exact_count FROM terms GROUP BY 1),
 top AS (
   SELECT term, exact_count,
          row_number() OVER (ORDER BY exact_count DESC, term) AS rank
-  FROM exact QUALIFY rank <= {topk}
+  FROM exact QUALIFY rank <= {CMS_TOPK}
 ),
 probes AS (
     {rows_union.replace('FROM terms', 'FROM (SELECT term FROM top) AS terms')}
@@ -464,13 +448,11 @@ GROUP BY ch.id
 
 def pmi_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    window: int = 2,
-    min_count: int = 5,
-    topk: int = 20,
+    min_count: int = PMI_MIN_COUNT,
+    topk: int = PMI_TOPK,
 ) -> DataFrame:
     """Top-k pointwise mutual information collocations: co-occurrence
-    within ``window`` following tokens, PMI = log2(c_xy·N / (c_x·c_y)).
+    within ``PMI_WINDOW`` following tokens, PMI = log2(c_xy·N / (c_x·c_y)).
 
     Ordered pairs (x before y) so counting is single-pass; vocabulary-
     keyed shuffles only (same scale shape as bpe_merge_pairs). Ties:
@@ -478,7 +460,7 @@ def pmi_pairs(
     """
     toks = df.select(
         F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda t: t != ""
+            F.split(F.lower(F.col("text")), TOKEN_SPLIT), lambda t: t != ""
         ).alias("ws")
     )
     pairs = toks.select(
@@ -491,7 +473,7 @@ def pmi_pairs(
                             F.col("ws"),
                             i + 2,
                             F.least(
-                                F.lit(window),
+                                F.lit(PMI_WINDOW),
                                 F.size(F.col("ws")) - i - 1,
                             ),
                         ),
@@ -537,7 +519,7 @@ def pmi_pairs(
     )
 
 
-def pmi_pairs_sql(window: int = 2, min_count: int = 5, topk: int = 20) -> str:
+def pmi_pairs_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),
@@ -548,7 +530,7 @@ pairs AS (
   SELECT ws[i + 1] AS x, ws[i + 1 + d] AS y
   FROM toks,
        unnest(range(0, len(ws))) AS t(i),
-       unnest(range(1, {window} + 1)) AS u(d)
+       unnest(range(1, {PMI_WINDOW} + 1)) AS u(d)
   WHERE i + 1 + d <= len(ws)
 ),
 cxy AS (SELECT x, y, count(*) AS cxy FROM pairs GROUP BY 1, 2),
@@ -562,15 +544,15 @@ scored AS (
                     / ((a.cw / (SELECT n FROM nw))
                        * (b.cw / (SELECT n FROM nw)))), 6) AS pmi
   FROM cxy c JOIN cw a ON a.w = c.x JOIN cw b ON b.w = c.y
-  WHERE c.cxy >= {min_count}
+  WHERE c.cxy >= {PMI_MIN_COUNT}
 )
 SELECT rank, x, y, cxy, pmi FROM (
   SELECT *, row_number() OVER (ORDER BY pmi DESC, x, y) AS rank FROM scored
-) WHERE rank <= {topk}
+) WHERE rank <= {PMI_TOPK}
 """
 
 
-def vocab_growth(df: DataFrame, n_points: int = 10) -> DataFrame:
+def vocab_growth(df: DataFrame, n_points: int = VOCAB_POINTS) -> DataFrame:
     """Heaps-law curve: cumulative (tokens_seen, distinct_words) of
     ``text`` at ``n_points`` ``doc_id``-ordered corpus prefixes.
 
@@ -622,7 +604,7 @@ def vocab_growth(df: DataFrame, n_points: int = 10) -> DataFrame:
     )
 
 
-def vocab_growth_sql(n_points: int = 10) -> str:
+def vocab_growth_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id AS id,
@@ -645,14 +627,14 @@ cum AS (
              ROWS UNBOUNDED PRECEDING) AS vocab
   FROM per_doc p LEFT JOIN first f ON f.id = p.id
 ),
-nn AS (SELECT greatest(count(*) // {n_points}, 1) AS step FROM documents)
+nn AS (SELECT greatest(count(*) // {VOCAB_POINTS}, 1) AS step FROM documents)
 SELECT id::bigint AS last_doc_id, tokens_seen::bigint AS tokens_seen,
        vocab::bigint AS vocab
 FROM cum WHERE (id + 1) % (SELECT step FROM nn) = 0
 """
 
 
-def ngram_novelty(df: DataFrame, n: int = 3) -> DataFrame:
+def ngram_novelty(df: DataFrame) -> DataFrame:
     """(id, n_grams, novel_frac): fraction of a document's distinct
     n-grams whose FIRST corpus occurrence (min doc id) is this document
     — the corpus-order novelty curve (late documents full of already-
@@ -663,7 +645,7 @@ def ngram_novelty(df: DataFrame, n: int = 3) -> DataFrame:
 
     g = df.select(
         F.col("doc_id").alias("id"),
-        F.explode(shingles(F.col("text"), n)).alias("gram"),
+        F.explode(shingles(F.col("text"), NOVELTY_N)).alias("gram"),
     )
     first = g.groupBy("gram").agg(F.min("id").alias("fid"))
     per = (
@@ -687,13 +669,13 @@ def ngram_novelty(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def ngram_novelty_sql(n: int = 3) -> str:
+def ngram_novelty_sql() -> str:
     from docling_plus_spark.operators.dedup import shingles_sql
 
     return f"""
 WITH g AS (
   SELECT doc_id AS id, gram
-  FROM documents, unnest({shingles_sql("text", n)}) AS u(gram)
+  FROM documents, unnest({shingles_sql("text", NOVELTY_N)}) AS u(gram)
 ),
 first AS (SELECT gram, min(id) AS fid FROM g GROUP BY 1)
 SELECT g.id, count(*)::bigint AS n_grams,
@@ -793,18 +775,14 @@ def kn_bigram_nll(df: DataFrame) -> DataFrame:
     )
 
 
-def kn_bigram_nll_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def kn_bigram_nll_sql() -> str:
     """DuckDB twin of :func:`kn_bigram_nll`."""
     return rf"""
 WITH d AS (
-  SELECT {id_expr} AS id,
-         list_filter(string_split_regex(lower({text_expr}), '\s+'),
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(lower(text), '\s+'),
                      t -> t <> '') AS ws
-  FROM {table}
+  FROM documents
 ),
 bg AS (
   SELECT id, ws[i] AS w1, ws[i + 1] AS w2

@@ -54,26 +54,24 @@ _PII_STAGES = [
 ]
 
 
-def pii_redact(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Sequential e-mail → IPv4 → phone redaction.
 
     Output: (id, redacted, n_emails, n_ips, n_phones). Counts are taken
     on each stage's *input* (so an e-mail containing an IP-shaped host
     is counted once, as an e-mail). Narrow projection, no shuffle.
     """
-    cur: Column = F.col(text_col)
+    cur: Column = F.col("text")
     counts: list[Column] = []
     for name, pat, rep in _PII_STAGES:
         counts.append(F.regexp_count(cur, F.lit(pat)).cast("long").alias(name))
         cur = F.regexp_replace(cur, pat, rep)
     return df.select(
-        F.col(id_col).alias("id"), cur.alias("redacted"), *counts
+        F.col("doc_id").alias("id"), cur.alias("redacted"), *counts
     )
 
 
-def pii_redact_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
+def pii_redact_sql(text_expr: str = "text") -> str:
     """DuckDB twin of :func:`pii_redact` (full SELECT, same names)."""
 
     def esc(p: str) -> str:
@@ -88,7 +86,7 @@ def pii_redact_sql(id_expr: str = "doc_id", text_expr: str = "text") -> str:
         )
         cur = f"regexp_replace({cur}, '{esc(pat)}', '{rep}', 'g')"
     return (
-        f"SELECT {id_expr} AS id, {cur} AS redacted, "
+        f"SELECT doc_id AS id, {cur} AS redacted, "
         + ", ".join(count_cols)
         + " FROM documents"
     )
@@ -226,9 +224,7 @@ def surt_key_sql(url_expr: str) -> str:
     return f"({rev} || {port} || ')' || {path} || {tail})"
 
 
-def url_dedup(
-    df: DataFrame, id_col: str = "doc_id", url_col: str = "url"
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """One row per canonical URL: the lowest-id exemplar + dupe count.
 
     One hash shuffle on the canonical url (same shape as exact dedup —
@@ -237,7 +233,7 @@ def url_dedup(
     from pyspark.sql.window import Window
 
     canon = df.select(
-        F.col(id_col).alias("id"), canonical_url(F.col(url_col)).alias("canon_url")
+        F.col("doc_id").alias("id"), canonical_url(F.col("url")).alias("canon_url")
     )
     w = Window.partitionBy("canon_url").orderBy("id")
     return (
@@ -269,14 +265,14 @@ FROM r WHERE rk = 1
 # Global paragraph dedup (RefinedWeb §3.3 "line-wise corrections" /
 # ccnet-style: drop lines that repeat across too many documents)
 
-def paragraph_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_docs: int = 10,
-) -> DataFrame:
-    """Remove lines that occur (trimmed) in more than ``max_docs``
-    distinct documents; reassemble the survivors in document order.
+#: distinct documents a line may occur in before paragraph dedup drops it
+PARAGRAPH_MAX_DOCS = 10
+
+
+def paragraph_dedup(df: DataFrame) -> DataFrame:
+    """Remove lines that occur (trimmed) in more than
+    ``PARAGRAPH_MAX_DOCS`` distinct documents of ``df``'s (doc_id, text);
+    reassemble the survivors in document order.
 
     Output: (id, clean_text, lines_kept, lines_dropped). Plan: explode →
     distinct-doc count per line *hash* (the shuffle carries 16-byte
@@ -287,15 +283,15 @@ def paragraph_dedup(
     count table has exactly one row per distinct line.
     """
     lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).filter(F.length(F.trim(F.col("line"))) > 0)
     hashed = lines.withColumn("h", md5_long(F.trim(F.col("line"))))
     freq = hashed.groupBy("h").agg(
         F.count_distinct("id").alias("_docs")
     )
     tagged = hashed.join(freq, "h").withColumn(
-        "_keep", F.col("_docs") <= max_docs
+        "_keep", F.col("_docs") <= PARAGRAPH_MAX_DOCS
     )
     return (
         tagged.groupBy("id")
@@ -324,15 +320,11 @@ def paragraph_dedup(
     )
 
 
-def paragraph_dedup_sql(
-    id_expr: str = "doc_id",
-    text_expr: str = "text",
-    max_docs: int = 10,
-) -> str:
+def paragraph_dedup_sql(text_expr: str = "text") -> str:
     """DuckDB twin of :func:`paragraph_dedup` (full SELECT)."""
     return f"""
 WITH lines AS (
-  SELECT {id_expr} AS id, u.pos, u.line
+  SELECT doc_id AS id, u.pos, u.line
   FROM documents,
        LATERAL (SELECT unnest(string_split({text_expr}, chr(10))) AS line,
                        generate_subscripts(string_split({text_expr}, chr(10)), 1) AS pos) u
@@ -347,7 +339,7 @@ freq AS (
   SELECT h, count(DISTINCT id) AS docs FROM hashed GROUP BY h
 ),
 tagged AS (
-  SELECT hashed.*, freq.docs <= {max_docs} AS keep
+  SELECT hashed.*, freq.docs <= {PARAGRAPH_MAX_DOCS} AS keep
   FROM hashed JOIN freq USING (h)
 )
 SELECT id,
@@ -420,19 +412,17 @@ WHERE {bucket} < {rate} * {SAMPLE_MOD}
 BPE_SPLIT_RE = r"'(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
 
 
-def bpe_token_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bpe_token_stats(df: DataFrame) -> DataFrame:
     """(id, bpe_tokens, ws_tokens, chars_per_token) — corpus token
     accounting with a GPT-2-style pre-tokenizer regex. Narrow, no
     shuffle, one regexp pass."""
-    t = F.col(text_col)
+    t = F.col("text")
     bpe = F.regexp_count(t, F.lit(BPE_SPLIT_RE)).cast("long")
     ws = F.size(
         F.filter(F.split(F.trim(t), r"\s+"), lambda w: F.length(w) > 0)
     ).cast("long")
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         bpe.alias("bpe_tokens"),
         ws.alias("ws_tokens"),
         F.round(
@@ -441,21 +431,19 @@ def bpe_token_stats(
     )
 
 
-def bpe_token_stats_sql(
-    id_expr: str = "doc_id", text_expr: str = "text"
-) -> str:
+def bpe_token_stats_sql() -> str:
     """DuckDB twin of :func:`bpe_token_stats` (full SELECT)."""
     pat = BPE_SPLIT_RE.replace("'", "''")
-    bpe = f"len(regexp_extract_all({text_expr}, '{pat}'))"
+    bpe = f"len(regexp_extract_all(text, '{pat}'))"
     ws = (
-        f"len(list_filter(regexp_split_to_array(trim({text_expr}), '\\s+'), "
+        f"len(list_filter(regexp_split_to_array(trim(text), '\\s+'), "
         f"w -> length(w) > 0))"
     )
     return f"""
-SELECT {id_expr} AS id,
+SELECT doc_id AS id,
   {bpe}::bigint AS bpe_tokens,
   {ws}::bigint AS ws_tokens,
-  round(length({text_expr})::double / greatest({bpe}, 1), 4) AS chars_per_token
+  round(length(text)::double / greatest({bpe}, 1), 4) AS chars_per_token
 FROM documents
 """
 
@@ -466,12 +454,7 @@ FROM documents
 _HOST_RE = r"^[a-z][a-z0-9+.\-]*://([^/:?#]+)"
 
 
-def host_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """(host, n_docs, total_tokens, min_id) per canonical host.
 
     The per-domain accounting every curation pipeline runs before
@@ -481,13 +464,13 @@ def host_stats(
     """
     from docling_plus_spark.functions.expressions import token_count
 
-    canon = canonical_url(F.col(url_col))
+    canon = canonical_url(F.col("url"))
     host = F.regexp_extract(canon, _HOST_RE, 1)
     return (
         df.select(
             host.alias("host"),
-            F.col(id_col).alias("id"),
-            token_count(F.col(text_col)).cast("long").alias("toks"),
+            F.col("doc_id").alias("id"),
+            token_count(F.col("text")).cast("long").alias("toks"),
         )
         .groupBy("host")
         .agg(
@@ -498,23 +481,18 @@ def host_stats(
     )
 
 
-def host_stats_sql(
-    id_expr: str = "doc_id",
-    url_expr: str = "url",
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def host_stats_sql(url_expr: str = "url") -> str:
     """DuckDB twin of :func:`host_stats` (full SELECT)."""
     canon = canonical_url_sql(url_expr)
     toks = (
-        f"CASE WHEN trim({text_expr}) = '' THEN 0 ELSE "
-        f"len(string_split_regex(trim({text_expr}), '\\s+')) END"
+        f"CASE WHEN trim(text) = '' THEN 0 ELSE "
+        f"len(string_split_regex(trim(text), '\\s+')) END"
     )
     return f"""
 WITH c AS (
   SELECT regexp_extract({canon}, '{_HOST_RE}', 1) AS host,
-         {id_expr} AS id, ({toks})::bigint AS toks
-  FROM {table}
+         doc_id AS id, ({toks})::bigint AS toks
+  FROM documents
 )
 SELECT host, count(*) AS n_docs, sum(toks)::bigint AS total_tokens,
        min(id) AS min_id
@@ -549,7 +527,11 @@ def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def bpe_merge_pairs(df: DataFrame, top_k: int = 20) -> DataFrame:
+#: merge pairs the DuckDB twin ranks (the Spark operator's default)
+BPE_MERGE_TOP_K = 20
+
+
+def bpe_merge_pairs(df: DataFrame, top_k: int = BPE_MERGE_TOP_K) -> DataFrame:
     """``(rank, left, right, pair_count)`` — one BPE merge round's
     candidate table (Sennrich et al., ACL 2016, over character symbols).
 
@@ -615,7 +597,7 @@ def bpe_merge_pairs(df: DataFrame, top_k: int = 20) -> DataFrame:
     )
 
 
-def bpe_merge_pairs_sql(top_k: int = 20) -> str:
+def bpe_merge_pairs_sql() -> str:
     """DuckDB twin of :func:`bpe_merge_pairs`."""
     return f"""
 WITH words AS (
@@ -638,15 +620,19 @@ SELECT rank, "left", "right", pair_count FROM (
   SELECT row_number() OVER (ORDER BY pair_count DESC, "left", "right") AS rank,
          "left", "right", pair_count
   FROM counts
-) WHERE rank <= {top_k}
+) WHERE rank <= {BPE_MERGE_TOP_K}
 """
 
 
-def sentence_dedup(df: DataFrame, min_count: int = 2) -> DataFrame:
+#: occurrences from which a sentence counts as duplicated
+SENTENCE_MIN_COUNT = 2
+
+
+def sentence_dedup(df: DataFrame) -> DataFrame:
     """``(id, clean_text, n_sentences, removed_sentences)`` — global
     sentence-level dedup, the C4 policy (Raffel et al. 2020 §2.2
     removed any three-sentence span occurring more than once; here the
-    unit is the single sentence, threshold ``min_count``).
+    unit is the single sentence, threshold ``SENTENCE_MIN_COUNT``).
 
     Keep-one semantics: the canonical occurrence (min (id, sent_idx))
     of each over-represented sentence survives; other occurrences are
@@ -664,14 +650,14 @@ def sentence_dedup(df: DataFrame, min_count: int = 2) -> DataFrame:
     # join, and the per-doc stats — without the pin the sentence-split
     # pass over the corpus ran three times (runtime plan audit); pinned
     # rows are (id, idx, span ints, md5), never sentence text
-    sp = sentence_spans(df, "doc_id", "text").localCheckpoint(eager=True)
+    sp = sentence_spans(df).localCheckpoint(eager=True)
     freq = (
         sp.groupBy("sent_md5")
         .agg(
             F.count("*").alias("cnt"),
             F.min(F.struct(F.col("id"), F.col("sent_idx"))).alias("canon"),
         )
-        .where(F.col("cnt") >= min_count)
+        .where(F.col("cnt") >= SENTENCE_MIN_COUNT)
     )
     # NOT broadcast: the over-threshold sentence table scales with the
     # corpus's boilerplate volume — this is a hash join on sent_md5
@@ -723,17 +709,14 @@ def sentence_dedup(df: DataFrame, min_count: int = 2) -> DataFrame:
 # The blocklist is a small dim table (UT1 ships ~4.6M hosts ~ tens of MB:
 # broadcast territory); the corpus side is one narrow projection, so at
 # 100 TB the only wide op is... nothing. Scoring thresholds follow the
-# RefinedWeb recipe: block if the host is listed OR >= `max_hits` flagged
-# keywords appear in the URL.
+# RefinedWeb recipe: block if the host is listed OR >= `BLOCKLIST_MAX_HITS`
+# flagged keywords appear in the URL.
 
 URL_FLAG_WORDS = ["casino", "poker", "bet", "xxx", "porn", "webcam"]
+BLOCKLIST_MAX_HITS = 2
 
 
-def url_blocklist_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    max_hits: int = 2,
-) -> DataFrame:
+def url_blocklist_filter(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     """(url, host, blocked_host, kw_hits, allowed) per input row.
 
     ``blocklist`` is a 1-column (``host``) DataFrame; the join is an
@@ -772,16 +755,11 @@ def url_blocklist_filter(
         "host",
         blocked_host.alias("blocked_host"),
         "kw_hits",
-        (~blocked_host & (F.col("kw_hits") < max_hits)).alias("allowed"),
+        (~blocked_host & (F.col("kw_hits") < BLOCKLIST_MAX_HITS)).alias("allowed"),
     )
 
 
-def url_blocklist_filter_sql(
-    url_expr: str,
-    table: str,
-    blocklist_values: str,
-    max_hits: int = 2,
-) -> str:
+def url_blocklist_filter_sql(url_expr: str, table: str, blocklist_values: str) -> str:
     """DuckDB twin; ``blocklist_values`` is a SQL ``(VALUES ...)`` list of
     1-tuples of hosts."""
     kw = " + ".join(
@@ -801,7 +779,7 @@ m AS (
 SELECT m.url, m.host,
        bl.host IS NOT NULL AS blocked_host,
        m.kw_hits,
-       (bl.host IS NULL AND m.kw_hits < {max_hits}) AS allowed
+       (bl.host IS NULL AND m.kw_hits < {BLOCKLIST_MAX_HITS}) AS allowed
 FROM m LEFT JOIN bl ON m.host = bl.host
 """
 

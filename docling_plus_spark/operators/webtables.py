@@ -87,17 +87,15 @@ def web_tables(df: DataFrame) -> DataFrame:
     )
 
 
-def web_tables_sql(
-    id_expr: str = "doc_id", html_expr: str = "html", table: str = "documents"
-) -> str:
+def web_tables_sql(html_expr: str = "html") -> str:
     """DuckDB twin of :func:`web_tables`."""
     return rf"""
 WITH tabs AS (
-  SELECT {id_expr} AS id, ti - 1 AS table_idx, tb[ti] AS tbody
+  SELECT doc_id AS id, ti - 1 AS table_idx, tb[ti] AS tbody
   FROM (
-    SELECT {id_expr},
+    SELECT doc_id,
            regexp_extract_all({html_expr}, '{_TABLE_RE}', 1) AS tb
-    FROM {table}
+    FROM documents
   ), unnest(range(1, len(tb) + 1)) AS u(ti)
 ),
 trs AS (
@@ -150,11 +148,9 @@ def web_table_shapes(df: DataFrame) -> DataFrame:
     )
 
 
-def web_table_shapes_sql(
-    id_expr: str = "doc_id", html_expr: str = "html", table: str = "documents"
-) -> str:
+def web_table_shapes_sql(html_expr: str = "html") -> str:
     """DuckDB twin of :func:`web_table_shapes`."""
-    cells = web_tables_sql(id_expr, html_expr, table)
+    cells = web_tables_sql(html_expr)
     return f"""
 WITH cells AS ({cells}),
 per_row AS (

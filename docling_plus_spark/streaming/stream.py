@@ -53,7 +53,7 @@ def run_stream_once(
     q.awaitTermination()
 
 
-def dedup_stream(pages: DataFrame, key_col: str = "doc_hash") -> DataFrame:
+def dedup_stream(pages: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: cross-batch first-seen dedup.
 
     ``applyInPandasWithState`` keyed on the document hash — per-key state
@@ -88,7 +88,7 @@ def dedup_stream(pages: DataFrame, key_col: str = "doc_hash") -> DataFrame:
             for _ in pdfs:  # drain the iterator; nothing new to emit
                 pass
 
-    keyed = pages.select(F.col(key_col).alias("key"), "url").groupBy("key")
+    keyed = pages.select(F.col("doc_hash").alias("key"), "url").groupBy("key")
     return keyed.applyInPandasWithState(
         fn,
         outputStructType=out_schema,

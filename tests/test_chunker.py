@@ -90,7 +90,7 @@ def test_chunk_stage_matches_duckdb_formula(spark):
 
     pages = synth_pages_from_documents(spark, SF)
     extracted = extract_pipeline(pages, include=("json",))
-    out = chunk_documents_stage(extracted, max_tokens=64)
+    out = chunk_documents_stage(extracted)
     sp = {
         (r.url, r.chunk_idx): (r.headings, r.text, r.n_tokens)
         for r in out.collect()

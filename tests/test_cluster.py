@@ -128,7 +128,7 @@ def test_url_filter_boundaries_and_host_case(spark):
         "url string",
     )
     bl = spark.createDataFrame([("h0.test",), ("H2.test",)], "host string")
-    out = {r["url"]: r for r in url_blocklist_filter(urls, bl, max_hits=2).collect()}
+    out = {r["url"]: r for r in url_blocklist_filter(urls, bl).collect()}
     assert out["https://h0.test/fine"]["blocked_host"]
     assert not out["https://h0.test/fine"]["allowed"]
     r = out["https://OK.test/casino/poker"]
@@ -161,13 +161,13 @@ def test_pq_codes_deterministic_and_compresses(spark):
     from docling_plus_spark.operators.cluster import pq_codes
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    out = pq_codes(emb, m=4, k=8, iters=1).collect()
+    out = pq_codes(emb, k=8).collect()
     n = emb.count()
     assert len(out) == 4 * n  # one code per (vector, subspace)
     assert {r["sub"] for r in out} == {0, 1, 2, 3}
     assert all(0 <= r["code"] < 8 for r in out)
     # deterministic
-    again = pq_codes(emb, m=4, k=8, iters=1).collect()
+    again = pq_codes(emb, k=8).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
     # codebook seeds encode themselves with near-zero distortion at
     # iters=0-equivalent? after 1 Lloyd round seeds may move; instead
@@ -183,13 +183,13 @@ def test_pq_codes_sql_twin_matches(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     got = sorted(
         (r["id"], r["sub"], r["code"], r["dist"])
-        for r in pq_codes(emb, m=4, k=8, iters=1).collect()
+        for r in pq_codes(emb, k=8).collect()
     )
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
     )
-    want = sorted(map(tuple, con.execute(pq_codes_sql(m=4, k=8, iters=1)).fetchall()))
+    want = sorted(map(tuple, con.execute(pq_codes_sql(k=8)).fetchall()))
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert g[:3] == w[:3], (g, w)
@@ -254,7 +254,7 @@ def test_pq_adc_topk_sql_twin_and_sanity(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     got = sorted(
         (r["qid"], r["rk"], r["xid"], r["adist"])
-        for r in pq_adc_topk(emb, m=4, k_codes=8, topk=3, query_mod=10).collect()
+        for r in pq_adc_topk(emb, k_codes=8, topk=3, query_mod=10).collect()
     )
     assert got, "no query rows"
     # every query id is % 10 == 0 and gets exactly topk neighbours
@@ -270,7 +270,7 @@ def test_pq_adc_topk_sql_twin_and_sanity(spark):
         f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
     )
     want = sorted(map(tuple, con.execute(
-        pq_adc_topk_sql(m=4, k_codes=8, topk=3, query_mod=10)).fetchall()))
+        pq_adc_topk_sql(k_codes=8, topk=3, query_mod=10)).fetchall()))
     assert [g[:3] for g in got] == [tuple(w[:3]) for w in want]
     for g, w in zip(got, want):
         assert abs(g[3] - w[3]) < 1e-9
@@ -286,7 +286,7 @@ def test_pq_nondivisible_dims_consistent_with_twin(spark):
     rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(10)]) for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = sorted(
-        (r["id"], r["sub"], r["code"]) for r in pq_codes(emb, m=4, k=4).collect()
+        (r["id"], r["sub"], r["code"]) for r in pq_codes(emb, k=4).collect()
     )
     con = duckdb.connect()
     con.execute(
@@ -294,7 +294,7 @@ def test_pq_nondivisible_dims_consistent_with_twin(spark):
         % ", ".join("(%d, %s::double[])" % (i, v) for i, v in rows)
     )
     want = sorted((w[0], w[1], w[2]) for w in
-                  con.execute(pq_codes_sql(m=4, k=4)).fetchall())
+                  con.execute(pq_codes_sql(k=4)).fetchall())
     assert got == want
 
 
@@ -317,7 +317,7 @@ def test_countmin_overestimates_only(spark):
         "doc_id long, text string",
     )
     out = {r["term"]: r for r in
-           countmin_heavy_hitters(docs, "text", d=4, w=64, topk=5).collect()}
+           countmin_heavy_hitters(docs, d=4, w=64, topk=5).collect()}
     assert out["alpha"]["rank"] == 1 and out["alpha"]["exact_count"] == 1000
     assert out["beta"]["exact_count"] == 200
     for r in out.values():
@@ -347,7 +347,7 @@ def test_pmi_known_collocation(spark):
          for i in range(30)],
         "doc_id long, text string",
     )
-    out = pmi_pairs(docs, "text", window=2, min_count=5, topk=5).collect()
+    out = pmi_pairs(docs, min_count=5, topk=5).collect()
     assert out[0]["x"] == "hong" and out[0]["y"] == "kong"
     assert out[0]["rank"] == 1 and out[0]["pmi"] > 2.0
 
@@ -418,7 +418,7 @@ def test_ngram_novelty_duplicate_doc_is_stale(spark):
          (3, "totally fresh words never seen before")],
         "doc_id long, text string",
     )
-    out = {r["id"]: r for r in ngram_novelty(docs, n=3).collect()}
+    out = {r["id"]: r for r in ngram_novelty(docs).collect()}
     assert out[1]["novel_frac"] == 1.0
     assert out[2]["novel_frac"] == 0.0  # everything first-seen in doc 1
     assert out[3]["novel_frac"] == 1.0

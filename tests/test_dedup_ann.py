@@ -55,7 +55,7 @@ def corpus(spark):
 
 def test_minhash_finds_planted_neardups(corpus):
     pairs = minhash_candidate_pairs(
-        minhash_prepare(corpus, "id", "text", 16, 4)
+        minhash_prepare(corpus, "id")
     ).collect()
     planted = {(r["id_a"], r["id_b"]) for r in pairs if r["id_b"] == r["id_a"] + 100000}
     n_planted_total = corpus.filter("id >= 100000").count()
@@ -68,7 +68,7 @@ def test_minhash_finds_planted_neardups(corpus):
 
 
 def test_minhash_dedup_drops_copies(corpus):
-    keep = {r["keep_id"] for r in minhash_dedup_keep(corpus, "id", "text").collect()}
+    keep = {r["keep_id"] for r in minhash_dedup_keep(corpus, "id").collect()}
     originals = {r["id"] for r in corpus.filter("id < 100000").select("id").collect()}
     copies = {r["id"] for r in corpus.filter("id >= 100000").select("id").collect()}
     # the synthetic documents table itself contains some genuine near-dup
@@ -79,16 +79,16 @@ def test_minhash_dedup_drops_copies(corpus):
 
 
 def test_exact_jaccard_on_planted_pairs(spark, corpus):
-    cand = minhash_candidate_pairs(minhash_prepare(corpus, "id", "text", 16, 4))
-    jac = jaccard_on_pairs(corpus, cand.select("id_a", "id_b"), "id", "text")
+    cand = minhash_candidate_pairs(minhash_prepare(corpus, "id"))
+    jac = jaccard_on_pairs(corpus, cand.select("id_a", "id_b"))
     planted = jac.filter(F.col("id_b") == F.col("id_a") + 100000)
     row = planted.agg(F.min("jaccard").alias("mn")).first()
     assert row["mn"] > 0.5  # appended 3-word tail keeps jaccard high
 
 
 def test_simhash_near_pairs_hamming(corpus):
-    sim = simhash(corpus, "id", "text")
-    pairs = simhash_near_pairs(sim, max_hamming=3).collect()
+    sim = simhash(corpus, "id")
+    pairs = simhash_near_pairs(sim).collect()
     assert all(r["hamming"] <= 3 for r in pairs)
     planted = {(r["id_a"], r["id_b"]) for r in pairs if r["id_b"] == r["id_a"] + 100000}
     # a 3-word tail on ~60-word docs flips few simhash bits
@@ -194,7 +194,7 @@ def test_media_features_deterministic(spark):
 
 def test_frame_sample_plan(spark):
     media = synth_media_from_documents(spark, SF).limit(5)
-    out = frame_sample_plan(media, every_n=10).collect()
+    out = frame_sample_plan(media).collect()
     assert all(r["frame_idx"] % 10 == 0 for r in out)
     assert len({r["media_id"] for r in out}) == 5
 
@@ -205,7 +205,7 @@ def _identical_docs(spark, n):
         F.col("id").cast("long").alias("doc_id"),
         F.lit("identical content repeated across the corpus").alias("text"),
     )
-    prepared = minhash_prepare(df, "doc_id", "text", k=16, bands=4)
+    prepared = minhash_prepare(df, "doc_id")
     return prepared.select("band_key", "id", "sig"), "band_key", ("sig",)
 
 
@@ -266,7 +266,7 @@ def test_megabucket_salt_split_preserves_pairs_and_bounds_cells(spark, shape):
 def test_megabucket_guard_noop_on_small_buckets(corpus):
     """With buckets below the cap, guarded and effectively-unguarded runs
     produce identical candidate sets."""
-    prepared = minhash_prepare(corpus, "id", "text", k=16, bands=4).cache()
+    prepared = minhash_prepare(corpus, "id").cache()
     guarded = minhash_candidate_pairs(prepared, max_bucket=64)
     wide = minhash_candidate_pairs(prepared, max_bucket=1 << 30)
     assert sorted(map(tuple, guarded.collect())) == sorted(map(tuple, wide.collect()))
@@ -283,7 +283,7 @@ def test_simhash_four_block_recall(spark):
     sim_df = spark.createDataFrame(
         [(1, base), (2, variant)], "id long, simhash long"
     )
-    got = simhash_near_pairs(sim_df, max_hamming=3).collect()
+    got = simhash_near_pairs(sim_df).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in got] == [(1, 2, 3)]
 
 
@@ -415,7 +415,7 @@ def test_winnow_dedup_keep_policy(spark):
         ],
         "doc_id long, text string",
     )
-    keep = {r.keep_id for r in winnow_dedup_keep(df, min_shared=2).collect()}
+    keep = {r.keep_id for r in winnow_dedup_keep(df).collect()}
     assert keep == {1, 3}
 
 
@@ -460,14 +460,14 @@ def test_gopher_signals_matches_duckdb_oracle(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     sp = {
         r.id: r.asDict()
-        for r in gopher_signals(d, "doc_id", "text").collect()
+        for r in gopher_signals(d).collect()
     }
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF}/documents.parquet')"
     )
-    ora = con.sql(gopher_signals_sql("doc_id", "text")).df()
+    ora = con.sql(gopher_signals_sql()).df()
     assert len(ora) == len(sp)
     for rec in ora.to_dict("records"):
         mine = sp[rec["id"]]
@@ -515,13 +515,13 @@ def test_c4_clean_matches_duckdb_oracle(spark):
     from docling_plus_spark.operators.quality import c4_clean, c4_clean_sql
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    sp = {r.id: r.asDict() for r in c4_clean(d, "doc_id", "text").collect()}
+    sp = {r.id: r.asDict() for r in c4_clean(d).collect()}
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF}/documents.parquet')"
     )
-    ora = con.sql(c4_clean_sql("doc_id", "text")).df()
+    ora = con.sql(c4_clean_sql()).df()
     assert len(ora) == len(sp)
     for rec in ora.to_dict("records"):
         mine = sp[rec["id"]]
@@ -545,12 +545,12 @@ def test_decontaminate_flags_benchmark_overlap(spark):
         [("alpha beta gamma delta epsilon zeta eta theta",)], "text string"
     )
     out = {r.id: (r.contaminated, r.n_hits) for r in
-           decontaminate(docs, bench, n=8).collect()}
+           decontaminate(docs, bench).collect()}
     assert out[1][0] is True and out[1][1] >= 1
     assert out[2] == (False, 0)
     assert out[3][0] is True
     # scale shape: the benchmark side must broadcast
-    plan = decontaminate(docs, bench, n=8)._jdf.queryExecution().explainString(
+    plan = decontaminate(docs, bench)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
     assert "BroadcastHashJoin" in plan
@@ -578,8 +578,8 @@ def test_minhash_incremental_shape(spark):
         "id long, text string",
     )
     pairs = minhash_incremental_pairs(
-        minhash_prepare(new, "id", "text", 16, 4),
-        minhash_prepare(index, "id", "text", 16, 4),
+        minhash_prepare(new, "id"),
+        minhash_prepare(index, "id"),
     ).collect()
     assert pairs
     for r in pairs:
@@ -605,7 +605,7 @@ def test_containment_asymmetric(spark):
     longd = short + " " + " ".join(f"filler{i} word{i} pad{i}" for i in range(30))
     df = spark.createDataFrame([(1, short), (2, longd)], "id long, text string")
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    r = containment_on_pairs(df, pairs, "id", "text").collect()[0]
+    r = containment_on_pairs(df, pairs).collect()[0]
     assert r["containment_a_in_b"] == 1.0
     assert r["containment_b_in_a"] < 0.2
 

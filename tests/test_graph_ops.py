@@ -50,13 +50,13 @@ def test_cc_dedup_vs_greedy(spark):
 
     df = spark.createDataFrame(
         [(1, "x"), (2, "x"), (3, "x"), (9, "unrelated")],
-        "doc_id long, text string",
+        "id long, text string",
     )
     pairs = spark.createDataFrame(
         [(1, 2, 0.9), (2, 3, 0.9)], "id_a long, id_b long, est_jaccard double"
     )
     keep = sorted(
-        r.keep_id for r in cc_dedup_keep(df, pairs, threshold=0.7).collect()
+        r.keep_id for r in cc_dedup_keep(df, pairs).collect()
     )
     assert keep == [1, 9]
 
@@ -173,7 +173,7 @@ def test_cc_keep_best_picks_max_score_per_cluster(spark):
     from docling_plus_spark.operators.graph import cc_dedup_keep_best
 
     df = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(1, 7)], "doc_id long, text string"
+        [(i, f"t{i}") for i in range(1, 7)], "id long, text string"
     )
     # clusters {1,2,3} and {4,5}; 6 unpaired
     pairs = spark.createDataFrame(
@@ -182,10 +182,10 @@ def test_cc_keep_best_picks_max_score_per_cluster(spark):
     )
     quality = spark.createDataFrame(
         [(1, 0.1), (2, 0.9), (3, 0.5), (4, 0.7), (5, 0.7), (6, 0.2)],
-        "doc_id long, score double",
+        "id long, score double",
     )
     rows = {r.keep_id: r for r in cc_dedup_keep_best(
-        df, pairs, quality, score_col="score"
+        df, pairs, quality
     ).collect()}
     assert set(rows) == {2, 4, 6}          # best of {1,2,3}; tie 4 vs 5 -> min id; unpaired 6
     assert rows[2].comp == 1

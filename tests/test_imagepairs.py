@@ -97,12 +97,10 @@ def test_mixture_plan_semantics(spark):
         + [(i + 10, "src_b", 20) for i in range(10)]
         + [(i + 20, "src_c", 20) for i in range(10)]
     )
-    df = spark.createDataFrame(rows, "doc_id long, source string, n long")
+    df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
     out = {
         r.source: r
-        for r in mixture_plan(
-            df, {"src_a": 0.3, "src_b": 0.5}, ntok_col="n"
-        ).collect()
+        for r in mixture_plan(df, {"src_a": 0.3, "src_b": 0.5}).collect()
     }
     b = out["src_b"]
     assert b.sample_rate == 1.0          # reference source kept whole
@@ -119,11 +117,11 @@ def test_mixture_plan_semantics(spark):
     con.execute(
         "CREATE TABLE documents AS SELECT * FROM (VALUES "
         + ",".join(f"({i}, '{s}', {n})" for i, s, n in rows)
-        + ") t(doc_id, source, n)"
+        + ") t(doc_id, source, n_chars)"
     )
     oracle = con.execute(
         "SELECT * FROM ("
-        + mixture_plan_sql({"src_a": 0.3, "src_b": 0.5}, ntok_expr="n")
+        + mixture_plan_sql({"src_a": 0.3, "src_b": 0.5})
         + ") ORDER BY source"
     ).fetchall()
     got = sorted(
@@ -141,8 +139,8 @@ def test_mixture_plan_targeted_but_missing_source(spark):
         (i + 10, "src_b", 20) for i in range(10)
     ]
     weights = {"src_a": 0.3, "src_b": 0.5, "src_ghost": 0.2}
-    df = spark.createDataFrame(rows, "doc_id long, source string, n long")
-    out = {r.source: r for r in mixture_plan(df, weights, ntok_col="n").collect()}
+    df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
+    out = {r.source: r for r in mixture_plan(df, weights).collect()}
     g = out["src_ghost"]
     assert (g.n_docs, g.n_tokens, g.actual_frac) == (0, 0, 0.0)
     assert g.sample_rate == 0.0 and g.repeat_epochs == 0
@@ -156,11 +154,11 @@ def test_mixture_plan_targeted_but_missing_source(spark):
     con.execute(
         "CREATE TABLE documents AS SELECT * FROM (VALUES "
         + ",".join(f"({i}, '{s}', {n})" for i, s, n in rows)
-        + ") t(doc_id, source, n)"
+        + ") t(doc_id, source, n_chars)"
     )
     oracle = con.execute(
         "SELECT * FROM ("
-        + mixture_plan_sql(weights, ntok_expr="n")
+        + mixture_plan_sql(weights)
         + ") ORDER BY source"
     ).fetchall()
     got = sorted((tuple(out[k]) for k in out), key=lambda t: t[0])
@@ -212,7 +210,7 @@ def test_bitext_mine_recovers_planted_pairs(spark):
         (100 + i, "de", vec(i, True)) for i in range(10)
     ]
     df = spark.createDataFrame(rows, "vec_id long, lang string, embedding array<double>")
-    out = bitext_mine(df, k=3, tau=1.0).collect()
+    out = bitext_mine(df, k=3).collect()
     got = {(r.id_a, r.id_b) for r in out}
     assert got == {(100 + i, i) for i in range(10)}  # 'de' < 'en' lexicographically
     assert all(r.margin > 1.0 for r in out)
@@ -250,7 +248,7 @@ def test_bitext_mine_ivf_recovers_planted_pairs_and_twin(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, lang string, embedding array<double>"
     )
-    out = bitext_mine_ivf(df, k=3, tau=1.0, n_lists=4, nprobe=2).collect()
+    out = bitext_mine_ivf(df, k=3, n_lists=4, nprobe=2).collect()
     got = {(r.id_a, r.id_b) for r in out}
     # planted i<->i pairs that survive probing; at nprobe=2/4 lists the
     # vast majority must be recovered (recall <1 is the documented trade)
@@ -265,7 +263,7 @@ def test_bitext_mine_ivf_recovers_planted_pairs_and_twin(spark):
     )
     oracle = con.execute(
         "SELECT * FROM ("
-        + bitext_mine_ivf_sql(k=3, tau=1.0, n_lists=4, nprobe=2)
+        + bitext_mine_ivf_sql(k=3, n_lists=4, nprobe=2)
         + ") ORDER BY id_a"
     ).fetchall()
     spark_rows = sorted((r.id_a, r.id_b, r.cosine, r.margin) for r in out)

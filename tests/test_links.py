@@ -181,7 +181,7 @@ def test_frontier_schedule_politeness_rounds(spark):
         + [("https://small.test/x", 99.0)],
         "url string, priority double",
     )
-    rows = {r.url: r for r in frontier_schedule(cand, per_host_per_round=4).collect()}
+    rows = {r.url: r for r in frontier_schedule(cand).collect()}
     # big.test: highest priority p9 first
     assert rows["https://big.test/p9"].host_rank == 0
     assert rows["https://big.test/p9"].fetch_round == 0

@@ -427,9 +427,9 @@ def test_new_cluster_ops_no_cartesian_and_broadcasts(spark):
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p1 = _plan(pq_codes(emb, m=4, k=8, iters=1))
+    p1 = _plan(pq_codes(emb, k=8))
     assert "CartesianProduct" not in p1
-    p2 = _plan(pq_adc_topk(emb, m=4, k_codes=8, topk=3, query_mod=10))
+    p2 = _plan(pq_adc_topk(emb, k_codes=8, topk=3, query_mod=10))
     assert "CartesianProduct" not in p2
     docs = spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
         "doc_id AS id", "text"
@@ -437,8 +437,8 @@ def test_new_cluster_ops_no_cartesian_and_broadcasts(spark):
     new = docs.limit(50)
     p3 = _plan(
         minhash_incremental_pairs(
-            minhash_prepare(new, "id", "text", 16, 4),
-            minhash_prepare(docs, "id", "text", 16, 4),
+            minhash_prepare(new, "id"),
+            minhash_prepare(docs, "id"),
         )
     )
     assert "CartesianProduct" not in p3
@@ -453,7 +453,7 @@ def test_countmin_counter_shuffle_carries_no_terms(spark):
     from docling_plus_spark.operators.textstats import countmin_heavy_hitters
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(countmin_heavy_hitters(docs, "text", d=2, w=64, topk=5))
+    plan = _plan(countmin_heavy_hitters(docs, d=2, w=64, topk=5))
     # partial aggregation before the exchange on the counter grid
     assert "partial_count" in plan or "HashAggregate" in plan
     exchanges = [

@@ -102,7 +102,7 @@ def test_hash_classifier_twin_matches_reference_on_fuzz(texts):
     got = {
         r[0]: r
         for r in con.execute(
-            hash_classifier_sql("doc_id", "text", "documents")
+            hash_classifier_sql("doc_id", "text")
         ).fetchall()
     }
 
@@ -172,7 +172,7 @@ def test_script_fractions_bounded(texts):
     clean = [t.replace("'", " ") for t in texts]
     con = _con(list(enumerate(clean)))
     rows = con.execute(
-        script_composition_sql("doc_id", "text", "documents")
+        script_composition_sql("doc_id", "text")
     ).fetchall()
     names = [n for n, _, _ in SCRIPT_CLASSES]
     for r in rows:
@@ -279,11 +279,9 @@ def test_mixture_plan_invariants_on_fuzz(toks, weights):
         "CREATE TABLE documents AS SELECT * FROM (VALUES "
         + ",".join(f"({i}, '{s}', {n})" for i, (s, n) in
                    enumerate(zip(srcs, toks)))
-        + ") v(doc_id, source, n)"
+        + ") v(doc_id, source, n_chars)"
     )
-    rows = con.execute(
-        mixture_plan_sql(w, ntok_expr="n")
-    ).fetchall()
+    rows = con.execute(mixture_plan_sql(w)).fetchall()
     rates = {r[0]: r[5] for r in rows}
     reps = {r[0]: r[6] for r in rows}
     assert all(0.0 <= v <= 1.0 for v in rates.values())
@@ -435,7 +433,7 @@ def test_kn_bigram_twin_matches_python_model_on_fuzz(texts):
     got = {
         r[0]: (r[1], r[2])
         for r in con.execute(
-            kn_bigram_nll_sql("doc_id", "text", table="documents")
+            kn_bigram_nll_sql()
         ).fetchall()
     }
 

@@ -40,7 +40,7 @@ def test_dedup_stream_first_seen_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(inp / "*"))
     )
-    out = dedup_stream(stream, key_col="doc_hash")
+    out = dedup_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("dedup_stream_test")
@@ -76,7 +76,7 @@ def test_dedup_stream_restart_resumes_state(spark, tmp_path):
             .parquet(str(inp / "*"))
         )
         q = (
-            dedup_stream(stream, key_col="doc_hash")
+            dedup_stream(stream)
             .writeStream.format("parquet")
             .option("path", str(outp))
             .option("checkpointLocation", str(tmp_path / "ckpt"))

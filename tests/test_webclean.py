@@ -95,7 +95,7 @@ def test_pii_redact_matches_duckdb(spark, ddb):
         ).alias("text"),
     )
     sp = {r.id: r.asDict() for r in pii_redact(d).collect()}
-    ora = ddb.sql(pii_redact_sql("doc_id", synth)).df()
+    ora = ddb.sql(pii_redact_sql(synth)).df()
     assert len(ora) == len(sp)
     for rec in ora.to_dict("records"):
         mine = sp[rec["id"]]
@@ -142,7 +142,7 @@ def test_url_dedup_matches_duckdb(spark, ddb):
     )
     sp = {
         r.canon_url: (r.keep_id, r.n_dupes)
-        for r in url_dedup(d, "doc_id", "url").collect()
+        for r in url_dedup(d).collect()
     }
     ora = ddb.sql(url_dedup_sql("doc_id", synth_sql, "documents")).df()
     assert len(ora) == len(sp) == 17
@@ -158,7 +158,7 @@ def test_paragraph_dedup_drops_boilerplate(spark):
     rows = [(i, f"unique line number {i} with content.\nSUBSCRIBE NOW") for i in range(30)]
     rows.append((99, "SUBSCRIBE NOW"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.id: r.asDict() for r in paragraph_dedup(df, max_docs=10).collect()}
+    out = {r.id: r.asDict() for r in paragraph_dedup(df).collect()}
     assert out[0]["lines_dropped"] == 1
     assert out[0]["clean_text"] == "unique line number 0 with content."
     assert out[99]["clean_text"] == "" and out[99]["lines_kept"] == 0
@@ -177,8 +177,8 @@ def test_paragraph_dedup_matches_duckdb(spark, ddb):
         "(text || chr(10) || 'subscribe to our newsletter' || chr(10) || "
         "'all rights reserved ' || lang)"
     )
-    sp = {r.id: r.asDict() for r in paragraph_dedup(d, max_docs=10).collect()}
-    ora = ddb.sql(paragraph_dedup_sql("doc_id", synth)).df()
+    sp = {r.id: r.asDict() for r in paragraph_dedup(d).collect()}
+    ora = ddb.sql(paragraph_dedup_sql(synth)).df()
     assert len(ora) == len(sp)
     dropped_any = False
     for rec in ora.to_dict("records"):
@@ -284,7 +284,7 @@ def test_host_stats_matches_duckdb(spark, ddb):
         r.host: (r.n_docs, r.total_tokens, r.min_id)
         for r in host_stats(d).collect()
     }
-    ora = ddb.sql(host_stats_sql("doc_id", synth_sql, "text", "documents")).df()
+    ora = ddb.sql(host_stats_sql(synth_sql)).df()
     assert len(ora) == len(sp) == 5
     for rec in ora.to_dict("records"):
         assert rec["host"].startswith("host") and ".example.com" in rec["host"]
@@ -346,7 +346,7 @@ def test_sentence_dedup_keep_one(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r.id: r for r in sentence_dedup(df, min_count=2).collect()}
+    rows = {r.id: r for r in sentence_dedup(df).collect()}
     # canonical = (doc 1, idx 0) keeps its copy; doc 2's copy removed
     assert rows[1].clean_text == "All rights reserved. Unique alpha."
     assert rows[1].removed_sentences == 0
