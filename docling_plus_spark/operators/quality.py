@@ -892,7 +892,7 @@ def lang_consistency(df: DataFrame) -> DataFrame:
         1,
     )
     return df.select(
-        F.col("doc_id").alias("id"), lang.alias("lang"), sig.alias("s")
+        F.col("doc_id").alias("id"), lang, sig.alias("s")
     ).select("id", "lang", "s.*")
 
 

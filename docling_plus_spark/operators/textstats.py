@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 
 TOKEN_SPLIT = "[^a-z0-9]+"
 
-#: what each DuckDB twin computes, and its Spark operator by default:
-#: top terms per document (TF-IDF), smallest document frequency kept in
-#: the inverted index, count-min rows, columns and top terms, PMI
-#: following-token window, smallest pair count and top pairs, vocab-growth
-#: prefixes, and the novelty n-gram size
+#: the values the DuckDB twins use, which their Spark operators default
+#: to: top terms per document (TF-IDF), smallest document frequency kept
+#: in the inverted index, count-min rows, columns and top terms, PMI
+#: following-token window, smallest pair count and top pairs,
+#: vocab-growth prefixes, and the novelty n-gram size
 TFIDF_K = 3
 INVERTED_MIN_DF = 2
 CMS_D = 4
