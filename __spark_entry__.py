@@ -355,10 +355,10 @@ def _minhash_oracle_prefix() -> str:
     )
 
     return f"""{_CORPUS_CTE},
-sh AS (SELECT id, {shingles_sql("text")} AS shingles FROM corpus),
+sh AS (SELECT id, {shingles_sql()} AS shingles FROM corpus),
 hs AS (SELECT id, {hashed_shingles_sql("shingles")} AS hs FROM sh),
-sig AS (SELECT id, {minhash_signature_sql("hs")} AS sig FROM hs),
-bands AS (SELECT id, sig, unnest({lsh_band_keys_sql("sig")}) AS band_key FROM sig),
+sig AS (SELECT id, {minhash_signature_sql()} AS sig FROM hs),
+bands AS (SELECT id, sig, unnest({lsh_band_keys_sql()}) AS band_key FROM sig),
 cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.sig AS sig_a, b.sig AS sig_b
   FROM bands a JOIN bands b USING (band_key) WHERE a.id < b.id
@@ -620,9 +620,9 @@ def _q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = gopher_signals(d).select("id", "gopher_pass")
     c = hash_classifier(d).select("id", F.col("score").alias("clf_score"))
     k = kn_bigram_nll(d).select("id", "mean_nll")
-    ranked = distributed_rank(
-        k, ["mean_nll", "id"]
-    ).crossJoin(F.broadcast(k.select(F.count("*").alias("n_docs"))))
+    ranked = distributed_rank(k).crossJoin(
+        F.broadcast(k.select(F.count("*").alias("n_docs")))
+    )
     k2 = ranked.select(
         "id",
         "mean_nll",
@@ -1330,23 +1330,24 @@ def _q_repetition_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docling_plus_spark.operators.curation import dsir_weights
+    from docling_plus_spark.operators.curation import DSIR_TARGET_PRED, dsir_weights
 
-    return dsir_weights(_docs(spark, sf_dir), F.col("lang") == "en")
+    return dsir_weights(_docs(spark, sf_dir), F.expr(DSIR_TARGET_PRED))
 
 
 def _q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docling_plus_spark.operators.curation import bloom_dedup
+    from docling_plus_spark.operators.curation import BLOOM_BUILD_PRED, bloom_dedup
 
-    return bloom_dedup(_docs(spark, sf_dir), F.col("doc_id") % 2 == 0)
+    return bloom_dedup(_docs(spark, sf_dir), F.expr(BLOOM_BUILD_PRED))
 
 
 def _q_distribution_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docling_plus_spark.operators.curation import distribution_match
-
-    return distribution_match(
-        _docs(spark, sf_dir), {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15}
+    from docling_plus_spark.operators.curation import (
+        MATCH_TARGET_PROPS,
+        distribution_match,
     )
+
+    return distribution_match(_docs(spark, sf_dir), MATCH_TARGET_PROPS)
 
 
 def _q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2626,12 +2627,12 @@ def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/packing.py): whitespace token counts → two-phase
     distributed prefix sum → 128-token context-window spans. Oracle is
     the same packing as a plain global window in DuckDB."""
-    from docling_plus_spark.operators.packing import sequence_pack
+    from docling_plus_spark.operators.packing import PACK_BUDGET, sequence_pack
 
     d = _docs(spark, sf_dir).select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
-    return sequence_pack(d, budget=128)
+    return sequence_pack(d, budget=PACK_BUDGET)
 
 
 def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3644,14 +3645,12 @@ labeled AS (
 """.format(hc=__import__(
             "docling_plus_spark.operators.quality",
             fromlist=["hash_classifier_sql"],
-        ).hash_classifier_sql("doc_id", "text"))
+        ).hash_classifier_sql())
         + ", "
         + __import__(
             "docling_plus_spark.operators.webclean",
             fromlist=["host_quality_wilson_sql"],
-        ).host_quality_wilson_sql(
-            "host", "quality_pass", "labeled"
-        ).lstrip().removeprefix("WITH "),
+        ).host_quality_wilson_sql().lstrip().removeprefix("WITH "),
         "robots_sitemaps": """
 WITH r AS (
   SELECT 'h' || (doc_id % 7)::varchar || '.test' AS host,
@@ -3667,7 +3666,7 @@ WITH r AS (
 """ + __import__(
             "docling_plus_spark.operators.robots",
             fromlist=["robots_sitemaps_sql"],
-        ).robots_sitemaps_sql("host", "robots_txt", "r").lstrip(),
+        ).robots_sitemaps_sql().lstrip(),
         "sitemap_extract": """
 WITH sm AS (
   SELECT 'h' || (doc_id % 7)::varchar || '.test' AS host,
@@ -3690,7 +3689,7 @@ WITH sm AS (
 )
 """ + __import__(
             "docling_plus_spark.operators.robots", fromlist=["sitemap_urls_sql"]
-        ).sitemap_urls_sql("host", "sitemap_xml", "sm").lstrip(),
+        ).sitemap_urls_sql().lstrip(),
         "ngram_novelty": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["ngram_novelty_sql"],
@@ -3750,11 +3749,11 @@ FROM agg a JOIN modal m ON a.lang = m.lang
             hc=__import__(
                 "docling_plus_spark.operators.quality",
                 fromlist=["hash_classifier_sql"],
-            ).hash_classifier_sql("doc_id", "text"),
+            ).hash_classifier_sql(),
             sc=__import__(
                 "docling_plus_spark.operators.quality",
                 fromlist=["script_composition_sql"],
-            ).script_composition_sql("doc_id", "text"),
+            ).script_composition_sql(),
         ),
         "ivfpq_topk": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["ivfpq_topk_sql"]
@@ -3791,12 +3790,11 @@ SELECT id_a, rk, id_b, cosine FROM (
         ),
         "hash_classifier": __import__(
             "docling_plus_spark.operators.quality", fromlist=["hash_classifier_sql"]
-        ).hash_classifier_sql("doc_id", "text"),
+        ).hash_classifier_sql(),
         "url_filter": __import__(
             "docling_plus_spark.operators.webclean",
             fromlist=["url_blocklist_filter_sql"],
         ).url_blocklist_filter_sql(
-            "url",
             """(
   SELECT 'https://h' || (doc_id % 13)::varchar || '.test' ||
     CASE doc_id % 4
@@ -3816,7 +3814,7 @@ SELECT id_a, rk, id_b, cosine FROM (
         "script_composition": __import__(
             "docling_plus_spark.operators.quality",
             fromlist=["script_composition_sql"],
-        ).script_composition_sql("doc_id", "text"),
+        ).script_composition_sql(),
         "countmin_topk": __import__(
             "docling_plus_spark.operators.textstats",
             fromlist=["countmin_heavy_hitters_sql"],
@@ -3863,7 +3861,7 @@ UNION ALL SELECT 4, 'sampled', count(*)::bigint FROM s4
 """.format(hc=__import__(
             "docling_plus_spark.operators.quality",
             fromlist=["hash_classifier_sql"],
-        ).hash_classifier_sql("doc_id", "text")),
+        ).hash_classifier_sql()),
         "minhash_incremental": "WITH idx AS (SELECT doc_id AS id, text FROM documents),\n"
         "newdocs AS (\n"
         "  SELECT doc_id + 100000 AS id, text || ' epoch tail' AS text\n"
@@ -3875,7 +3873,7 @@ UNION ALL SELECT 4, 'sampled', count(*)::bigint FROM s4
         + __import__(
             "docling_plus_spark.operators.dedup",
             fromlist=["minhash_incremental_sql"],
-        ).minhash_incremental_sql("newdocs", "idx"),
+        ).minhash_incremental_sql(),
         "pq_adc_topk": __import__(
             "docling_plus_spark.operators.cluster", fromlist=["pq_adc_topk_sql"]
         ).pq_adc_topk_sql(k_codes=16, topk=5, query_mod=20),
@@ -4168,7 +4166,6 @@ FROM t
         "sequence_pack": __import__(
             "docling_plus_spark.operators.packing", fromlist=["sequence_pack_sql"]
         ).sequence_pack_sql(
-            128,
             table="(SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 "
             "ELSE len(string_split_regex(trim(text), '\\s+')) END::int "
             "AS n_tokens FROM documents)",
@@ -4293,7 +4290,7 @@ def _quality_ensemble_oracle() -> str:
     from docling_plus_spark.operators.textstats import kn_bigram_nll_sql
 
     g = gopher_signals_sql()
-    c = hash_classifier_sql("doc_id", "text")
+    c = hash_classifier_sql()
     k = kn_bigram_nll_sql()
     return f"""
 WITH g AS ({g}), c AS ({c}), k AS ({k}),
@@ -4403,7 +4400,7 @@ seeded AS (
 ),
 surv AS (
   SELECT * FROM seeded WHERE seed % 8 + 9 >= 12
-),{dhash_from_seed_sql("surv")},
+),{dhash_from_seed_sql()},
 dedup AS (
   SELECT media_id, dhash,
          media_id != min(media_id) OVER (PARTITION BY dhash) AS is_dup
@@ -4481,11 +4478,11 @@ def _minhash_sig_oracle() -> str:
         shingles_sql,
     )
 
-    sig = minhash_signature_sql("hs")
+    sig = minhash_signature_sql()
     cols = ", ".join(f"sig[{i + 1}] AS s{i}" for i in range(4))
     return f"""
 WITH {_CORPUS_CTE},
-sh AS (SELECT id, {shingles_sql("text")} AS shingles FROM corpus),
+sh AS (SELECT id, {shingles_sql()} AS shingles FROM corpus),
 hs AS (SELECT id, {hashed_shingles_sql("shingles")} AS hs FROM sh),
 sig AS (SELECT id, {sig} AS sig FROM hs)
 SELECT id, {cols} FROM sig
@@ -4497,7 +4494,7 @@ def _jaccard_oracle() -> str:
 
     return f"""
 WITH {_minhash_oracle_prefix()},
-shx AS (SELECT id, {shingles_sql("text")} AS sh FROM corpus)
+shx AS (SELECT id, {shingles_sql()} AS sh FROM corpus)
 SELECT p.id_a, p.id_b,
        round(len(list_intersect(a.sh, b.sh))::double
              / len(list_distinct(list_concat(a.sh, b.sh)))::double, 6) AS jaccard
@@ -4511,7 +4508,7 @@ def _containment_oracle() -> str:
 
     return f"""
 WITH {_minhash_oracle_prefix()},
-shx AS (SELECT id, {shingles_sql("text")} AS sh FROM corpus)
+shx AS (SELECT id, {shingles_sql()} AS sh FROM corpus)
 SELECT p.id_a, p.id_b,
        round(len(list_intersect(a.sh, b.sh))::double
              / greatest(len(list_distinct(a.sh)), 1)::double, 6)
@@ -4623,7 +4620,7 @@ def _pii_oracle() -> str:
 def _url_dedup_oracle() -> str:
     from docling_plus_spark.operators.webclean import url_dedup_sql
 
-    return url_dedup_sql("doc_id", _URL_SYNTH_SQL, "documents")
+    return url_dedup_sql(_URL_SYNTH_SQL)
 
 
 def _paragraph_oracle() -> str:
@@ -4750,13 +4747,11 @@ def _curation_oracle(name: str) -> str:
     if name == "repetition_strip":
         return c.repetition_strip_sql()
     if name == "dsir_weights":
-        return c.dsir_weights_sql("lang = 'en'")
+        return c.dsir_weights_sql()
     if name == "bloom_dedup":
-        return c.bloom_dedup_sql("doc_id % 2 = 0")
+        return c.bloom_dedup_sql()
     if name == "distribution_match":
-        return c.distribution_match_sql(
-            {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15}
-        )
+        return c.distribution_match_sql()
     raise KeyError(name)
 
 
@@ -4787,7 +4782,7 @@ def _winnow_dedup_oracle() -> str:
 def _lsh_keyed_cte() -> str:
     from docling_plus_spark.operators.ann import lsh_table_keys_sql
 
-    keys = lsh_table_keys_sql("emb", tables=8, bits=4)
+    keys = lsh_table_keys_sql(tables=8, bits=4)
     return f"""base AS (SELECT vec_id AS id, embedding::double[] AS emb,
                     {_UNIT_SQL} AS uemb FROM embeddings),
 keyed AS (SELECT id, uemb, unnest({keys}) AS bucket FROM base)"""

@@ -8,8 +8,8 @@ semantics of that surface over this repo's ``DLDocument``:
 
 * :func:`hierarchical_chunks` — one chunk per content item, with the
   active heading path (title + section_header stack) as metadata;
-  consecutive list items merge into one chunk; tables serialize to
-  their markdown grid.
+  consecutive list items merge into one chunk; a table becomes one line
+  per grid row, its cells' text joined with ", ".
 * :func:`hybrid_chunks` — tokenization-aware refinement: oversized
   chunks split on token windows, then consecutive chunks with the same
   heading path merge greedily while they fit ``max_tokens``.
@@ -49,7 +49,7 @@ class Chunk:
 
 
 def _table_text(item: TableItem) -> str:
-    rows = item.data.grid if item.data is not None else []
+    rows = item.data.grid() if item.data is not None else []
     return "\n".join(
         ", ".join(getattr(c, "text", "") or "" for c in row) for row in rows
     )

@@ -163,10 +163,10 @@ class Tag:
                     stack.extend(reversed(node.contents))
         return None
 
-    def find_parent(self, name: str) -> Optional["Tag"]:
+    def find_parent_figure(self) -> Optional["Tag"]:
         cur = self.parent
         while cur is not None:
-            if cur.name == name:
+            if cur.name == "figure":
                 return cur
             cur = cur.parent
         return None

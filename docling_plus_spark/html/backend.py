@@ -991,7 +991,7 @@ class HtmlConverter:
     def _emit_image(self, img_tag: Tag, doc: DLDocument) -> Optional[str]:
         """Picture placeholder + caption wiring (html_backend.py:1279-1342);
         image bytes are never fetched in the table pipeline."""
-        figure = img_tag.find_parent("figure")
+        figure = img_tag.find_parent_figure()
         caption = AnnotatedTextList()
         parent = self.parents[self.level]
 

@@ -94,9 +94,9 @@ def sign_bucket(vec_col: Column, bits: int, offset: int = 0) -> Column:
     return out.cast("int")
 
 
-def sign_bucket_sql(vec_expr: str, bits: int, offset: int = 0) -> str:
+def sign_bucket_sql(bits: int, offset: int = 0) -> str:
     terms = " + ".join(
-        f"(CASE WHEN {vec_expr}[{offset + i + 1}] > 0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN emb[{offset + i + 1}] > 0 THEN {1 << i} ELSE 0 END)"
         for i in range(bits)
     )
     return f"({terms})::int"
@@ -116,9 +116,9 @@ def lsh_table_keys(vec_col: Column, tables: int = 8, bits: int = 4) -> Column:
     )
 
 
-def lsh_table_keys_sql(vec_expr: str, tables: int = 8, bits: int = 4) -> str:
+def lsh_table_keys_sql(tables: int = 8, bits: int = 4) -> str:
     keys = ", ".join(
-        f"({sign_bucket_sql(vec_expr, bits, offset=t * bits)} + {t * (1 << bits)})::int"
+        f"({sign_bucket_sql(bits, offset=t * bits)} + {t * (1 << bits)})::int"
         for t in range(tables)
     )
     return f"[{keys}]"

@@ -183,7 +183,7 @@ def semdedup(
 # DuckDB twins (unrolled CTE chains)
 
 
-def _assign_cte(base: str, cents: str) -> str:
+def _assign_cte(cents: str) -> str:
     return f"""(
   SELECT id, uemb, cluster, ccos FROM (
     SELECT b.id, b.uemb, c.cluster,
@@ -192,7 +192,7 @@ def _assign_cte(base: str, cents: str) -> str:
              PARTITION BY b.id
              ORDER BY round(list_dot_product(b.uemb, c.cemb), 4) DESC,
                       c.cluster) AS rk
-    FROM {base} b CROSS JOIN {cents} c) WHERE rk = 1
+    FROM base b CROSS JOIN {cents} c) WHERE rk = 1
 )"""
 
 
@@ -222,9 +222,9 @@ def _lloyd_ctes(k: int, iters: int, table: str) -> tuple[str, str]:
   FROM (SELECT id, uemb FROM base ORDER BY id LIMIT {k}))""",
     ]
     for n in range(iters):
-        parts.append(f"a{n} AS {_assign_cte('base', f'cents{n}')}")
+        parts.append(f"a{n} AS {_assign_cte(f'cents{n}')}")
         parts.append(f"cents{n + 1} AS {_recompute_cte(f'a{n}')}")
-    parts.append(f"afinal AS {_assign_cte('base', f'cents{iters}')}")
+    parts.append(f"afinal AS {_assign_cte(f'cents{iters}')}")
     return ",\n".join(parts), "afinal"
 
 
@@ -343,13 +343,13 @@ def pq_codes_sql(k: int = 16) -> str:
         "j -> (s.svec[j] - c.cemb[j]) * (s.svec[j] - c.cemb[j])), 'sum'), 4)"
     )
 
-    def assign(sv: str, cents: str) -> str:
+    def assign(cents: str) -> str:
         return f"""(
   SELECT id, sub, svec, code, dist FROM (
     SELECT s.id, s.sub, s.svec, c.code, {sq} AS dist,
            row_number() OVER (PARTITION BY s.id, s.sub
                               ORDER BY {sq} ASC, c.code) AS rk
-    FROM {sv} s JOIN {cents} c USING (sub)) AS q(id, sub, svec, code, dist, rk)
+    FROM sv s JOIN {cents} c USING (sub)) AS q(id, sub, svec, code, dist, rk)
   WHERE rk = 1
 )"""
 
@@ -368,7 +368,7 @@ def pq_codes_sql(k: int = 16) -> str:
 )""",
     ]
     for n in range(PQ_ITERS):
-        parts.append(f"a{n} AS {assign('sv', f'cents{n}')}")
+        parts.append(f"a{n} AS {assign(f'cents{n}')}")
         parts.append(
             f"""cents{n + 1} AS (
   WITH mm AS (
@@ -379,7 +379,7 @@ def pq_codes_sql(k: int = 16) -> str:
   SELECT sub, code, list(mv ORDER BY i) AS cemb FROM mm GROUP BY 1, 2
 )"""
         )
-    parts.append(f"afinal AS {assign('sv', f'cents{PQ_ITERS}')}")
+    parts.append(f"afinal AS {assign(f'cents{PQ_ITERS}')}")
     body = ",\n".join(parts)
     return f"WITH {body}\nSELECT id, sub, code, dist FROM afinal"
 

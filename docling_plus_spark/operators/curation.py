@@ -128,6 +128,7 @@ FROM reassembled r JOIN sizes s USING (id)
 # DSIR importance weights (hashed n-gram log-likelihood ratio)
 
 DSIR_BUCKETS = 1024
+DSIR_TARGET_PRED = "lang = 'en'"  #: the target subset of the query, as SQL
 _WORD_SPLIT = "[^a-z0-9]+"
 
 
@@ -222,8 +223,8 @@ def dsir_weights(df: DataFrame, target_filter: Column) -> DataFrame:
     )
 
 
-def dsir_weights_sql(target_pred: str) -> str:
-    """DuckDB twin of :func:`dsir_weights` (full SELECT)."""
+def dsir_weights_sql() -> str:
+    """DuckDB twin of :func:`dsir_weights` at ``DSIR_TARGET_PRED`` (full SELECT)."""
     words = (
         f"list_filter(string_split_regex(lower(text), '{_WORD_SPLIT}'),"
         f" x -> x <> '')"
@@ -233,7 +234,7 @@ def dsir_weights_sql(target_pred: str) -> str:
     bi = h.format(v="(w.ws[t.i] || ' ' || w.ws[t.i + 1])", b=DSIR_BUCKETS)
     return f"""
 WITH w AS (
-  SELECT doc_id AS id, ({target_pred}) AS is_target, {words} AS ws FROM documents
+  SELECT doc_id AS id, ({DSIR_TARGET_PRED}) AS is_target, {words} AS ws FROM documents
 ),
 feats AS (
   SELECT id, is_target, ({uni})::bigint AS b
@@ -265,6 +266,7 @@ GROUP BY 1
 
 BLOOM_M = 1 << 18  #: filter bits
 BLOOM_K = 4  #: probes per key
+BLOOM_BUILD_PRED = "doc_id % 2 = 0"  #: the build side of the query, as SQL
 
 
 def _bloom_positions(key: Column) -> Column:
@@ -305,15 +307,15 @@ def bloom_dedup(df: DataFrame, build_filter: Column) -> DataFrame:
     )
 
 
-def bloom_dedup_sql(build_pred: str) -> str:
-    """DuckDB twin of :func:`bloom_dedup` (full SELECT)."""
+def bloom_dedup_sql() -> str:
+    """DuckDB twin of :func:`bloom_dedup` at ``BLOOM_BUILD_PRED`` (full SELECT)."""
     p = (
         f"(('0x'||substr(md5(md5(text) || '#' || j.j::varchar),1,15))"
         f"::ubigint % {BLOOM_M})::bigint"
     )
     return f"""
 WITH pos AS (
-  SELECT doc_id AS id, ({build_pred}) AS is_build, {p} AS p
+  SELECT doc_id AS id, ({BLOOM_BUILD_PRED}) AS is_build, {p} AS p
   FROM documents, unnest(range(1, {BLOOM_K} + 1)) AS j(j)
 ),
 bits AS (SELECT DISTINCT p FROM pos WHERE is_build),
@@ -330,6 +332,7 @@ GROUP BY 1
 # Distribution-matching sampler
 
 SAMPLE_MOD = 1_000_000
+MATCH_TARGET_PROPS = {"en": 0.4, "de": 0.15, "es": 0.15, "fr": 0.15, "zh": 0.15}
 
 
 def distribution_match(
@@ -377,9 +380,9 @@ def distribution_match(
     )
 
 
-def distribution_match_sql(target_props: dict[str, float]) -> str:
-    """DuckDB twin of :func:`distribution_match` (full SELECT)."""
-    values = ", ".join(f"('{s}', {p})" for s, p in sorted(target_props.items()))
+def distribution_match_sql() -> str:
+    """DuckDB twin of :func:`distribution_match` at ``MATCH_TARGET_PROPS``."""
+    values = ", ".join(f"('{s}', {p})" for s, p in sorted(MATCH_TARGET_PROPS.items()))
     bucket = f"(('0x'||substr(md5(doc_id::VARCHAR),1,15))::ubigint % {SAMPLE_MOD})"
     return f"""
 WITH props(stratum, prop) AS (VALUES {values}),

@@ -64,9 +64,9 @@ def shingles(text_col: Column, n: int = SHINGLE_N) -> Column:
     )
 
 
-def shingles_sql(text_expr: str, n: int = SHINGLE_N) -> str:
-    """DuckDB twin of :func:`shingles`."""
-    ws = f"string_split_regex(lower(trim({text_expr})), '\\s+')"
+def shingles_sql(n: int = SHINGLE_N) -> str:
+    """DuckDB twin of :func:`shingles` of the ``text`` column."""
+    ws = "string_split_regex(lower(trim(text)), '\\s+')"
     return (
         f"list_distinct(CASE WHEN len({ws}) < {n} THEN [array_to_string({ws}, ' ')] "
         f"ELSE list_transform(range(0, len({ws})-{n - 1}), "
@@ -143,12 +143,12 @@ def hashed_shingles_sql(shingles_expr: str) -> str:
     )
 
 
-def minhash_signature_sql(hs_expr: str) -> str:
-    """DuckDB twin of :func:`minhash_signature_from_hashes` — takes the
-    *hashed* shingle list expression (compute it once in a CTE)."""
+def minhash_signature_sql() -> str:
+    """DuckDB twin of :func:`minhash_signature_from_hashes` of the ``hs``
+    column, the *hashed* shingle list (compute it once in a CTE)."""
     a, b = _perm_constants(MINHASH_K)
     mins = ", ".join(
-        f"list_min(list_transform({hs_expr}, "
+        f"list_min(list_transform(hs, "
         f"h -> ({a[j]}::bigint * h + {b[j]}::bigint) % {MINHASH_PRIME}))"
         for j in range(MINHASH_K)
     )
@@ -172,10 +172,10 @@ def lsh_band_keys(sig_col: Column) -> Column:
     )
 
 
-def lsh_band_keys_sql(sig_expr: str) -> str:
+def lsh_band_keys_sql() -> str:
     rows = MINHASH_K // MINHASH_BANDS
     keys = ", ".join(
-        f"md5('{b}|' || array_to_string({sig_expr}[{b * rows + 1}:{(b + 1) * rows}], ','))"
+        f"md5('{b}|' || array_to_string(sig[{b * rows + 1}:{(b + 1) * rows}], ','))"
         for b in range(MINHASH_BANDS)
     )
     return f"[{keys}]"
@@ -706,7 +706,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
 def decontaminate_sql(bench_cte: str = "benchmark") -> str:
     """DuckDB twin of :func:`decontaminate`; ``bench_cte`` must be a
     relation with a ``text`` column."""
-    grams = hashed_shingles_sql(shingles_sql("text", DECONTAM_N))
+    grams = hashed_shingles_sql(shingles_sql(DECONTAM_N))
     return f"""
 WITH doc_grams AS (
   SELECT doc_id AS id, unnest(list_distinct({grams})) AS h FROM documents
@@ -789,17 +789,17 @@ def minhash_incremental_pairs(
     ).distinct()
 
 
-def minhash_incremental_sql(new_cte: str, index_cte: str) -> str:
+def minhash_incremental_sql() -> str:
     """DuckDB twin of prepare(new) + prepare(index) +
-    :func:`minhash_incremental_pairs`. ``new_cte``/``index_cte`` are CTE
-    names with (id, text)."""
-    sh = shingles_sql("text")
+    :func:`minhash_incremental_pairs`, over the CTEs ``newdocs`` and
+    ``idx`` with (id, text)."""
+    sh = shingles_sql()
     hs = hashed_shingles_sql(sh)
 
     def prep(src: str) -> str:
         return f"""(
-  SELECT id, sig, unnest({lsh_band_keys_sql('sig')}) AS band_key
-  FROM (SELECT id, {minhash_signature_sql('hs')} AS sig
+  SELECT id, sig, unnest({lsh_band_keys_sql()}) AS band_key
+  FROM (SELECT id, {minhash_signature_sql()} AS sig
         FROM (SELECT id, {hs} AS hs FROM {src}))
 )"""
 
@@ -808,8 +808,8 @@ def minhash_incremental_sql(new_cte: str, index_cte: str) -> str:
         "j -> n.sig[j] = o.sig[j]))"
     )
     return f"""
-prep_new AS {prep(new_cte)},
-prep_idx AS {prep(index_cte)},
+prep_new AS {prep("newdocs")},
+prep_idx AS {prep("idx")},
 others AS (
   SELECT band_key, id AS other_id, sig, true AS vs_index FROM prep_idx
   UNION ALL

@@ -150,25 +150,25 @@ def synth_header_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # the operator: pure column algebra, no Python
 
-def _u8(col: str, pos: int) -> Column:
-    """Unsigned byte value at 1-indexed ``pos`` of a binary column."""
-    return F.conv(F.hex(F.substring(F.col(col), pos, 1)), 16, 10).cast("long")
+def _u8(pos: int) -> Column:
+    """Unsigned byte value at 1-indexed ``pos`` of the ``media`` column."""
+    return F.conv(F.hex(F.substring(F.col("media"), pos, 1)), 16, 10).cast("long")
 
 
-def _be32(col: str, pos: int) -> Column:
-    return F.conv(F.hex(F.substring(F.col(col), pos, 4)), 16, 10).cast("long")
+def _be32(pos: int) -> Column:
+    return F.conv(F.hex(F.substring(F.col("media"), pos, 4)), 16, 10).cast("long")
 
 
-def _le16(col: str, pos: int) -> Column:
-    return _u8(col, pos) + _u8(col, pos + 1) * 256
+def _le16(pos: int) -> Column:
+    return _u8(pos) + _u8(pos + 1) * 256
 
 
-def _le32(col: str, pos: int) -> Column:
+def _le32(pos: int) -> Column:
     return (
-        _u8(col, pos)
-        + _u8(col, pos + 1) * 256
-        + _u8(col, pos + 2) * 65536
-        + _u8(col, pos + 3) * 16777216
+        _u8(pos)
+        + _u8(pos + 1) * 256
+        + _u8(pos + 2) * 65536
+        + _u8(pos + 3) * 16777216
     )
 
 
@@ -193,7 +193,7 @@ def image_dims_header(media: DataFrame) -> DataFrame:
     is_gif = hexsig6.isin("474946383761", "474946383961") & (n >= 10)
     is_bmp = (hexsig2 == "424D") & (n >= 26)
 
-    bmp_h_raw = _le32("media", 23)
+    bmp_h_raw = _le32(23)
     bmp_h = F.when(
         bmp_h_raw >= F.lit(2147483648), F.lit(4294967296) - bmp_h_raw
     ).otherwise(bmp_h_raw)
@@ -205,13 +205,13 @@ def image_dims_header(media: DataFrame) -> DataFrame:
         .otherwise(F.lit("unrecognized"))
     )
     width = (
-        F.when(is_png, _be32("media", 17))
-        .when(is_gif, _le16("media", 7))
-        .when(is_bmp, _le32("media", 19))
+        F.when(is_png, _be32(17))
+        .when(is_gif, _le16(7))
+        .when(is_bmp, _le32(19))
     )
     height = (
-        F.when(is_png, _be32("media", 21))
-        .when(is_gif, _le16("media", 9))
+        F.when(is_png, _be32(21))
+        .when(is_gif, _le16(9))
         .when(is_bmp, bmp_h)
     )
     keep = (
@@ -232,8 +232,8 @@ def bmp_header_dims() -> tuple[Column, Column]:
     header-only parse for composed pipelines that just synthesized the
     bytes (negative height normalized as in :func:`image_dims_header`).
     Pure codegen."""
-    w = _le32("media", 19)
-    h_raw = _le32("media", 23)
+    w = _le32(19)
+    h_raw = _le32(23)
     h = F.when(
         h_raw >= F.lit(2147483648), F.lit(4294967296) - h_raw
     ).otherwise(h_raw)

@@ -106,14 +106,14 @@ def distributed_prefix_sum(
     return out.drop("_pid", *[f"_poff_{c}" for c in value_cols])
 
 
-def distributed_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
-    """1-based global rank ``nll_rank`` by ``order_cols`` (which must
-    form a total order) via :func:`distributed_prefix_sum` of a literal
-    1 — the scale-true replacement for ``row_number() OVER (ORDER BY
-    ...)`` with no partition key."""
+def distributed_rank(df: DataFrame) -> DataFrame:
+    """1-based global rank ``nll_rank`` by (mean_nll, id) via
+    :func:`distributed_prefix_sum` of a literal 1 — the scale-true
+    replacement for ``row_number() OVER (ORDER BY ...)`` with no
+    partition key."""
     one = "_rank_one"
     out = distributed_prefix_sum(
-        df.withColumn(one, F.lit(1)), order_cols, [one], inclusive=True
+        df.withColumn(one, F.lit(1)), ["mean_nll", "id"], [one], inclusive=True
     )
     return out.withColumn("nll_rank", F.col(f"cum_{one}")).drop(
         one, f"cum_{one}"
@@ -164,9 +164,13 @@ def sequence_pack(df: DataFrame, budget: int) -> DataFrame:
     )
 
 
-def sequence_pack_sql(budget: int, table: str = "t") -> str:
-    """DuckDB twin of :func:`sequence_pack` (plain global window — the
-    oracle does not need to scale)."""
+#: window size, in tokens, of the sequence_pack query and its twin
+PACK_BUDGET = 128
+
+
+def sequence_pack_sql(table: str = "t") -> str:
+    """DuckDB twin of :func:`sequence_pack` at ``PACK_BUDGET`` (plain global
+    window — the oracle does not need to scale)."""
     return f"""
 WITH d AS (
   SELECT doc_id AS id, n_tokens AS n FROM {table} WHERE n_tokens > 0
@@ -180,12 +184,12 @@ o AS (
 ),
 s AS (
   SELECT id, n, off, w AS window_id
-  FROM o, unnest(range(off // {budget}, (off + n - 1) // {budget} + 1)) AS u(w)
+  FROM o, unnest(range(off // {PACK_BUDGET}, (off + n - 1) // {PACK_BUDGET} + 1)) AS u(w)
 )
 SELECT window_id, id,
-       greatest(0, window_id * {budget} - off) AS tok_from,
-       least(n, (window_id + 1) * {budget} - off) AS tok_to,
-       greatest(0, off - window_id * {budget}) AS win_off
+       greatest(0, window_id * {PACK_BUDGET} - off) AS tok_from,
+       least(n, (window_id + 1) * {PACK_BUDGET} - off) AS tok_to,
+       greatest(0, off - window_id * {PACK_BUDGET}) AS win_off
 FROM s
 """
 

@@ -185,14 +185,14 @@ def attach_seed_images(df: DataFrame) -> DataFrame:
     return df.mapInPandas(fn, schema)
 
 
-def dhash_from_seed_sql(src: str) -> str:
+def dhash_from_seed_sql() -> str:
     """CTE chain (to splice after a ``WITH`` list) computing the dHash
-    of the role-0 formula image for each row of CTE ``src``, which must
+    of the role-0 formula image for each row of CTE ``surv``, which must
     expose ``media_id`` and ``seed``.  Ends in CTE ``hashes`` with columns
     (media_id, width, height, dhash)."""
     return f"""
 simg AS (
-  SELECT media_id, seed, seed % 8 + 9 AS w, seed % 5 + 8 AS h FROM {src}
+  SELECT media_id, seed, seed % 8 + 9 AS w, seed % 5 + 8 AS h FROM surv
 ),
 sgrid AS (
   SELECT p.media_id, p.w, p.h, x.x, y.y,

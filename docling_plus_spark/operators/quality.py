@@ -692,13 +692,13 @@ def hash_classifier(df: DataFrame) -> DataFrame:
     )
 
 
-def hash_classifier_sql(id_expr: str, text_expr: str) -> str:
+def hash_classifier_sql() -> str:
     """DuckDB twin of :func:`hash_classifier` (identical hash, weight
     formula, mean, sigmoid, rounding)."""
     return rf"""
 WITH w AS (
-  SELECT {id_expr} AS id,
-         list_filter(string_split_regex(lower({text_expr}), '\s+'),
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(lower(text), '\s+'),
                      x -> length(x) > 0) AS ws
   FROM documents
 ),
@@ -776,30 +776,30 @@ def main_script_expr(t: Column) -> Column:
     return main
 
 
-def script_composition_sql(id_expr: str, text_expr: str) -> str:
+def script_composition_sql() -> str:
     """DuckDB twin of :func:`script_composition`."""
     cnt = {
-        name: rf"len(regexp_extract_all({text_expr}, '{re2}'))::bigint"
+        name: rf"len(regexp_extract_all(text, '{re2}'))::bigint"
         for name, _, re2 in SCRIPT_CLASSES
     }
-    nws = rf"length(regexp_replace({text_expr}, '\s', '', 'g'))"
+    nws = rf"length(regexp_replace(text, '\s', '', 'g'))"
     fracs = ",\n       ".join(
         f"round({cnt[name]} / greatest({nws}, 1)::double, 6) AS {name}_frac"
         for name, _, _ in SCRIPT_CLASSES
     )
     return f"""
-SELECT {id_expr} AS id,
+SELECT doc_id AS id,
        {nws}::bigint AS n_chars,
        {fracs},
-       {main_script_sql(text_expr)} AS main_script
+       {main_script_sql()} AS main_script
 FROM documents
 """
 
 
-def main_script_sql(text_expr: str) -> str:
+def main_script_sql() -> str:
     """DuckDB twin of :func:`main_script_expr`."""
     cnt = {
-        name: rf"len(regexp_extract_all({text_expr}, '{re2}'))::bigint"
+        name: rf"len(regexp_extract_all(text, '{re2}'))::bigint"
         for name, _, re2 in SCRIPT_CLASSES
     }
     best = f"greatest({', '.join(cnt[n] for n, _, _ in SCRIPT_CLASSES)})"
@@ -912,7 +912,7 @@ def lang_consistency_sql(langid_sql_expr: str) -> str:
 WITH sig AS (
   SELECT doc_id AS id, lang AS lang,
          {langid_sql_expr} AS lang_pred,
-         {main_script_sql("text")} AS main_script,
+         {main_script_sql()} AS main_script,
          {expected} AS expected
   FROM documents
 )

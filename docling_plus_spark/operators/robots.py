@@ -203,12 +203,8 @@ def sitemap_urls(df: DataFrame) -> DataFrame:
     ).filter(F.col("loc") != "")
 
 
-def sitemap_urls_sql(
-    id_expr: str,
-    xml_expr: str,
-    table: str,
-) -> str:
-    """DuckDB twin of :func:`sitemap_urls`."""
+def sitemap_urls_sql() -> str:
+    """DuckDB twin of :func:`sitemap_urls` over the table ``sm``."""
     def emit(tag: str, kind: str) -> str:
         return f"""
   SELECT host, '{kind}' AS kind, (i - 1)::int AS pos,
@@ -218,10 +214,10 @@ def sitemap_urls_sql(
              bs[i], '(?s)<lastmod>\\s*(.*?)\\s*</lastmod>', 1)), '')
            AS lastmod
   FROM (
-    SELECT {id_expr} AS host,
-           regexp_extract_all({xml_expr}, '(?s)<{tag}>(.*?)</{tag}>', 1)
+    SELECT host AS host,
+           regexp_extract_all(sitemap_xml, '(?s)<{tag}>(.*?)</{tag}>', 1)
              AS bs
-    FROM {table}
+    FROM sm
   ), unnest(range(1, len(bs) + 1)) AS t(i)"""
 
     return f"""
@@ -256,15 +252,15 @@ def robots_sitemaps(df: DataFrame) -> DataFrame:
     return out.select("host", F.col("pos").cast("int"), "sitemap_url")
 
 
-def robots_sitemaps_sql(host_expr: str, robots_expr: str, table: str) -> str:
-    """DuckDB twin of :func:`robots_sitemaps`."""
+def robots_sitemaps_sql() -> str:
+    """DuckDB twin of :func:`robots_sitemaps` over the table ``r``."""
     return rf"""
 SELECT host, (i - 1)::int AS pos, ls[i] AS sitemap_url
 FROM (
-  SELECT {host_expr} AS host,
-         regexp_extract_all(regexp_replace({robots_expr}, '\r\n?', chr(10), 'g'),
+  SELECT host AS host,
+         regexp_extract_all(regexp_replace(robots_txt, '\r\n?', chr(10), 'g'),
            '(?m)^[ \t]*(?i:sitemap)[ \t]*:[ \t]*(\S+)[ \t]*$', 1) AS ls
-  FROM {table}
+  FROM r
 ), unnest(range(1, len(ls) + 1)) AS t(i)
 """
 

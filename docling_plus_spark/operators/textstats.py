@@ -353,16 +353,16 @@ def countmin_heavy_hitters(
 
 def countmin_heavy_hitters_sql() -> str:
     """DuckDB twin of :func:`countmin_heavy_hitters`."""
-    def col_of(term: str, j: int) -> str:
+    def col_of(j: int) -> str:
         return (
             f"list_reduce(list_transform(string_split_regex("
-            f"substr(md5('{j}|' || {term}), 1, 6), ''), "
+            f"substr(md5('{j}|' || term), 1, 6), ''), "
             f"c -> strpos('0123456789abcdef', c) - 1), "
             f"(a, b) -> a * 16 + b) % {CMS_W}"
         )
 
     rows_union = "\n    UNION ALL\n    ".join(
-        f"SELECT {j} AS row, {col_of('term', j)} AS col, term FROM terms"
+        f"SELECT {j} AS row, {col_of(j)} AS col, term FROM terms"
         for j in range(CMS_D)
     )
     return rf"""
@@ -675,7 +675,7 @@ def ngram_novelty_sql() -> str:
     return f"""
 WITH g AS (
   SELECT doc_id AS id, gram
-  FROM documents, unnest({shingles_sql("text", NOVELTY_N)}) AS u(gram)
+  FROM documents, unnest({shingles_sql(NOVELTY_N)}) AS u(gram)
 ),
 first AS (SELECT gram, min(id) AS fid FROM g GROUP BY 1)
 SELECT g.id, count(*)::bigint AS n_grams,

@@ -244,11 +244,11 @@ def url_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def url_dedup_sql(id_expr: str, url_expr: str, table: str) -> str:
+def url_dedup_sql(url_expr: str) -> str:
     canon = canonical_url_sql(url_expr)
     return f"""
 WITH c AS (
-  SELECT {id_expr} AS id, {canon} AS canon_url FROM {table}
+  SELECT doc_id AS id, {canon} AS canon_url FROM documents
 ),
 r AS (
   SELECT canon_url, id,
@@ -759,19 +759,19 @@ def url_blocklist_filter(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     )
 
 
-def url_blocklist_filter_sql(url_expr: str, table: str, blocklist_values: str) -> str:
-    """DuckDB twin; ``blocklist_values`` is a SQL ``(VALUES ...)`` list of
-    1-tuples of hosts."""
+def url_blocklist_filter_sql(table: str, blocklist_values: str) -> str:
+    """DuckDB twin over ``table``'s ``url`` column; ``blocklist_values`` is
+    a SQL ``(VALUES ...)`` list of 1-tuples of hosts."""
     kw = " + ".join(
-        rf"len(regexp_extract_all(lower({url_expr}), '\b{w}\b'))"
+        rf"len(regexp_extract_all(lower(url), '\b{w}\b'))"
         for w in URL_FLAG_WORDS
     )
     return rf"""
 WITH bl AS (SELECT DISTINCT lower(host) AS host
             FROM (VALUES {blocklist_values}) AS t(host)),
 m AS (
-  SELECT {url_expr} AS url,
-         lower(regexp_extract({url_expr},
+  SELECT url AS url,
+         lower(regexp_extract(url,
                '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)', 1)) AS host,
          ({kw})::bigint AS kw_hits
   FROM {table}
@@ -820,15 +820,15 @@ def host_quality_wilson(df: DataFrame) -> DataFrame:
     )
 
 
-def host_quality_wilson_sql(host_expr: str, pass_expr: str, table: str) -> str:
-    """DuckDB twin of :func:`host_quality_wilson` (same operation
-    order)."""
+def host_quality_wilson_sql() -> str:
+    """DuckDB twin of :func:`host_quality_wilson` over ``labeled`` (same
+    operation order)."""
     z2 = WILSON_Z * WILSON_Z
     return f"""
 WITH agg AS (
-  SELECT {host_expr} AS host, count(*)::bigint AS n_docs,
-         sum(CASE WHEN {pass_expr} THEN 1 ELSE 0 END)::bigint AS n_pass
-  FROM {table} GROUP BY 1
+  SELECT host AS host, count(*)::bigint AS n_docs,
+         sum(CASE WHEN quality_pass THEN 1 ELSE 0 END)::bigint AS n_pass
+  FROM labeled GROUP BY 1
 )
 SELECT host, n_docs, n_pass,
        round(n_pass::double / n_docs, 6) AS pass_rate,

@@ -67,13 +67,6 @@ class BBox:
     def overlaps_vertically(self, o: "BBox") -> bool:
         return self.b < o.t and o.b < self.t
 
-    def overlaps_vertically_with_iou(self, o: "BBox", iou: float) -> bool:
-        if not self.overlaps_vertically(o):
-            return False
-        inter = min(self.t, o.t) - max(self.b, o.b)
-        union = max(self.t, o.t) - min(self.b, o.b)
-        return union > 0 and inter / union > iou
-
     def is_strictly_above(self, o: "BBox") -> bool:
         """Entirely above: my bottom edge is above their top edge (y-up)."""
         return (self.b + EPS) > o.t

@@ -74,6 +74,9 @@ OVERLAP_PARAMS = {
     "wrapper": {"area_threshold": 2.0, "conf_threshold": 0.2},
 }
 
+# layout_postprocessor.py _remove_overlapping_clusters: IoU and containment bound
+OVERLAP_THRESHOLD = 0.8
+
 WRAPPER_TYPES = {LABEL_FORM, LABEL_KEY_VALUE_REGION, LABEL_TABLE, LABEL_DOCUMENT_INDEX}
 SPECIAL_TYPES = WRAPPER_TYPES | {LABEL_PICTURE}
 
@@ -100,13 +103,13 @@ class _UnionFind:
         return out
 
 
-def _check_overlap(a: BBox, b: BBox, overlap: float, containment: float) -> bool:
-    """IoU > overlap OR either-direction containment > containment
+def _check_overlap(a: BBox, b: BBox) -> bool:
+    """IoU or either-direction containment above ``OVERLAP_THRESHOLD``
     (layout_postprocessor.py SpatialClusterIndex.check_overlap)."""
     return (
-        a.iou(b) > overlap
-        or a.intersection_over_self(b) > containment
-        or b.intersection_over_self(a) > containment
+        a.iou(b) > OVERLAP_THRESHOLD
+        or a.intersection_over_self(b) > OVERLAP_THRESHOLD
+        or b.intersection_over_self(a) > OVERLAP_THRESHOLD
     )
 
 
@@ -281,7 +284,7 @@ class LayoutPostprocessor:
         ids = list(by_id)
         for i, a in enumerate(ids):
             for b in ids[i + 1 :]:
-                if _check_overlap(by_id[a].bbox, by_id[b].bbox, 0.8, 0.8):
+                if _check_overlap(by_id[a].bbox, by_id[b].bbox):
                     uf.union(a, b)
         result = []
         for group in uf.groups().values():

@@ -12,6 +12,7 @@ from docling_plus_spark.doc.chunker import (
     hybrid_chunks,
 )
 from docling_plus_spark.doc.document import DLDocument
+from docling_plus_spark.formats import convert_bytes
 from docling_plus_spark.plans import build_session
 
 SF = "/root/testdata/sf0.001"
@@ -72,6 +73,18 @@ def test_contextualize_prefixes_headings():
     doc = _sample_doc()
     ch = hybrid_chunks(doc, max_tokens=64)[1]
     assert contextualize(ch) == "My Title\nSection A\nalpha body"
+
+
+def test_table_chunk_joins_cells_per_row():
+    html = (
+        b"<html><body><h1>T</h1><table><tr><td>a</td><td>b</td></tr>"
+        b"<tr><td>c</td><td>d</td></tr></table></body></html>"
+    )
+    doc = convert_bytes(html, "html", name="x", filename="x.html")
+    chunks = hierarchical_chunks(doc)
+    assert [(c.text, c.headings, c.item_refs) for c in chunks] == [
+        ("a, b\nc, d", ["T"], ["#/tables/0"])
+    ]
 
 
 @pytest.fixture(scope="module")

@@ -242,7 +242,7 @@ def test_script_composition_sql_twin(spark):
         % ", ".join("(%d, '%s')" % (i, t) for i, t in rows)
     )
     want = sorted(map(tuple, con.execute(
-        script_composition_sql("doc_id", "text")).fetchall()))
+        script_composition_sql()).fetchall()))
     assert got == want
 
 

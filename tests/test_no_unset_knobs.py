@@ -11,11 +11,14 @@ finds nothing new. A function that escapes as a value (a dict entry, a
 callback argument or a ``getattr`` target) is exempt, since its callers
 cannot be seen.
 
-Nor may every call pass a defaulted parameter the same literal: a call
-that leaves it out passes the default, and one that forwards a one-value
-parameter of its own function passes that parameter's value (again to a
-fixpoint). Such a parameter is a constant. The few kept on purpose are
-named in ``ONE_VALUE_SEAMS``.
+Nor may every call pass a parameter, required or defaulted, the same
+literal: a call that leaves a defaulted one out passes the default, and
+one that forwards a one-value parameter of its own function passes that
+parameter's value (again to a fixpoint). A call that leaves a required
+one out (another function of the same name) passes no literal. Such a
+parameter is a constant: a column, table or CTE name inline, a value an
+operator and its DuckDB twin share a module constant both read. The few
+kept on purpose are named in ``ONE_VALUE_SEAMS``, each with its reason.
 
 Nor may a package function take a parameter its body never reads: callers
 set it, so the scans above cannot see it. Signatures an interface fixes are
@@ -43,15 +46,24 @@ ONE_VALUE_SEAMS = {
     ("operators/ann.py", "scale_params", "tables"),
     # must match hyperball_registers(m), which the tests run at 12, 16 and 64
     ("operators/graph.py", "hyperball_estimate", "m"),
-    # a synthetic input relation __spark_entry__.py builds in SQL, not a
+    # a synthetic input relation __spark_entry__.py builds in SQL (a
+    # relation, its prefix CTEs, an edge list, a VALUES list), not a
     # tuning value
     ("operators/cluster.py", "semdedup_sql", "table"),
     ("operators/cluster.py", "semdedup_sql", "pre_ctes"),
     ("operators/packing.py", "sequence_pack_sql", "table"),
     ("operators/ann.py", "bitext_mine_sql", "lang_expr"),
+    ("operators/graph.py", "hyperball_registers_sql", "edges_cte"),
+    ("operators/webclean.py", "url_blocklist_filter_sql", "table"),
+    ("operators/webclean.py", "url_blocklist_filter_sql", "blocklist_values"),
 }
 
 _FUNCTIONS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+#: the default of a required parameter: a key no passed value shares, so a
+#: call that leaves it out (another function of the same name) never counts
+#: as passing a literal
+REQUIRED = "required", None
 
 
 @functools.cache
@@ -106,7 +118,9 @@ def _value(node):
 
 def _definitions():
     """``(callee, param, position or None, default, where, (module,
-    function))`` of each defaulted parameter of a package function."""
+    function))`` of each parameter of a package function (``self``/``cls``
+    of methods and ``*``/``**`` parameters aside); a required one's default
+    is ``REQUIRED``."""
     out = []
     for path, owner, fn in _package_functions():
         method = _is_method(owner, fn)
@@ -116,12 +130,12 @@ def _definitions():
         args = fn.args
         positional = args.posonlyargs + args.args
         first = len(positional) - len(args.defaults)
-        for i, a in enumerate(positional[first:], first):
-            out.append((callee, a.arg, i - method, _value(args.defaults[i - first]),
-                        where, key))
+        for i, a in enumerate(positional[method:], method):
+            default = REQUIRED if i < first else _value(args.defaults[i - first])
+            out.append((callee, a.arg, i - method, default, where, key))
         for a, d in zip(args.kwonlyargs, args.kw_defaults):
-            if d is not None:
-                out.append((callee, a.arg, None, _value(d), where, key))
+            out.append((callee, a.arg, None, REQUIRED if d is None else _value(d),
+                        where, key))
     return out
 
 
@@ -168,8 +182,8 @@ def _calls(tree):
 
 @functools.cache
 def _scan():
-    """The package's defaulted parameters, the calls to them and the
-    function names that escape as values."""
+    """The package's parameters, the calls to them and the function names
+    that escape as values."""
     params = _definitions()
     by_name = {}
     for callee, param, pos, default, where, _ in params:
@@ -196,8 +210,10 @@ def unset_knobs():
                 key = next((k for k in (param, pos) if k in args), None)
                 if key is not None and args[key][1:] not in unset:
                     is_set.add((where, param))
-        missing = {(where, param, fn) for callee, param, _, _, where, (_, fn) in params
-                   if (where, param) not in is_set and callee not in escaped}
+        missing = {(where, param, fn)
+                   for callee, param, _, default, where, (_, fn) in params
+                   if default != REQUIRED and (where, param) not in is_set
+                   and callee not in escaped}
         now = {(fn, param) for _, param, fn in missing}
         if now == unset:
             return sorted(f"{where}({param})" for where, param, _ in missing)
@@ -205,8 +221,8 @@ def unset_knobs():
 
 
 def one_value_knobs():
-    """``where(param) = value`` of each defaulted parameter that every call
-    passes the same literal, ``ONE_VALUE_SEAMS`` aside."""
+    """``where(param) = value`` of each parameter that every call passes
+    the same literal, ``ONE_VALUE_SEAMS`` aside."""
     params, calls, by_name, escaped = _scan()
     one = {}
     while True:
@@ -273,7 +289,7 @@ def test_every_parameter_is_read():
     assert not unread, f"{len(unread)} parameters no body reads:\n" + "\n".join(unread)
 
 
-def test_no_defaulted_parameter_gets_one_value_from_every_call():
+def test_no_parameter_gets_one_value_from_every_call():
     knobs = one_value_knobs()
     assert not knobs, (f"{len(knobs)} parameters every call passes one value:\n"
                        + "\n".join(knobs))

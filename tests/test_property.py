@@ -102,7 +102,7 @@ def test_hash_classifier_twin_matches_reference_on_fuzz(texts):
     got = {
         r[0]: r
         for r in con.execute(
-            hash_classifier_sql("doc_id", "text")
+            hash_classifier_sql()
         ).fetchall()
     }
 
@@ -172,7 +172,7 @@ def test_script_fractions_bounded(texts):
     clean = [t.replace("'", " ") for t in texts]
     con = _con(list(enumerate(clean)))
     rows = con.execute(
-        script_composition_sql("doc_id", "text")
+        script_composition_sql()
     ).fetchall()
     names = [n for n, _, _ in SCRIPT_CLASSES]
     for r in rows:

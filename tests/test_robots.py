@@ -185,7 +185,7 @@ def test_robots_sitemaps_crlf_twin_parity(spark):
         "CREATE TABLE r AS SELECT 'h.test' AS host, ? AS robots_txt", [body]
     )
     oracle = con.execute(
-        robots_sitemaps_sql("host", "robots_txt", "r")
+        robots_sitemaps_sql()
     ).fetchall()
     assert sorted(oracle) == sorted(got)
 
@@ -213,7 +213,7 @@ def test_robots_sitemaps_bare_cr_twin_parity(spark):
         "CREATE TABLE r AS SELECT 'h.test' AS host, ? AS robots_txt", [body]
     )
     oracle = con.execute(
-        robots_sitemaps_sql("host", "robots_txt", "r")
+        robots_sitemaps_sql()
     ).fetchall()
     assert oracle == got
 

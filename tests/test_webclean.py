@@ -144,7 +144,7 @@ def test_url_dedup_matches_duckdb(spark, ddb):
         r.canon_url: (r.keep_id, r.n_dupes)
         for r in url_dedup(d).collect()
     }
-    ora = ddb.sql(url_dedup_sql("doc_id", synth_sql, "documents")).df()
+    ora = ddb.sql(url_dedup_sql(synth_sql)).df()
     assert len(ora) == len(sp) == 17
     for rec in ora.to_dict("records"):
         assert sp[rec["canon_url"]] == (rec["keep_id"], rec["n_dupes"])
